@@ -17,7 +17,9 @@ import org.apache.spark.sql.functions._
   * C(blocks,2)/blocks more emitted rows — a shuffle-size vs
   * candidate-count trade that favors pair keys from ~10^6 rows up.
   *
-  * All candidate verification is `bit_count(xor)` — built-in, codegen'd.
+  * Every candidate is verified by exact Hamming distance inside the
+  * shared run-scan ([[graft.ops.Banding]]); a run past 4096 members
+  * still verifies its overflow rows against the retained ones.
   */
 object PhashDup {
 
@@ -60,79 +62,13 @@ object PhashDup {
       j <- (i + 1) until blocks
     } yield xxhash64(lit(i * blocks + j), blockExprs(i), blockExprs(j))
 
-    // The run-scan keys on STRING ids (one tuple encoder for any input).
-    // For a non-string id column, string order diverges from the native
-    // order (e.g. "10" < "2"), so the scan's id1<id2 and the keep-first
-    // min would silently become lexicographic and the output ids would
-    // change type — the original ids are restored by an output-sized
-    // join below instead (same pattern as Similarity.cosineNearDupPairs);
-    // the common contracted shape (string image_id) skips all of it.
-    val idIsString =
-      images.schema(idCol).dataType == org.apache.spark.sql.types.StringType
+    // Ids enter the run-scan as strings; Banding.restoreIds gives a
+    // non-string id column back its type and native order.
     val banded = images
       .select(col(idCol).cast("string").as("id"), col(phashCol).as("ph"),
         explode(array(pairKeys: _*)).as("key"))
-
-    // ONE shuffle + sort: cluster the exploded rows by bucket key, then
-    // stream each partition pairing consecutive same-key runs in plain
-    // Scala. (collect_list object-aggregation falls back to its slow
-    // sort-based path once a partition sees >128 distinct keys — always,
-    // here, since most buckets are singletons; a self equi-join would
-    // shuffle the exploded frame twice. `maxBucket` caps degenerate
-    // buckets, e.g. constant phashes.)
-    val maxBucket = 4096
-    val spark = images.sparkSession
-    import spark.implicits._
-    val scanned = banded
-      .repartition(col("key"))
-      .sortWithinPartitions("key")
-      .select(col("key"), col("id"), col("ph"))
-      .as[(Long, String, Long)]
-      .mapPartitions { it =>
-        new Iterator[(String, String, Int)] {
-          private val out = scala.collection.mutable.Queue.empty[(String, String, Int)]
-          private val run = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-          private var curKey: Long = Long.MinValue
-          private var haveKey = false
-          private def emitPairsWith(id: String, ph: Long): Unit = {
-            var i = 0
-            while (i < run.length) {
-              val (oid, oph) = run(i)
-              val h = java.lang.Long.bitCount(ph ^ oph)
-              if (h <= maxHamming && oid != id) {
-                if (oid < id) out += ((oid, id, h)) else out += ((id, oid, h))
-              }
-              i += 1
-            }
-          }
-          private def advance(): Unit = {
-            while (out.isEmpty && it.hasNext) {
-              val (key, id, ph) = it.next()
-              if (!haveKey || key != curKey) { run.clear(); curKey = key; haveKey = true }
-              emitPairsWith(id, ph)
-              if (run.length < maxBucket) run += ((id, ph))
-            }
-          }
-          def hasNext: Boolean = { advance(); out.nonEmpty }
-          def next(): (String, String, Int) = { advance(); out.dequeue() }
-        }
-      }
-      .toDF("id1", "id2", "hamming")
-    if (idIsString) scanned
-    else {
-      // restore the caller's original id type/order: the pairs side is
-      // OUTPUT-sized, so AQE broadcasts these joins at runtime
-      val ids = images
-        .select(col(idCol).cast("string").as("k"), col(idCol).as("orig"))
-        .distinct()
-      scanned
-        .join(ids.select(col("k").as("id1"), col("orig").as("__o1")), Seq("id1"))
-        .join(ids.select(col("k").as("id2"), col("orig").as("__o2")), Seq("id2"))
-        .select(
-          least(col("__o1"), col("__o2")).as("id1"),
-          greatest(col("__o1"), col("__o2")).as("id2"),
-          col("hamming"))
-    }
+    val pairs = graft.ops.Banding.hammingPairs(banded, maxBucket = 4096, maxHamming)
+    graft.ops.Banding.restoreIds(pairs, images, idCol)
   }
 
   /** Ids to drop: for every verified pair keep the smaller id
@@ -161,8 +97,7 @@ object PhashDup {
     val edges = pairs.select(col("id1"), col("id2"))
       .union(pairs.select(col("id2").as("id1"), col("id1").as("id2")))
       .cache()
-    // lazy init — materialized by the first iteration's action (r6: the
-    // eager localCheckpoint here was one whole extra job)
+    // lazy init — materialized by the first iteration's action
     var labelsCache = edges.groupBy(col("id1").as("image_id"))
       .agg(least(min(col("id2")), first(col("id1"))).as("cluster_id"))
       .cache()
@@ -170,10 +105,9 @@ object PhashDup {
     var i = 1
     var converged = false
     while (i < maxIterations && !converged) {
-      // ONE job, ONE join, ONE aggregation per iteration (r6: was two
-      // jobs — localCheckpoint + a change probe — over two joins + an
-      // agg): the node's own label joins the min-reduction as a tagged
-      // UNION row instead of a second join (min over messages ∪ own ≡
+      // ONE job, ONE join, ONE aggregation per iteration: the node's own
+      // label joins the min-reduction as a tagged UNION row instead of a
+      // second join (min over messages ∪ own ≡
       // least(min(nbr), own)), the changed flag is min(messages) < own
       // computed in the SAME aggregate (labels only ever DECREASE —
       // exactly the old next≠labels condition), and it rides the
@@ -186,7 +120,7 @@ object PhashDup {
         .join(labels, edges("id2") === labels("image_id"), "inner")
         .select(edges("id1").as("image_id"), col("cluster_id").as("label"),
           lit(false).as("__own"))
-      // r6 ADAPTIVE pointer doubling: after `hopsAfter` plain rounds an
+      // ADAPTIVE pointer doubling: after `hopsAfter` plain rounds an
       // unconverged graph additionally propagates label-of-label
       // (shortcut hops, the large-star/small-star idea) — remaining
       // convergence then needs O(log d) rounds instead of O(d), so the

@@ -65,27 +65,14 @@ object SomClustering {
     * engine computes); ties take the lowest unit index — the
     * array_position(array_min) first-match rule.
     *
-    * r6: native expression (Exprs.SomBmu) instead of a typedlit-codebook
-    * higher-order-function chain. The HOF chain inlined the codebook
-    * values into the generated code, so every fit epoch's new weights
-    * forced a fresh whole-stage-codegen compile — ~20 janino compiles
-    * per fit, the dominant cold cost of the SOM queries. The reference-
-    * object codebook keeps one compiled plan for all epochs; arithmetic
-    * is bit-identical (SomSpec parity gate vs the HOF chain). */
+    * Native expression (Exprs.SomBmu) with the codebook as a codegen
+    * reference object, so every fit epoch's new weights reuse one
+    * compiled plan; bit-identical to the typedlit-codebook
+    * higher-order-function chain (SomSpec parity gate). */
   def bmuColumn(weights: Array[Array[Double]], features: Column): Column = {
     require(weights.nonEmpty && weights.forall(_.length == weights.head.length),
       "codebook must be non-empty with uniform dimension")
     org.apache.spark.sql.graft.Exprs.somBmu(features, weights)
-  }
-
-  /** The pre-r6 Catalyst HOF chain, kept as the parity reference for
-    * the SomSpec gate. */
-  private[graft] def bmuColumnHof(weights: Array[Array[Double]], features: Column): Column = {
-    val codebook = typedlit(weights.map(_.toSeq).toSeq)
-    val dists = transform(codebook, wv =>
-      aggregate(zip_with(wv, features, (a, b) => (a - b) * (a - b)),
-        lit(0.0), (acc, v) => acc + v))
-    (array_position(dists, array_min(dists)) - 1).cast("int")
   }
 
   /** Fit the map. Epochs are Spark jobs over `data`; per epoch the only

@@ -1,280 +1,232 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 
-/** Shared LSH-banding candidate generation: distinct (id1, id2) pairs of
-  * ids sharing a 64-bit band key, produced with ONE shuffle.
+/** Banded near-duplicate pair generation: every dedup family (MinHash
+  * candidates, n-gram Jaccard, embedding cosine, phash/SimHash Hamming)
+  * pairs the ids that share a 64-bit band key through ONE run-scan
+  * kernel, [[scan]].
   *
-  * Shape: repartition the slim (id, key) frame by key, sort within
-  * partitions by (key, id), and stream each partition pairing
-  * consecutive same-key runs in plain Scala — the same pattern as
-  * [[graft.discovery.PhashDup.duplicatePairs]] (a self equi-join would
-  * exchange the frame twice; collect_list object-agg falls back to its
-  * slow sort-based path at >128 keys per partition).
+  * The kernel repartitions a `(key: long, id: string, payload)` frame by
+  * key, sorts within partitions by `(key, id)`, and streams each
+  * partition in plain Scala: every row of a same-key run is verified
+  * against the earlier rows of the run it kept, and only pairs that pass
+  * the verify leave as `(id1, id2, score)` with id1 < id2. That is one
+  * shuffle of the input; a self equi-join would exchange the frame
+  * twice, and a collect_list aggregation falls back to its slow
+  * sort-based path at >128 keys per partition.
   *
-  * Degenerate keys (a band key shared by a mass-duplicate cluster — the
-  * web-scale n² landmine) are CAPPED, with a deliberately different
-  * policy per scan shape:
-  *  - [[candidatePairs]] (slim candidates feeding a verify JOIN) pairs
-  *    only its first `maxBucket` members per run (deterministic:
-  *    smallest ids) and overflow rows get NO candidates from that key —
-  *    candidate VOLUME is this shape's cost, and the strict cap bounds
-  *    per-key work at maxBucket²/2 no matter how hot the key.
-  *  - [[cosinePairs]] (verify fused into the scan, only TRUE pairs
-  *    leave) additionally scores every overflow row against the
-  *    retained run — the [[graft.discovery.PhashDup]] policy, so only
-  *    overflow×overflow pairs can be lost; per-row work stays ≤
-  *    maxBucket comparisons and the extra output is true near-dup
-  *    pairs, which is the operator's honest result anyway.
-  * Giant exact-duplicate groups should be collapsed by
-  * [[Dedup.exactKeepFirst]] / fingerprint dedup before near-dup
-  * mining — pair OUTPUT over a group of g duplicates is inherently
-  * O(g²).
+  * Degenerate keys (a band key shared by a mass-duplicate cluster) are
+  * CAPPED at the first `cap` rows of the run in id order, under one of
+  * two [[CapPolicy]]s chosen per family:
+  *  - [[StrictFirst]]: a row past the cap gets NO pairs from that key.
+  *    Per-key work is bounded by cap²/2. The n-gram oracle's candidate
+  *    rule ("both ids within the shingle's first maxDf by id rank")
+  *    requires it, and the slim candidates feeding a verify join use it
+  *    because candidate volume is their cost.
+  *  - [[OverflowVerified]]: a row past the cap is still verified against
+  *    the retained run but does not join it, so only overflow×overflow
+  *    pairs are lost and per-row work stays ≤ cap comparisons.
+  * Because the sort includes the id, which rows a hot run keeps does not
+  * depend on shuffle arrival order. `truncated` counts rows past the cap
+  * as a NONZERO-MEANS-TRUNCATED indicator: it is updated inside a
+  * transformation, so retries, speculation or a second action over the
+  * same frame can add the same rows again; zero after an action reliably
+  * means no run overflowed. Giant exact-duplicate groups should be
+  * collapsed by [[Dedup.exactKeepFirst]] before near-dup mining: pair
+  * output over g duplicates is inherently O(g²).
+  *
+  * Equal ids in one run can only come from duplicate input rows and are
+  * never paired. Numeric parity of the fused verifies:
+  *  - Jaccard equals [[Dedup.jaccard]] bit for bit: per-doc distinct
+  *    shingle sets (String equality ≡ UTF8String binary equality on
+  *    valid UTF-8), inter/union counted as ints, one int→double
+  *    division. Sort and merge use one comparator (String.compareTo).
+  *  - Cosine equals [[Similarity.cosine]] bit for bit: per-element
+  *    float→double casts, left-to-right accumulation, and the zero-norm
+  *    guard (cos := −1, never emitted). Length-mismatched vectors are
+  *    rejected, as the join shape's zip_with null-pads them into a null
+  *    cosine.
   */
 object Banding {
 
-  /** keyed must have columns (id: string, key: long). Returns distinct
-    * (id1, id2) with id1 < id2.
-    *
-    * `truncated` (optional) observes the cap as a NONZERO-MEANS-TRUNCATED
-    * indicator, not a precise count: it is updated inside a
-    * transformation, so task retries, speculation, or a second action
-    * over the same frame can add the same occurrences again (standard
-    * accumulator-in-transformation semantics). Zero after an action DOES
-    * reliably mean no bucket overflowed; a nonzero value means candidate
-    * recall was bounded by maxBucket — callers that must not lose those
-    * ids should collapse exact duplicates first (the usual cause of
-    * over-cap buckets) or raise the cap. An exact occurrence count, if
-    * ever needed, is a one-line aggregation over `keyed`
-    * (`count - sum(least(bucket_size, maxBucket))` per key). */
-  def candidatePairs(keyed: DataFrame, maxBucket: Int = 1024,
-      truncated: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val spark = keyed.sparkSession
-    import spark.implicits._
-    keyed
-      .repartition(col("key"))
-      .sortWithinPartitions(col("key"), col("id"))
-      .select(col("key"), col("id"))
-      .as[(Long, String)]
-      .mapPartitions { it =>
-        new Iterator[(String, String)] {
-          private val out = scala.collection.mutable.Queue.empty[(String, String)]
-          private val run = scala.collection.mutable.ArrayBuffer.empty[String]
-          private var curKey: Long = Long.MinValue
-          private var haveKey = false
-          private def advance(): Unit = {
-            while (out.isEmpty && it.hasNext) {
-              val (key, id) = it.next()
-              if (!haveKey || key != curKey) { run.clear(); curKey = key; haveKey = true }
-              if (run.length < maxBucket) {
-                var i = 0
-                while (i < run.length) {
-                  val oid = run(i)
-                  // sorted within the run: oid <= id; equal ids can only
-                  // come from duplicate input rows — skip self-pairs
-                  if (oid != id) out += ((oid, id))
-                  i += 1
-                }
-                run += id
-              } else truncated.foreach(_.add(1L))
-            }
-          }
-          def hasNext: Boolean = { advance(); out.nonEmpty }
-          def next(): (String, String) = { advance(); out.dequeue() }
-        }
-      }
-      .toDF("id1", "id2")
-      .distinct()
+  /** What happens to the rows of a run past its first `cap`. */
+  private[graft] sealed trait CapPolicy
+  private[graft] case object StrictFirst extends CapPolicy
+  private[graft] case object OverflowVerified extends CapPolicy
+
+  /** Per-family arithmetic of the kernel: `prep` runs once per verified
+    * row, `score` once per candidate pair (a: the earlier row of the
+    * run); a NaN score rejects the pair. */
+  private[graft] abstract class PairVerify[P, R] extends Serializable {
+    def prep(p: P): R
+    def score(a: R, b: R): Double
   }
 
-  /** Exact-Jaccard near-dup pairs emitted straight FROM the run-scan:
-    * `keyed` must have columns (id: string, key: long, sh: array<string>
-    * — the doc's shingle array); every capped same-key run verifies its
-    * pairs in place and only pairs with jaccard ≥ threshold leave the
-    * operator.
-    *
-    * Why this exists next to [[candidatePairs]] (the r6 ngram
-    * optimization, same rationale as [[cosinePairs]]): on a corpus whose
-    * shingles are corpus-frequent (average df ≈ 30 on the synthetic
-    * captions), the slim-candidates shape materializes O(Σ df²) pairs
-    * through a distinct shuffle and a payload join — measured 11.1M
-    * candidate pairs from 100k docs, ~11 s of the 14 s op. Carrying the
-    * shingle payload through the banding exchange once per key is
-    * O(input × bands) shuffle instead, and only TRUE pairs (plus the
-    * output-sized distinct) leave the scan.
-    *
-    * CAP POLICY parity with [[candidatePairs]] (strict first-`maxDf`,
-    * NOT the cosinePairs overflow-scoring policy): the ngram oracle's
-    * candidate rule is "both ids within the shingle's first maxDf by id
-    * rank", so an overflow row must get NO pairs from that key.
-    *
-    * Numeric parity with [[Dedup.jaccard]]: per-doc distinct shingle
-    * sets (String equality ≡ UTF8String binary equality on valid UTF-8),
-    * inter/union counted as ints, one int→double division — identical
-    * IEEE result. Sorting happens INSIDE the scan with one comparator
-    * (String.compareTo), so merge-intersection order is self-consistent
-    * regardless of any engine-side collation. */
-  def jaccardPairs(keyed: DataFrame, maxDf: Int, threshold: Double,
-      truncated: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
+  /** The run-scan kernel (see the object doc). `keyed` has columns
+    * (id: string, key: long) and whatever `payload` reads. Output:
+    * (id1, id2, score: double), id1 < id2, NOT distinct — a pair sharing
+    * k keys is emitted up to k times. */
+  private[graft] def scan[P: TypeTag, R](keyed: DataFrame, payload: Column,
+      cap: Int, policy: CapPolicy, truncated: Option[LongAccumulator],
+      verify: PairVerify[P, R]): DataFrame = {
     val spark = keyed.sparkSession
     import spark.implicits._
+    val verifyOverflow = policy == OverflowVerified
     keyed
       .repartition(col("key"))
       .sortWithinPartitions(col("key"), col("id"))
-      .select(col("key"), col("id"), col("sh"))
-      .as[(Long, String, Array[String])]
+      .select(col("key"), col("id"), payload)
+      .as[(Long, String, P)]
       .mapPartitions { it =>
         new Iterator[(String, String, Double)] {
           private val out =
             scala.collection.mutable.Queue.empty[(String, String, Double)]
           private val ids = scala.collection.mutable.ArrayBuffer.empty[String]
-          private val sets = scala.collection.mutable.ArrayBuffer.empty[Array[String]]
+          private val preps = scala.collection.mutable.ArrayBuffer.empty[R]
           private var curKey: Long = Long.MinValue
           private var haveKey = false
-          // sorted distinct copy (one comparator for sort AND merge)
-          private def norm(a: Array[String]): Array[String] = {
-            val c = a.clone()
-            java.util.Arrays.sort(c.asInstanceOf[Array[AnyRef]])
-            var w = 0
-            var i = 0
-            while (i < c.length) {
-              if (w == 0 || c(w - 1) != c(i)) { c(w) = c(i); w += 1 }
-              i += 1
-            }
-            if (w == c.length) c else java.util.Arrays.copyOf(c, w)
-          }
-          private def jac(a: Array[String], b: Array[String]): Double = {
-            var i = 0; var j = 0; var inter = 0
-            while (i < a.length && j < b.length) {
-              val c = a(i).compareTo(b(j))
-              if (c == 0) { inter += 1; i += 1; j += 1 }
-              else if (c < 0) i += 1
-              else j += 1
-            }
-            val uni = a.length + b.length - inter
-            if (uni > 0) inter.toDouble / uni.toDouble else 0.0
-          }
           private def advance(): Unit = {
             while (out.isEmpty && it.hasNext) {
-              val (key, id, sh) = it.next()
+              val (key, id, p) = it.next()
               if (!haveKey || key != curKey) {
-                ids.clear(); sets.clear(); curKey = key; haveKey = true
+                ids.clear(); preps.clear(); curKey = key; haveKey = true
               }
-              if (ids.length < maxDf) {
-                val ns = norm(sh)
+              val keep = ids.length < cap
+              if (keep || verifyOverflow) {
+                val r = verify.prep(p)
                 var i = 0
                 while (i < ids.length) {
-                  // sorted within the run: ids(i) <= id; equal ids can
-                  // only come from duplicate input rows — skip self-pairs
                   if (ids(i) != id) {
-                    val v = jac(sets(i), ns)
-                    if (v >= threshold) out += ((ids(i), id, v))
+                    val s = verify.score(preps(i), r)
+                    if (!java.lang.Double.isNaN(s)) out += ((ids(i), id, s))
                   }
                   i += 1
                 }
-                ids += id; sets += ns
-              } else truncated.foreach(_.add(1L))
+                if (keep) { ids += id; preps += r }
+              }
+              if (!keep) truncated.foreach(_.add(1L))
             }
           }
           def hasNext: Boolean = { advance(); out.nonEmpty }
           def next(): (String, String, Double) = { advance(); out.dequeue() }
         }
       }
-      .toDF("id1", "id2", "jaccard")
-      .distinct()
+      .toDF("id1", "id2", "score")
   }
 
-  /** Cosine-scored near-dup pairs emitted straight FROM the run-scan:
-    * `keyed` must have columns (id: string, key: long, v: array<float>);
-    * every capped same-key run scores its pairs in place and only pairs
-    * with cos ≥ threshold leave the operator — candidate pairs never
-    * cross a shuffle.
-    *
-    * Why this exists next to [[candidatePairs]]: on clustered or skewed
-    * corpora (the realistic embedding regime) the hyperplane buckets sit
-    * AT the cap, so slim-candidates-then-payload-join materializes up to
-    * tables·buckets·maxBucket²/2 candidate rows through a shuffle join —
-    * O(candidates) shuffle state, which ran a 100k-row clustered corpus
-    * out of execution memory. Scoring inside the scan is O(input) shuffle
-    * (the vector rides the banding exchange once per table) + O(true
-    * pairs) output: the [[graft.discovery.PhashDup.duplicatePairs]]
-    * pattern with the verify step fused in.
-    *
-    * Numeric parity: mirrors [[graft.ops.Similarity.cosine]] exactly —
-    * per-element float→double casts, left-to-right accumulation, and the
-    * zero-norm guard (cos := −1, never emitted) — so results on
-    * null-free input are bit-identical to the former candidate-join
-    * shape. Null vectors are filtered before the scan (the join shape
-    * dropped them via the null cosine; the run-scan would NPE on them
-    * instead) — on input WITH nulls the shapes can differ at exactly-
-    * at-cap buckets, where the join shape let a null row consume a cap
-    * slot before dropping it and the filter frees that slot. */
-  def cosinePairs(keyed: DataFrame, maxBucket: Int, threshold: Double,
-      truncated: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val spark = keyed.sparkSession
-    import spark.implicits._
-    keyed
-      .filter(col("v").isNotNull)
-      .repartition(col("key"))
-      .sortWithinPartitions(col("key"), col("id"))
-      .select(col("key"), col("id"), col("v"))
-      .as[(Long, String, Array[Float])]
-      .mapPartitions { it =>
-        new Iterator[(String, String, Double)] {
-          private val out =
-            scala.collection.mutable.Queue.empty[(String, String, Double)]
-          private val ids = scala.collection.mutable.ArrayBuffer.empty[String]
-          private val vecs = scala.collection.mutable.ArrayBuffer.empty[Array[Float]]
-          private val norms = scala.collection.mutable.ArrayBuffer.empty[Double]
-          private var curKey: Long = Long.MinValue
-          private var haveKey = false
-          private def normOf(v: Array[Float]): Double = {
-            var s = 0.0; var i = 0
-            while (i < v.length) { val x = v(i).toDouble; s += x * x; i += 1 }
-            math.sqrt(s)
-          }
-          private def advance(): Unit = {
-            while (out.isEmpty && it.hasNext) {
-              val (key, id, v) = it.next()
-              if (!haveKey || key != curKey) {
-                ids.clear(); vecs.clear(); norms.clear(); curKey = key; haveKey = true
-              }
-              // EVERY row — retained or overflow — scores against the
-              // retained run (the PhashDup cap policy the operator doc
-              // promises: only overflow×overflow pairs can be lost);
-              // only the first maxBucket rows JOIN the run.
-              val nv = normOf(v)
-              var i = 0
-              while (i < ids.length) {
-                // sorted within the run: ids(i) <= id; equal ids can
-                // only come from duplicate input rows — skip self-pairs.
-                // Length-mismatched vectors are skipped too: the
-                // candidates-join shape's zip_with null-pads ragged
-                // arrays into a null cosine that its filter drops, so
-                // a truncated-prefix dot here would fabricate a pair
-                // the join shape (and the exact-cosine soundness
-                // oracle) never emits.
-                if (ids(i) != id && vecs(i).length == v.length) {
-                  val ov = vecs(i)
-                  var dot = 0.0; var d = 0
-                  val n = v.length
-                  while (d < n) { dot += ov(d).toDouble * v(d).toDouble; d += 1 }
-                  val denom = norms(i) * nv
-                  val cos = if (denom > 0.0) dot / denom else -1.0
-                  if (cos >= threshold) out += ((ids(i), id, cos))
-                }
-                i += 1
-              }
-              if (ids.length < maxBucket) { ids += id; vecs += v; norms += nv }
-              else truncated.foreach(_.add(1L))
-            }
-          }
-          def hasNext: Boolean = { advance(); out.nonEmpty }
-          def next(): (String, String, Double) = { advance(); out.dequeue() }
-        }
-      }
-      .toDF("id1", "id2", "cos")
-      .distinct()
+  /** Restore the caller's id column type and order on string-keyed
+    * pairs: `source` holds the original ids in `idCol`, the kernel saw
+    * them cast to string. A no-op for string ids; otherwise both pair
+    * columns join back to the distinct id map (the pairs side is
+    * output-sized, so AQE broadcasts these joins at runtime) and
+    * least/greatest restore id1 < id2 in the native order ("2" < "10"). */
+  private[graft] def restoreIds(pairs: DataFrame, source: DataFrame,
+      idCol: String): DataFrame =
+    if (source.schema(idCol).dataType == org.apache.spark.sql.types.StringType) pairs
+    else {
+      val ids = source
+        .select(col(idCol).cast("string").as("k"), col(idCol).as("orig"))
+        .distinct()
+      val scores = pairs.columns.filterNot(Set("id1", "id2")).map(col).toSeq
+      pairs
+        .join(ids.select(col("k").as("id1"), col("orig").as("__o1")), Seq("id1"))
+        .join(ids.select(col("k").as("id2"), col("orig").as("__o2")), Seq("id2"))
+        .select(Seq(least(col("__o1"), col("__o2")).as("id1"),
+          greatest(col("__o1"), col("__o2")).as("id2")) ++ scores: _*)
+    }
+
+  private object AcceptAll extends PairVerify[Boolean, Boolean] {
+    def prep(p: Boolean): Boolean = p
+    def score(a: Boolean, b: Boolean): Double = 0.0
   }
+
+  /** Distinct candidate pairs (id1, id2), id1 < id2, of a (id: string,
+    * key: long) frame; strict cap. */
+  def candidatePairs(keyed: DataFrame, maxBucket: Int = 1024,
+      truncated: Option[LongAccumulator] = None): DataFrame =
+    scan(keyed, lit(true), maxBucket, StrictFirst, truncated, AcceptAll)
+      .select(col("id1"), col("id2")).distinct()
+
+  private final class JaccardAtLeast(threshold: Double)
+      extends PairVerify[Array[String], Array[String]] {
+    // sorted distinct copy (one comparator for sort AND merge)
+    def prep(a: Array[String]): Array[String] = {
+      val c = a.clone()
+      java.util.Arrays.sort(c.asInstanceOf[Array[AnyRef]])
+      var w = 0
+      var i = 0
+      while (i < c.length) {
+        if (w == 0 || c(w - 1) != c(i)) { c(w) = c(i); w += 1 }
+        i += 1
+      }
+      if (w == c.length) c else java.util.Arrays.copyOf(c, w)
+    }
+    def score(a: Array[String], b: Array[String]): Double = {
+      var i = 0; var j = 0; var inter = 0
+      while (i < a.length && j < b.length) {
+        val c = a(i).compareTo(b(j))
+        if (c == 0) { inter += 1; i += 1; j += 1 }
+        else if (c < 0) i += 1
+        else j += 1
+      }
+      val uni = a.length + b.length - inter
+      val v = if (uni > 0) inter.toDouble / uni.toDouble else 0.0
+      if (v >= threshold) v else Double.NaN
+    }
+  }
+
+  /** Distinct (id1, id2, jaccard ≥ threshold) of a (id: string, key:
+    * long, sh: array<string>) frame; strict cap. */
+  def jaccardPairs(keyed: DataFrame, maxDf: Int, threshold: Double,
+      truncated: Option[LongAccumulator] = None): DataFrame =
+    scan(keyed, col("sh"), maxDf, StrictFirst, truncated, new JaccardAtLeast(threshold))
+      .withColumnRenamed("score", "jaccard").distinct()
+
+  private final class Normed(val v: Array[Float], val norm: Double)
+
+  private final class CosineAtLeast(threshold: Double)
+      extends PairVerify[Array[Float], Normed] {
+    def prep(v: Array[Float]): Normed = {
+      var s = 0.0; var i = 0
+      while (i < v.length) { val x = v(i).toDouble; s += x * x; i += 1 }
+      new Normed(v, math.sqrt(s))
+    }
+    def score(a: Normed, b: Normed): Double = {
+      val n = b.v.length
+      if (a.v.length != n) return Double.NaN
+      var dot = 0.0; var d = 0
+      while (d < n) { dot += a.v(d).toDouble * b.v(d).toDouble; d += 1 }
+      val denom = a.norm * b.norm
+      val cos = if (denom > 0.0) dot / denom else -1.0
+      if (cos >= threshold) cos else Double.NaN
+    }
+  }
+
+  /** Distinct (id1, id2, cos ≥ threshold) of a (id: string, key: long,
+    * v: array<float>) frame; overflow rows verified. Null vectors are
+    * filtered before the scan. */
+  def cosinePairs(keyed: DataFrame, maxBucket: Int, threshold: Double,
+      truncated: Option[LongAccumulator] = None): DataFrame =
+    scan(keyed.filter(col("v").isNotNull), col("v"), maxBucket, OverflowVerified,
+      truncated, new CosineAtLeast(threshold))
+      .withColumnRenamed("score", "cos").distinct()
+
+  private final class HammingAtMost(maxHamming: Int) extends PairVerify[Long, Long] {
+    def prep(ph: Long): Long = ph
+    def score(a: Long, b: Long): Double = {
+      val h = java.lang.Long.bitCount(a ^ b)
+      if (h <= maxHamming) h.toDouble else Double.NaN
+    }
+  }
+
+  /** (id1, id2, hamming ≤ maxHamming) of a (id: string, key: long, ph:
+    * long) frame, NOT distinct; overflow rows verified. */
+  private[graft] def hammingPairs(keyed: DataFrame, maxBucket: Int,
+      maxHamming: Int): DataFrame =
+    scan(keyed, col("ph"), maxBucket, OverflowVerified, None, new HammingAtMost(maxHamming))
+      .select(col("id1"), col("id2"), col("score").cast("int").as("hamming"))
 }

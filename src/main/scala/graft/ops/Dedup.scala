@@ -8,18 +8,12 @@ import graft.models.LangId
   * additions; the reference's only dedup shape is DISTINCT on ids, J7 —
   * /root/reference/backendClasses/DQTestToolHelper.py:213).
   *
-  * Scale shape shared by every operator here:
-  *   1. band each doc into SHORT keys (id + one 64-bit key per band — the
-  *      shingle/signature payload never enters the banding shuffle);
-  *   2. self equi-join the slim banded frame → distinct candidate
-  *      (id1, id2) pairs;
-  *   3. verify candidates with exact Jaccard by joining the shingle
-  *      arrays back on id (shuffles the text payload ONCE per side,
-  *      proportional to the corpus, never to bands × corpus).
-  * Round-1 carried the full shingle array through all 16 band keys and
-  * both join sides (≈32× corpus text through the shuffle, measured
-  * 1,023 docs/sec); the slim shape is the same algorithm at ~2× corpus
-  * shuffle volume.
+  * Scale shape shared by the banded operators: band each doc into
+  * 64-bit keys and pair the docs sharing a key in the one run-scan of
+  * [[Banding]]. MinHash verifies the slim candidates by joining the
+  * shingle arrays back on id (the payload crosses one join shuffle per
+  * side); n-gram carries the shingles through the banding exchange and
+  * verifies inside the scan; SimHash reuses [[graft.discovery.PhashDup]].
   */
 object Dedup {
 
@@ -30,23 +24,10 @@ object Dedup {
 
   /** Word k-shingles of a text column (array<string>); empty array when
     * the text has fewer than k tokens. Native single-pass expression
-    * (Exprs.Shingles) — the former Catalyst slice/array_join chain paid
-    * ~100 allocation-heavy array ops per caption and dominated the
-    * minhash/ngram dedup wall clock (~20 s over 200k captions vs <1 s
-    * native; exact output parity spec-gated in DedupSpec). */
+    * (Exprs.Shingles), output-identical to the Catalyst
+    * split/slice/array_join chain (OpsSpec parity gate). */
   def shingles(text: Column, k: Int): Column =
     org.apache.spark.sql.graft.Exprs.shingles(text, k)
-
-  /** The pre-optimization Catalyst chain, kept as the parity reference
-    * for the DedupSpec gate (and for engines without the native expr). */
-  private[graft] def shinglesCatalyst(text: Column, k: Int): Column = {
-    val toks = split(trim(lower(text)), "\\s+")
-    when(size(toks) >= k,
-      transform(
-        sequence(lit(1), size(toks) - lit(k - 1)),
-        i => array_join(slice(toks, i, lit(k)), " ")))
-      .otherwise(array().cast("array<string>"))
-  }
 
   private def stringHash64(s: String): Long = {
     var h = 1125899906842597L
@@ -212,22 +193,22 @@ object Dedup {
   /** N-gram Jaccard pair verification over banding candidates — the
     * exact-similarity variant (no signature approximation). Candidates
     * come from sharing a shingle, with hot shingles BOUNDED: the
-    * run-scan in [[Banding.candidatePairs]] pairs at most the first
-    * `maxDf` documents of any shingle bucket, so corpus-hot keys like
-    * "a photo of" contribute O(maxDf²) candidates instead of O(df²) —
-    * the round-1 defect.
+    * run-scan ([[Banding.jaccardPairs]], strict cap) pairs at most the
+    * first `maxDf` documents of any shingle bucket, so corpus-hot keys
+    * like "a photo of" contribute O(maxDf²) candidates instead of
+    * O(df²).
     *
     * PRECONDITION / recall bound: a document past the first `maxDf` (by
     * id) of EVERY shingle bucket it lands in gets zero candidates — a
     * near-duplicate is lost only when every shared shingle is corpus-hot
     * (boilerplate templates). That loss is NOT silent: pass `truncated`
     * (a LongAccumulator) as a nonzero-means-truncated indicator (see
-    * [[Banding.candidatePairs]] — retries/speculation can inflate the
-    * value, zero is reliable); nonzero after an action means the corpus
-    * has hot templates and exact/fingerprint dedup ([[exactKeepFirst]])
-    * should collapse them before near-dup mining — which is also the
-    * order a real pipeline wants, since pair output over a g-duplicate
-    * group is inherently O(g²). */
+    * [[Banding]] — retries/speculation can inflate the value, zero is
+    * reliable); nonzero after an action means the corpus has hot
+    * templates and exact/fingerprint dedup ([[exactKeepFirst]]) should
+    * collapse them before near-dup mining — which is also the order a
+    * real pipeline wants, since pair output over a g-duplicate group is
+    * inherently O(g²). */
   def ngramJaccardPairs(
       df: DataFrame,
       idCol: String,
@@ -242,13 +223,10 @@ object Dedup {
       .filter(size(col("sh")) > 0)
     // band on a bounded sample of each doc's shingles (first K, hashed to
     // a 64-bit key) — keeps the explode linear in corpus size. The
-    // shingle payload RIDES the banding exchange and the exact-Jaccard
-    // verify runs inside the run-scan (Banding.jaccardPairs): on corpora
-    // with corpus-frequent shingles the former slim-candidates shape
-    // materialized O(Σ df²) pairs through a distinct shuffle + payload
-    // join (11.1M candidates from 100k docs, ~11 of the op's 14 s); the
-    // fused scan is O(input × bands) shuffle + O(true pairs) output,
-    // with the identical candidate rule and jaccard arithmetic.
+    // shingle payload rides the banding exchange and the exact-Jaccard
+    // verify runs inside the run-scan: O(input × bands) shuffle plus
+    // O(true pairs) output, where slim candidates plus a payload join
+    // would materialize O(Σ df²) pairs on corpus-frequent shingles.
     val keyed = withSh
       .select(col("id"),
         explode(array_distinct(transform(

@@ -268,20 +268,21 @@ object Similarity {
     * ([[graft.ops.Banding.cosinePairs]]) — candidate pairs never cross a
     * shuffle.
     *
-    * Scale shape (fixes the round-1 within-bucket n² defect):
+    * Scale shape:
     *  - `nPlanes` auto-scales with n (`ceil(log2(n/targetBucket))`) so the
     *    expected bucket size stays ~targetBucket at any corpus size;
     *    recall for real near-dups (cos ≥ threshold) is recovered with
     *    `tables` independent hash tables: P(candidate) = 1−(1−p^b)^L,
     *    p = 1 − acos(cos)/π per bit.
-    *  - each same-key run is capped to its FIRST `maxBucket` members in
-    *    (key, id) order (degenerate-cluster guard, same policy as
-    *    PhashDup.maxBucket; overflow rows only lose pairs against other
-    *    cap-overflow rows — mass-duplicate clusters are exact/minhash
-    *    dedup's job first in a real pipeline).
+    *  - each same-key run keeps its FIRST `maxBucket` members in
+    *    (key, id) order, and overflow rows still score against them
+    *    (degenerate-cluster guard; only overflow×overflow pairs are lost
+    *    — mass-duplicate clusters are exact/minhash dedup's job first in
+    *    a real pipeline).
     *  - the vector rides the banding exchange once per table; only TRUE
     *    near-dup pairs leave the scan, then re-join on id solely to
-    *    restore the caller's original id type (skipped when vec_id is
+    *    restore the caller's original id type
+    *    ([[graft.ops.Banding.restoreIds]], skipped when vec_id is
     *    already a string).
     *  - the embeddings lineage is scanned once per table (plus once for
     *    the auto-nPlanes count); if the embedding column comes from an
@@ -296,8 +297,7 @@ object Similarity {
       maxBucket: Int = 1024,
       targetBucket: Int = 256): DataFrame = {
     val emb = embeddings
-      .select(col("vec_id").cast("string").as("id"), col("vec_id").as("__orig"),
-        col("embedding").as("v"))
+      .select(col("vec_id").cast("string").as("id"), col("embedding").as("v"))
     val planesPerTable =
       if (nPlanes > 0) nPlanes
       else {
@@ -307,41 +307,16 @@ object Similarity {
       }
     // One 64-bit key per (table, signature); the VECTOR rides the banding
     // exchange (once per table) and every capped bucket is scored inside
-    // the shared run-scan (Banding.cosinePairs) — candidate pairs never
-    // cross a shuffle. The former slim-candidates → payload-join shape
-    // was O(candidates) shuffle state, and on clustered corpora (the
-    // realistic regime: buckets sit at the cap) that exhausted execution
-    // memory at 100k rows; this shape is O(input) shuffle + O(true
-    // pairs) output.
+    // the run-scan: O(input) shuffle plus O(true pairs) output, where
+    // slim candidates plus a payload join hold O(candidates) shuffle
+    // state — buckets sit at the cap on clustered corpora.
     val keyed = (0 until tables).map { t =>
       val planes = hyperplanes(dim, planesPerTable, seed = 7L + 1000L * t)
       emb.select(col("id"),
         xxhash64(lit(t), sigCol(col("v"), planes)).as("key"), col("v"))
     }.reduce(_ unionByName _)
-    val pairs = graft.ops.Banding.cosinePairs(keyed, maxBucket, threshold)
-    // Banding keyed (and pair-ordered) on STRING ids. When the caller's
-    // vec_id already IS a string, the scan's ids and ordering are the
-    // caller's — skip the restore entirely (two joins and two extra
-    // scans of the embeddings lineage saved on the contracted shape).
-    // Otherwise the id-restore joins carry each side's ORIGINAL vec_id
-    // back so the output preserves the caller's id type and ordering (a
-    // cast('long') here turned non-numeric ids into silent NULLs), with
-    // least/greatest on the original values restoring canonical
-    // id1 < id2. Only TRUE near-dup pairs reach these joins, so the
-    // pairs side is output-sized (AQE broadcasts it at runtime — no
-    // forced hint).
-    if (embeddings.schema("vec_id").dataType ==
-        org.apache.spark.sql.types.StringType) pairs
-    else {
-      val ids = emb.select(col("id"), col("__orig"))
-      pairs
-        .join(ids.select(col("id").as("id1"), col("__orig").as("__o1")), Seq("id1"))
-        .join(ids.select(col("id").as("id2"), col("__orig").as("__o2")), Seq("id2"))
-        .select(
-          least(col("__o1"), col("__o2")).as("id1"),
-          greatest(col("__o1"), col("__o2")).as("id2"),
-          col("cos"))
-    }
+    graft.ops.Banding.restoreIds(
+      graft.ops.Banding.cosinePairs(keyed, maxBucket, threshold), embeddings, "vec_id")
   }
 
   /** Deterministic synthetic embeddings with seeded near-duplicate pairs

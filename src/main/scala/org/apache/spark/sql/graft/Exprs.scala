@@ -253,6 +253,8 @@ object Exprs {
     override def inputTypes: Seq[AbstractDataType] =
       Seq(org.apache.spark.sql.types.ArrayType(DoubleType))
     override def dataType: DataType = org.apache.spark.sql.types.IntegerType
+    // null on ragged/null-element features even when the array is not
+    override def nullable: Boolean = true
     override def nullSafeEval(v: Any): Any = {
       val r = Exprs.somBmuScalar(
         v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData], weights)
@@ -260,10 +262,11 @@ object Exprs {
     }
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val wRef = ctx.addReferenceObj("somWeights", weights, "double[][]")
+      val bmu = ctx.freshName("bmu")
       nullSafeCodeGen(ctx, ev, c =>
-        s"""int graftBmu = org.apache.spark.sql.graft.Exprs.somBmuScalar($c, $wRef);
-           |${ev.isNull} = graftBmu < 0;
-           |${ev.value} = graftBmu;""".stripMargin)
+        s"""int $bmu = org.apache.spark.sql.graft.Exprs.somBmuScalar($c, $wRef);
+           |${ev.isNull} = $bmu < 0;
+           |${ev.value} = $bmu;""".stripMargin)
     }
     override protected def withNewChildInternal(newChild: Expression) =
       copy(child = newChild)

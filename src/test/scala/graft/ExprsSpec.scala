@@ -57,6 +57,33 @@ class ExprsSpec extends AnyFunSuite {
     assert(df.count() == 100)
   }
 
+  test("somBmu compiles: two instances, non-nullable input, no fallback") {
+    // a non-nullable array child and two SomBmu columns in one generated
+    // function; with the interpreted fallback disabled a compile error
+    // fails the query instead of silently running interpreted
+    val w = Array(Array(0.0, 0.0), Array(1.0, 1.0), Array(5.0, 5.0))
+    val confs = Seq("spark.sql.codegen.fallback" -> "false",
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
+    val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try {
+      val arr = spark.range(0L, 8L, 1L, 2)
+        .select(array(col("id").cast("double"), lit(0.5)).as("arr"))
+      assert(!arr.schema("arr").nullable)
+      val df = arr.select(Exprs.somBmu(col("arr"), w).as("a"),
+        Exprs.somBmu(reverse(col("arr")), w).as("b"))
+      val got = df.collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
+      val exp = (0L until 8L).map { i =>
+        val f = Array(i.toDouble, 0.5)
+        (Exprs.somBmuArray(f, w), Exprs.somBmuArray(f.reverse, w))
+      }
+      assert(got == exp)
+    } finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
   test("hamming64: symmetry, bounds, parity with bit_count") {
     val df = Seq((0L, -1L), (5L, 5L), (0x0fL, 0x01L)).toDF("a", "b")
     val rows = df.select(

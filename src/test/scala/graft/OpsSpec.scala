@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.LongAccumulator
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.synth.{GenConfig, ImageGen}
@@ -19,6 +21,17 @@ class OpsSpec extends AnyFunSuite {
         Some(f"img${ImageGen.dupBaseId(cfg.seed, cfg.faultPct, id)}%09d" -> f"img$id%09d")
       else None
     }.toSet
+
+  /** The Catalyst split/slice/array_join chain: the parity reference
+    * for the native Dedup.shingles expression. */
+  private def shinglesCatalyst(text: Column, k: Int) = {
+    val toks = split(trim(lower(text)), "\\s+")
+    when(size(toks) >= k,
+      transform(
+        sequence(lit(1), size(toks) - lit(k - 1)),
+        i => array_join(slice(toks, i, lit(k)), " ")))
+      .otherwise(array().cast("array<string>"))
+  }
 
   test("minhash LSH finds all exact-copy caption pairs") {
     val found = Dedup.minhashPairs(images, "image_id", "caption")
@@ -43,7 +56,7 @@ class OpsSpec extends AnyFunSuite {
         .toDF("caption"))
     val mismatches = corpus.select(
       Dedup.shingles(col("caption"), 3).as("nat"),
-      Dedup.shinglesCatalyst(col("caption"), 3).as("cat"))
+      shinglesCatalyst(col("caption"), 3).as("cat"))
       .filter(not(col("nat") <=> col("cat")))
       .count()
     assert(mismatches == 0L)
@@ -51,7 +64,7 @@ class OpsSpec extends AnyFunSuite {
     // when/otherwise maps null through to otherwise(array()))
     val nullRow = Seq[(String, String)](("x", null)).toDF("id", "caption")
       .select(Dedup.shingles(col("caption"), 3).as("nat"),
-        Dedup.shinglesCatalyst(col("caption"), 3).as("cat"))
+        shinglesCatalyst(col("caption"), 3).as("cat"))
       .head()
     assert(!nullRow.isNullAt(0) && !nullRow.isNullAt(1))
     assert(nullRow.getSeq[String](0) == nullRow.getSeq[String](1))
@@ -488,6 +501,28 @@ class OpsSpec extends AnyFunSuite {
     assert(pairs.toSet == Set(("a", "c")))
   }
 
+  /** A hot run (key 1: a..f) and a small one (key 2: x, y), all with
+    * the same vector and phash, in two input layouts: one partition in
+    * reverse id order, and hash-partitioned by id over five. */
+  private lazy val cappedRuns = {
+    val v = Array(1.0f, 0.0f)
+    val rows = ("abcdef".map(c => (1L, c.toString)) ++ Seq((2L, "x"), (2L, "y")))
+      .map { case (k, id) => (k, id, v, 0L) }
+    Seq(rows.reverse.toDF("key", "id", "v", "ph").coalesce(1),
+      rows.toDF("key", "id", "v", "ph").repartition(5, col("id")))
+  }
+
+  /** Pairs of one kernel entry point over both layouts at `cap`; the
+    * accumulator total of each layout rides along. */
+  private def overLayouts(cap: Int)(
+      pairs: (DataFrame, Int, Option[LongAccumulator]) => DataFrame) =
+    cappedRuns.map { keyed =>
+      val acc = spark.sparkContext.longAccumulator("cap")
+      val got = pairs(keyed, cap, Some(acc)).collect()
+        .map(r => (r.getString(0), r.getString(1))).toSet
+      (got, acc.value)
+    }
+
   test("banding cosine scan: overflow rows still score against the retained run") {
     // cap 2: rows c,d overflow the bucket — the PhashDup cap policy
     // (promised by cosineNearDupPairs' doc) pairs them against the
@@ -501,6 +536,52 @@ class OpsSpec extends AnyFunSuite {
     assert(pairs == Set(("a", "b"), ("a", "c"), ("b", "c"), ("a", "d"), ("b", "d")),
       s"got $pairs")
     assert(acc.value > 0, "overflow must still be observable")
+
+    // the same policy under two input layouts: the run keeps its first
+    // 4 ids (a..d), e and f pair only with those, and the phash family
+    // (Hamming verify, no accumulator of its own) gives the same pairs
+    val retained = for (x <- "abcd"; y <- "abcd" if x < y) yield (x.toString, y.toString)
+    val expected = (retained ++ (for (x <- "abcd"; y <- "ef") yield (x.toString, y.toString)))
+      .toSet + (("x", "y"))
+    val cos = overLayouts(4)((k, cap, t) => graft.ops.Banding.cosinePairs(k, cap, 0.9, t))
+    cos.foreach { case (got, n) =>
+      assert(got == expected, s"got $got")
+      assert(n > 0, "a run past the cap must be counted")
+    }
+    val ham = overLayouts(4)((k, cap, _) => graft.ops.Banding.hammingPairs(k, cap, 0))
+    ham.foreach { case (got, _) => assert(got == expected, s"got $got") }
+    // a cap equal to the longest run overflows nothing
+    overLayouts(6)((k, cap, t) => graft.ops.Banding.cosinePairs(k, cap, 0.9, t))
+      .foreach { case (_, n) => assert(n == 0L) }
+  }
+
+  test("banding candidate scan: strict cap keeps the first ids in any layout") {
+    // strict policy: the hot run pairs only its first 4 ids (a..d); e
+    // and f get no pairs from that key, whatever the input layout
+    val retained = for (x <- "abcd"; y <- "abcd" if x < y) yield (x.toString, y.toString)
+    val expected = retained.toSet + (("x", "y"))
+    val strict = overLayouts(4)((k, cap, t) =>
+      graft.ops.Banding.candidatePairs(k.select("id", "key"), cap, t))
+    strict.foreach { case (got, n) =>
+      assert(got == expected, s"got $got")
+      assert(n > 0, "a run past the cap must be counted")
+    }
+    overLayouts(6)((k, cap, t) =>
+      graft.ops.Banding.candidatePairs(k.select("id", "key"), cap, t))
+      .foreach { case (got, n) =>
+        assert(n == 0L)
+        assert(got.size == 15 + 1)
+      }
+  }
+
+  test("cosineNearDupPairs: a repeated numeric vec_id yields each pair once") {
+    // the id-restore map must be distinct: a vec_id listed twice would
+    // otherwise join every pair it is in twice
+    val v = Array.tabulate(32)(i => (i + 1).toFloat)
+    val emb = Seq((1L, v), (1L, v), (2L, v)).toDF("vec_id", "embedding")
+    val rows = Similarity.cosineNearDupPairs(emb, dim = 32)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(rows.toSeq == Seq((1L, 2L)), s"got ${rows.toSeq}")
   }
 
   test("multimodal: explodeBytes emits one (id,i,v) row per SIGNED byte") {

@@ -21,6 +21,17 @@ class SomSpec extends AnyFunSuite {
     best
   }
 
+  /** The typedlit-codebook higher-order-function chain: the parity
+    * reference for the native SomClustering.bmuColumn expression. */
+  private def bmuColumnHof(weights: Array[Array[Double]],
+      features: org.apache.spark.sql.Column) = {
+    val codebook = typedlit(weights.map(_.toSeq).toSeq)
+    val dists = transform(codebook, wv =>
+      aggregate(zip_with(wv, features, (a, b) => (a - b) * (a - b)),
+        lit(0.0), (acc, v) => acc + v))
+    (array_position(dists, array_min(dists)) - 1).cast("int")
+  }
+
   test("native SomBmu expression is bit-identical to the HOF chain") {
     // r6 optimization gate: bmuColumn moved from the typedlit-codebook
     // zip_with/aggregate chain to the native Exprs.SomBmu expression —
@@ -42,7 +53,7 @@ class SomSpec extends AnyFunSuite {
       .select(col("arr").cast("array<double>").as("arr"))
     val cmp = df.select(
       SomClustering.bmuColumn(w, col("arr")).as("nat"),
-      SomClustering.bmuColumnHof(w, col("arr")).as("hof"))
+      bmuColumnHof(w, col("arr")).as("hof"))
     assert(cmp.filter(not(col("nat") <=> col("hof"))).count() == 0L)
     // the tie row resolves to the FIRST minimal unit on both paths
     val tie = Seq(Tuple1(w(2).clone())).toDF("arr")

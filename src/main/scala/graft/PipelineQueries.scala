@@ -465,8 +465,8 @@ object PipelineQueries {
         .orderBy("id1", "id2")
     }),
 
-    // North-rule duplicate clusters: converged min-label propagation
-    // over the verified pair graph (hash-checked vs DuckDB recursive
+    // North-rule duplicate clusters: union-find component minimum over
+    // the verified pair graph (hash-checked vs DuckDB recursive
     // transitive closure over the same fixture)
     "qf_phash_clusters" -> ((s, _) => {
       writePhashFixture(s)
@@ -559,8 +559,8 @@ object PipelineQueries {
       s.read.parquet(embPairsFixturePath).orderBy("id1", "id2")
     }),
 
-    // Dedup: semantic duplicate CLUSTERS — converged min-label
-    // propagation over the embedding near-dup pair graph (the same
+    // Dedup: semantic duplicate CLUSTERS — union-find component
+    // minimum over the embedding near-dup pair graph (the same
     // scale shape as qf_phash_clusters, composed with the cosine
     // operator). Hash-checked: DuckDB recomputes the transitive closure
     // over the emitted pair fixture with a recursive CTE.
@@ -575,7 +575,7 @@ object PipelineQueries {
     }),
 
     // Same composed shape (hyperplane banding → fused cosine run-scan →
-    // min-label closure) over the DRIVER embeddings table. The driver
+    // union-find clusters) over the DRIVER embeddings table. The driver
     // vectors are uniform (max pairwise cosine ≈0.51), so no true
     // near-dups exist at the production 0.97 threshold — the variant
     // runs at a threshold the corpus supports (0.40, 59 true pairs at

@@ -1,7 +1,11 @@
 package graft.discovery
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Near-duplicate discovery via perceptual-hash banding (north-rule
   * addition; no reference counterpart — SURVEY.md §2.3).
@@ -80,95 +84,67 @@ object PhashDup {
     rawPairs(images, idCol, phashCol, maxHamming)
       .select(col("id2").as(idCol)).distinct()
 
-  /** Duplicate clusters via min-label propagation over the pair graph,
-    * iterated TO CONVERGENCE (no label changes) with a hard iteration
-    * cap — the distributed connected-components standard: each round is
-    * one shuffle join + aggregation, labels are localCheckpoint'ed so
-    * lineage stays flat, and the rounds needed equal the component
-    * diameter (dup chains are short; the cap is a runaway guard, and
-    * hitting it logs nothing silent — the convergence flag is the loop
-    * condition, so a capped run simply returns the best labels found).
-    * Returns (image_id, cluster_id = min id in component) for every id
-    * appearing in a pair. Exact-equivalent to transitive-closure min
-    * reachability once converged (the DuckDB oracle computes it that
-    * way). */
-  def clusters(pairs: DataFrame, maxIterations: Int = 20,
-      hopsAfter: Int = 12): DataFrame = {
-    val edges = pairs.select(col("id1"), col("id2"))
-      .union(pairs.select(col("id2").as("id1"), col("id1").as("id2")))
-      .cache()
-    // lazy init — materialized by the first iteration's action
-    var labelsCache = edges.groupBy(col("id1").as("image_id"))
-      .agg(least(min(col("id2")), first(col("id1"))).as("cluster_id"))
-      .cache()
-    var labels: DataFrame = labelsCache
-    var i = 1
-    var converged = false
-    while (i < maxIterations && !converged) {
-      // ONE job, ONE join, ONE aggregation per iteration: the node's own
-      // label joins the min-reduction as a tagged UNION row instead of a
-      // second join (min over messages ∪ own ≡
-      // least(min(nbr), own)), the changed flag is min(messages) < own
-      // computed in the SAME aggregate (labels only ever DECREASE —
-      // exactly the old next≠labels condition), and it rides the
-      // materializing count() as an Observation; cache replaces
-      // localCheckpoint so nothing is serialized per round. Lineage
-      // nests one cached join per iteration — bounded by maxIterations,
-      // and execution always shortcuts at the previous iteration's
-      // cached frame.
-      val msgs = edges
-        .join(labels, edges("id2") === labels("image_id"), "inner")
-        .select(edges("id1").as("image_id"), col("cluster_id").as("label"),
-          lit(false).as("__own"))
-      // ADAPTIVE pointer doubling: after `hopsAfter` plain rounds an
-      // unconverged graph additionally propagates label-of-label
-      // (shortcut hops, the large-star/small-star idea) — remaining
-      // convergence then needs O(log d) rounds instead of O(d), so the
-      // 20-round cap is effectively unreachable (12 + 8 hop rounds
-      // covers diameters past 2^8). Hops are NOT free (one extra
-      // labels⋈labels join per round: measured 0.75 s/round vs 0.33
-      // plain on the sf0.1 graph), and real dup-chain graphs converge
-      // in ≤10 plain rounds — so the common case never pays for them.
-      // Labels stay ids of component members and only ever decrease, so
-      // the CONVERGED state is unchanged with or without hops: stable
-      // under neighbor-min ⇒ per-component constant = component min.
-      val withHops = i > hopsAfter
-      val maybeHops =
-        if (!withHops) Nil
-        else Seq(labels.alias("a")
-          .join(labels.alias("b"), col("a.cluster_id") === col("b.image_id"))
-          .select(col("a.image_id").as("image_id"),
-            col("b.cluster_id").as("label"), lit(false).as("__own")))
-      val stepped = maybeHops.foldLeft(msgs)(_ unionByName _)
-        .unionByName(labels.select(col("image_id"),
-          col("cluster_id").as("label"), lit(true).as("__own")))
-        .groupBy(col("image_id"))
-        .agg(min(col("label")).as("cluster_id"),
-          min(when(col("__own"), col("label"))).as("__prev"))
-        .select(col("image_id"), col("cluster_id"),
-          (col("cluster_id") < col("__prev")).as("__changed"))
-      val obs = org.apache.spark.sql.Observation()
-      val cachedNext = stepped
-        .observe(obs, sum(when(col("__changed"), 1L).otherwise(0L)).as("changed"))
-        .select(col("image_id"), col("cluster_id"))
-        .cache()
-      cachedNext.count(): Unit
-      converged = Option(obs.get("changed")).forall {
-        case n: Long => n == 0L
-        case _ => true // a null sum means zero rows — converged
-      }
-      labelsCache.unpersist()
-      labelsCache = cachedNext
-      // flatten the logical lineage (no job): the step plan references
-      // `labels` twice (join + union), so carrying the raw plan forward
-      // would DOUBLE it per iteration — exponential analysis cost and a
-      // driver OOM once the pair graph needs ~10 rounds (seen at sf0.1).
-      // Flattened AFTER cache+count so its planning picks up the
-      // materialized InMemoryRelation.
-      labels = org.apache.spark.sql.graft.Bridge.flattenLineage(cachedNext)
-      i += 1
+  /** Duplicate clusters: the connected components of the pair graph, as
+    * (image_id, cluster_id = min id of the component) for every id in a
+    * pair, both columns of the `id1` column's type.
+    *
+    * Union-find (union by min, path compression) in two Spark stages:
+    * each partition of the pairs is reduced to a spanning forest of
+    * its edges — one (node, root) row per node it touched — and a single
+    * task unions those forests into the final labels; both stages run
+    * [[unionFind]]. There are no rounds, so there is no cap to hit;
+    * nothing is cached or collected, and nothing runs before the
+    * caller's action. Roots are compared in Spark's ordering of the id
+    * type (strings by UTF-8 bytes), so every root is its component's
+    * minimum whatever the input order or task retries — the same labels
+    * as the transitive-closure minimum the DuckDB oracle computes.
+    *
+    * Memory: the stage-2 task holds one map entry per distinct id of the
+    * pair graph, which is far smaller than the corpus. A distributed
+    * merge (large-star/small-star, Kiveris et al., SoCC 2014) pays for
+    * its extra shuffle rounds only once a pair graph outgrows one task;
+    * no workload has one yet, so there is no size threshold and no
+    * second path. */
+  def clusters(pairs: DataFrame): DataFrame = {
+    val idType = pairs.schema("id1").dataType
+    val order = idOrdering(idType)
+    val labels = Encoders.row(StructType(Seq(
+      StructField("image_id", idType), StructField("cluster_id", idType))))
+    pairs.select(col("id1"), col("id2"))
+      .mapPartitions(unionFind(order) _)(labels)
+      .repartition(1)
+      .mapPartitions(unionFind(order) _)(labels)
+  }
+
+  /** Union-find over (a, b) rows with the smaller root winning each
+    * union; emits (node, component minimum) once per node seen. */
+  private def unionFind(order: Ordering[Any])(edges: Iterator[Row]): Iterator[Row] = {
+    val parent = mutable.HashMap.empty[Any, Any]
+    def find(x: Any): Any = {
+      var root = x
+      var up = parent.getOrElseUpdate(x, x)
+      while (up != root) { root = up; up = parent(root) }
+      var node = x
+      while (node != root) { val next = parent(node); parent(node) = root; node = next }
+      root
     }
-    edges.unpersist()
-    labels
+    edges.foreach { e =>
+      val a = find(e.get(0))
+      val b = find(e.get(1))
+      if (order.lt(a, b)) parent(b) = a else if (order.lt(b, a)) parent(a) = b
+    }
+    parent.keys.toArray.iterator.map(n => Row(n, find(n)))
+  }
+
+  /** Spark's ordering of an id type, as `min` applies it: UTF-8 byte
+    * order for strings (not UTF-16 `String.compareTo`), numeric order
+    * for integral ids. */
+  private def idOrdering(idType: DataType): Ordering[Any] = idType match {
+    case StringType => (a, b) => UTF8String.fromString(a.asInstanceOf[String])
+      .binaryCompare(UTF8String.fromString(b.asInstanceOf[String]))
+    case ByteType | ShortType | IntegerType | LongType =>
+      (a, b) => a.asInstanceOf[Comparable[Any]].compareTo(b)
+    case other =>
+      throw new IllegalArgumentException(s"unsupported cluster id type $other")
   }
 }

@@ -16,21 +16,6 @@ object Bridge {
 
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
-  /** Truncate a DataFrame's LOGICAL lineage without running a job: wrap
-    * the (already planned, typically cached) physical RDD in a flat
-    * LogicalRDD-backed frame. Iterative algorithms whose step plan
-    * references the previous frame more than once (join + union in
-    * PhashDup.clusters) otherwise DOUBLE their logical plan per
-    * iteration — exponential analysis cost and a driver OOM by ~10
-    * iterations. Unlike localCheckpoint this schedules no job and keeps
-    * the cache as the compute shortcut; callers must have materialized
-    * the cache first (the RDD re-executes the plan otherwise). */
-  def flattenLineage(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val spark = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    spark.internalCreateDataFrame(
-      df.queryExecution.toRdd, df.schema, isStreaming = false)
-  }
-
   /** Register a SQL function builder on the session's registry. */
   def register(
       spark: SparkSession,

@@ -3,6 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import graft.discovery.PhashDup
 import graft.synth.{GenConfig, ImageGen}
+import org.apache.spark.sql.graft.CacheProbe
 
 class PhashDupSpec extends AnyFunSuite {
   lazy val spark = GraftTestSpark.spark
@@ -75,16 +76,59 @@ class PhashDupSpec extends AnyFunSuite {
     assert(labels.values.toSet == Set("a"), labels.toString)
   }
 
-  test("adaptive pointer doubling converges past the plain-round budget") {
-    // r6: a 30-node chain (diameter 29) cannot converge in 19 plain
-    // min-propagation rounds — the shortcut hops that kick in after
-    // `hopsAfter` rounds must finish it within the 20-round cap with
-    // every node labeled by the component minimum
+  test("clusters label long chains with the component minimum, no round cap") {
+    // a 30-node chain (diameter 29) and a 4,096-node chain (diameter
+    // 4,095): every node gets its component minimum whatever the diameter
     val ids = (0 until 30).map(i => f"n$i%03d")
     val pairs = ids.zip(ids.tail).toSeq.toDF("id1", "id2")
     val labels = PhashDup.clusters(pairs).collect()
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(labels.keySet == ids.toSet)
     assert(labels.values.toSet == Set("n000"), labels.toString)
+
+    val long = (0 until 4096).map(i => f"c$i%04d")
+    val longLabels = PhashDup.clusters(long.zip(long.tail).toSeq.toDF("id1", "id2"))
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(longLabels.keySet == long.toSet)
+    assert(longLabels.values.toSet == Set("c0000"),
+      longLabels.filter(_._2 != "c0000").take(5).toString)
+  }
+
+  test("clusters leave no cached relation behind") {
+    val before = CacheProbe.entries(spark)
+    val ids = "abcdefg".map(_.toString)
+    PhashDup.clusters(ids.zip(ids.tail).toDF("id1", "id2")).collect()
+    assert(CacheProbe.entries(spark) <= before)
+  }
+
+  test("clusters order numeric ids numerically and keep their type") {
+    // one component split over three partitions, so several partial
+    // forests meet; string order would pick 10 over 2
+    val rdd = spark.sparkContext.parallelize(
+      Seq((10L, 11L), (11L, 2L), (12L, 10L), (40L, 41L)), 3)
+    val pairs = rdd.toDF("id1", "id2")
+    assert(pairs.rdd.getNumPartitions >= 3)
+    val clusters = PhashDup.clusters(pairs)
+    assert(clusters.schema("cluster_id").dataType ==
+      org.apache.spark.sql.types.LongType)
+    val labels = clusters.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(labels == Map(2L -> 2L, 10L -> 2L, 11L -> 2L, 12L -> 2L,
+      40L -> 40L, 41L -> 40L), labels.toString)
+  }
+
+  test("clusters order string ids by UTF-8 bytes, as Spark's min does") {
+    // U+FFFF encodes as EF BF BF and U+1F600 as F0 9F 98 80, so Spark
+    // (UTF-8 byte order) picks U+FFFF; UTF-16 String.compareTo would
+    // pick the surrogate pair
+    val emoji = "\uD83D\uDE00"
+    val top = "\uFFFF"
+    val rdd = spark.sparkContext.parallelize(
+      Seq((emoji, top + "a"), (top + "a", top + "b"), (top + "b", top)), 3)
+    val pairs = rdd.toDF("id1", "id2")
+    assert(pairs.rdd.getNumPartitions >= 3)
+    val labels = PhashDup.clusters(pairs).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    assert(labels.keySet == Set(emoji, top, top + "a", top + "b"))
+    assert(labels.values.toSet == Set(top), labels.toString)
   }
 }

@@ -62,7 +62,7 @@ object ValidationRun {
   /** Bounded wait on an Observation: the metrics must arrive with the
     * write action that carries them — if they ever fail to propagate,
     * fail fast instead of hanging the loop forever on `obs.get`. */
-  private def observed(obs: org.apache.spark.sql.Observation,
+  private[graft] def observed(obs: org.apache.spark.sql.Observation,
       timeoutSec: Int = 300): Map[String, Any] = {
     import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
     val ex = Executors.newSingleThreadExecutor { r =>
@@ -131,8 +131,7 @@ object ValidationRun {
     val thresholds = scala.collection.mutable.ArrayBuffer.empty[Double]
     // Reload prior rounds' metrics AND thresholds so TPGR spans the full
     // history on resume and RunResult.thresholds stays aligned 1:1 with
-    // RunResult.metrics (a resumed run previously returned a short
-    // thresholds list). Checkpoints written before the tpgr column
+    // RunResult.metrics. Checkpoints written before the tpgr column
     // existed stay resumable: the missing column reads as 0.0 (TPGR of a
     // one-run history) instead of failing the whole resume on
     // AnalysisException. roundComplete guarantees both paths exist for
@@ -226,12 +225,10 @@ object ValidationRun {
       // independent engine (the DuckDB oracle) can recompute every
       // TPR/FNR/PD/ND/UD/TPGR value from it.
       //
-      // r6: the four writes are mutually independent reads of the same
-      // materialized cache, so they run as CONCURRENT Spark actions
-      // (guide §2.6 — actions are only sequential because driver code
-      // calls them sequentially); a round's wall cost is one write
-      // latency, not four. Outputs and resume semantics are unchanged —
-      // roundComplete still requires all of them to exist.
+      // The four writes are mutually independent reads of the same
+      // materialized cache, so they run as CONCURRENT Spark actions; a
+      // round's wall cost is one write latency, not four. roundComplete
+      // requires all of them to exist.
       locally {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global

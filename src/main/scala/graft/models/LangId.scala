@@ -5,19 +5,25 @@ import graft.synth.{ImageGen, Vocab}
 /** fastText-style language-ID model: hashed character n-gram (1–3)
   * bag-of-features into a linear softmax over language classes. Pure
   * Scala, trained once driver-side on a deterministic synthetic corpus,
-  * then broadcast to executors and applied per row (typed map / UDF /
-  * custom expression — see [[graft.detect.Scorer]]).
+  * then broadcast to executors and applied per row by one native
+  * expression (`Exprs.LangIdPredict`, see [[graft.detect.Scorer]]).
   *
   * Replaces the reference's model-zoo anomaly scorers (M2/M3,
   * /root/reference/backendClasses/DQTestToolHelper.py:104-130) for the
   * langid rule of the north-star pipeline. The class list includes
   * out-of-set languages ("ru") and a gibberish class so the accepted-set
   * probability is genuinely discriminative.
+  *
+  * The serial version is pinned so a checkpoint stays readable while
+  * the serialized fields (`langs`, `dim`, `weights`) are unchanged.
   */
+@SerialVersionUID(-669274143913281235L)
 final case class LangIdModel(
     langs: Array[String],
     dim: Int,
     weights: Array[Float]) { // (dim x L) row-major: weights(f * L + l)
+
+  require(dim > 0 && (dim & (dim - 1)) == 0, s"dim must be a power of two, got $dim")
 
   @transient private lazy val acceptedIdx: Array[Int] =
     langs.zipWithIndex.filter { case (l, _) => Vocab.acceptedLangs.contains(l) }.map(_._2)
@@ -35,7 +41,7 @@ final case class LangIdModel(
         var h = 1125899906842597L
         var j = i
         while (j < i + n) { h = 31L * h + s.charAt(j); j += 1 }
-        out(w) = (((h % dim) + dim) % dim).toInt
+        out(w) = (h & (dim - 1)).toInt // floorMod(h, dim): dim is a power of two
         w += 1
         i += 1
       }
@@ -52,30 +58,26 @@ final case class LangIdModel(
     LangId.probsFromBuckets(fs, weights, l)
   }
 
-  /** Java/codegen-friendly variant of [[bestLang]]. */
-  def bestLangLabel(text: String): String = bestLang(text)._1
-
-  def bestLang(text: String): (String, Double) = {
+  /** One forward pass: the argmax language (first maximum wins) and the
+    * highest probability among the accepted languages — the langid keep
+    * signal; 1 − that probability drives the invalidity score. */
+  def predict(text: String): LangIdPrediction = {
     val p = predictProbs(text)
     var bi = 0
     var i = 1
     while (i < p.length) { if (p(i) > p(bi)) bi = i; i += 1 }
-    (langs(bi), p(bi))
-  }
-
-  /** Max probability over the accepted-language classes — the langid
-    * keep signal; 1 − this is the invalidity score component. */
-  def acceptedProb(text: String): Double = {
-    val p = predictProbs(text)
-    var best = 0.0
-    var i = 0
+    var accepted = 0.0
+    i = 0
     while (i < acceptedIdx.length) {
-      if (p(acceptedIdx(i)) > best) best = p(acceptedIdx(i))
+      if (p(acceptedIdx(i)) > accepted) accepted = p(acceptedIdx(i))
       i += 1
     }
-    best
+    LangIdPrediction(langs(bi), accepted)
   }
 }
+
+/** Result of [[LangIdModel.predict]]. */
+final case class LangIdPrediction(lang: String, acceptedProb: Double)
 
 object LangId {
   /** Memoized default model (deterministic corpus + hyperparameters):
@@ -109,8 +111,8 @@ object LangId {
   }
 
   /** Lowercase; any non-letter, non-space char becomes a space; trimmed.
-    * Hand-rolled (no per-call regex compile — this runs 3× per row in
-    * the scoring hot path). */
+    * Hand-rolled (no per-call regex compile): the langid forward pass and
+    * the perplexity scorer each normalize every caption once. */
   def normalize(text: String): String = {
     if (text == null) return ""
     val n = text.length

@@ -34,12 +34,44 @@ object Scrub {
     * the native single-pass expression instead
     * (org.apache.spark.sql.graft.Exprs.scrubAll → [[scrubString]]):
     * each chained regexp_replace round-trips UTF8String ↔ String and
-    * allocates an intermediate result per rule per row, and that
-    * allocation rate was the worst-scaling component of the score phase
-    * at 32 threads (1.57× for 4× threads). Semantics are identical
-    * (same java.util.regex patterns, same order — parity-tested). */
+    * allocates an intermediate result per rule per row. Semantics are
+    * identical (same java.util.regex patterns, same order —
+    * parity-tested). */
   def scrub(caption: Column): Column =
     rules.foldLeft(caption) { case (c, (_, pat, rep)) => regexp_replace(c, pat, rep) }
+
+  // Trigger bits: what a pattern cannot match without.
+  private[graft] val At = 1 // '@'
+  private[graft] val Digit = 2 // an ASCII digit: \d is ASCII-only in java.util.regex
+  private[graft] val Scheme = 4 // "://"
+
+  /** Triggers a rule's pattern needs, in [[rules]] order: a rule whose
+    * triggers the caption lacks cannot match it. No replacement token
+    * contains a trigger, so the triggers of the input are a superset of
+    * those of every intermediate string of the chain (ScrubSpec asserts
+    * both facts). */
+  private[graft] val ruleTriggers: Array[Int] = rules.map {
+    case ("email", _, _) => At
+    case ("ssn" | "phone" | "ipv4", _, _) => Digit
+    case ("url", _, _) => Scheme
+    case _ => 0
+  }.toArray
+
+  /** The trigger bits present in `s`. */
+  private[graft] def triggers(s: String): Int = {
+    var t = 0
+    var colon = false
+    var i = 0
+    while (i < s.length) {
+      val c = s.charAt(i)
+      if (c == '@') t |= At
+      else if (c >= '0' && c <= '9') t |= Digit
+      else if (c == ':') colon = true
+      i += 1
+    }
+    if (colon && s.contains("://")) t |= Scheme
+    t
+  }
 
   private val compiled: Array[(java.util.regex.Pattern, String)] =
     rules.map { case (_, pat, rep) =>
@@ -47,17 +79,20 @@ object Scrub {
     }.toArray
 
   /** One-pass scalar scrub: ONE UTF8String↔String conversion per row
-    * (inside the native expression), precompiled patterns, and a
-    * zero-allocation fast path for the no-match case (the overwhelming
-    * majority of captions). Exact-equality parity with [[scrub]] and the
-    * DuckDB oracle chain is test-gated. */
+    * (inside the native expression), precompiled patterns, only the rules
+    * whose triggers the input has (most captions run the toxicity rule
+    * alone), and no allocation when nothing matches. Exact-equality
+    * parity with [[scrub]] and the DuckDB oracle chain is test-gated. */
   def scrubString(s: String): String = {
+    val present = triggers(s)
     var cur = s
     var i = 0
     while (i < compiled.length) {
-      val (p, rep) = compiled(i)
-      val m = p.matcher(cur)
-      if (m.find()) cur = m.replaceAll(rep)
+      if ((ruleTriggers(i) & present) == ruleTriggers(i)) {
+        val (p, rep) = compiled(i)
+        val m = p.matcher(cur)
+        if (m.find()) cur = m.replaceAll(rep)
+      }
       i += 1
     }
     cur

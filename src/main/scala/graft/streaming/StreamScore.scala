@@ -22,7 +22,7 @@ object StreamScore {
     * see [[firstSeenByPhash]]). `eventTime` column must already exist.
     *
     * score_ppl uses the SAME per-predicted-language reference quantiles
-    * as the batch path (Scorer.withScores) — the map literal is
+    * as the batch path (Scorer.withScores) — the reference lookup is
     * stream-safe, and a global-only reference would inflate score_ppl
     * for minority languages and flip keep/drop vs batch. */
   def scoreStream(stream: DataFrame, m: Scorer.Models, threshold: Double): DataFrame = {
@@ -32,11 +32,14 @@ object StreamScore {
     // not copies, so a batch recalibration cannot silently diverge
     // streaming keep/drop decisions (StreamingSpec asserts 1e-12 parity)
     val rules = Scorer.ruleColumns
+    val langid = col(Scorer.langIdCol)
     val scored = rules.foldLeft(stream) { case (df, (n, c)) => df.withColumn(n, c) }
-      .withColumn("score_langid", Scorer.langidScoreCol(col("caption"), m.langId))
+      .withColumn(Scorer.langIdCol, Exprs.langidPredict(col("caption"), m.langId))
+      .withColumn("score_langid", Scorer.langidScoreCol(langid.getField("accepted_prob")))
       .withColumn("score_ppl", Scorer.pplScoreCol(
         Exprs.perplexity(col("caption"), m.lm),
-        Exprs.langidBest(col("caption"), m.langId), m.pplRefByLang, m.pplRef))
+        langid.getField("lang"), m.pplRefByLang, m.pplRef))
+      .drop(Scorer.langIdCol)
     val withPii = Scorer.scrubPiiColumns(col("caption"))
       .foldLeft(scored) { case (df, (n, c)) => df.withColumn(n, c) }
     val names = rules.map(_._1) ++ Seq("score_pii", "score_langid", "score_ppl")

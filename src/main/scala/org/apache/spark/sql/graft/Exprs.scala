@@ -2,9 +2,10 @@ package org.apache.spark.sql.graft
 
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, UnaryExpression}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpectsInputTypes, GenericInternalRow, GetStructField, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType, LongType, StringType}
+import org.apache.spark.sql.types.{AbstractDataType, DataType, DoubleType, LongType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import graft.models.{LangIdModel, NGramLMModel}
 
@@ -20,43 +21,40 @@ import graft.models.{LangIdModel, NGramLMModel}
   */
 object Exprs {
 
-  /** P(caption ∈ accepted language set) under the broadcast langid. */
-  case class LangIdAcceptedProb(child: Expression, bc: Broadcast[LangIdModel])
+  /** Both langid signals of a caption from ONE forward pass of the
+    * broadcast model: `struct<lang: string, accepted_prob: double>`, the
+    * argmax language and the highest accepted-language probability. The
+    * column builders [[langidBest]] / [[langidAcceptedProb]] and the SQL
+    * functions `graft_langid` / `graft_accepted_prob` are field reads of
+    * this struct; a plan that needs both fields materializes it once as
+    * a column (see graft.detect.Scorer.withRawSignals). */
+  case class LangIdPredict(child: Expression, bc: Broadcast[LangIdModel])
       extends UnaryExpression with ExpectsInputTypes {
     override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-    override def dataType: DataType = DoubleType
+    override def dataType: DataType = Exprs.langIdType
     override def nullSafeEval(v: Any): Any =
-      bc.value.acceptedProb(v.asInstanceOf[UTF8String].toString)
+      Exprs.langidRow(bc.value, v.asInstanceOf[UTF8String])
     override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
       val bcRef = ctx.addReferenceObj("langIdBc", bc,
         classOf[Broadcast[LangIdModel]].getName)
       nullSafeCodeGen(ctx, ev, c =>
-        s"""${ev.value} = ((graft.models.LangIdModel) $bcRef.value())
-           |  .acceptedProb($c.toString());""".stripMargin)
+        s"""${ev.value} = org.apache.spark.sql.graft.Exprs.langidRow(
+           |  (graft.models.LangIdModel) $bcRef.value(), $c);""".stripMargin)
     }
     override protected def withNewChildInternal(newChild: Expression) =
       copy(child = newChild)
-    override def prettyName: String = "graft_accepted_prob"
+    override def prettyName: String = "graft_langid_predict"
   }
 
-  /** argmax language label under the broadcast langid. */
-  case class LangIdBest(child: Expression, bc: Broadcast[LangIdModel])
-      extends UnaryExpression with ExpectsInputTypes {
-    override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
-    override def dataType: DataType = StringType
-    override def nullSafeEval(v: Any): Any =
-      UTF8String.fromString(bc.value.bestLang(v.asInstanceOf[UTF8String].toString)._1)
-    override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-      val bcRef = ctx.addReferenceObj("langIdBc", bc,
-        classOf[Broadcast[LangIdModel]].getName)
-      nullSafeCodeGen(ctx, ev, c =>
-        s"""${ev.value} = org.apache.spark.unsafe.types.UTF8String.fromString(
-           |  ((graft.models.LangIdModel) $bcRef.value())
-           |    .bestLangLabel($c.toString()));""".stripMargin)
-    }
-    override protected def withNewChildInternal(newChild: Expression) =
-      copy(child = newChild)
-    override def prettyName: String = "graft_langid"
+  /** Result type of [[LangIdPredict]]. */
+  val langIdType: StructType = StructType(Seq(
+    StructField("lang", StringType, nullable = false),
+    StructField("accepted_prob", DoubleType, nullable = false)))
+
+  /** Scalar body of [[LangIdPredict]] (public static for codegen). */
+  def langidRow(model: LangIdModel, text: UTF8String): InternalRow = {
+    val p = model.predict(text.toString)
+    new GenericInternalRow(Array[Any](UTF8String.fromString(p.lang), p.acceptedProb))
   }
 
   /** Per-character perplexity under the broadcast n-gram LM. */
@@ -136,11 +134,10 @@ object Exprs {
 
   /** Random-hyperplane LSH signature of an array<float> embedding: bit p
     * of the result = sign of ⟨vec, plane_p⟩ (see
-    * graft.ops.Similarity.signatureOf). Native codegen'd replacement for
-    * the former Scala UDF in the ANN hot path — the plane matrix rides
-    * along as a codegen reference object, the float array is read
-    * straight off the unsafe row (no serde). Input arrays must not
-    * contain null elements (embeddings never do). */
+    * graft.ops.Similarity.signatureOf). The plane matrix rides along as
+    * a codegen reference object and the float array is read straight off
+    * the unsafe row (no serde). Input arrays must not contain null
+    * elements (embeddings never do). */
   case class HyperplaneSig(child: Expression, planes: Array[Array[Double]])
       extends UnaryExpression with ExpectsInputTypes {
     override def inputTypes: Seq[AbstractDataType] =
@@ -187,12 +184,11 @@ object Exprs {
     override def prettyName: String = "graft_nearest_centroid"
   }
 
-  /** Word k-shingles of a text in ONE scalar pass — the native codegen'd
-    * equivalent of the former Catalyst chain
-    * `transform(sequence(...), i -> array_join(slice(split(trim(lower(text)),
-    * '\\s+'), i, k), ' '))`, which measured ~20 s over 200k captions (per-
-    * shingle slice + array_join allocations) vs <1 s here. Output parity
-    * is exact and spec-gated (DedupSpec): UTF8String.toLowerCase then
+  /** Word k-shingles of a text in ONE scalar pass — equal to the Catalyst
+    * chain `transform(sequence(...), i -> array_join(slice(split(trim(
+    * lower(text)), '\\s+'), i, k), ' '))` without its per-shingle slice
+    * and array_join allocations. Output parity is exact and spec-gated
+    * (OpsSpec): UTF8String.toLowerCase then
     * .trim() are the same methods Lower/StringTrim call, and
     * String.split("\\s+", -1) matches StringSplit's limit=-1 semantics
     * (leading/trailing empty tokens preserved identically). Returns an
@@ -231,14 +227,10 @@ object Exprs {
   val emptyShingles: org.apache.spark.sql.catalyst.util.GenericArrayData =
     new org.apache.spark.sql.catalyst.util.GenericArrayData(Array.empty[Any])
 
-  /** Batch-SOM best-matching-unit over a codebook reference object —
-    * the r6 replacement for the `typedlit(codebook)` higher-order-
-    * function chain in SomClustering.bmuColumn. The HOF chain inlines
-    * the codebook VALUES into the generated code, so every fit epoch
-    * (new weights) forced a fresh janino compile (~20 compiles per
-    * fit, the dominant cold cost of qf_som_assign); the codebook here
-    * rides as a codegen reference, the generated source is identical
-    * across epochs, and the whole fit shares ONE compiled plan shape.
+  /** Batch-SOM best-matching-unit over a codebook reference object. The
+    * codebook rides as a codegen reference rather than as literal values,
+    * so the generated source is identical across fit epochs and the whole
+    * fit shares ONE compiled plan shape.
     *
     * Arithmetic parity is exact and spec-gated (SomSpec): distances
     * fold left-to-right from 0.0 over (w_i − f_i)² like the
@@ -335,16 +327,14 @@ object Exprs {
     }
   }
 
-  /** Per-predicted-language perplexity reference with global fallback —
-    * the r6 replacement for
-    * `coalesce(element_at(<map literal>, pred_lang), lit(global))` in
-    * Scorer.pplScoreCol. The map/global literals inlined the per-round
-    * RECALIBRATED doubles into the generated code, so every loop round's
-    * scoring stage was a fresh janino compile; as reference objects the
-    * generated source is identical across rounds and the whole-stage
-    * codegen cache hits. Value parity is exact: lookup hit returns the
-    * stored double, miss or NULL language returns `global` (exactly the
-    * element_at-null → coalesce path). Never null. */
+  /** Per-predicted-language perplexity reference with global fallback,
+    * used by Scorer.pplScoreCol. The map and the global value ride as
+    * codegen reference objects, so the generated source is identical
+    * across the loop's per-round recalibrations and the whole-stage
+    * codegen cache hits. Values equal
+    * `coalesce(element_at(<map literal>, pred_lang), lit(global))`
+    * exactly (ExprsSpec): a lookup hit returns the stored double, a miss
+    * or NULL language returns `global`. Never null. */
   case class PplRef(child: Expression, byLang: Map[String, Double], global: Double)
       extends UnaryExpression with ExpectsInputTypes {
     override def inputTypes: Seq[AbstractDataType] = Seq(StringType)
@@ -384,7 +374,8 @@ object Exprs {
   /** Whole PII/toxicity scrub chain in ONE pass (see
     * graft.scrub.Scrub.scrubString): one UTF8String↔String round-trip
     * per row instead of one per chained regexp_replace rule, precompiled
-    * patterns, allocation-free when nothing matches. Exact-equality
+    * patterns, only the rules whose trigger characters the caption has,
+    * allocation-free when nothing matches. Exact-equality
     * parity with the built-in chain is test-gated. */
   case class ScrubAll(child: Expression)
       extends UnaryExpression with ExpectsInputTypes {
@@ -403,11 +394,16 @@ object Exprs {
   }
 
   // ---- Column-level API -------------------------------------------------
-  def langidAcceptedProb(c: Column, bc: Broadcast[LangIdModel]): Column =
-    Bridge.column(LangIdAcceptedProb(Bridge.expression(c), bc))
+  def langidPredict(c: Column, bc: Broadcast[LangIdModel]): Column =
+    Bridge.column(LangIdPredict(Bridge.expression(c), bc))
 
+  /** Argmax language label (`graft_langid`). */
   def langidBest(c: Column, bc: Broadcast[LangIdModel]): Column =
-    Bridge.column(LangIdBest(Bridge.expression(c), bc))
+    langidPredict(c, bc).getField("lang")
+
+  /** Highest accepted-language probability (`graft_accepted_prob`). */
+  def langidAcceptedProb(c: Column, bc: Broadcast[LangIdModel]): Column =
+    langidPredict(c, bc).getField("accepted_prob")
 
   def perplexity(c: Column, bc: Broadcast[NGramLMModel]): Column =
     Bridge.column(Perplexity(Bridge.expression(c), bc))
@@ -449,8 +445,10 @@ object Exprs {
     Bridge.register(spark, "hamming64", es => Hamming64(es(0), es(1)))
     Bridge.register(spark, "graft_simhash64", es => SimHash64(es.head))
     Bridge.register(spark, "graft_scrub", es => ScrubAll(es.head))
-    Bridge.register(spark, "graft_accepted_prob", es => LangIdAcceptedProb(es.head, langId))
-    Bridge.register(spark, "graft_langid", es => LangIdBest(es.head, langId))
+    Bridge.register(spark, "graft_accepted_prob",
+      es => GetStructField(LangIdPredict(es.head, langId), 1, Some("accepted_prob")))
+    Bridge.register(spark, "graft_langid",
+      es => GetStructField(LangIdPredict(es.head, langId), 0, Some("lang")))
     Bridge.register(spark, "graft_perplexity", es => Perplexity(es.head, lm))
   }
 }

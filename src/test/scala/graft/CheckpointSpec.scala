@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.detect.Scorer
-import graft.models.ModelCheckpoint
+import graft.models.{LangIdModel, ModelCheckpoint, NGramLMModel}
 
 class CheckpointSpec extends AnyFunSuite {
   lazy val spark = GraftTestSpark.spark
@@ -46,5 +46,77 @@ class CheckpointSpec extends AnyFunSuite {
         .toDF("version", "fingerprint", "state"),
       dir)
     assert(ModelCheckpoint.load(spark, dir, fingerprint = "fp").isEmpty)
+  }
+
+  test("a loaded LM rebuilds its lookup tables and scores bit for bit; the serialized form has no tables") {
+    val dir = "target/graft-model-ckpt-tables"
+    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    val m = PipelineCache.models(spark, 500L)
+    val caps = PipelineCache.images(spark, 500L).select("caption").collect().map(_.getString(0))
+    val before = caps.map(m.lm.value.perplexity) // builds the tables in this JVM
+    ModelCheckpoint.save(spark, m, dir)
+    assert(ModelCheckpoint.FormatVersion == 2)
+    val loaded = ModelCheckpoint.load(spark, dir).get
+    val bits = (xs: Array[Double]) => xs.map(java.lang.Double.doubleToRawLongBits).toSeq
+    assert(bits(caps.map(loaded.lm.value.perplexity)) == bits(before))
+    assert(caps.map(loaded.langId.value.predict).toSeq == caps.map(m.langId.value.predict).toSeq)
+    // a fresh copy and one whose tables are built serialize to the same bytes
+    def bytes(o: AnyRef): Seq[Byte] = {
+      val b = new java.io.ByteArrayOutputStream()
+      val out = new java.io.ObjectOutputStream(b)
+      out.writeObject(o); out.close()
+      b.toByteArray.toSeq
+    }
+    val lm = m.lm.value
+    val fresh = NGramLMModel.fromPairs(lm.keys.zip(lm.vals), lm.total)
+    assert(bytes(fresh) == bytes(lm))
+  }
+
+  test("a checkpoint written before the lookup tables existed still loads and scores") {
+    // ModelCheckpoint state (langid + LM + references) serialized by the
+    // class layout without the lookup tables: a 2-language, dim-4 langid
+    // and the LM of counts uni a=3 b=2, bi ab=2 ba=1, tri aba=1 bab=1
+    val state = java.util.Base64.getDecoder.decode(
+      "rO0ABXNyACJncmFmdC5tb2RlbHMuTW9kZWxDaGVja3BvaW50JFN0YXRlWDamlX5E" +
+      "ueMCAAREAAZwcGxSZWZMAAZsYW5nSWR0ABpMZ3JhZnQvbW9kZWxzL0xhbmdJZE1v" +
+      "ZGVsO0wAAmxtdAAbTGdyYWZ0L21vZGVscy9OR3JhbUxNTW9kZWw7TAAMcHBsUmVm" +
+      "QnlMYW5ndAAgTHNjYWxhL2NvbGxlY3Rpb24vaW1tdXRhYmxlL01hcDt4cEAMAAAA" +
+      "AAAAc3IAGGdyYWZ0Lm1vZGVscy5MYW5nSWRNb2RlbPa2QrZKsfktAgADSQADZGlt" +
+      "WwAFbGFuZ3N0ABNbTGphdmEvbGFuZy9TdHJpbmc7WwAHd2VpZ2h0c3QAAltGeHAA" +
+      "AAAEdXIAE1tMamF2YS5sYW5nLlN0cmluZzut0lbn6R17RwIAAHhwAAAAAnQAAmVu" +
+      "dAADZ2lidXIAAltGC5yBiSLgDEICAAB4cAAAAAg/AAAAvwAAAD6AAAC/QAAAv8AA" +
+      "AD+AAAA+AAAAAAAAAHNyABlncmFmdC5tb2RlbHMuTkdyYW1MTU1vZGVsZilmSC6o" +
+      "jHsCAANKAAV0b3RhbFsABGtleXN0AAJbSlsABHZhbHNxAH4AEHhwAAAAAAAAAAV1" +
+      "cgACW0p4IAS1ErF1kwIAAHhwAAAABgAAAAEAAABhAAAAAQAAAGIAAAACAAAw4gAA" +
+      "AAIAADFhAAAAAwAYcWEAAAADABiw4nVxAH4AEgAAAAYAAAAAAAAAAwAAAAAAAAAC" +
+      "AAAAAAAAAAIAAAAAAAAAAQAAAAAAAAABAAAAAAAAAAFzcgAjc2NhbGEuY29sbGVj" +
+      "dGlvbi5pbW11dGFibGUuTWFwJE1hcDEAAAAAAAAAAwIAAkwABGtleTF0ABJMamF2" +
+      "YS9sYW5nL09iamVjdDtMAAZ2YWx1ZTFxAH4AFnhwcQB+AAtzcgAQamF2YS5sYW5n" +
+      "LkRvdWJsZYCzwkopa/sEAgABRAAFdmFsdWV4cgAQamF2YS5sYW5nLk51bWJlcoas" +
+      "lR0LlOCLAgAAeHBAEQAAAAAAAA==")
+    val dir = "target/graft-model-ckpt-compat"
+    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    import spark.implicits._
+    graft.engine.TableIO.createOrReplace(
+      Seq((ModelCheckpoint.FormatVersion, "fp", state)).toDF("version", "fingerprint", "state"),
+      dir)
+    val loaded = ModelCheckpoint.load(spark, dir, fingerprint = "fp")
+    assert(loaded.isDefined)
+    val m = loaded.get
+    assert(m.pplRef == 3.5 && m.pplRefByLang == Map("en" -> 4.25))
+    val lm = NGramLMModel(Map(
+      NGramLMModel.uniKey('a') -> 3L, NGramLMModel.uniKey('b') -> 2L,
+      NGramLMModel.biKey('a', 'b') -> 2L, NGramLMModel.biKey('b', 'a') -> 1L,
+      NGramLMModel.triKey('a', 'b', 'a') -> 1L, NGramLMModel.triKey('b', 'a', 'b') -> 1L),
+      total = 5L)
+    val langId = LangIdModel(Array("en", "gib"), 4,
+      Array(0.5f, -0.5f, 0.25f, -0.75f, -1.5f, 1.0f, 0.125f, 0.0f))
+    val texts = Seq("abab", "ba ab", "abba", "xyz", "", "a")
+    texts.foreach { t =>
+      assert(java.lang.Double.doubleToRawLongBits(m.lm.value.perplexity(t)) ==
+        java.lang.Double.doubleToRawLongBits(lm.perplexity(t)), t)
+      assert(m.langId.value.predict(t) == langId.predict(t), t)
+    }
+    assert(m.lm.value.perplexity("abab") < m.lm.value.perplexity("xyz"))
   }
 }

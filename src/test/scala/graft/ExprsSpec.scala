@@ -33,8 +33,8 @@ class ExprsSpec extends AnyFunSuite {
       Exprs.perplexity(col("caption"), lmB).as("ppl")).collect()
     rows.foreach { r =>
       val c = r.getString(0)
-      assert(r.getDouble(1) == LangId.pretrained.acceptedProb(c))
-      assert(r.getString(2) == LangId.pretrained.bestLang(c)._1)
+      assert(r.getDouble(1) == LangId.pretrained.predict(c).acceptedProb)
+      assert(r.getString(2) == LangId.pretrained.predict(c).lang)
       assert(r.getDouble(3) == lmB.value.perplexity(c))
     }
   }
@@ -149,22 +149,33 @@ class ExprsSpec extends AnyFunSuite {
       l.contains("*(") && l.contains("graft_hyperplane_sig")), plan)
   }
 
+  /** The Catalyst form of the per-language perplexity reference lookup
+    * (a sorted map literal, then the global fallback): the parity
+    * reference for the native Exprs.PplRef. */
+  private def pplRefColCatalyst(predLang: org.apache.spark.sql.Column,
+      pplRefByLang: Map[String, Double], pplRefGlobal: Double) = {
+    val byLang =
+      if (pplRefByLang.isEmpty) map()
+      else map(pplRefByLang.toSeq.sortBy(_._1)
+        .flatMap { case (l, v) => Seq(lit(l), lit(v)) }: _*)
+    coalesce(element_at(byLang, predLang), lit(pplRefGlobal))
+  }
+
   test("pplRef expression: exact parity with the map-literal coalesce chain") {
-    // r6 gate: Scorer.pplScoreCol's reference lookup moved from
-    // coalesce(element_at(<map literal>, lang), lit(global)) to the
-    // native Exprs.PplRef — identical doubles on hits, misses, NULL
-    // language, and the empty-map fallback.
+    // Scorer.pplScoreCol's native Exprs.PplRef against
+    // coalesce(element_at(<map literal>, lang), lit(global)): identical
+    // doubles on hits, misses, NULL language, and the empty-map fallback.
     import spark.implicits._
     val byLang = Map("en" -> 4.25, "fr" -> 7.5, "zh" -> 11.125)
     val langs = Seq("en", "fr", "zh", "de", "und", null, "")
       .map(Tuple1(_)).toDF("lang")
     val cmp = langs.select(
       Exprs.pplRef(col("lang"), byLang, 5.75).as("nat"),
-      graft.detect.Scorer.pplRefColCatalyst(col("lang"), byLang, 5.75).as("cat"))
+      pplRefColCatalyst(col("lang"), byLang, 5.75).as("cat"))
     assert(cmp.filter(not(col("nat") <=> col("cat"))).count() == 0L)
     val cmpEmpty = langs.select(
       Exprs.pplRef(col("lang"), Map.empty[String, Double], 2.5).as("nat"),
-      graft.detect.Scorer.pplRefColCatalyst(
+      pplRefColCatalyst(
         col("lang"), Map.empty[String, Double], 2.5).as("cat"))
     assert(cmpEmpty.filter(not(col("nat") <=> col("cat"))).count() == 0L)
     // and inside whole-stage codegen (no fallback to interpreted mode);

@@ -17,17 +17,17 @@ class ModelsSpec extends AnyFunSuite {
       "es" -> "una foto de perro que corre en la playa con cielo",
       "zh" -> "zhaopian gou paobu haitan tiankong shui xiao niao")
     samples.foreach { case (lang, text) =>
-      val (pred, p) = langId.bestLang(text)
-      assert(pred == lang, s"$text -> $pred ($p)")
-      assert(langId.acceptedProb(text) > 0.7, s"$lang acceptedProb=${langId.acceptedProb(text)}")
+      val p = langId.predict(text)
+      assert(p.lang == lang, s"$text -> $p")
+      assert(p.acceptedProb > 0.7, s"$lang acceptedProb=${p.acceptedProb}")
     }
   }
 
   test("langid rejects wrong-language and gibberish text") {
     val ru = "sobaka begushchaya plyazh zakat gora reka ptitsa voda"
     val gib = "xqzvk pwxjq brtnk zzvwq mlpqx kkjzz wqpxv"
-    assert(langId.acceptedProb(ru) < 0.3, s"ru=${langId.acceptedProb(ru)}")
-    assert(langId.acceptedProb(gib) < 0.3, s"gib=${langId.acceptedProb(gib)}")
+    assert(langId.predict(ru).acceptedProb < 0.3, s"ru=${langId.predict(ru)}")
+    assert(langId.predict(gib).acceptedProb < 0.3, s"gib=${langId.predict(gib)}")
   }
 
   test("ngram LM: corpus text has low perplexity, gibberish high") {
@@ -56,5 +56,6 @@ class ModelsSpec extends AnyFunSuite {
     val f2 = langId.featureBuckets("hello world")
     assert(f1.sameElements(f2))
     assert(f1.forall(b => b >= 0 && b < langId.dim))
+    intercept[IllegalArgumentException](graft.models.LangIdModel(Array("en"), 100, new Array[Float](100)))
   }
 }

@@ -113,4 +113,13 @@ class PipelineSpec extends AnyFunSuite {
     assert(lineage.columns.toSet ==
       Set("partition_id", "rows_in", "rows_dropped", "rows_kept", "run_id", "completed_at"))
   }
+
+  test("an observation whose action never runs fails the wait, naming it") {
+    val obs = org.apache.spark.sql.Observation("never-run")
+    spark.range(3).observe(obs, count(lit(1)).as("n")) // no action follows
+    val t0 = System.nanoTime()
+    val e = intercept[IllegalStateException](ValidationRun.observed(obs, timeoutSec = 1))
+    assert(e.getMessage.contains("never-run"), e.getMessage)
+    assert((System.nanoTime() - t0) / 1e9 < 30.0)
+  }
 }

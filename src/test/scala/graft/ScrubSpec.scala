@@ -56,4 +56,43 @@ class ScrubSpec extends AnyFunSuite {
     val tokens = Scrub.rules.map(_._3).mkString(" ")
     assert(Scrub.scrubString(tokens) == tokens)
   }
+
+  test("no replacement token contains a rule trigger") {
+    // so a rule never hands a later rule a trigger the input lacked
+    Scrub.rules.foreach { case (name, _, rep) =>
+      assert(Scrub.triggers(rep) == 0, s"$name replacement $rep")
+    }
+    assert(Scrub.ruleTriggers.toSeq ==
+      Seq(Scrub.At, Scrub.Digit, Scrub.Digit, Scrub.Digit, Scrub.Scheme, 0))
+  }
+
+  test("a rule never matches text that lacks its trigger (property)") {
+    val patterns = Scrub.rules.map(r => java.util.regex.Pattern.compile(r._2))
+    // PII-shaped fragments with each trigger present or absent, plus
+    // non-ASCII digits, which \d does not match
+    val piece = Gen.oneOf("user7@example.com", "user7 example.com", "555-123-4567",
+      "555-abc-defg", "(555) 123-4567", "123-45-6789", "10.0.0.1", "ten.0.0.one",
+      "https://a.b/c", "https:/a.b/c", "http//x", "a://b", ":", "/", "@", "-", ".",
+      "\u0663\u0664\u0665-\u0661\u0662-\u0666\u0667\u0668\u0669", "dog", "x", " ")
+    val prop = Prop.forAll(Gen.listOf(piece).map(_.mkString)) { t =>
+      val present = Scrub.triggers(t)
+      patterns.indices.forall { i =>
+        val need = Scrub.ruleTriggers(i)
+        (need & present) == need || !patterns(i).matcher(t).find()
+      }
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(500), prop)
+    assert(res.passed, res.status.toString)
+  }
+
+  test("filtered scrub equals the every-rule chain (property)") {
+    val wordGen = Gen.oneOf("dog", "user7@example.com", "a@b", "555-123-4567",
+      "123-45-6789", "10.0.0.1", "2024", "https://a.b/c", "x://y", "12:30",
+      "assclown", "café", "")
+    val prop = Prop.forAll(Gen.listOf(wordGen).map(_.mkString(" "))) { t =>
+      Scrub.scrubString(t) == CaptionKernelReference.scrubString(t)
+    }
+    val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(500), prop)
+    assert(res.passed, res.status.toString)
+  }
 }

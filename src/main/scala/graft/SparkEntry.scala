@@ -523,7 +523,7 @@ object SparkEntry {
     "q28_salted_counts" ->
       // DuckDB SUM(BIGINT) returns HUGEINT (→ float64 in pandas); the
       // outer cast restores BIGINT so the hash compare sees the same type
-      // Spark emits (r2 driver red row was exactly this).
+      // Spark emits.
       """SELECT lang, COUNT(*) AS cnt,
         | CAST(SUM(CAST(n_chars AS BIGINT)) AS BIGINT) AS sum_chars
         |FROM documents GROUP BY lang ORDER BY lang""".stripMargin,

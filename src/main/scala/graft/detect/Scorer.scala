@@ -134,9 +134,7 @@ object Scorer {
   val scoreNames: Seq[String] =
     ruleColumns.map(_._1) ++ Seq("score_pii", "score_langid", "score_ppl", "score_dup")
 
-  /** score_langid from the accepted-language probability — SHARED by
-    * the batch path and [[graft.streaming.StreamScore]] so the
-    * calibration constants can never drift between them. */
+  /** score_langid from the accepted-language probability. */
   def langidScoreCol(acceptedProb: Column): Column =
     least(lit(1.0), greatest(lit(0.0), (lit(0.7) - acceptedProb) / lit(0.4)))
 
@@ -147,11 +145,10 @@ object Scorer {
     * read twice. */
   private[graft] val langIdCol = "__langid"
 
-  /** score_ppl formula — shared by batch and streaming. The reference
-    * lookup is the native [[Exprs.pplRef]] (model state as codegen
-    * reference objects), so a recalibrated reference does not change the
-    * generated code. */
-  def pplScoreCol(pplRaw: Column, predLang: Column,
+  /** score_ppl formula. The reference lookup is the native
+    * [[Exprs.pplRef]] (model state as codegen reference objects), so a
+    * recalibrated reference does not change the generated code. */
+  private def pplScoreCol(pplRaw: Column, predLang: Column,
       pplRefByLang: Map[String, Double], pplRefGlobal: Double): Column =
     least(lit(1.0), greatest(lit(0.0),
       (pplRaw / Exprs.pplRef(predLang, pplRefByLang, pplRefGlobal)
@@ -159,35 +156,27 @@ object Scorer {
 
   /** scrubbed_caption + derived score_pii, in application order (the
     * scrub chain evaluates exactly once per row; score_pii reads the
-    * already-materialized scrubbed column) — shared by batch and
-    * streaming. */
-  def scrubPiiColumns(caption: Column): Seq[(String, Column)] = Seq(
+    * already-materialized scrubbed column). */
+  private def scrubPiiColumns(caption: Column): Seq[(String, Column)] = Seq(
     "scrubbed_caption" -> Exprs.scrubAll(caption),
     "score_pii" ->
       when(col("scrubbed_caption") =!= caption, lit(1.0)).otherwise(lit(0.0)))
 
-  /** Raw per-row model signals — the expensive, caption-scanning pass,
-    * computed ONCE and reusable across refit rounds: heuristic rule
-    * scores, raw perplexity (`ppl_raw`), predicted language
-    * (`pred_lang`), langid score, dup flag, scrubbed caption. Model
-    * scores evaluate native Catalyst expressions (doGenCode — inside
-    * whole-stage codegen, no UDF serde); `pred_lang` and `score_langid`
-    * share one langid forward pass per row. */
-  def withRawSignals(images: DataFrame, m: Models, dupDropIds: DataFrame): DataFrame = {
-    val rules = ruleColumns
-    // NO broadcast hint on the dup-id set: it is OUTPUT-sized (one id per
-    // duplicate row — billions at web-scale 20-30% dup rates), so forcing
-    // it through the driver is an OOM, not an optimization. Left to the
-    // planner, AQE broadcasts it only when its runtime size is actually
-    // under the threshold and shuffle-joins otherwise (PlanSpec gates
-    // that no hint is present).
-    val dup = dupDropIds.withColumn("__is_dup", lit(1.0))
+  /** Per-row model signals of a caption frame — the expensive,
+    * caption-scanning pass, shared by the batch path and
+    * [[graft.streaming.StreamScore]]: heuristic rule scores, raw
+    * perplexity (`ppl_raw`), predicted language (`pred_lang`), langid
+    * score, scrubbed caption and score_pii. Model scores evaluate native
+    * Catalyst expressions (doGenCode — inside whole-stage codegen, no UDF
+    * serde); `pred_lang` and `score_langid` share one langid forward
+    * pass per row. */
+  def withSignals(images: DataFrame, m: Models): DataFrame = {
     // all signal columns are mutually independent (each reads only input
     // columns), so ONE withColumns projection adds them — repeated
     // withColumn calls each re-analyze the whole growing plan (Spark's
     // own scaladoc warning), pure driver overhead on plans this size
     val langid = col(langIdCol)
-    val signalCols = (rules ++ Seq(
+    val signalCols = (ruleColumns ++ Seq(
       "pred_lang" -> langid.getField("lang"),
       "ppl_raw" -> Exprs.perplexity(col("caption"), m.lm),
       "score_langid" -> langidScoreCol(langid.getField("accepted_prob")))).toMap
@@ -195,15 +184,29 @@ object Scorer {
       .withColumn(langIdCol, Exprs.langidPredict(col("caption"), m.langId))
       .withColumns(signalCols)
       .drop(langIdCol)
-      .join(dup, Seq("image_id"), "left")
-      .withColumn("score_dup", coalesce(col("__is_dup"), lit(0.0)))
-      .drop("__is_dup")
     // single-pass native scrub; score_pii derives from it so the chain
     // runs exactly once per row. This fold MUST stay sequential:
     // score_pii reads the scrubbed_caption column the previous step
     // materialized.
     scrubPiiColumns(col("caption"))
       .foldLeft(base) { case (df, (name, c)) => df.withColumn(name, c) }
+  }
+
+  /** [[withSignals]] plus the dup flag (`score_dup`) from the
+    * phash-duplicate drop set — computed ONCE and reusable across refit
+    * rounds. */
+  def withRawSignals(images: DataFrame, m: Models, dupDropIds: DataFrame): DataFrame = {
+    // NO broadcast hint on the dup-id set: it is OUTPUT-sized (one id per
+    // duplicate row — billions at web-scale 20-30% dup rates), so forcing
+    // it through the driver is an OOM, not an optimization. Left to the
+    // planner, AQE broadcasts it only when its runtime size is actually
+    // under the threshold and shuffle-joins otherwise (PlanSpec gates
+    // that no hint is present).
+    val dup = dupDropIds.withColumn("__is_dup", lit(1.0))
+    withSignals(images, m)
+      .join(dup, Seq("image_id"), "left")
+      .withColumn("score_dup", coalesce(col("__is_dup"), lit(0.0)))
+      .drop("__is_dup")
   }
 
   /** Finish scoring from raw signals given a (possibly per-round

@@ -5,10 +5,10 @@ package graft.engine
   * Shuffle scratch lives on `/dev/shm` (the virtio disk's small-file
   * open/mmap latency made identical jobs swing 5-41 s), but tmpfs pages
   * are RESIDENT RAM: a JVM that is killed (bench child over its cap,
-  * harness timeout) leaks its `blockmgr-*` dirs forever. Observed after
-  * round 3: 13 leaked block-manager dirs totalling 5.8 GiB across the
-  * round's runs — machine state that degrades every later measurement
-  * on the box.
+  * harness timeout) leaks its `blockmgr-*` dirs forever (13 leaked
+  * block-manager dirs totalling 5.8 GiB were seen after one bench
+  * sweep) — machine state that degrades every later measurement on the
+  * box.
   *
   * Fix: every JVM gets its OWN subdir, `p<pid>-<tag>`, so ownership is
   * decidable post-mortem; [[cleanupOrphans]] deletes any subdir whose
@@ -88,7 +88,7 @@ object Scratch {
   /** Newest mtime anywhere in the tree (orphan trees are fully dead, so
     * the walk is cheap; a live tree pays one directory scan). Shared
     * with the qf_stream_window stale-sibling sweep — nested streaming
-    * checkpoint writes never touch the root mtime (ADVICE r5). */
+    * checkpoint writes never touch the root mtime. */
   private[graft] def newestMtime(f: java.io.File): Long = {
     val own = f.lastModified()
     if (f.isDirectory)

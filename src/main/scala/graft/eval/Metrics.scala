@@ -3,9 +3,9 @@ package graft.eval
 /** Audit-metric formulas, column-for-column the reference `scores` table
   * (/root/reference/schema.sql:7-19) with exact fraction parity:
   * Evaluation.py:6-38 and DQTestToolHelper.py:211-238. All pure functions
-  * of set cardinalities — the engine computes the counts with distributed
-  * set ops (intersect/except/distinct) and only the scalars reach the
-  * driver.
+  * of set cardinalities — [[OracleRound]] computes the counts as
+  * conditional aggregates on the executors and only the scalars reach
+  * the driver.
   */
 object Metrics {
 

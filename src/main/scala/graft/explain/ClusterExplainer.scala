@@ -1,6 +1,6 @@
 package graft.explain
 
-import org.apache.spark.ml.classification.{DecisionTreeClassificationModel, DecisionTreeClassifier}
+import org.apache.spark.ml.classification.{DecisionTreeClassifier, GBTClassifier, RandomForestClassifier}
 import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.tree.{CategoricalSplit, ContinuousSplit, InternalNode, LeafNode, Node}
@@ -46,9 +46,8 @@ object ClusterExplainer {
       maxFit: Int = 10000): DataFrame = {
     val spark = faulty.sparkSession
     import spark.implicits._
-    // r6: vector assembly via the codegen'd array_to_vector instead of
-    // a typed Dataset map (object serde per row on the corpus-sized
-    // ASSIGNMENT pass; identical DenseVector values, spec/oracle-gated)
+    // vector assembly via the codegen'd array_to_vector: no per-row
+    // object serde on the corpus-sized ASSIGNMENT pass
     val assembled = faulty.select(col("image_id"),
       org.apache.spark.ml.functions.array_to_vector(
         array(scoreCols.map(c => col(c).cast("double")): _*)).as("features"))
@@ -108,11 +107,20 @@ object ClusterExplainer {
       .orderBy((xxhash64((featureCols :+ "label").map(col): _*) +:
         (featureCols :+ "label").map(col)): _*)
       .limit(maxFit)
-      // r6: codegen'd array_to_vector instead of a typed map (identical
-      // DenseVector values, no object serde; row order preserved)
+      // codegen'd array_to_vector: no object serde, row order preserved
       .select(org.apache.spark.ml.functions.array_to_vector(
         array(featureCols.map(col): _*)).as("features"), col("label"))
       .coalesce(1)
+  }
+
+  /** Fit one tree model on the bounded assembled sample of `labeled`
+    * and read the root of the tree `fit` returns as [[TreeRule]]s. */
+  private def fitTreeRules(labeled: DataFrame, featureCols: Seq[String], maxFit: Int)(
+      fit: DataFrame => Node): Seq[TreeRule] = {
+    val assembled = assembleBounded(labeled, featureCols, maxFit).cache()
+    val root = fit(assembled)
+    assembled.unpersist()
+    structuredRulesFrom(root, featureCols, Nil)
   }
 
   /** Train a tree on labeled (valid=0 / suspicious=1) rows and extract
@@ -122,13 +130,8 @@ object ClusterExplainer {
       featureCols: Seq[String],
       maxDepth: Int = 5,
       seed: Long = 42L,
-      maxFit: Int = 20000): Seq[String] = {
-    val assembled = assembleBounded(labeled, featureCols, maxFit).cache()
-    val model: DecisionTreeClassificationModel = new DecisionTreeClassifier()
-      .setMaxDepth(maxDepth).setSeed(seed).fit(assembled)
-    assembled.unpersist()
-    rulesFrom(model.rootNode, featureCols)
-  }
+      maxFit: Int = 20000): Seq[String] =
+    treeStructuredRules(labeled, featureCols, maxDepth, seed, maxFit).map(_.render)
 
   /** [[treeRules]] returning structured [[TreeRule]]s (leaf order) for
     * machine verification alongside the rendered strings. */
@@ -137,13 +140,9 @@ object ClusterExplainer {
       featureCols: Seq[String],
       maxDepth: Int = 5,
       seed: Long = 42L,
-      maxFit: Int = 20000): Seq[TreeRule] = {
-    val assembled = assembleBounded(labeled, featureCols, maxFit).cache()
-    val model: DecisionTreeClassificationModel = new DecisionTreeClassifier()
-      .setMaxDepth(maxDepth).setSeed(seed).fit(assembled)
-    assembled.unpersist()
-    structuredRulesFrom(model.rootNode, featureCols, Nil)
-  }
+      maxFit: Int = 20000): Seq[TreeRule] =
+    fitTreeRules(labeled, featureCols, maxFit)(a =>
+      new DecisionTreeClassifier().setMaxDepth(maxDepth).setSeed(seed).fit(a).rootNode)
 
   /** Random-forest variant of the interpretation model zoo (M11: the
     * reference trains RF n=10 and extracts its 6th estimator,
@@ -155,14 +154,10 @@ object ClusterExplainer {
       numTrees: Int = 10,
       maxDepth: Int = 5,
       seed: Long = 42L,
-      maxFit: Int = 20000): Seq[String] = {
-    val assembled = assembleBounded(labeled, featureCols, maxFit).cache()
-    val model = new org.apache.spark.ml.classification.RandomForestClassifier()
-      .setNumTrees(numTrees).setMaxDepth(maxDepth).setSeed(seed)
-      .fit(assembled)
-    assembled.unpersist()
-    rulesFrom(model.trees.head.rootNode, featureCols)
-  }
+      maxFit: Int = 20000): Seq[String] =
+    fitTreeRules(labeled, featureCols, maxFit)(a =>
+      new RandomForestClassifier().setNumTrees(numTrees).setMaxDepth(maxDepth)
+        .setSeed(seed).fit(a).trees.head.rootNode).map(_.render)
 
   /** Gradient-boosted variant (M11: H2oGradientBoosting.py:11-25,
     * ntrees=1 depth=5 — a single boosted stump-tree, rules from it). */
@@ -171,14 +166,10 @@ object ClusterExplainer {
       featureCols: Seq[String],
       maxDepth: Int = 5,
       seed: Long = 42L,
-      maxFit: Int = 20000): Seq[String] = {
-    val assembled = assembleBounded(labeled, featureCols, maxFit).cache()
-    val model = new org.apache.spark.ml.classification.GBTClassifier()
-      .setMaxIter(1).setMaxDepth(maxDepth).setSeed(seed)
-      .fit(assembled)
-    assembled.unpersist()
-    rulesFrom(model.trees.head.rootNode, featureCols)
-  }
+      maxFit: Int = 20000): Seq[String] =
+    fitTreeRules(labeled, featureCols, maxFit)(a =>
+      new GBTClassifier().setMaxIter(1).setMaxDepth(maxDepth).setSeed(seed)
+        .fit(a).trees.head.rootNode).map(_.render)
 
   /** Grid search (M4): driver-side loop of Spark fits over candidate k,
     * elbow rule — take the smallest k after which a larger k no longer
@@ -198,8 +189,7 @@ object ClusterExplainer {
       // value tiebreak after the hash: see assembleBounded
       .orderBy((xxhash64(scoreCols.map(col): _*) +: scoreCols.map(col)): _*)
       .limit(maxFit)
-      // r6: codegen'd array_to_vector instead of a typed map (see
-      // assembleBounded)
+      // codegen'd array_to_vector (see assembleBounded)
       .select(org.apache.spark.ml.functions.array_to_vector(
         array(scoreCols.map(col): _*)).as("features"))
       .coalesce(1).cache()
@@ -269,9 +259,6 @@ object ClusterExplainer {
         structuredRulesFrom(in.leftChild, names, lc :: path) ++
           structuredRulesFrom(in.rightChild, names, rc :: path)
     }
-
-  private def rulesFrom(node: Node, names: Seq[String]): Seq[String] =
-    structuredRulesFrom(node, names, Nil).map(_.render)
 
   /** One cluster's tree leaf in verification form: `rule_id` is the
     * deterministic left-to-right leaf index within the cluster's tree;

@@ -122,13 +122,12 @@ object SomClustering {
       // reference decay: σ_t = σ₀·(1 − t/T) (SOM.py:96-100); at the
       // last epoch the factor is 1/T, never zero
       val sigT = sig0 * (1.0 - t.toDouble / epochs)
-      // r6: single-stage epoch — the former groupBy((pid, bmu)) Catalyst
-      // aggregate shuffled its 25-key partials and re-planned a 2-stage
-      // job every epoch (~115 ms/epoch of pure latency on a bounded
-      // sample). The mapPartitions pass accumulates the SAME partials in
-      // the SAME per-partition row order (map-side sums were already
-      // per-(pid, bmu), so the doubles are bit-identical) and collects
-      // them directly: one stage, no exchange, no per-epoch re-plan.
+      // single-stage epoch: a groupBy((pid, bmu)) Catalyst aggregate
+      // would shuffle its 25-key partials and re-plan a 2-stage job
+      // every epoch (~115 ms/epoch of pure latency on a bounded sample).
+      // The mapPartitions pass accumulates the same per-(pid, bmu)
+      // partials in per-partition row order and collects them directly:
+      // one stage, no exchange, no per-epoch re-plan.
       val wLocal = w
       val unitsLocal = units
       val dimLocal = dim

@@ -1,10 +1,11 @@
 package graft.generic
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StringType}
+import graft.detect.Scorer
 import graft.discovery.Thresholds
-import graft.eval.Metrics
+import graft.eval.{Metrics, OracleRound}
 
 /** Generic tabular quality mode — the reference's actual user contract
   * (/root/reference/README.md:112-124): any table whose FIRST column is a
@@ -169,70 +170,41 @@ object GenericQuality {
       rounds: Int = 3): Result = {
     val cached = df.cache()
     val n = cached.count()
-    val known = broadcast(
-      knownFaultIds.select(col(idCol)).withColumn("__known", lit(1)))
     val knownCount = knownFaultIds.count()
 
-    val confirmed = col("status").startsWith("actualFault")
     def scoreRound(statuses: DataFrame): DataFrame = {
       val believedClean = cached.join(
-        statuses.filter(!confirmed).select(idCol), Seq(idCol), "left_semi")
+        statuses.filter(!OracleRound.confirmed(col("status"))).select(idCol),
+        Seq(idCol), "left_semi")
       val model = fit(believedClean, idCol)
       withScores(cached, model)
         .select(col(idCol), col("invalidity_score"))
         .join(statuses, Seq(idCol))
         .withColumn("invalidity_score",
-          col("invalidity_score") + when(confirmed, lit(1.0)).otherwise(lit(0.0)))
+          col("invalidity_score") + OracleRound.labelOffset(col("status")))
     }
 
-    var statuses = cached.select(col(idCol), lit("clean").as("status"))
+    var statuses = cached.select(col(idCol), lit(OracleRound.Clean).as("status"))
     val results = scala.collection.mutable.ArrayBuffer.empty[RoundResult]
     for (r <- 1 to rounds) {
       val st = scoreRound(statuses)
       val (t, _) = Thresholds.discover(st, "invalidity_score", "status", knownCount, n)
-      val flagged = st.join(known, Seq(idCol), "left")
-        .withColumn("is_susp", col("invalidity_score") >= t)
-        .withColumn("is_known", col("__known").isNotNull)
-        .withColumn("status_new",
-          when(col("status").startsWith("actualFault"), col("status"))
-            .when(col("is_susp") && col("is_known"), lit(s"actualFaults_$r"))
-            .when(col("is_susp"), lit("valid"))
-            .otherwise(col("status")))
-        .cache()
-      val c = flagged.agg(
-        sum(when(col("is_susp"), 1L).otherwise(0L)),
-        sum(when(col("is_susp") && col("is_known"), 1L).otherwise(0L)),
-        sum(when(col("status_new").startsWith("actualFault"), 1L).otherwise(0L)),
-        sum(when(col("status").startsWith("actualFault"), 1L).otherwise(0L)),
-        sum(when(col("status").startsWith("actualFault") &&
-          !col("status_new").startsWith("actualFault"), 1L).otherwise(0L)),
-        sum(when(col("status_new").startsWith("actualFault") && !col("is_known"), 1L)
-          .otherwise(0L))).head()
-      val (faulty, eInterA, afNew, afOld, afLost, afMinusE) =
-        (c.getLong(0), c.getLong(1), c.getLong(2), c.getLong(3), c.getLong(4), c.getLong(5))
-      val fnr = Metrics.falseNegativeRate(afLost, afOld)
-      val tpr = Metrics.truePositiveRate(afNew, faulty)
-      results += RoundResult(t, Metrics.RunMetrics(
-        run = r,
-        previouslyDetected = Metrics.previouslyDetected(knownCount, eInterA),
-        suspiciousDetected = Metrics.newlyDetected(faulty, faulty - eInterA),
-        undetected = Metrics.undetected(knownCount, knownCount - eInterA),
-        newlyDetected = Metrics.newlyDetected(faulty, afMinusE),
-        truePositiveRate = tpr,
-        falsePositiveRate = 1.0 - tpr,
-        trueNegativeRate = 1.0 - fnr,
-        falseNegativeRate = fnr))
-      statuses = flagged.select(col(idCol), col("status_new").as("status"))
-        .localCheckpoint(true) // cut lineage so round plans don't compound
-      flagged.unpersist()
+      // the round's counts ride the checkpoint that cuts the statuses'
+      // lineage (so round plans don't compound)
+      val obs = Observation(s"generic_round_$r")
+      statuses = OracleRound.flag(st, knownFaultIds, idCol, t, r)
+        .observe(obs, OracleRound.countColumns.head, OracleRound.countColumns.tail: _*)
+        .select(col(idCol), col("status_new").as("status"))
+        .localCheckpoint(true)
+      results += RoundResult(t, OracleRound.metrics(r, OracleRound.counts(obs), knownCount,
+        results.map(_.metrics.truePositiveRate).toSeq))
     }
     // final decisions from the final-state model (refit on the last
     // statuses), mirroring ValidationRun
     val finalScored = scoreRound(statuses)
     val tFinal = Thresholds.discover(
       finalScored, "invalidity_score", "status", knownCount, n)._1
-    val decisions = finalScored.withColumn("decision",
-      when(col("invalidity_score") >= tFinal, "drop").otherwise("keep"))
+    val decisions = Scorer.withDecision(finalScored, tFinal)
       .select(col(idCol), col("invalidity_score"), col("decision"))
     Result(decisions, results.toSeq)
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.detect.Scorer
 import graft.discovery.{PhashDup, Thresholds}
 import graft.engine.TableIO
-import graft.eval.Metrics
+import graft.eval.{Metrics, OracleRound}
 import graft.synth.{GenConfig, ImageGen}
 
 /** The iterative constraint-discovery / fault-detection / oracle-confirm
@@ -32,8 +32,7 @@ object ValidationRun {
       seed: Long = 42L,
       faultPct: Int = 5,
       outDir: String = "target/graft-run",
-      parts: Int = 32,
-      withBytes: Boolean = false)
+      parts: Int = 32)
 
   final case class RunResult(
       decisions: DataFrame,
@@ -59,31 +58,9 @@ object ValidationRun {
       lineagePath(cfg, r), thresholdPath(cfg, r))
       .forall(TableIO.exists(spark, _))
 
-  /** Bounded wait on an Observation: the metrics must arrive with the
-    * write action that carries them — if they ever fail to propagate,
-    * fail fast instead of hanging the loop forever on `obs.get`. */
-  private[graft] def observed(obs: org.apache.spark.sql.Observation,
-      timeoutSec: Int = 300): Map[String, Any] = {
-    import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
-    val ex = Executors.newSingleThreadExecutor { r =>
-      val t = new Thread(r, "graft-observation-wait"); t.setDaemon(true); t
-    }
-    try {
-      val f = ex.submit(new java.util.concurrent.Callable[Map[String, Any]] {
-        def call(): Map[String, Any] = obs.get
-      })
-      try f.get(timeoutSec.toLong, TimeUnit.SECONDS)
-      catch {
-        case _: TimeoutException => throw new IllegalStateException(
-          s"observation ${obs.name} not materialized within ${timeoutSec}s " +
-            "of its carrying write action")
-      }
-    } finally { ex.shutdownNow(): Unit }
-  }
-
   def run(spark: SparkSession, cfg: RunConfig): RunResult = {
     import spark.implicits._
-    val gen = GenConfig(cfg.n, cfg.seed, cfg.faultPct, cfg.withBytes, cfg.parts)
+    val gen = GenConfig(cfg.n, cfg.seed, cfg.faultPct, parts = cfg.parts)
     val images = ImageGen.images(spark, gen).cache()
     val known = ImageGen.knownFaults(spark, gen).select("image_id").cache()
     val knownCount = known.count()
@@ -108,14 +85,13 @@ object ValidationRun {
     // refit from the believed-clean population, and confirmed faults get
     // the +1 label offset so they stay above threshold on re-score (the
     // reference's `+y`, DQTestToolHelper.py:153-157).
-    val confirmedOffset =
-      when(col("status").startsWith("actualFault"), lit(1.0)).otherwise(lit(0.0))
     def scoreRound(statuses: DataFrame): DataFrame = {
       val stRaw = raw.join(statuses, Seq("image_id"))
       val (byLang, global) = Scorer.recalibrate(
-        stRaw.filter(!col("status").startsWith("actualFault")),
+        stRaw.filter(!OracleRound.confirmed(col("status"))),
         fallback = (models.pplRefByLang, models.pplRef))
-      Scorer.scoresFromSignals(stRaw, byLang, global, Some(confirmedOffset))
+      Scorer.scoresFromSignals(stRaw, byLang, global,
+        Some(OracleRound.labelOffset(col("status"))))
     }
 
     // Resume: last round whose checkpoints ALL completed (see
@@ -124,7 +100,7 @@ object ValidationRun {
       .takeWhile(r => roundComplete(spark, cfg, r)).lastOption.getOrElse(0)
     var statuses =
       if (resumeFrom == 0)
-        images.select(col("image_id"), lit("clean").as("status"))
+        images.select(col("image_id"), lit(OracleRound.Clean).as("status"))
       else TableIO.read(spark, statusPath(cfg, resumeFrom)).select("image_id", "status")
 
     val metricsHist = scala.collection.mutable.ArrayBuffer.empty[Metrics.RunMetrics]
@@ -147,7 +123,6 @@ object ValidationRun {
     }
 
     val n = cfg.n
-    val knownFlag = broadcast(known.withColumn("__known", lit(1)))
     // Previous round's flagged frame: kept cached until the NEXT round's
     // checkpoint write has materialized (its statuses projection feeds
     // that round's join), then released.
@@ -158,63 +133,19 @@ object ValidationRun {
       thresholds += t
 
       // One flagged frame carries everything the round needs: suspicious
-      // flag, oracle membership, old + new status. Oracle auto-confirm
-      // semantics per testScript.py:38-40: suspicious∩known →
-      // actualFaults_r, suspicious∖known → valid, confirmed frozen.
-      val flagged = st
-        .join(knownFlag, Seq("image_id"), "left")
-        .withColumn("is_susp", col("invalidity_score") >= t)
-        .withColumn("is_known", col("__known").isNotNull)
-        .withColumn("status_new",
-          when(col("status").startsWith("actualFault"), col("status"))
-            .when(col("is_susp") && col("is_known"), lit(s"actualFaults_$r"))
-            .when(col("is_susp"), lit("valid"))
-            .otherwise(col("status")))
-        .cache()
+      // flag, oracle membership, old + new status.
+      val flagged = OracleRound.flag(st, known, "image_id", t, r).cache()
 
-      // Metrics counts in ONE pass that is ALSO the checkpoint write
-      // (formula parity — Evaluation.py:6-30; the reference re-scans per
-      // metric): an Observation rides the status write, so one job
-      // materializes the cache, writes the round's statuses, and
-      // collects all six counts. (Round 3 spent a separate full agg
-      // action here — at n=1000 the loop's cost is job count, not data.)
+      // One job materializes the cache, writes the round's statuses and
+      // collects the round's counts: an Observation rides the status
+      // write. At loop sizes the cost is job count, not data.
       val obs = org.apache.spark.sql.Observation(s"round_$r")
       TableIO.createOrReplace(
-        flagged.observe(obs,
-          sum(when(col("is_susp"), 1L).otherwise(0L)).as("faulty"),
-          sum(when(col("is_susp") && col("is_known"), 1L).otherwise(0L)).as("eInterA"),
-          sum(when(col("status_new").startsWith("actualFault"), 1L).otherwise(0L)).as("afNew"),
-          sum(when(col("status").startsWith("actualFault"), 1L).otherwise(0L)).as("afOld"),
-          sum(when(col("status").startsWith("actualFault") &&
-            !col("status_new").startsWith("actualFault"), 1L).otherwise(0L)).as("afOldMinusNew"),
-          sum(when(col("status_new").startsWith("actualFault") && !col("is_known"), 1L)
-            .otherwise(0L)).as("afMinusE"))
+        flagged.observe(obs, OracleRound.countColumns.head, OracleRound.countColumns.tail: _*)
           .select(col("image_id"), col("status_new").as("status")),
         statusPath(cfg, r))
-      val c = observed(obs)
-      val faultyRows = c("faulty").asInstanceOf[Long]
-      val eInterA = c("eInterA").asInstanceOf[Long]
-      val afNewN = c("afNew").asInstanceOf[Long]
-      val afOldN = c("afOld").asInstanceOf[Long]
-      val afOldMinusNew = c("afOldMinusNew").asInstanceOf[Long]
-      val afMinusE = c("afMinusE").asInstanceOf[Long]
-      val fnr = Metrics.falseNegativeRate(afOldMinusNew, afOldN)
-      val tpr = Metrics.truePositiveRate(afNewN, faultyRows)
-      // TPGR over the history up to and including this round — the
-      // reference surfaces it per run (Evaluation.py:25-30, README:137)
-      val tpgr = Metrics.truePositiveGrowthRate(
-        metricsHist.map(_.truePositiveRate).toSeq :+ tpr)
-      val m = Metrics.RunMetrics(
-        run = r,
-        previouslyDetected = Metrics.previouslyDetected(knownCount, eInterA),
-        suspiciousDetected = Metrics.newlyDetected(faultyRows, faultyRows - eInterA),
-        undetected = Metrics.undetected(knownCount, knownCount - eInterA),
-        newlyDetected = Metrics.newlyDetected(faultyRows, afMinusE),
-        truePositiveRate = tpr,
-        falsePositiveRate = 1.0 - tpr,
-        trueNegativeRate = 1.0 - fnr,
-        falseNegativeRate = fnr,
-        tpgr = tpgr)
+      val m = OracleRound.metrics(r, OracleRound.counts(obs), knownCount,
+        metricsHist.map(_.truePositiveRate).toSeq)
       metricsHist += m
 
       // Remaining checkpoints: metrics row + per-partition lineage +
@@ -302,20 +233,6 @@ object ValidationRun {
         "scrubbed_caption", "status")
     RunResult(decisions, metricsHist.toSeq, thresholds.toSeq,
       cfg.rounds)
-  }
-
-  /** One-shot (no oracle loop) score → threshold → decide pass; the
-    * flagship entry query. */
-  def oneShot(spark: SparkSession, gen: GenConfig): DataFrame = {
-    val images = ImageGen.images(spark, gen)
-    val knownCount = ImageGen.knownFaults(spark, gen).count()
-    val models = Scorer.fit(spark, images)
-    val dupDrop = PhashDup.dropIds(images)
-    val scored = Scorer.withScores(images, models, dupDrop).cache()
-    val withStatus = scored.withColumn("status", lit("clean"))
-    val (t, _) = Thresholds.discover(withStatus, "invalidity_score", "status", knownCount)
-    Scorer.withDecision(scored, t)
-      .select("image_id", "decision", "invalidity_score", "scrubbed_caption")
   }
 
   def flagship(spark: SparkSession): DataFrame =

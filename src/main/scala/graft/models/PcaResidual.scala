@@ -1,6 +1,6 @@
 package graft.models
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
@@ -38,7 +38,6 @@ object PcaResidual {
       components: Array[Array[Double]], // top-k eigenvectors (rows), unit norm
       tailVariance: Double, // sum of discarded eigenvalues
       eigenvalues: Array[Double] = Array.empty) // λ per kept component
-    extends ModelState
 
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix. Returns
     * (eigenvalues, eigenvectors as columns), unsorted. Deterministic;
@@ -220,28 +219,4 @@ object PcaResidual {
     * univariate z-score path ((r − 3) / 6). */
   def scoreColumn(st: State): Column =
     least(lit(1.0), greatest(lit(0.0), (residualRatio(st) - lit(3.0)) / lit(6.0)))
-}
-
-/** [[ConstraintModel]] adapter for the zoo registry. */
-final class PcaResidualModel(idCol: String) extends ConstraintModel {
-  override def name: String = "pca_residual"
-  override def fit(spark: SparkSession, df: DataFrame): ModelState =
-    PcaResidual.fit(df, idCol)
-  override def scoreColumns(state: ModelState): Seq[(String, Column)] = state match {
-    case st: PcaResidual.State => Seq("score__pca" -> PcaResidual.scoreColumn(st))
-    case other => throw new IllegalArgumentException(s"unexpected state $other")
-  }
-}
-
-/** Mahalanobis-distance zoo member (PyOD MCD analog) — same fitted
-  * state, distance over kept components + residual mass. */
-final class MahalanobisModel(idCol: String) extends ConstraintModel {
-  override def name: String = "mahalanobis"
-  override def fit(spark: SparkSession, df: DataFrame): ModelState =
-    PcaResidual.fit(df, idCol)
-  override def scoreColumns(state: ModelState): Seq[(String, Column)] = state match {
-    case st: PcaResidual.State =>
-      Seq("score__maha" -> PcaResidual.mahalanobisScore(st))
-    case other => throw new IllegalArgumentException(s"unexpected state $other")
-  }
 }

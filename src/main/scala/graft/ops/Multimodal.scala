@@ -436,7 +436,7 @@ object Multimodal {
     * would otherwise decode "ok" with channel-INTERLEAVED samples, so a
     * downstream windowed RMS would silently mix channels and report an
     * inflated n_samples with no field to detect it by. */
-  /** JDK audio parsers, resolved ONCE per JVM (r6): every
+  /** JDK audio parsers, resolved ONCE per JVM: every
     * `AudioSystem.getAudioInputStream` call goes through the JDK's
     * SYNCHRONIZED provider registry, which measured NEGATIVE thread
     * scaling on the decode path (20k WAVs: 15.0k docs/s on 1 thread,

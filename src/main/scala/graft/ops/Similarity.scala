@@ -81,8 +81,8 @@ object Similarity {
     sig
   }
 
-  /** Native codegen'd signature column (Exprs.HyperplaneSig) — the former
-    * Scala UDF here was the one serde boundary left in the ANN hot path. */
+  /** Native codegen'd signature column (Exprs.HyperplaneSig): no UDF
+    * serde boundary in the ANN hot path. */
   private def sigCol(c: Column, planes: Array[Array[Double]]): Column =
     coalesce(org.apache.spark.sql.graft.Exprs.hyperplaneSig(c, planes), lit(0))
 
@@ -203,8 +203,8 @@ object Similarity {
     val sample = embeddings
       .filter(col("embedding").isNotNull)
       .orderBy(xxhash64(col("vec_id"))).limit(maxFit)
-      // r6: codegen'd array_to_vector (float→double widening, identical
-      // values to the former typed map, no object serde)
+      // codegen'd array_to_vector (float→double widening), no per-row
+      // object serde
       .select(org.apache.spark.ml.functions.array_to_vector(
         col("embedding")).as("features"))
       .coalesce(1).cache()
@@ -324,9 +324,9 @@ object Similarity {
     * an earlier one) — fixture for the near-dup operator. Cluster noise
     * is sized so same-cluster members land at cos ≈ 0.8 (similar but NOT
     * near-duplicates at the 0.97 default threshold) while the seeded
-    * jittered copies sit at cos ≈ 0.9999 — round 1's tight clusters made
+    * jittered copies sit at cos ≈ 0.9999 — tighter clusters would make
     * every within-cluster pair a "near-dup" (184k pairs from 2k rows),
-    * which measured the fixture, not the operator. */
+    * which measures the fixture, not the operator. */
   def synthEmbeddings(spark: SparkSession, n: Long, dim: Int = 32,
       seed: Long = 42L): DataFrame = {
     import spark.implicits._

@@ -18,35 +18,17 @@ import graft.detect.Scorer
   */
 object StreamScore {
 
-  /** Per-row scores + decision on a streaming frame (no dedup join —
-    * see [[firstSeenByPhash]]). `eventTime` column must already exist.
-    *
-    * score_ppl uses the SAME per-predicted-language reference quantiles
-    * as the batch path (Scorer.withScores) — the reference lookup is
-    * stream-safe, and a global-only reference would inflate score_ppl
-    * for minority languages and flip keep/drop vs batch. */
-  def scoreStream(stream: DataFrame, m: Scorer.Models, threshold: Double): DataFrame = {
-    import org.apache.spark.sql.graft.Exprs
-    // every formula below IS the batch path's (Scorer.langidScoreCol /
-    // pplScoreCol / scrubPiiColumns / withDecision) — shared builders,
-    // not copies, so a batch recalibration cannot silently diverge
-    // streaming keep/drop decisions (StreamingSpec asserts 1e-12 parity)
-    val rules = Scorer.ruleColumns
-    val langid = col(Scorer.langIdCol)
-    val scored = rules.foldLeft(stream) { case (df, (n, c)) => df.withColumn(n, c) }
-      .withColumn(Scorer.langIdCol, Exprs.langidPredict(col("caption"), m.langId))
-      .withColumn("score_langid", Scorer.langidScoreCol(langid.getField("accepted_prob")))
-      .withColumn("score_ppl", Scorer.pplScoreCol(
-        Exprs.perplexity(col("caption"), m.lm),
-        langid.getField("lang"), m.pplRefByLang, m.pplRef))
-      .drop(Scorer.langIdCol)
-    val withPii = Scorer.scrubPiiColumns(col("caption"))
-      .foldLeft(scored) { case (df, (n, c)) => df.withColumn(n, c) }
-    val names = rules.map(_._1) ++ Seq("score_pii", "score_langid", "score_ppl")
+  /** Per-row scores + decision on a streaming frame: the batch path's
+    * own signal builder, score combine and decision, so a batch
+    * recalibration cannot silently diverge streaming keep/drop
+    * decisions. There is no dedup join — see [[firstSeenByPhash]] — so
+    * `score_dup` is 0. `eventTime` column must already exist. */
+  def scoreStream(stream: DataFrame, m: Scorer.Models, threshold: Double): DataFrame =
     Scorer.withDecision(
-      withPii.withColumn("invalidity_score", greatest(names.map(col): _*)),
+      Scorer.scoresFromSignals(
+        Scorer.withSignals(stream, m).withColumn("score_dup", lit(0.0)),
+        m.pplRefByLang, m.pplRef),
       threshold)
-  }
 
   /** Windowed drop-rate audit metrics with watermark — the streaming
     * analog of the per-run metrics row. */

@@ -30,7 +30,7 @@ final case class GenConfig(
     parts: Int = 32)
 
 object GenConfig {
-  /** Data-derived partition count for fixture-sized corpora (r6): ≥250
+  /** Data-derived partition count for fixture-sized corpora: ≥250
     * rows per partition, clamped to [4, 32]. A 1000-row fixture in 32
     * partitions is 31 rows/task — pure scheduling overhead at ANY
     * deployment size (guide §2/§6: size partitions to data); callers

@@ -89,6 +89,28 @@ class GenericQualitySpec extends AnyFunSuite {
     assert(pds.zip(pds.tail).forall { case (a, b) => b >= a - 1e-9 }, pds.toString)
   }
 
+  test("oracle loop reports each round's TPGR over its own TPR history") {
+    // known faults: 10 huge x values and 10 moderate ones the huge ones
+    // mask until they are confirmed and left out of the refit; 6 unknown
+    // rare-category rows are suspicious in every round, so the TPR
+    // history changes between rounds
+    val rows = (0 until 1000).map { i =>
+      val x = if (i < 10) 1e6 else if (i < 20) 30.0 else (i % 10).toDouble
+      val cat = if (i >= 20 && i < 26) s"u$i" else Seq("a", "b", "c", "d")(i % 4)
+      (f"r$i%04d", x, cat)
+    }
+    val df = rows.toDF("id", "x", "cat")
+    val known = (0 until 20).map(i => f"r$i%04d").toDF("id")
+    val res = GenericQuality.run(df, "id", known, rounds = 3)
+    val tprs = res.rounds.map(_.metrics.truePositiveRate)
+    assert(tprs.distinct.size > 1, s"TPR history is constant: $tprs")
+    res.rounds.zipWithIndex.foreach { case (r, i) =>
+      assert(r.metrics.tpgr ==
+        graft.eval.Metrics.truePositiveGrowthRate(tprs.take(i + 1)),
+        s"round ${i + 1}: tpgr ${r.metrics.tpgr}, TPRs $tprs")
+    }
+  }
+
   test("single-feature table scores without greatest() arity failure") {
     // the generic contract allows id + ONE feature column; greatest()
     // needs >= 2 args, so the max-combine must degenerate gracefully

@@ -1,0 +1,95 @@
+package graft
+
+import org.apache.spark.sql.Observation
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+import graft.eval.{Metrics, OracleRound}
+
+/** The oracle round shared by both validation loops: the confirm
+  * transition (testScript.py:38-40), the six counts and the metrics row
+  * (Evaluation.py:6-30, DQTestToolHelper.py:211-238). */
+class OracleRoundSpec extends AnyFunSuite {
+  lazy val spark = GraftTestSpark.spark
+  import spark.implicits._
+
+  test("confirm transition: {clean, valid, actualFaults_k} x suspicious x known") {
+    val r = 3
+    val t = 0.5
+    // (status, suspicious, known) -> expected status_new
+    val table = Seq(
+      ("clean", true, true) -> "actualFaults_3",
+      ("clean", true, false) -> "valid",
+      ("clean", false, true) -> "clean",
+      ("clean", false, false) -> "clean",
+      ("valid", true, true) -> "actualFaults_3",
+      ("valid", true, false) -> "valid",
+      ("valid", false, true) -> "valid",
+      ("valid", false, false) -> "valid",
+      ("actualFaults_2", true, true) -> "actualFaults_2",
+      ("actualFaults_2", true, false) -> "actualFaults_2",
+      ("actualFaults_2", false, true) -> "actualFaults_2",
+      ("actualFaults_2", false, false) -> "actualFaults_2")
+    val rows = table.zipWithIndex.map { case (((status, susp, known), want), i) =>
+      (f"id$i%02d", status, if (susp) 0.9 else 0.1, known, want)
+    }
+    val scored = rows.map(x => (x._1, x._2, x._3)).toDF("id", "status", "invalidity_score")
+    val knownIds = rows.filter(_._4).map(_._1).toDF("id")
+    val flagged = OracleRound.flag(scored, knownIds, "id", t, r)
+    val got = flagged.select("id", "is_susp", "is_known", "status_new").collect()
+      .map(x => x.getString(0) -> ((x.getBoolean(1), x.getBoolean(2), x.getString(3)))).toMap
+    rows.foreach { case (id, status, score, known, want) =>
+      assert(got(id) == ((score >= t, known, want)), s"$status susp=${score >= t} known=$known")
+    }
+
+    // the six counts ride an Observation on the caller's action
+    val obs = Observation("oracle_round_spec")
+    flagged.observe(obs, OracleRound.countColumns.head, OracleRound.countColumns.tail: _*)
+      .collect(): Unit
+    assert(OracleRound.counts(obs) == OracleRound.Counts(
+      faulty = 6, eInterA = 3, afNew = 6, afOld = 4, afOldMinusNew = 0, afMinusE = 2))
+  }
+
+  test("status predicates partition the vocabulary") {
+    val statuses = Seq(OracleRound.Clean, OracleRound.Valid, OracleRound.confirmedStatus(1),
+      OracleRound.confirmedStatus(12))
+    val got = statuses.toDF("status").select(
+      OracleRound.confirmed(col("status")), OracleRound.believedClean(col("status")),
+      OracleRound.labelOffset(col("status"))).collect()
+      .map(x => (x.getBoolean(0), x.getBoolean(1), x.getDouble(2))).toSeq
+    assert(got == Seq((false, true, 0.0), (false, true, 0.0), (true, false, 1.0),
+      (true, false, 1.0)))
+  }
+
+  test("metrics rows from counts over a changing TPR history") {
+    val knownCount = 8L
+    val rounds = Seq(
+      OracleRound.Counts(faulty = 10, eInterA = 6, afNew = 6, afOld = 0, afOldMinusNew = 0,
+        afMinusE = 0),
+      OracleRound.Counts(faulty = 8, eInterA = 7, afNew = 7, afOld = 6, afOldMinusNew = 0,
+        afMinusE = 1),
+      OracleRound.Counts(faulty = 12, eInterA = 7, afNew = 9, afOld = 7, afOldMinusNew = 1,
+        afMinusE = 2))
+    val hist = rounds.zipWithIndex.foldLeft(Seq.empty[Metrics.RunMetrics]) {
+      case (prior, (c, i)) =>
+        prior :+ OracleRound.metrics(i + 1, c, knownCount, prior.map(_.truePositiveRate))
+    }
+    val tprs = hist.map(_.truePositiveRate)
+    assert(tprs == Seq(0.6, 7.0 / 8, 9.0 / 12))
+    hist.zip(rounds).zipWithIndex.foreach { case ((m, c), i) =>
+      val tpr = c.afNew.toDouble / c.faulty
+      val fnr = if (c.afOld > 0) c.afOldMinusNew.toDouble / c.afOld else 0.0
+      assert(m == Metrics.RunMetrics(
+        run = i + 1,
+        previouslyDetected = c.eInterA.toDouble / knownCount,
+        suspiciousDetected = (c.faulty - c.eInterA).toDouble / c.faulty,
+        undetected = (knownCount - c.eInterA).toDouble / knownCount,
+        newlyDetected = c.afMinusE.toDouble / c.faulty,
+        truePositiveRate = tpr,
+        falsePositiveRate = 1.0 - tpr,
+        trueNegativeRate = 1.0 - fnr,
+        falseNegativeRate = fnr,
+        tpgr = Metrics.truePositiveGrowthRate(tprs.take(i + 1))))
+    }
+    assert(hist.map(_.tpgr).distinct.size == 3, hist.map(_.tpgr).toString)
+  }
+}

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.models.{ConstraintModels, PcaResidual}
+import graft.models.PcaResidual
 
 /** Multivariate constraint model (M2 zoo member): PCA reconstruction
   * error catches jointly-anomalous rows whose marginals are normal —
@@ -76,20 +76,5 @@ class PcaSpec extends AnyFunSuite {
     val s = df.select(col("id"), PcaResidual.mahalanobisScore(st).as("s"))
       .filter(col("id") === "anomaly").select("s").head().getDouble(0)
     assert(s >= 0.9, s"mahalanobis should catch it, got $s")
-  }
-
-  test("model zoo registry: every registered model fits and scores") {
-    val df = (0 until 200).map(i =>
-      (f"id$i%03d", i.toDouble, (i % 5).toString, i.toDouble + 0.001 * (i % 3)))
-      .toDF("id", "x", "cat", "y")
-    val reg = ConstraintModels.registry("id")
-    assert(reg.keySet == Set("zscore_freq", "pca_residual", "mahalanobis"))
-    reg.foreach { case (name, model) =>
-      val st = model.fit(spark, df)
-      val cols = model.scoreColumns(st)
-      assert(cols.nonEmpty, s"$name produced no score columns")
-      val scored = cols.foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
-      assert(scored.count() == 200)
-    }
   }
 }

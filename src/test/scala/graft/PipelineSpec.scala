@@ -118,7 +118,7 @@ class PipelineSpec extends AnyFunSuite {
     val obs = org.apache.spark.sql.Observation("never-run")
     spark.range(3).observe(obs, count(lit(1)).as("n")) // no action follows
     val t0 = System.nanoTime()
-    val e = intercept[IllegalStateException](ValidationRun.observed(obs, timeoutSec = 1))
+    val e = intercept[IllegalStateException](graft.eval.OracleRound.observed(obs, timeoutSec = 1))
     assert(e.getMessage.contains("never-run"), e.getMessage)
     assert((System.nanoTime() - t0) / 1e9 < 30.0)
   }

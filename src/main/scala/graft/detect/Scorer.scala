@@ -61,22 +61,13 @@ object Scorer {
     if (rows.isEmpty) None
     else {
       val byLang = rows.map(r => r.getString(0) -> r.getDouble(1)).toMap
-      val global = {
-        // Weighted-median APPROXIMATION: global p50 from the dominant
-        // class. Known off-by-one: `acc` is checked BEFORE adding the
-        // current group's weight, so the chosen row can overshoot the
-        // true weighted median by one group when the boundary falls
-        // exactly between groups. This is only the fallback reference
-        // when a row's predicted language has no per-lang quantile;
-        // fixing it shifts scores, so the fix must re-pin the fixtures
-        // that hold them.
-        val totalN = rows.map(_.getLong(2)).sum
-        val sorted = rows.sortBy(_.getDouble(1))
-        var acc = 0L
-        var res = sorted.head.getDouble(1)
-        sorted.foreach { r => if (acc < totalN / 2) { res = r.getDouble(1); acc += r.getLong(2) } }
-        res
-      }
+      // weighted median of the per-language p50s (weight = group rows):
+      // the first p50, in ascending order, whose cumulative weight
+      // reaches half the total
+      val totalN = rows.map(_.getLong(2)).sum
+      val sorted = rows.sortBy(_.getDouble(1))
+      val cumulative = sorted.map(_.getLong(2)).scanLeft(0L)(_ + _).tail
+      val global = sorted(cumulative.indexWhere(2 * _ >= totalN)).getDouble(1)
       Some((byLang, global))
     }
   }

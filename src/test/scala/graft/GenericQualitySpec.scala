@@ -136,6 +136,23 @@ class GenericQualitySpec extends AnyFunSuite {
     assert(graft.detect.Scorer.recalibrate(empty, fb) == fb)
   }
 
+  test("recalibrate: the global reference is the weighted median of the per-language p50s") {
+    import spark.implicits._
+    // (lang, p50, rows): each group's rows share one perplexity, so its
+    // p50 is exact and its weight is its row count
+    def global(groups: (String, Double, Int)*): Double = {
+      val raw = groups.flatMap { case (l, p, w) => Seq.fill(w)((l, p)) }
+        .toDF("pred_lang", "ppl_raw")
+      graft.detect.Scorer.recalibrate(raw, (Map.empty, -1.0))._2
+    }
+    assert(global(("a", 1.0, 1), ("b", 2.0, 1), ("c", 3.0, 1)) == 2.0)
+    assert(global(("a", 1.0, 1), ("b", 2.0, 2)) == 2.0)
+    assert(global(("a", 1.0, 5), ("b", 2.0, 1), ("c", 3.0, 1)) == 1.0)
+    assert(global(("a", 1.0, 1), ("b", 2.0, 1), ("c", 3.0, 5)) == 3.0)
+    assert(global(("a", 1.0, 2), ("b", 2.0, 2)) == 1.0)
+    assert(global(("a", 3.0, 1), ("b", 1.0, 1), ("c", 4.0, 1), ("d", 2.0, 1)) == 2.0)
+  }
+
   test("fromCsv: first column is the id, schema inferred") {
     val (df, _) = fixture(100)
     val path = "target/graft-generic-csv"

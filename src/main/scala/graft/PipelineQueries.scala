@@ -368,10 +368,8 @@ object PipelineQueries {
       val feats = s.read.parquet(somFeaturesFixturePath)
       val sample = graft.explain.ClusterExplainer.fitSample(
           feats, Seq("image_id"), graft.explain.SomClustering.DefaultMaxFit)
-        .select(PipelineCache.scoreNames.map(col): _*).cache()
-      val model =
-        try graft.explain.SomClustering.fit(sample, PipelineCache.scoreNames)
-        finally sample.unpersist()
+        .select(PipelineCache.scoreNames.map(col): _*)
+      val model = graft.explain.SomClustering.fit(sample, PipelineCache.scoreNames)
       val schema = org.apache.spark.sql.types.StructType(
         org.apache.spark.sql.types.StructField("unit",
           org.apache.spark.sql.types.IntegerType, nullable = false) +:
@@ -819,6 +817,9 @@ object PipelineQueries {
             System.currentTimeMillis() - 30 * 60 * 1000L)
         .foreach(PipelineLoop.deleteRecursively)
       val dir = s"target/graft-qf-stream-p${ProcessHandle.current().pid()}-shard"
+      // a concurrent process's sweep may have deleted the shard since
+      // this process wrote it: write it again then
+      if (!graft.engine.TableIO.exists(s, dir)) fixtureWritten.remove(dir): Unit
       writeOnce(dir) {
         // overwrite: a pid-reused leftover dir must not fail the write
         // or leak stale rows into the shard

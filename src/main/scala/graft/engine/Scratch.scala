@@ -97,9 +97,6 @@ object Scratch {
     else own
   }
 
-  /** Bytes currently held by the scratch root (tmpfs = resident RAM). */
-  def usedBytes(): Long = sizeOf(new java.io.File(root))
-
   /** Best-effort kernel memory hygiene before a measurement window:
     * drop reclaimable caches and request compaction, so a freshly
     * launched child JVM's multi-GiB heap is served from clean free

@@ -90,34 +90,36 @@ object ClusterExplainer {
     scoreCols.zip(vals).filter(_._2 > p70).map(_._1)
   }
 
-  /** Bounded assembled (features, label) frame for tree fits — same
-    * deterministic-sample policy as [[fitSample]]. */
-  private def assembleBounded(
-      labeled: DataFrame,
+  /** Bounded assembled sample of `df` for the MLlib fits — same
+    * deterministic-sample policy as [[fitSample]], ordered by the hash of
+    * `orderCols` and then their VALUES, so equal-hash rows (identical
+    * score vectors are common) arrive in a deterministic sequence
+    * regardless of partition layout: MLlib's seeded samplers consume
+    * rows in order, and exact duplicates are interchangeable, so
+    * value-order ties pin the fit. Emits `features` (a vector of
+    * `featureCols`) plus the order columns that are not features. */
+  private def boundedVectors(
+      df: DataFrame,
       featureCols: Seq[String],
-      maxFit: Int): DataFrame = {
-    labeled
-      .select((featureCols.map(c => col(c).cast("double")) :+
-        col("label").cast("double").as("label")): _*)
-      // hash-ordered for a representative bounded sample; VALUE tiebreak
-      // so equal-hash rows (identical score vectors are common) arrive
-      // in a deterministic sequence regardless of partition layout —
-      // MLlib's seeded samplers consume rows in order, and exact
-      // duplicates are interchangeable, so value-order ties pin the fit
-      .orderBy((xxhash64((featureCols :+ "label").map(col): _*) +:
-        (featureCols :+ "label").map(col)): _*)
+      orderCols: Seq[String],
+      maxFit: Int): DataFrame =
+    df.orderBy((xxhash64(orderCols.map(col): _*) +: orderCols.map(col)): _*)
       .limit(maxFit)
       // codegen'd array_to_vector: no object serde, row order preserved
-      .select(org.apache.spark.ml.functions.array_to_vector(
-        array(featureCols.map(col): _*)).as("features"), col("label"))
+      .select((org.apache.spark.ml.functions.array_to_vector(
+        array(featureCols.map(col): _*)).as("features") +:
+        orderCols.diff(featureCols).map(col)): _*)
       .coalesce(1)
-  }
 
-  /** Fit one tree model on the bounded assembled sample of `labeled`
-    * and read the root of the tree `fit` returns as [[TreeRule]]s. */
+  /** Fit one tree model on the bounded assembled (features, label)
+    * sample of `labeled` and read the root of the tree `fit` returns as
+    * [[TreeRule]]s. */
   private def fitTreeRules(labeled: DataFrame, featureCols: Seq[String], maxFit: Int)(
       fit: DataFrame => Node): Seq[TreeRule] = {
-    val assembled = assembleBounded(labeled, featureCols, maxFit).cache()
+    val assembled = boundedVectors(
+      labeled.select((featureCols.map(c => col(c).cast("double")) :+
+        col("label").cast("double").as("label")): _*),
+      featureCols, featureCols :+ "label", maxFit).cache()
     val root = fit(assembled)
     assembled.unpersist()
     structuredRulesFrom(root, featureCols, Nil)
@@ -182,17 +184,7 @@ object ClusterExplainer {
       ks: Seq[Int],
       seed: Long = 42L,
       maxFit: Int = 10000): Int = {
-    val spark = faulty.sparkSession
-    import spark.implicits._
-    val assembled = faulty
-      .select(scoreCols.map(col): _*)
-      // value tiebreak after the hash: see assembleBounded
-      .orderBy((xxhash64(scoreCols.map(col): _*) +: scoreCols.map(col)): _*)
-      .limit(maxFit)
-      // codegen'd array_to_vector (see assembleBounded)
-      .select(org.apache.spark.ml.functions.array_to_vector(
-        array(scoreCols.map(col): _*)).as("features"))
-      .coalesce(1).cache()
+    val assembled = boundedVectors(faulty, scoreCols, scoreCols, maxFit).cache()
     val n = assembled.count()
     val candidates = ks.filter(k => k >= 2 && k <= n).sorted
     require(candidates.nonEmpty, "need at least one candidate k in [2, n]")

@@ -12,27 +12,26 @@ import org.apache.spark.sql.functions._
   * grouped by BMU cell, SOM.py:218-230).
   *
   * The reference feeds rows one at a time through a TF session
-  * (SOM.py:160-168) — O(rows·iters) sequential updates, the
-  * single-node bottleneck SURVEY.md §5 calls out. The standard
-  * distributed formulation is the BATCH SOM: each epoch assigns every
-  * row its BMU in parallel, reduces to m·n (sum-vector, count)
-  * partials with a map-side combine, and the driver applies the
-  * Gaussian-neighbourhood smoothing over the tiny m·n×m·n grid:
+  * (SOM.py:160-168) — O(rows·iters) sequential updates. This is the
+  * BATCH SOM: each epoch assigns every row its BMU, sums the rows into
+  * m·n (sum-vector, count) cells, and applies the Gaussian-neighbourhood
+  * smoothing over the tiny m·n×m·n grid:
   *
   *   w_j ← Σ_b h_t(j,b)·S_b / Σ_b h_t(j,b)·C_b
   *
   * (S_b/C_b = per-BMU feature sums/counts, h_t the reference's kernel;
-  * units with zero total mass keep their weights). One pass per epoch,
-  * a 25-key shuffle, no learning rate — the batch update is the
-  * closed-form fixed point of the reference's online rule at each
-  * neighbourhood width, so α drops out. With σ→0 an epoch degenerates
-  * to exactly one Lloyd (k-means) step over the occupied units, which
-  * SomSpec asserts.
+  * units with zero total mass keep their weights). No learning rate —
+  * the batch update is the closed-form fixed point of the reference's
+  * online rule at each neighbourhood width, so α drops out. With σ→0 an
+  * epoch degenerates to exactly one Lloyd (k-means) step over the
+  * occupied units, which SomSpec asserts. The fit runs on a bounded
+  * sample ([[ClusterExplainer.fitSample]]); the assignment is
+  * partition-parallel over the full input.
   *
-  * BMU assignment is a pure Catalyst higher-order-function expression
-  * over a literal codebook (no UDF, no serde): squared-distance fold
-  * per unit, `array_position(array_min)` picks the FIRST minimal unit,
-  * matching tf.argmin's tie rule (SOM.py:76-80) — and the left-to-right
+  * BMU assignment is a native Catalyst expression over the codebook
+  * (`Exprs.SomBmu`; no UDF, no serde): squared-distance fold per unit,
+  * the FIRST minimal unit wins, matching tf.argmin's tie rule
+  * (SOM.py:76-80) — and the left-to-right
   * fold order makes every distance bit-reproducible by any engine that
   * sums the squared differences in feature order, which is how the
   * qf_som_assign DuckDB oracle re-derives every BMU relationally.
@@ -48,8 +47,6 @@ object SomClustering {
     * reference's `_neuron_locations` enumeration (SOM.py:144-152). */
   final case class SomModel(m: Int, n: Int, dim: Int, weights: Array[Array[Double]]) {
     require(weights.length == m * n, s"codebook must have ${m * n} units")
-    def unitRow(u: Int): Int = u / n
-    def unitCol(u: Int): Int = u % n
   }
 
   /** Deterministic N(0,1) init (the reference's tf.random_normal,
@@ -75,23 +72,15 @@ object SomClustering {
     org.apache.spark.sql.graft.Exprs.somBmu(features, weights)
   }
 
-  /** Fit the map. Epochs are Spark jobs over `data`; per epoch the only
-    * shuffle carries (partition × m·n) keys × (dim+1) doubles, so an
-    * epoch costs one scan regardless of corpus size — the scale
-    * contract. The smoothing matrix is m·n × m·n on the driver (25×25
-    * here), negligible.
-    *
-    * DETERMINISM: the per-epoch partials are keyed by
-    * (input-partition-id, bmu) and the driver folds them in that sorted
-    * order, so the floating-point summation order — and therefore the
-    * fitted codebook — is bit-reproducible for any FIXED input
-    * partitioning (a plain groupBy(bmu) would merge map-side partials
-    * in shuffle-fetch order, which a real cluster randomizes run to
-    * run). Repartitioning the input differently still changes the sums
-    * at last-ulp, as with any distributed FP reduce.
-    *
-    * `data` should be cached by the caller if it is not a trivial scan
-    * (fit reads it `epochs` times). */
+  /** Fit the map in ONE task: the input is coalesced to one partition,
+    * buffered, and every epoch runs locally over it — BMU per row, per
+    * unit counts and feature sums accumulated from 0.0 in row order, then
+    * the smoothing — so the fit costs one job and one collect of the
+    * codebook. The whole input is held in that task's memory, so callers
+    * bound it with [[ClusterExplainer.fitSample]] (as [[clusterFaulty]]
+    * does). The codebook is a pure function of the input's row order,
+    * which for a multi-partition input is its partitions concatenated in
+    * partition order. */
   def fit(
       data: DataFrame,
       featureCols: Seq[String],
@@ -105,79 +94,62 @@ object SomClustering {
     val sig0 = if (sigma0 > 0) sigma0 else math.max(m, n) / 2.0
     val units = m * n
     // grid locations, row-major (SOM.py:144-152)
-    val locs = Array.tabulate(units)(u => (u / n, u % n))
     val gridD2 = Array.tabulate(units, units) { (j, b) =>
-      val dr = locs(j)._1 - locs(b)._1
-      val dc = locs(j)._2 - locs(b)._2
+      val dr = j / n - b / n
+      val dc = j % n - b % n
       (dr * dr + dc * dc).toDouble
     }
-    val spark0 = data.sparkSession
-    import spark0.implicits._
-    val assembled = data.select(
+    val init = initWeights(m, n, dim, seed)
+    val spark = data.sparkSession
+    import spark.implicits._
+    val weights = data.select(
       array(featureCols.map(c => col(c).cast("double")): _*).as("arr"))
       .as[Array[Double]]
-    var w = initWeights(m, n, dim, seed)
-    var t = 0
-    while (t < epochs) {
-      // reference decay: σ_t = σ₀·(1 − t/T) (SOM.py:96-100); at the
-      // last epoch the factor is 1/T, never zero
-      val sigT = sig0 * (1.0 - t.toDouble / epochs)
-      // single-stage epoch: a groupBy((pid, bmu)) Catalyst aggregate
-      // would shuffle its 25-key partials and re-plan a 2-stage job
-      // every epoch (~115 ms/epoch of pure latency on a bounded sample).
-      // The mapPartitions pass accumulates the same per-(pid, bmu)
-      // partials in per-partition row order and collects them directly:
-      // one stage, no exchange, no per-epoch re-plan.
-      val wLocal = w
-      val unitsLocal = units
-      val dimLocal = dim
-      val partials = assembled.mapPartitions { it =>
-        val pid = org.apache.spark.TaskContext.getPartitionId()
-        val cnt = new Array[Long](unitsLocal)
-        val sums = Array.fill(unitsLocal)(new Array[Double](dimLocal))
-        it.foreach { arr =>
-          // ragged/null rows cannot occur (arr = cast score columns);
-          // skip defensively rather than fold them into unit 0
-          if (arr != null && arr.length == dimLocal) {
-            val b = org.apache.spark.sql.graft.Exprs.somBmuArray(arr, wLocal)
+      .coalesce(1)
+      .mapPartitions { it =>
+        // ragged/null rows cannot occur (arr = cast score columns);
+        // skip defensively rather than fold them into unit 0
+        val rows = it.filter(a => a != null && a.length == dim).toArray
+        var w = init
+        var t = 0
+        while (t < epochs) {
+          val cnt = new Array[Long](units)
+          val sums = Array.fill(units)(new Array[Double](dim))
+          rows.foreach { arr =>
+            val b = org.apache.spark.sql.graft.Exprs.somBmuArray(arr, w)
             if (b >= 0) {
               cnt(b) += 1L
               var i = 0
-              while (i < dimLocal) { sums(b)(i) += arr(i); i += 1 }
+              while (i < dim) { sums(b)(i) += arr(i); i += 1 }
             }
           }
-        }
-        (0 until unitsLocal).iterator.filter(cnt(_) > 0L)
-          .map(b => (pid, b, cnt(b), sums(b)))
-      }.collect()
-        .sortBy(p => (p._1, p._2))
-      val cnt = Array.fill(units)(0L)
-      val sums = Array.fill(units)(Array.fill(dim)(0.0))
-      partials.foreach { case (_, b, c, s) =>
-        cnt(b) += c
-        var i = 0
-        while (i < dim) { sums(b)(i) += s(i); i += 1 }
-      }
-      val s2 = sigT * sigT
-      w = Array.tabulate(units) { j =>
-        var den = 0.0
-        val num = Array.fill(dim)(0.0)
-        var b = 0
-        while (b < units) {
-          if (cnt(b) > 0L) {
-            // reference kernel exp(−d²/σ_t²) — σ², not 2σ² (SOM.py:106-109)
-            val h = math.exp(-gridD2(j)(b) / s2)
-            den += h * cnt(b)
-            var i = 0
-            while (i < dim) { num(i) += h * sums(b)(i); i += 1 }
+          // reference decay: σ_t = σ₀·(1 − t/T) (SOM.py:96-100); at the
+          // last epoch the factor is 1/T, never zero
+          val sigT = sig0 * (1.0 - t.toDouble / epochs)
+          val s2 = sigT * sigT
+          val prev = w
+          w = Array.tabulate(units) { j =>
+            var den = 0.0
+            val num = Array.fill(dim)(0.0)
+            var b = 0
+            while (b < units) {
+              if (cnt(b) > 0L) {
+                // reference kernel exp(−d²/σ_t²) — σ², not 2σ² (SOM.py:106-109)
+                val h = math.exp(-gridD2(j)(b) / s2)
+                den += h * cnt(b)
+                var i = 0
+                while (i < dim) { num(i) += h * sums(b)(i); i += 1 }
+              }
+              b += 1
+            }
+            if (den > 0.0) num.map(_ / den) else prev(j)
           }
-          b += 1
+          t += 1
         }
-        if (den > 0.0) num.map(_ / den) else w(j)
-      }
-      t += 1
-    }
-    SomModel(m, n, dim, w)
+        w.iterator
+      }.collect()
+    // a zero-partition input runs no task and keeps the init codebook
+    SomModel(m, n, dim, if (weights.isEmpty) init else weights)
   }
 
   /** Map every row to its BMU cell (map_vects, SOM.py:195-216):
@@ -205,8 +177,8 @@ object SomClustering {
     * same shape as ClusterExplainer.clusterFaulty): cluster faulty rows
     * by BMU cell. `cluster_id` is the BMU unit index, so there are at
     * most m·n groups — the reference's grouping contract
-    * (SOM.py:218-230). Raise `maxFit` (or pass the full frame) to fit
-    * on more data; each extra epoch stays a single pass. */
+    * (SOM.py:218-230). Raise `maxFit` to fit on more data; the fit
+    * holds its whole sample in one task. */
   def clusterFaulty(
       faulty: DataFrame,
       scoreCols: Seq[String],
@@ -222,10 +194,7 @@ object SomClustering {
     // policy itself is ClusterExplainer.fitSample, shared with KMeans.
     val sample = ClusterExplainer.fitSample(faulty, Seq("image_id"), maxFit)
       .select(scoreCols.map(c => col(c).cast("double")): _*)
-      .cache()
-    val model =
-      try fit(sample, scoreCols, m, n, epochs, seed = seed)
-      finally sample.unpersist()
+    val model = fit(sample, scoreCols, m, n, epochs, seed = seed)
     assign(faulty, "image_id", scoreCols, model)
       .select(col("image_id"), col("bmu_unit").as("cluster_id"))
   }

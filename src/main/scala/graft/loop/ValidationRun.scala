@@ -20,9 +20,10 @@ import graft.synth.{GenConfig, ImageGen}
   * Statuses live in an append-only audit table keyed by round (never
   * per-row UPDATEs — the reference's O(n) UPDATE loop at
   * DQTestToolHelper.py:161-162 becomes one columnar write per round).
-  * Each round checkpoints statuses + metrics + per-partition lineage;
-  * a re-run with the same outDir resumes after the last completed round
-  * (north-rule checkpointed resume).
+  * The audit table is the round's status checkpoint (`image_id`,
+  * `status_new`); each round also writes its metrics row, threshold and
+  * per-partition lineage, and a re-run with the same outDir resumes
+  * after the last completed round (north-rule checkpointed resume).
   */
 object ValidationRun {
 
@@ -40,23 +41,33 @@ object ValidationRun {
       thresholds: Seq[Double],
       completedRounds: Int)
 
-  private def statusPath(cfg: RunConfig, r: Int) = s"${cfg.outDir}/statuses/round=$r"
   private def metricsPath(cfg: RunConfig, r: Int) = s"${cfg.outDir}/metrics/round=$r"
   private def lineagePath(cfg: RunConfig, r: Int) = s"${cfg.outDir}/lineage/round=$r"
   private def auditPath(cfg: RunConfig, r: Int) = s"${cfg.outDir}/audit/round=$r"
   private def thresholdPath(cfg: RunConfig, r: Int) = s"${cfg.outDir}/thresholds/round=$r"
 
   /** A round is resumable only when EVERY artifact it writes exists —
-    * statuses alone are written first, so a crash between the status
-    * write and the metrics/audit/lineage writes must RE-RUN the round
-    * (all writes are overwrite-idempotent), not skip it: skipping left a
-    * permanent per-round hole that silently shortened the TPR history
-    * every later round's TPGR is computed over, and dropped the round's
-    * audit fixture from what the DuckDB oracle recomputes. */
+    * the audit table is written first, so a crash after it but before
+    * the metrics, thresholds or lineage writes must RE-RUN the round (all
+    * writes are overwrite-idempotent), not skip it: skipping would leave
+    * a permanent per-round hole that silently shortens the TPR history
+    * every later round's TPGR is computed over. */
   private def roundComplete(spark: SparkSession, cfg: RunConfig, r: Int): Boolean =
-    Seq(statusPath(cfg, r), metricsPath(cfg, r), auditPath(cfg, r),
-      lineagePath(cfg, r), thresholdPath(cfg, r))
+    Seq(auditPath(cfg, r), metricsPath(cfg, r), lineagePath(cfg, r), thresholdPath(cfg, r))
       .forall(TableIO.exists(spark, _))
+
+  /** Round `r`'s statuses, read back from its audit checkpoint. */
+  private def checkpointedStatuses(spark: SparkSession, cfg: RunConfig, r: Int): DataFrame =
+    TableIO.read(spark, auditPath(cfg, r)).select(col("image_id"), col("status_new").as("status"))
+
+  /** Rounds 1..`upTo` of a `round=*`-partitioned history in ONE read,
+    * sorted by the `round` partition column; later (possibly partial)
+    * rounds are not read. Schemas merge across rounds. One partition, so
+    * the sort needs no range-sampling job. */
+  private def history(spark: SparkSession, cfg: RunConfig, name: String, upTo: Int): DataFrame =
+    spark.read.option("mergeSchema", "true").option("basePath", s"${cfg.outDir}/$name")
+      .parquet((1 to upTo).map(r => s"${cfg.outDir}/$name/round=$r"): _*)
+      .coalesce(1).orderBy("round")
 
   def run(spark: SparkSession, cfg: RunConfig): RunResult = {
     import spark.implicits._
@@ -101,25 +112,23 @@ object ValidationRun {
     var statuses =
       if (resumeFrom == 0)
         images.select(col("image_id"), lit(OracleRound.Clean).as("status"))
-      else TableIO.read(spark, statusPath(cfg, resumeFrom)).select("image_id", "status")
+      else checkpointedStatuses(spark, cfg, resumeFrom)
 
     val metricsHist = scala.collection.mutable.ArrayBuffer.empty[Metrics.RunMetrics]
     val thresholds = scala.collection.mutable.ArrayBuffer.empty[Double]
     // Reload prior rounds' metrics AND thresholds so TPGR spans the full
     // history on resume and RunResult.thresholds stays aligned 1:1 with
-    // RunResult.metrics. Checkpoints written before the tpgr column
-    // existed stay resumable: the missing column reads as 0.0 (TPGR of a
-    // one-run history) instead of failing the whole resume on
-    // AnalysisException. roundComplete guarantees both paths exist for
-    // every resumed round.
-    (1 to resumeFrom).foreach { r =>
-      val raw = TableIO.read(spark, metricsPath(cfg, r))
-      val compat =
-        if (raw.columns.contains("tpgr")) raw
-        else raw.withColumn("tpgr", lit(0.0))
-      metricsHist ++= compat.as[Metrics.RunMetrics].collect()
-      thresholds += TableIO.read(spark, thresholdPath(cfg, r))
-        .head().getAs[Double]("threshold")
+    // RunResult.metrics. Rounds written before the tpgr column existed
+    // stay resumable: the missing value reads as 0.0 (TPGR of a one-run
+    // history) instead of failing the whole resume on AnalysisException.
+    // roundComplete guarantees both paths exist for every resumed round.
+    if (resumeFrom > 0) {
+      val m = history(spark, cfg, "metrics", resumeFrom)
+      metricsHist ++= m.withColumn("tpgr",
+        if (m.columns.contains("tpgr")) coalesce(col("tpgr"), lit(0.0)) else lit(0.0))
+        .as[Metrics.RunMetrics].collect()
+      thresholds ++= history(spark, cfg, "thresholds", resumeFrom)
+        .select("threshold").as[Double].collect()
     }
 
     val n = cfg.n
@@ -136,30 +145,29 @@ object ValidationRun {
       // flag, oracle membership, old + new status.
       val flagged = OracleRound.flag(st, known, "image_id", t, r).cache()
 
-      // One job materializes the cache, writes the round's statuses and
-      // collects the round's counts: an Observation rides the status
-      // write. At loop sizes the cost is job count, not data.
+      // One job materializes the cache, writes the round's AUDIT table
+      // and collects the round's counts: an Observation rides the audit
+      // write. At loop sizes the cost is job count, not data. The audit
+      // table carries exactly the per-row facts the metric formulas
+      // consume — (is_susp, is_known, status_old, status_new) — so an
+      // independent engine (the DuckDB oracle) can recompute every
+      // TPR/FNR/PD/ND/UD/TPGR value from it, and its status_new column
+      // is the round's status checkpoint.
       val obs = org.apache.spark.sql.Observation(s"round_$r")
       TableIO.createOrReplace(
         flagged.observe(obs, OracleRound.countColumns.head, OracleRound.countColumns.tail: _*)
-          .select(col("image_id"), col("status_new").as("status")),
-        statusPath(cfg, r))
+          .select(col("image_id"), col("is_susp"), col("is_known"),
+            col("status").as("status_old"), col("status_new"), lit(r).as("run")),
+        auditPath(cfg, r))
       val m = OracleRound.metrics(r, OracleRound.counts(obs), knownCount,
         metricsHist.map(_.truePositiveRate).toSeq)
       metricsHist += m
 
-      // Remaining checkpoints: metrics row + per-partition lineage +
-      // the per-round AUDIT fixture, all from the already-cached flagged
-      // frame (the status write above populated the cache). The audit
-      // fixture carries exactly the per-row facts the metric formulas
-      // consume — (is_susp, is_known, status_old, status_new) — so an
-      // independent engine (the DuckDB oracle) can recompute every
-      // TPR/FNR/PD/ND/UD/TPGR value from it.
-      //
-      // The four writes are mutually independent reads of the same
-      // materialized cache, so they run as CONCURRENT Spark actions; a
-      // round's wall cost is one write latency, not four. roundComplete
-      // requires all of them to exist.
+      // Remaining checkpoints: metrics row + threshold + per-partition
+      // lineage. They are mutually independent reads of the materialized
+      // cache, so they run as CONCURRENT Spark actions; a round's wall
+      // cost is one write latency, not three. roundComplete requires all
+      // of them to exist.
       locally {
         import scala.concurrent.{Await, Future}
         import scala.concurrent.ExecutionContext.Implicits.global
@@ -171,11 +179,6 @@ object ValidationRun {
           // metrics
           Future(TableIO.createOrReplace(
             Seq((r, t)).toDF("run", "threshold"), thresholdPath(cfg, r))),
-          Future(TableIO.createOrReplace(
-            flagged.select(col("image_id"), col("is_susp"), col("is_known"),
-              col("status").as("status_old"), col("status_new"),
-              lit(r).as("run")),
-            auditPath(cfg, r))),
           Future {
             val lineage = flagged
               .withColumn("pid", spark_partition_id())
@@ -192,7 +195,7 @@ object ValidationRun {
       }
 
       // Next round reads the statuses straight off the cached frame (its
-      // content is byte-identical to the checkpoint just written) — no
+      // content is the status column of the audit table just written) — no
       // parquet round-trip per round. The checkpoint stays the resume
       // source of truth for fresh processes. Every 5th round the
       // just-written checkpoint is read back instead: the cache
@@ -202,8 +205,7 @@ object ValidationRun {
       // pressure would recompute through every predecessor); the
       // periodic read truncates the lineage at a bounded depth.
       statuses =
-        if (r % 5 == 0)
-          TableIO.read(spark, statusPath(cfg, r)).select("image_id", "status")
+        if (r % 5 == 0) checkpointedStatuses(spark, cfg, r)
         else flagged.select(col("image_id"), col("status_new").as("status"))
       prevFlagged.foreach(_.unpersist())
       prevFlagged = Some(flagged)
@@ -221,8 +223,7 @@ object ValidationRun {
     // rather than holding executor memory for as long as callers keep
     // re-evaluating the returned frame.
     val finalStatuses =
-      if (cfg.rounds > 0)
-        TableIO.read(spark, statusPath(cfg, cfg.rounds)).select("image_id", "status")
+      if (cfg.rounds > 0) checkpointedStatuses(spark, cfg, cfg.rounds)
       else statuses
     prevFlagged.foreach(_.unpersist())
     val finalScored = scoreRound(finalStatuses)

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 
 /** Multimodal column handling: image/audio/video as opaque `binary`
@@ -199,37 +200,41 @@ object Multimodal {
     psnr(ia, ib)
   }
 
+  /** Decode every (id, bytes) row of `images`, partition-parallel, and
+    * map it to `ok(id, image)`. A payload that does not decode (null, or
+    * any exception, `ok`'s included) maps to `failed(id)` — never a task
+    * failure. */
+  private def perImage[T <: Product : TypeTag](images: DataFrame, idCol: String,
+      bytesCol: String)(ok: (String, java.awt.image.BufferedImage) => T,
+      failed: String => Option[T]): Dataset[T] =
+    images.select(col(idCol), col(bytesCol))
+      .as(Encoders.tuple(Encoders.STRING, Encoders.BINARY))
+      .mapPartitions { it =>
+        it.flatMap { case (id, bytes) =>
+          try {
+            val img = decodeImage(bytes)
+            if (img == null) failed(id) else Some(ok(id, img))
+          } catch { case _: Exception => failed(id) }
+        }
+      }(Encoders.product[T])
+
   /** Decode + feature-extract: mean channel intensities. Real ImageIO
     * decode; corrupt payloads yield decode_ok=false rows, never a task
     * failure. */
-  def imageFeatures(images: DataFrame): Dataset[ImageFeatures] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.select(col("image_id"), col("bytes")).as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          try {
-            val img = decodeImage(bytes)
-            if (img == null) ImageFeatures(id, decode_ok = false, 0, 0, 0, 0, 0)
-            else {
-              val w = img.getWidth; val h = img.getHeight
-              val packed = img.getRGB(0, 0, w, h, null, 0, w)
-              var r = 0L; var g = 0L; var b = 0L
-              var i = 0
-              while (i < packed.length) {
-                val p = packed(i)
-                r += (p >> 16) & 0xff; g += (p >> 8) & 0xff; b += p & 0xff
-                i += 1
-              }
-              val n = (w.toLong * h).toDouble
-              ImageFeatures(id, decode_ok = true, w, h, r / n, g / n, b / n)
-            }
-          } catch {
-            case _: Exception => ImageFeatures(id, decode_ok = false, 0, 0, 0, 0, 0)
-          }
-        }
+  def imageFeatures(images: DataFrame): Dataset[ImageFeatures] =
+    perImage(images, "image_id", "bytes")({ (id, img) =>
+      val w = img.getWidth; val h = img.getHeight
+      val packed = img.getRGB(0, 0, w, h, null, 0, w)
+      var r = 0L; var g = 0L; var b = 0L
+      var i = 0
+      while (i < packed.length) {
+        val p = packed(i)
+        r += (p >> 16) & 0xff; g += (p >> 8) & 0xff; b += p & 0xff
+        i += 1
       }
-  }
+      val n = (w.toLong * h).toDouble
+      ImageFeatures(id, decode_ok = true, w, h, r / n, g / n, b / n)
+    }, id => Some(ImageFeatures(id, decode_ok = false, 0, 0, 0, 0, 0)))
 
   final case class PhashRow(image_id: String, phash: Long, decode_ok: Boolean)
 
@@ -243,22 +248,10 @@ object Multimodal {
     * here; corrupt payloads yield decode_ok=false with an empty array,
     * never a task failure. */
   def decodePixels(images: DataFrame, idCol: String = "image_id",
-      bytesCol: String = "bytes"): Dataset[DecodedPixels] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.select(col(idCol), col(bytesCol)).as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          try {
-            val img = decodeImage(bytes)
-            if (img == null) DecodedPixels(id, decode_ok = false, Array.empty)
-            else DecodedPixels(id, decode_ok = true, pixelChannels(img))
-          } catch {
-            case _: Exception => DecodedPixels(id, decode_ok = false, Array.empty)
-          }
-        }
-      }
-  }
+      bytesCol: String = "bytes"): Dataset[DecodedPixels] =
+    perImage(images, idCol, bytesCol)(
+      (id, img) => DecodedPixels(id, decode_ok = true, pixelChannels(img)),
+      id => Some(DecodedPixels(id, decode_ok = false, Array.empty)))
 
   /** Perceptual hash computed from the ACTUAL pixels (average-hash /
     * aHash): decode → exact-integer 8×8 area average → grayscale →
@@ -269,20 +262,10 @@ object Multimodal {
     * arrives without precomputed hashes. Corrupt payloads yield
     * decode_ok=false with phash 0, never a task failure. */
   def computePhash(images: DataFrame, idCol: String = "image_id",
-      bytesCol: String = "bytes"): Dataset[PhashRow] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.select(col(idCol), col(bytesCol)).as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          try {
-            val img = decodeImage(bytes)
-            if (img == null) PhashRow(id, 0L, decode_ok = false)
-            else PhashRow(id, phash64(img), decode_ok = true)
-          } catch { case _: Exception => PhashRow(id, 0L, decode_ok = false) }
-        }
-      }
-  }
+      bytesCol: String = "bytes"): Dataset[PhashRow] =
+    perImage(images, idCol, bytesCol)(
+      (id, img) => PhashRow(id, phash64(img), decode_ok = true),
+      id => Some(PhashRow(id, 0L, decode_ok = false)))
 
   /** 8×8 average-hash of a decoded image (scalar; see [[computePhash]]). */
   def phash64(img: java.awt.image.BufferedImage): Long =
@@ -331,29 +314,17 @@ object Multimodal {
   }
 
   /** Real resize (Graphics2D bilinear) + re-encode to PNG. */
-  def resizeImages(images: DataFrame, outW: Int, outH: Int): Dataset[ResizedImage] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.select(col("image_id"), col("bytes")).as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.flatMap { case (id, bytes) =>
-          try {
-            val img = decodeImage(bytes)
-            if (img == null) None
-            else {
-              val out = new java.awt.image.BufferedImage(outW, outH,
-                java.awt.image.BufferedImage.TYPE_INT_RGB)
-              val g2 = out.createGraphics()
-              g2.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-                java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-              g2.drawImage(img, 0, 0, outW, outH, null)
-              g2.dispose()
-              Some(ResizedImage(id, encodeImage(out, "png"), outW, outH))
-            }
-          } catch { case _: Exception => None }
-        }
-      }
-  }
+  def resizeImages(images: DataFrame, outW: Int, outH: Int): Dataset[ResizedImage] =
+    perImage(images, "image_id", "bytes")({ (id, img) =>
+      val out = new java.awt.image.BufferedImage(outW, outH,
+        java.awt.image.BufferedImage.TYPE_INT_RGB)
+      val g2 = out.createGraphics()
+      g2.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+        java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+      g2.drawImage(img, 0, 0, outW, outH, null)
+      g2.dispose()
+      ResizedImage(id, encodeImage(out, "png"), outW, outH)
+    }, _ => None)
 
   /** Exact-integer area-average resize over raw r,g,b channels
     * (row-major, as [[decodePixels]] emits): source pixel (x, y) lands
@@ -402,25 +373,11 @@ object Multimodal {
     * feature-grid path. */
   def resizePixels(images: DataFrame, outW: Int, outH: Int,
       idCol: String = "image_id",
-      bytesCol: String = "bytes"): Dataset[ResizedPixels] = {
-    val spark = images.sparkSession
-    import spark.implicits._
-    images.select(col(idCol), col(bytesCol)).as[(String, Array[Byte])]
-      .mapPartitions { it =>
-        it.map { case (id, bytes) =>
-          try {
-            val img = decodeImage(bytes)
-            if (img == null) ResizedPixels(id, decode_ok = false, outW, outH, Array.empty)
-            else ResizedPixels(id, decode_ok = true, outW, outH,
-              resizePixelsScalar(pixelChannels(img),
-                img.getWidth, img.getHeight, outW, outH))
-          } catch {
-            case _: Exception =>
-              ResizedPixels(id, decode_ok = false, outW, outH, Array.empty)
-          }
-        }
-      }
-  }
+      bytesCol: String = "bytes"): Dataset[ResizedPixels] =
+    perImage(images, idCol, bytesCol)(
+      (id, img) => ResizedPixels(id, decode_ok = true, outW, outH,
+        resizePixelsScalar(pixelChannels(img), img.getWidth, img.getHeight, outW, outH)),
+      id => Some(ResizedPixels(id, decode_ok = false, outW, outH, Array.empty)))
 
   /** Decoded PCM audio: interleaved samples as signed ints. */
   final case class WavPcm(sampleRate: Int, channels: Int, samples: Array[Int])

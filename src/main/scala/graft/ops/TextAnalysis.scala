@@ -76,9 +76,4 @@ object TextAnalysis {
     * bit-identical in Spark and DuckDB, unlike xx/murmur). */
   def fingerprint(text: Column): Column =
     md5(regexp_replace(trim(lower(text)), "\\s+", " ").cast("binary"))
-
-  /** 64-bit rolling-hash fingerprint (polynomial, base 31) as a long —
-    * the cheap in-engine variant. */
-  def rollingFingerprint(text: Column): Column =
-    xxhash64(regexp_replace(trim(lower(text)), "\\s+", " "))
 }

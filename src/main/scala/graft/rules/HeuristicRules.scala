@@ -68,12 +68,4 @@ object HeuristicRules {
       greatest(least(w.cast("double"), h.cast("double")), lit(1.0))
     least(lit(1.0), greatest(lit(0.0), (a - lit(maxAspect)) / lit(maxAspect)))
   }
-
-  /** Stop-word ratio for a language given its stop-word regex
-    * (used by the heuristic language scorer and quality score). */
-  def stopwordRatio(caption: Column, stopwordPattern: String): Column = {
-    val c = coalesce(caption, lit(""))
-    val toks = greatest(size(split(trim(c), "\\s+")), lit(1)).cast("double")
-    regexp_count(c, lit(stopwordPattern)).cast("double") / toks
-  }
 }

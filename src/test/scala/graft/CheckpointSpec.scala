@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.detect.Scorer
+import graft.engine.TableIO
+import graft.loop.ValidationRun
 import graft.models.{LangIdModel, ModelCheckpoint, NGramLMModel}
 
 class CheckpointSpec extends AnyFunSuite {
@@ -118,5 +120,70 @@ class CheckpointSpec extends AnyFunSuite {
       assert(m.langId.value.predict(t) == langId.predict(t), t)
     }
     assert(m.lm.value.perplexity("abab") < m.lm.value.perplexity("xyz"))
+  }
+
+  // Loop checkpoint layout: each case below resumes a copy of the
+  // session's cached 3-round loop outDir (PipelineLoop.cachedLoop, shared
+  // with qf_metrics_loop) that a crash or an older writer left in a
+  // different state.
+  private def loopCfg(dir: String) = ValidationRun.RunConfig(n = 1000L, rounds = 3,
+    outDir = dir, parts = graft.synth.GenConfig.adaptiveParts(1000L)) // cachedLoop's config
+  private def fresh = PipelineLoop.cachedLoop(spark)
+  private def decisionRows(res: ValidationRun.RunResult) =
+    res.decisions.select("image_id", "decision", "invalidity_score").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getDouble(2))).sortBy(_._1).toSeq
+  private def copyOfLoop(name: String): String = {
+    fresh: Unit // runs the cached loop once per session
+    val to = s"target/graft-ckpt-loop-$name"
+    PipelineLoop.deleteRecursively(new java.io.File(to))
+    val src = java.nio.file.Paths.get(PipelineLoop.loopDir)
+    val walk = java.nio.file.Files.walk(src)
+    try walk.forEach { p =>
+      java.nio.file.Files.copy(p, java.nio.file.Paths.get(to).resolve(src.relativize(p))): Unit
+    } finally walk.close()
+    to
+  }
+
+  test("a round whose audit table is written but whose metrics are missing re-runs") {
+    val dir = copyOfLoop("crash")
+    PipelineLoop.deleteRecursively(new java.io.File(s"$dir/metrics/round=3"))
+    assert(TableIO.exists(spark, s"$dir/audit/round=3"))
+    val res = ValidationRun.run(spark, loopCfg(dir))
+    assert(res.metrics == fresh.metrics)
+    assert(res.thresholds == fresh.thresholds)
+    assert(TableIO.exists(spark, s"$dir/metrics/round=3"))
+  }
+
+  test("metrics rounds written without tpgr resume with tpgr 0.0 next to a stored tpgr") {
+    val dir = copyOfLoop("tpgr")
+    def rewrite(r: Int)(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
+      val path = s"$dir/metrics/round=$r"
+      val df = f(TableIO.read(spark, path))
+      val local = spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+      TableIO.createOrReplace(local, path)
+    }
+    rewrite(1)(_.drop("tpgr"))
+    rewrite(2)(_.drop("tpgr"))
+    // a stored value that can be told apart from both 0.0 and the fresh one
+    val stored = fresh.metrics(2).tpgr + 0.5
+    rewrite(3)(_.withColumn("tpgr", lit(stored)))
+    val res = ValidationRun.run(spark, loopCfg(dir))
+    assert(res.metrics.map(_.tpgr) == Seq(0.0, 0.0, stored))
+    assert(res.metrics.map(_.copy(tpgr = 0.0)) == fresh.metrics.map(_.copy(tpgr = 0.0)))
+    assert(res.thresholds == fresh.thresholds)
+  }
+
+  test("an outDir that still holds an old-layout statuses/ directory resumes unchanged") {
+    val dir = copyOfLoop("statuses")
+    (1 to 3).foreach { r =>
+      TableIO.createOrReplace(
+        TableIO.read(spark, s"$dir/audit/round=$r")
+          .select(col("image_id"), col("status_new").as("status")),
+        s"$dir/statuses/round=$r")
+    }
+    val res = ValidationRun.run(spark, loopCfg(dir))
+    assert(res.metrics == fresh.metrics)
+    assert(res.thresholds == fresh.thresholds)
+    assert(decisionRows(res) == decisionRows(fresh))
   }
 }

@@ -76,9 +76,9 @@ class PipelineSpec extends AnyFunSuite {
       s"resumed thresholds ${res2.thresholds} != ${res.thresholds}")
     // decisions still produced after a fully-resumed run
     assert(res2.decisions.count() == 1000L)
-    // crash-window resume: statuses written but metrics/audit/lineage
-    // missing (JVM died mid-round) must RE-RUN that round, not leave a
-    // permanent hole in the metrics history
+    // crash-window resume: a round whose metrics/audit/lineage are
+    // missing (JVM died mid-round) must RE-RUN, not leave a permanent
+    // hole in the metrics history
     PipelineLoop.deleteRecursively(new java.io.File(s"$dir/metrics/round=3"))
     PipelineLoop.deleteRecursively(new java.io.File(s"$dir/audit/round=3"))
     PipelineLoop.deleteRecursively(new java.io.File(s"$dir/lineage/round=3"))
@@ -99,9 +99,9 @@ class PipelineSpec extends AnyFunSuite {
     val tprs = res.metrics.map(_.truePositiveRate)
     assert(tprs.last >= tprs.head - 1e-9, s"TPR fell across 10 rounds: $tprs")
     assert(graft.eval.Metrics.truePositiveGrowthRate(tprs) >= -1e-9)
-    // every round left its checkpoint triple
+    // every round left its audit checkpoint
     (1 to 10).foreach { r =>
-      assert(new java.io.File(s"$dir/statuses/round=$r").exists(), s"round $r")
+      assert(new java.io.File(s"$dir/audit/round=$r").exists(), s"round $r")
     }
   }
 

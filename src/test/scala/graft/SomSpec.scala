@@ -69,11 +69,11 @@ class SomSpec extends AnyFunSuite {
     assert(m1.weights.flatten.toSeq == m2.weights.flatten.toSeq)
   }
 
-  test("fit is deterministic over multi-partition input (pid-ordered reduce)") {
-    // the per-epoch partials are keyed by (partition, bmu) and folded
-    // in sorted order on the driver, so the same input layout must give
-    // a bit-identical codebook no matter how shuffle fetch interleaves;
-    // hash-repartitioned input keeps the layout itself deterministic
+  test("fit is deterministic over multi-partition input (one task, partitions in order)") {
+    // the fit coalesces its input to one task, which reads the
+    // partitions in partition order, so the same input layout must give
+    // a bit-identical codebook; hash-repartitioned input keeps the
+    // layout itself deterministic
     val df = (1 to 300).map(i => (i, 0.1 * (i % 11), 0.05 * (i % 6)))
       .toDF("id", "a", "b").repartition(7, col("id")).cache()
     df.count()

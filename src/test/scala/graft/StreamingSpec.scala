@@ -122,4 +122,16 @@ class StreamingSpec extends AnyFunSuite {
       assert(rs.count(!_.getBoolean(2)) == 1)
     }
   }
+
+  test("qf_stream_window writes its shard again after a sweep deleted it") {
+    // the query synthesizes its own input, so the scale-factor dir is unused
+    val query = SparkEntry.queries("qf_stream_window")
+    val first = query(spark, "").collect().toSeq
+    val shard = new java.io.File(
+      s"target/graft-qf-stream-p${ProcessHandle.current().pid()}-shard")
+    assert(shard.exists())
+    // what a concurrent process's stale-shard sweep does
+    PipelineLoop.deleteRecursively(shard)
+    assert(query(spark, "").collect().toSeq == first)
+  }
 }

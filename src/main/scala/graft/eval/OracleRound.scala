@@ -34,22 +34,26 @@ object OracleRound {
   def labelOffset(status: Column): Column =
     when(confirmed(status), lit(1.0)).otherwise(lit(0.0))
 
-  /** Join the known-fault ids onto a scored frame (`idCol`, `status`,
-    * `invalidity_score`) and add `is_susp`, `is_known` and `status_new`
-    * (the confirm transition) for round `r` at threshold `t`. */
-  def flag(scored: DataFrame, knownIds: DataFrame, idCol: String, t: Double,
-      r: Int): DataFrame = {
-    val known = broadcast(knownIds.select(col(idCol)).withColumn("__known", lit(1)))
-    scored
-      .join(known, Seq(idCol), "left")
-      .withColumn("is_susp", col("invalidity_score") >= t)
+  /** `df` plus `is_known`: whether its `idCol` is among the known-fault
+    * ids. The known set is fixed for a run, so a loop attaches it once,
+    * before caching the frame its rounds read. */
+  def withKnown(df: DataFrame, knownIds: DataFrame, idCol: String): DataFrame =
+    df.join(broadcast(knownIds.select(col(idCol)).withColumn("__known", lit(true))),
+        Seq(idCol), "left")
       .withColumn("is_known", col("__known").isNotNull)
+      .drop("__known")
+
+  /** Add `is_susp` and `status_new` (the confirm transition) for round
+    * `r` at threshold `t` to a scored frame carrying `status`,
+    * `invalidity_score` and [[withKnown]]'s `is_known`. */
+  def flag(scored: DataFrame, t: Double, r: Int): DataFrame =
+    scored
+      .withColumn("is_susp", col("invalidity_score") >= t)
       .withColumn("status_new",
         when(confirmed(col("status")), col("status"))
           .when(col("is_susp") && col("is_known"), lit(confirmedStatus(r)))
           .when(col("is_susp"), lit(Valid))
           .otherwise(col("status")))
-  }
 
   /** The round's counts, with A = suspicious rows, E = known faults,
     * AF = confirmed rows after (new) or before (old) the round. */

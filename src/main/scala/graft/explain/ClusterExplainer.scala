@@ -1,10 +1,10 @@
 package graft.explain
 
-import org.apache.spark.ml.classification.{DecisionTreeClassifier, GBTClassifier, RandomForestClassifier}
+import org.apache.spark.ml.classification.{GBTClassifier, RandomForestClassifier}
 import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.linalg.Vectors
 import org.apache.spark.ml.tree.{CategoricalSplit, ContinuousSplit, InternalNode, LeafNode, Node}
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.ml.tree.graft.LocalCart
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 
 /** Fault clustering + rule interpretation (M9–M13): the Spark rebuild of
@@ -14,11 +14,15 @@ import org.apache.spark.sql.functions._
   * (SklearnDecisionTree.py:36-106, DQTestToolHelper.py:303-324).
   *
   * Faulty rows are clustered on their per-rule score vectors with MLlib
-  * KMeans (deterministic seed); each cluster is explained by training a
-  * DecisionTreeClassifier on normal-vs-cluster labels (J4 union) and
-  * recursing the tree into human-readable rules. The reference's k-means
-  * grid quirk (picking *max* MSE, H2oKmeans.py:28) is deliberately NOT
-  * replicated (SURVEY.md §4).
+  * KMeans (deterministic seed); each cluster is explained by a CART tree
+  * on normal-vs-cluster labels (J4 union), recursed into human-readable
+  * rules. The trees are MLlib's `DecisionTreeClassifier` fitted locally
+  * ([[org.apache.spark.ml.tree.graft.LocalCart]]): every cluster's
+  * training set is a bounded sample, and each map task forwards at most
+  * that many of a cluster's rows to the shuffle, so all trees are built
+  * and fitted in one Spark job, each inside one task. The reference's
+  * k-means grid quirk (picking *max* MSE, H2oKmeans.py:28) is
+  * deliberately NOT replicated (SURVEY.md §4).
   */
 object ClusterExplainer {
 
@@ -43,28 +47,36 @@ object ClusterExplainer {
       scoreCols: Seq[String],
       k: Int,
       seed: Long = 42L,
-      maxFit: Int = 10000): DataFrame = {
-    val spark = faulty.sparkSession
-    import spark.implicits._
+      maxFit: Int = 10000): DataFrame =
+    kmeansAssign(faulty, scoreCols, k, seed, maxFit, Seq("image_id"))
+
+  /** [[clusterFaulty]] carrying the `keep` columns of `faulty` (which
+    * include `image_id`) next to `cluster_id`. */
+  private def kmeansAssign(
+      faulty: DataFrame,
+      scoreCols: Seq[String],
+      k: Int,
+      seed: Long,
+      maxFit: Int,
+      keep: Seq[String]): DataFrame = {
     // vector assembly via the codegen'd array_to_vector: no per-row
     // object serde on the corpus-sized ASSIGNMENT pass
-    val assembled = faulty.select(col("image_id"),
+    val assembled = faulty.select((keep.map(col) :+
       org.apache.spark.ml.functions.array_to_vector(
-        array(scoreCols.map(c => col(c).cast("double")): _*)).as("features"))
+        array(scoreCols.map(c => col(c).cast("double")): _*)).as("features")): _*)
       .cache()
     val sample = fitSample(assembled, Seq("image_id"), maxFit).cache()
     val n = sample.count()
     if (n == 0) {
       assembled.unpersist()
-      return spark.emptyDataFrame
-        .withColumn("image_id", lit("")).withColumn("cluster_id", lit(0)).limit(0)
+      return faulty.select((keep.map(col) :+ lit(0).as("cluster_id")): _*).limit(0)
     }
     val kk = math.min(k.toLong, n).toInt
     val model = new KMeans().setK(kk).setSeed(seed).setMaxIter(10)
       .fit(sample)
     sample.unpersist()
     val out = model.transform(assembled)
-      .select(col("image_id"), col("prediction").as("cluster_id"))
+      .select((keep.map(col) :+ col("prediction").as("cluster_id")): _*)
     // the cache served the sample count + KMeans fit; release it before
     // returning (unpersist is lazy-safe — the caller's first action on
     // `out` recomputes the cheap row→vector map once) so repeated calls
@@ -136,15 +148,67 @@ object ClusterExplainer {
     treeStructuredRules(labeled, featureCols, maxDepth, seed, maxFit).map(_.render)
 
   /** [[treeRules]] returning structured [[TreeRule]]s (leaf order) for
-    * machine verification alongside the rendered strings. */
+    * machine verification alongside the rendered strings. The bounded
+    * sample is collected and its tree fitted on the driver. */
   def treeStructuredRules(
       labeled: DataFrame,
       featureCols: Seq[String],
       maxDepth: Int = 5,
       seed: Long = 42L,
       maxFit: Int = 20000): Seq[TreeRule] =
-    fitTreeRules(labeled, featureCols, maxFit)(a =>
-      new DecisionTreeClassifier().setMaxDepth(maxDepth).setSeed(seed).fit(a).rootNode)
+    fitTreeRules(labeled, featureCols, maxFit) { a =>
+      val rows = a.collect()
+      LocalCart.fit(rows.map(_.getAs[org.apache.spark.ml.linalg.Vector](0).toArray),
+        rows.map(_.getDouble(1)), maxDepth, seed)
+    }
+
+  /** The consecutive `cluster_id` (column 0) groups of a row stream sorted
+    * by cluster, each cut to its first `maxFit` rows. */
+  private def firstRows(rows: Iterator[Row], maxFit: Int): Iterator[(Int, Seq[Row])] = {
+    val it = rows.buffered
+    Iterator.continually(it).takeWhile(_.hasNext).map { _ =>
+      val cid = it.head.getInt(0)
+      val kept = scala.collection.mutable.ArrayBuffer.empty[Row]
+      while (it.hasNext && it.head.getInt(0) == cid) {
+        val r = it.next()
+        if (kept.size < maxFit) kept += r
+      }
+      (cid, kept.toSeq)
+    }
+  }
+
+  /** One tree per `cluster_id` group of `labeled` (featureCols ++ label)
+    * that has a label-1 row, all in ONE Spark job, as (cluster id, rules)
+    * sorted by cluster id. A group's training set is its first `maxFit`
+    * rows in [[boundedVectors]]' order — (xxhash64(features, label),
+    * features, label). Those rows are among the first `maxFit` of the
+    * group's share of each input partition, so every map task sorts its
+    * share and forwards only those; the groups are then hashed to
+    * partitions, sorted again and each tree is fitted inside the task that
+    * holds its group. */
+  private[graft] def groupTrees(
+      labeled: DataFrame,
+      featureCols: Seq[String],
+      maxDepth: Int,
+      seed: Long,
+      maxFit: Int): Seq[(Int, Seq[TreeRule])] = {
+    val nf = featureCols.size
+    val fs = featureCols.indices.map(i => col(s"_f$i"))
+    val rows = labeled.select((col("cluster_id") +: featureCols.zipWithIndex.map { case (c, i) =>
+      col(c).cast("double").as(s"_f$i") } :+ col("label").cast("double").as("_label")): _*)
+    val order = col("cluster_id") +: xxhash64((fs :+ col("_label")): _*) +: fs :+ col("_label")
+    rows.sortWithinPartitions(order: _*)
+      .mapPartitions(firstRows(_, maxFit).flatMap(_._2))(Encoders.row(rows.schema))
+      .repartition(col("cluster_id"))
+      .sortWithinPartitions(order: _*)
+      .rdd.mapPartitions { it =>
+        firstRows(it, maxFit).collect { case (cid, group) if group.exists(_.getDouble(nf + 1) == 1.0) =>
+          val root = LocalCart.fit(group.map(r => Array.tabulate(nf)(i => r.getDouble(1 + i))).toArray,
+            group.map(_.getDouble(nf + 1)).toArray, maxDepth, seed)
+          cid -> structuredRulesFrom(root, featureCols, Nil)
+        }
+      }.collect().sortBy(_._1).toSeq
+  }
 
   /** Random-forest variant of the interpretation model zoo (M11: the
     * reference trains RF n=10 and extracts its 6th estimator,
@@ -234,7 +298,7 @@ object ClusterExplainer {
     * splits cannot occur: every feature is a raw double score assembled
     * without nominal metadata, so MLlib treats all of them as
     * continuous. */
-  private def structuredRulesFrom(
+  private[graft] def structuredRulesFrom(
       node: Node, names: Seq[String], path: List[Conjunct]): Seq[TreeRule] =
     node match {
       case leaf: LeafNode =>
@@ -303,8 +367,6 @@ object ClusterExplainer {
       normalThreshold: Double,
       k: Int,
       needLabeled: Boolean): (Seq[ClusterRule], DataFrame) = {
-    val spark = scored.sparkSession
-    import spark.implicits._
     val faulty = scored.filter(col("invalidity_score") >= faultyThreshold).cache()
     // Bounded normal-side sample for tree training — hash-ordered like
     // fitSample, NOT a bare limit: limit-after-shuffle takes whichever
@@ -312,45 +374,29 @@ object ClusterExplainer {
     // partition layout.
     val normal = scored.filter(col("invalidity_score") <= normalThreshold)
       .orderBy(xxhash64(col("image_id"))).limit(2000).cache()
-    val clusters = clusterFaulty(faulty, scoreCols, k).cache()
-    // Per-cluster tree fits are independent tiny MLlib jobs; run them as
-    // CONCURRENT Spark actions so their fixed scheduling latency overlaps
-    // (results are deterministic per cluster and re-ordered by id below).
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val cids = clusters.select("cluster_id").distinct().as[Int].collect().sorted
     val cols = col("image_id") +: scoreCols.map(col)
-    val futures = cids.toSeq.map { cid =>
-      Future {
-        val clusterRows = faulty.join(
-          clusters.filter(col("cluster_id") === cid), Seq("image_id"), "left_semi")
-        val labeled = normal.select((cols :+ lit(0.0).as("label")): _*)
-          .unionByName(
-            clusterRows.select((cols :+ lit(1.0).as("label")): _*))
-        val rs = treeStructuredRules(labeled, scoreCols).zipWithIndex.map {
-          case (r, i) => ClusterRule(cid, i, r.verdict, r.render, r.conjuncts)
-        }
-        (rs, labeled.withColumn("cluster_id", lit(cid)))
-      }
+    // Every cluster's training set is the normal rows (label 0) plus the
+    // cluster's own rows (label 1), so each normal row is copied once per
+    // possible cluster id. A group left with no row of its own (k-means may
+    // return fewer than k centres, or a centre nearest to no row) gets no
+    // tree: its at most 2,000 normal rows all fit in `maxFit`, so a group
+    // keeps a label-1 row exactly when it has one.
+    val labeledAll = normal
+      .select((cols :+ lit(0.0).as("label") :+
+        explode(array((0 until k).map(lit): _*)).as("cluster_id")): _*)
+      .unionByName(kmeansAssign(faulty, scoreCols, k, 42L, 10000, "image_id" +: scoreCols)
+        .select((cols :+ lit(1.0).as("label") :+ col("cluster_id")): _*))
+    val fitted = groupTrees(labeledAll, scoreCols, maxDepth = 5, seed = 42L, maxFit = 20000)
+    val rules = fitted.flatMap { case (cid, rs) =>
+      rs.zipWithIndex.map { case (r, i) => ClusterRule(cid, i, r.verdict, r.render, r.conjuncts) }
     }
-    val perCluster = Await.result(
-      Future.sequence(futures), scala.concurrent.duration.Duration(600, "s"))
-    val rules = perCluster.flatMap(_._1)
-    // Materialize the labeled union BEFORE unpersisting its parents so
+    // Materialize the labeled rows BEFORE unpersisting their parents so
     // the returned frame doesn't silently refit upstream on evaluation.
-    // Rules-only callers (needLabeled=false) skip the union job entirely
-    // and get an empty placeholder frame (never cached, never counted).
-    val labeledAll =
-      if (needLabeled)
-        perCluster.map(_._2)
-          .reduceOption(_ unionByName _)
-          .getOrElse(normal.limit(0).select((cols :+ lit(0.0).as("label")): _*)
-            .withColumn("cluster_id", lit(0)))
-          .cache()
-      else normal.limit(0).select((cols :+ lit(0.0).as("label")): _*)
-        .withColumn("cluster_id", lit(0))
-    if (needLabeled) labeledAll.count(): Unit
-    faulty.unpersist(); normal.unpersist(); clusters.unpersist()
-    (rules, labeledAll)
+    // Rules-only callers (needLabeled=false) get the frame uncached and
+    // never evaluated.
+    val labeled = labeledAll.filter(col("cluster_id").isin(fitted.map(_._1): _*))
+    if (needLabeled) labeled.cache().count(): Unit
+    faulty.unpersist(); normal.unpersist()
+    (rules, labeled)
   }
 }

@@ -177,8 +177,11 @@ object GenericQuality {
         statuses.filter(!OracleRound.confirmed(col("status"))).select(idCol),
         Seq(idCol), "left_semi")
       val model = fit(believedClean, idCol)
-      withScores(cached, model)
-        .select(col(idCol), col("invalidity_score"))
+      // known membership joins the scored projection, never the user's
+      // table: a user column named `is_known` stays a feature
+      OracleRound.withKnown(
+          withScores(cached, model).select(col(idCol), col("invalidity_score")),
+          knownFaultIds, idCol)
         .join(statuses, Seq(idCol))
         .withColumn("invalidity_score",
           col("invalidity_score") + OracleRound.labelOffset(col("status")))
@@ -192,7 +195,7 @@ object GenericQuality {
       // the round's counts ride the checkpoint that cuts the statuses'
       // lineage (so round plans don't compound)
       val obs = Observation(s"generic_round_$r")
-      statuses = OracleRound.flag(st, knownFaultIds, idCol, t, r)
+      statuses = OracleRound.flag(st, t, r)
         .observe(obs, OracleRound.countColumns.head, OracleRound.countColumns.tail: _*)
         .select(col(idCol), col("status_new").as("status"))
         .localCheckpoint(true)

@@ -24,16 +24,27 @@ import graft.synth.{GenConfig, ImageGen}
   * `status_new`); each round also writes its metrics row, threshold and
   * per-partition lineage, and a re-run with the same outDir resumes
   * after the last completed round (north-rule checkpointed resume).
+  *
+  * A round reads one state frame: the cached raw signals (which carry
+  * known-fault membership as `is_known`, attached once per run) plus the
+  * round's input `status`. Round r+1's state is a projection of round
+  * r's cached flagged frame; `raw` is joined to an audit checkpoint only
+  * on resume, at every 5th round (to bound the plan depth) and for the
+  * final refit. Metrics, thresholds, audit rows and decisions do not
+  * depend on the partition layout; the per-partition lineage rows do (only
+  * their totals are layout-free).
   */
 object ValidationRun {
 
+  /** `parts` is the generated corpus' partition count; 0, the default,
+    * derives it from `n` ([[GenConfig.adaptiveParts]]). */
   final case class RunConfig(
       n: Long = 2000L,
       rounds: Int = 3,
       seed: Long = 42L,
       faultPct: Int = 5,
       outDir: String = "target/graft-run",
-      parts: Int = 32)
+      parts: Int = 0)
 
   final case class RunResult(
       decisions: DataFrame,
@@ -71,7 +82,8 @@ object ValidationRun {
 
   def run(spark: SparkSession, cfg: RunConfig): RunResult = {
     import spark.implicits._
-    val gen = GenConfig(cfg.n, cfg.seed, cfg.faultPct, parts = cfg.parts)
+    val gen = GenConfig(cfg.n, cfg.seed, cfg.faultPct,
+      parts = if (cfg.parts > 0) cfg.parts else GenConfig.adaptiveParts(cfg.n))
     val images = ImageGen.images(spark, gen).cache()
     val known = ImageGen.knownFaults(spark, gen).select("image_id").cache()
     val knownCount = known.count()
@@ -85,10 +97,18 @@ object ValidationRun {
       fingerprint = s"n=${cfg.n};seed=${cfg.seed};faultPct=${cfg.faultPct};" +
         s"scrub=${graft.scrub.Scrub.version}")
     val dupDrop = PhashDup.dropIds(images).cache()
-    val raw = Scorer.withRawSignals(images, models, dupDrop)
+    // The known set is fixed for the run, so its membership is a column
+    // of the cached frame rather than a join in every round.
+    val raw = OracleRound.withKnown(Scorer.withRawSignals(images, models, dupDrop), known,
+        "image_id")
       .select((Seq("image_id", "pred_lang", "ppl_raw", "scrubbed_caption") ++
-        Scorer.scoreNames.filterNot(_ == "score_ppl")).map(col): _*)
+        Scorer.scoreNames.filterNot(_ == "score_ppl") :+ "is_known").map(col): _*)
       .cache()
+    val rawCols = raw.columns.toSeq.map(col)
+
+    // A round's state rebuilt from round r's audit checkpoint.
+    def stateAt(r: Int): DataFrame =
+      raw.join(checkpointedStatuses(spark, cfg, r), Seq("image_id"))
 
     // Per-round model state with label feedback (the reference retrains
     // every iteration on the updated table, testScript.py:43 →
@@ -96,12 +116,11 @@ object ValidationRun {
     // refit from the believed-clean population, and confirmed faults get
     // the +1 label offset so they stay above threshold on re-score (the
     // reference's `+y`, DQTestToolHelper.py:153-157).
-    def scoreRound(statuses: DataFrame): DataFrame = {
-      val stRaw = raw.join(statuses, Seq("image_id"))
+    def scoreRound(state: DataFrame): DataFrame = {
       val (byLang, global) = Scorer.recalibrate(
-        stRaw.filter(!OracleRound.confirmed(col("status"))),
+        state.filter(!OracleRound.confirmed(col("status"))),
         fallback = (models.pplRefByLang, models.pplRef))
-      Scorer.scoresFromSignals(stRaw, byLang, global,
+      Scorer.scoresFromSignals(state, byLang, global,
         Some(OracleRound.labelOffset(col("status"))))
     }
 
@@ -109,10 +128,9 @@ object ValidationRun {
     // roundComplete — a partially-written round re-runs).
     val resumeFrom = (1 to cfg.rounds)
       .takeWhile(r => roundComplete(spark, cfg, r)).lastOption.getOrElse(0)
-    var statuses =
-      if (resumeFrom == 0)
-        images.select(col("image_id"), lit(OracleRound.Clean).as("status"))
-      else checkpointedStatuses(spark, cfg, resumeFrom)
+    var state =
+      if (resumeFrom == 0) raw.withColumn("status", lit(OracleRound.Clean))
+      else stateAt(resumeFrom)
 
     val metricsHist = scala.collection.mutable.ArrayBuffer.empty[Metrics.RunMetrics]
     val thresholds = scala.collection.mutable.ArrayBuffer.empty[Double]
@@ -133,17 +151,17 @@ object ValidationRun {
 
     val n = cfg.n
     // Previous round's flagged frame: kept cached until the NEXT round's
-    // checkpoint write has materialized (its statuses projection feeds
-    // that round's join), then released.
+    // audit write has materialized (its projection is that round's
+    // state), then released.
     var prevFlagged: Option[DataFrame] = None
     for (r <- (resumeFrom + 1) to cfg.rounds) {
-      val st = scoreRound(statuses)
+      val st = scoreRound(state)
       val (t, _) = Thresholds.discover(st, "invalidity_score", "status", knownCount, n)
       thresholds += t
 
       // One flagged frame carries everything the round needs: suspicious
       // flag, oracle membership, old + new status.
-      val flagged = OracleRound.flag(st, known, "image_id", t, r).cache()
+      val flagged = OracleRound.flag(st, t, r).cache()
 
       // One job materializes the cache, writes the round's AUDIT table
       // and collects the round's counts: an Observation rides the audit
@@ -194,19 +212,19 @@ object ValidationRun {
           scala.concurrent.duration.Duration(600, "s")): Unit
       }
 
-      // Next round reads the statuses straight off the cached frame (its
-      // content is the status column of the audit table just written) — no
-      // parquet round-trip per round. The checkpoint stays the resume
-      // source of truth for fresh processes. Every 5th round the
+      // Next round reads its state straight off the cached frame (its new
+      // status is the status column of the audit table just written) — no
+      // join and no parquet round-trip per round. The checkpoint stays the
+      // resume source of truth for fresh processes. Every 5th round the
       // just-written checkpoint is read back instead: the cache
       // shortcuts EXECUTION but not ANALYSIS, so chaining frames would
       // nest every prior round's logical plan (unbounded analysis time /
       // stack depth for large cfg.rounds, and an eviction under memory
       // pressure would recompute through every predecessor); the
       // periodic read truncates the lineage at a bounded depth.
-      statuses =
-        if (r % 5 == 0) checkpointedStatuses(spark, cfg, r)
-        else flagged.select(col("image_id"), col("status_new").as("status"))
+      state =
+        if (r % 5 == 0) stateAt(r)
+        else flagged.select((rawCols :+ col("status_new").as("status")): _*)
       prevFlagged.foreach(_.unpersist())
       prevFlagged = Some(flagged)
     }
@@ -222,11 +240,9 @@ object ValidationRun {
     // to the cached frame's content), so the loop cache is released here
     // rather than holding executor memory for as long as callers keep
     // re-evaluating the returned frame.
-    val finalStatuses =
-      if (cfg.rounds > 0) checkpointedStatuses(spark, cfg, cfg.rounds)
-      else statuses
+    val finalState = if (cfg.rounds > 0) stateAt(cfg.rounds) else state
     prevFlagged.foreach(_.unpersist())
-    val finalScored = scoreRound(finalStatuses)
+    val finalScored = scoreRound(finalState)
     val tFinal = Thresholds.discover(
       finalScored, "invalidity_score", "status", knownCount, n)._1
     val decisions = Scorer.withDecision(finalScored, tFinal)

@@ -1,5 +1,4 @@
 package graft
-// (50k-row bounded-fit coverage added round 2)
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -70,6 +69,22 @@ class ExplainSpec extends AnyFunSuite {
     assert(rules2.collect().toSeq.map(r => (r.getInt(0), r.getString(1))).sorted ==
       collected.toSeq.map(r => (r.getInt(0), r.getString(1))).sorted,
       "explain rules changed with partition layout")
+  }
+
+  test("explain leaves nothing cached; explainStructured only its returned frame") {
+    import org.apache.spark.sql.graft.CacheProbe
+    val scored = PipelineCache.scored(spark, 2000L).withColumn("status", lit("clean"))
+    val knownCount = graft.synth.ImageGen.knownFaults(spark, PipelineCache.genCfg(2000L)).count()
+    val (t, med) = graft.discovery.Thresholds.discover(
+      scored, "invalidity_score", "status", knownCount)
+    val before = CacheProbe.entries(spark)
+    assert(ClusterExplainer.explain(scored, PipelineCache.scoreNames, t, med).count() > 0)
+    assert(CacheProbe.entries(spark) == before)
+    val (_, labeled) = ClusterExplainer.explainStructured(
+      scored, PipelineCache.scoreNames, t, med)
+    assert(CacheProbe.entries(spark) == before + 1)
+    labeled.unpersist()
+    assert(CacheProbe.entries(spark) == before)
   }
 
   test("structured rules partition the labeled rows; verdicts follow the majority") {

@@ -111,6 +111,14 @@ class GenericQualitySpec extends AnyFunSuite {
     }
   }
 
+  test("a feature column named is_known is scored like any other") {
+    val rows = (0 until 400).map(i => (f"r$i%04d", if (i < 8) 1e6 else (i % 10).toDouble))
+    val known = (0 until 8).map(i => f"r$i%04d").toDF("id")
+    def decisions(feature: String) = GenericQuality.run(rows.toDF("id", feature), "id",
+      known, rounds = 1).decisions.orderBy("id").collect().toSeq
+    assert(decisions("is_known") == decisions("x"))
+  }
+
   test("single-feature table scores without greatest() arity failure") {
     // the generic contract allows id + ONE feature column; greatest()
     // needs >= 2 args, so the max-combine must degenerate gracefully

@@ -34,7 +34,9 @@ class OracleRoundSpec extends AnyFunSuite {
     }
     val scored = rows.map(x => (x._1, x._2, x._3)).toDF("id", "status", "invalidity_score")
     val knownIds = rows.filter(_._4).map(_._1).toDF("id")
-    val flagged = OracleRound.flag(scored, knownIds, "id", t, r)
+    val flagged = OracleRound.flag(OracleRound.withKnown(scored, knownIds, "id"), t, r)
+    assert(flagged.columns.toSeq == Seq("id", "status", "invalidity_score", "is_known",
+      "is_susp", "status_new"))
     val got = flagged.select("id", "is_susp", "is_known", "status_new").collect()
       .map(x => x.getString(0) -> ((x.getBoolean(1), x.getBoolean(2), x.getString(3)))).toMap
     rows.foreach { case (id, status, score, known, want) =>

@@ -105,6 +105,27 @@ class PipelineSpec extends AnyFunSuite {
     }
   }
 
+  test("loop outputs do not depend on the partition layout; lineage totals match") {
+    def runAt(parts: Int) = {
+      val dir = s"target/graft-test-loop-parts$parts"
+      PipelineLoop.deleteRecursively(new java.io.File(dir))
+      val res = ValidationRun.run(spark,
+        ValidationRun.RunConfig(n = 400L, rounds = 3, outDir = dir, parts = parts))
+      val decisions = res.decisions.orderBy("image_id").collect().toSeq
+      val audit = spark.read.parquet(s"$dir/audit").orderBy("round", "image_id").collect().toSeq
+      val lineage = spark.read.parquet(s"$dir/lineage").groupBy("round")
+        .agg(sum("rows_in"), sum("rows_dropped")).orderBy("round").collect().toSeq
+      (res.metrics, res.thresholds, decisions, audit, lineage)
+    }
+    val (m4, t4, d4, a4, l4) = runAt(4)
+    val (m7, t7, d7, a7, l7) = runAt(7)
+    assert(m4 == m7)
+    assert(t4 == t7)
+    assert(d4.size == 400 && d4 == d7)
+    assert(a4.size == 3 * 400 && a4 == a7)
+    assert(l4.size == 3 && l4 == l7)
+  }
+
   test("per-partition lineage rows recorded") {
     val dir = "target/graft-test-loop"
     val lineage = spark.read.parquet(s"$dir/lineage/round=1")

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.graft.Exprs
 
 /** `SparkSessionExtensions` injector — the spark-submit-native way to
-  * load the engine's custom Catalyst expressions into ANY session:
+  * load the engine's native scalar functions into ANY session:
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
@@ -14,13 +14,13 @@ import org.apache.spark.sql.graft.Exprs
   *   SparkSession.builder().withExtensions(new GraftExtensions) ...
   * }}}
   *
-  * Registers the model-free scalar surface (the functions whose state is
-  * baked into the expression): `hamming64`, `graft_simhash64`,
-  * `graft_scrub`, `graft_minhash_bands`. The model-BOUND functions
-  * (`graft_langid` / `graft_accepted_prob` / `graft_perplexity`) carry a
-  * broadcast handle that only exists after a fit, so they stay on the
-  * per-session path `Exprs.registerSql(spark, langId, lm)` — a static
-  * extension cannot (and should not) conjure model state.
+  * Registers the model-free scalar surface: `hamming64`,
+  * `graft_simhash64`, `graft_scrub`, `graft_minhash_bands`. The
+  * model-BOUND functions (`graft_langid` / `graft_accepted_prob` /
+  * `graft_perplexity`) carry a broadcast handle that only exists after a
+  * fit, so they stay on the per-session path
+  * `Exprs.registerSql(spark, langId, lm)`, which registers this table
+  * too — a static extension cannot (and should not) conjure model state.
   *
   * This is tier (b)/(c) of the builder contract's custom-operator
   * preference order: native expressions, registered through the standard
@@ -34,37 +34,36 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "scala_udf")
+  type SqlFunction = (String, ExpressionInfo, Seq[Expression] => Expression)
 
-  /** (name, info, builder) for every model-free native expression. */
-  val functions: Seq[(String, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
-    ("hamming64",
-      info("hamming64", "hamming64(a, b) - popcount(a XOR b) over 64-bit fingerprints"),
-      (es: Seq[Expression]) => { arity("hamming64", es, 2); Exprs.Hamming64(es(0), es(1)) }),
-    ("graft_simhash64",
-      info("graft_simhash64", "graft_simhash64(text) - 64-bit SimHash fingerprint"),
-      (es: Seq[Expression]) => { arity("graft_simhash64", es, 1); Exprs.SimHash64(es.head) }),
-    ("graft_scrub",
-      info("graft_scrub", "graft_scrub(text) - single-pass PII/toxicity scrub chain"),
-      (es: Seq[Expression]) => { arity("graft_scrub", es, 1); Exprs.ScrubAll(es.head) }),
-    ("graft_minhash_bands",
-      info("graft_minhash_bands",
-        "graft_minhash_bands(text, k, hashes, bands) - MinHash-LSH band keys"),
+  /** One SQL function entry whose builder rejects a call with other than
+    * `arity` arguments. */
+  def function(name: String, usage: String, arity: Int)(
+      build: Seq[Expression] => Expression): SqlFunction =
+    (name, new ExpressionInfo("graft", null, name, usage, "", "", "", "", "", "", "scala_udf"),
       (es: Seq[Expression]) => {
-        arity("graft_minhash_bands", es, 4)
-        Exprs.MinhashBandKeys(es(0),
-          foldToInt("graft_minhash_bands", "k", es(1)),
-          foldToInt("graft_minhash_bands", "hashes", es(2)),
-          foldToInt("graft_minhash_bands", "bands", es(3)))
-      }))
+        if (es.length != arity) throw new IllegalArgumentException(
+          s"$name expects $arity argument(s), got ${es.length}")
+        build(es)
+      })
 
-  private def arity(name: String, es: Seq[Expression], expected: Int): Unit =
-    if (es.length != expected) throw new IllegalArgumentException(
-      s"$name expects $expected argument(s), got ${es.length}")
+  /** Every model-free native function. */
+  val functions: Seq[SqlFunction] = Seq(
+    function("hamming64", "hamming64(a, b) - popcount(a XOR b) over 64-bit fingerprints", 2)(
+      es => Exprs.hamming64(es(0), es(1))),
+    function("graft_simhash64", "graft_simhash64(text) - 64-bit SimHash fingerprint", 1)(
+      es => Exprs.simhash64(es.head)),
+    function("graft_scrub", "graft_scrub(text) - single-pass PII/toxicity scrub chain", 1)(
+      es => Exprs.scrubAll(es.head)),
+    function("graft_minhash_bands",
+      "graft_minhash_bands(text, k, hashes, bands) - MinHash-LSH band keys", 4)(
+      es => Exprs.minhashBandKeys(es(0),
+        foldToInt("graft_minhash_bands", "k", es(1)),
+        foldToInt("graft_minhash_bands", "hashes", es(2)),
+        foldToInt("graft_minhash_bands", "bands", es(3)))))
 
   /** SQL-surface parameter validation: the tuning knobs must be literal
-    * ints (the expression bakes them into codegen). A column argument is
+    * ints (each is a constant of the call). A column argument is
     * non-foldable — without this check it would hit eval() on an unbound
     * expression and surface as an opaque UnsupportedOperationException. */
   private def foldToInt(fn: String, param: String, e: Expression): Int = {

@@ -137,7 +137,7 @@ object Scorer {
   private[graft] val langIdCol = "__langid"
 
   /** score_ppl formula. The reference lookup is the native
-    * [[Exprs.pplRef]] (model state as codegen reference objects), so a
+    * [[Exprs.pplRef]] (model state as `ObjectType` literals), so a
     * recalibrated reference does not change the generated code. */
   private def pplScoreCol(pplRaw: Column, predLang: Column,
       pplRefByLang: Map[String, Double], pplRefGlobal: Double): Column =
@@ -158,8 +158,8 @@ object Scorer {
     * [[graft.streaming.StreamScore]]: heuristic rule scores, raw
     * perplexity (`ppl_raw`), predicted language (`pred_lang`), langid
     * score, scrubbed caption and score_pii. Model scores evaluate native
-    * Catalyst expressions (doGenCode — inside whole-stage codegen, no UDF
-    * serde); `pred_lang` and `score_langid` share one langid forward
+    * columns (`StaticInvoke`s of scalar methods — inside whole-stage
+    * codegen, no UDF serde); `pred_lang` and `score_langid` share one langid forward
     * pass per row. */
   def withSignals(images: DataFrame, m: Models): DataFrame = {
     // all signal columns are mutually independent (each reads only input

@@ -1,6 +1,6 @@
 package graft.explain
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Batch self-organizing map (M9): the Spark-native rebuild of the
@@ -28,8 +28,8 @@ import org.apache.spark.sql.functions._
   * sample ([[ClusterExplainer.fitSample]]); the assignment is
   * partition-parallel over the full input.
   *
-  * BMU assignment is a native Catalyst expression over the codebook
-  * (`Exprs.SomBmu`; no UDF, no serde): squared-distance fold per unit,
+  * BMU assignment is a native column over the codebook
+  * (`Exprs.somBmu`; no UDF, no serde): squared-distance fold per unit,
   * the FIRST minimal unit wins, matching tf.argmin's tie rule
   * (SOM.py:76-80) — and the left-to-right
   * fold order makes every distance bit-reproducible by any engine that
@@ -54,22 +54,6 @@ object SomClustering {
   def initWeights(m: Int, n: Int, dim: Int, seed: Long): Array[Array[Double]] = {
     val rnd = new java.util.Random(seed)
     Array.fill(m * n)(Array.fill(dim)(rnd.nextGaussian()))
-  }
-
-  /** Squared-distance-argmin BMU: distances fold left-to-right over
-    * features (acc starts at 0.0, and 0.0+d==d for the non-negative
-    * squares, so the fold equals the plain in-order sum any other
-    * engine computes); ties take the lowest unit index — the
-    * array_position(array_min) first-match rule.
-    *
-    * Native expression (Exprs.SomBmu) with the codebook as a codegen
-    * reference object, so every fit epoch's new weights reuse one
-    * compiled plan; bit-identical to the typedlit-codebook
-    * higher-order-function chain (SomSpec parity gate). */
-  def bmuColumn(weights: Array[Array[Double]], features: Column): Column = {
-    require(weights.nonEmpty && weights.forall(_.length == weights.head.length),
-      "codebook must be non-empty with uniform dimension")
-    org.apache.spark.sql.graft.Exprs.somBmu(features, weights)
   }
 
   /** Fit the map in ONE task: the input is coalesced to one partition,
@@ -166,8 +150,8 @@ object SomClustering {
     require(featureCols.size == model.dim,
       s"got ${featureCols.size} feature columns for a dim-${model.dim} codebook")
     data.select(col(idCol),
-      bmuColumn(model.weights,
-        array(featureCols.map(c => col(c).cast("double")): _*)).as("bmu_unit"))
+      org.apache.spark.sql.graft.Exprs.somBmu(
+        array(featureCols.map(c => col(c).cast("double")): _*), model.weights).as("bmu_unit"))
       .withColumn("bmu_row", (col("bmu_unit") / model.n).cast("int"))
       .withColumn("bmu_col", pmod(col("bmu_unit"), lit(model.n)).cast("int"))
   }

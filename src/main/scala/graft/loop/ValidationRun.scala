@@ -128,9 +128,12 @@ object ValidationRun {
     // roundComplete — a partially-written round re-runs).
     val resumeFrom = (1 to cfg.rounds)
       .takeWhile(r => roundComplete(spark, cfg, r)).lastOption.getOrElse(0)
+    // A complete resume runs no round: its one read of the last
+    // checkpoint is finalState's below.
     var state =
       if (resumeFrom == 0) raw.withColumn("status", lit(OracleRound.Clean))
-      else stateAt(resumeFrom)
+      else if (resumeFrom < cfg.rounds) stateAt(resumeFrom)
+      else null
 
     val metricsHist = scala.collection.mutable.ArrayBuffer.empty[Metrics.RunMetrics]
     val thresholds = scala.collection.mutable.ArrayBuffer.empty[Double]

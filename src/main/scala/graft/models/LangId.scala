@@ -6,7 +6,8 @@ import graft.synth.{ImageGen, Vocab}
   * bag-of-features into a linear softmax over language classes. Pure
   * Scala, trained once driver-side on a deterministic synthetic corpus,
   * then broadcast to executors and applied per row by one native
-  * expression (`Exprs.LangIdPredict`, see [[graft.detect.Scorer]]).
+  * column (`Exprs.langidPredict`, a `StaticInvoke` of `Exprs.langidRow`;
+  * see [[graft.detect.Scorer]]).
   *
   * Replaces the reference's model-zoo anomaly scorers (M2/M3,
   * /root/reference/backendClasses/DQTestToolHelper.py:104-130) for the

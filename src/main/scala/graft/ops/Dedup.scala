@@ -23,8 +23,8 @@ object Dedup {
       .agg(min(col(idCol)).as(idCol), count(lit(1)).as("dup_count"))
 
   /** Word k-shingles of a text column (array<string>); empty array when
-    * the text has fewer than k tokens. Native single-pass expression
-    * (Exprs.Shingles), output-identical to the Catalyst
+    * the text has fewer than k tokens. Native single-pass column
+    * (Exprs.shingles), output-identical to the Catalyst
     * split/slice/array_join chain (OpsSpec parity gate). */
   def shingles(text: Column, k: Int): Column =
     org.apache.spark.sql.graft.Exprs.shingles(text, k)

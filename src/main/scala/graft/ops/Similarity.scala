@@ -81,7 +81,7 @@ object Similarity {
     sig
   }
 
-  /** Native codegen'd signature column (Exprs.HyperplaneSig): no UDF
+  /** Native codegen'd signature column (Exprs.hyperplaneSig): no UDF
     * serde boundary in the ANN hot path. */
   private def sigCol(c: Column, planes: Array[Array[Double]]): Column =
     coalesce(org.apache.spark.sql.graft.Exprs.hyperplaneSig(c, planes), lit(0))
@@ -140,8 +140,8 @@ object Similarity {
 
   /** Nearest centroid index by maximum adjusted dot product
     * (argmin ||v−c||² = argmax c·v − ||c||²/2) — scalar helper behind
-    * the native [[org.apache.spark.sql.graft.Exprs.NearestCentroid]]
-    * expression. `halfNorms(i)` must be ||centroids(i)||²/2. Same
+    * the native [[org.apache.spark.sql.graft.Exprs.nearestCentroid]]
+    * column. `halfNorms(i)` must be ||centroids(i)||²/2. Same
     * prefix-dot contract as [[signatureOf]]: a vector whose length
     * differs from the centroid dimension scores on the common prefix
     * (deterministic, never crashing; recall degrades if systematic). */
@@ -168,9 +168,9 @@ object Similarity {
     *
     *  1. COARSE QUANTIZER: KMeans over a bounded deterministic sample
     *     (top-`maxFit` by id-hash — the fit is O(maxFit·nlist) at any
-    *     corpus size; same policy as ClusterExplainer.fitSample).
+    *     corpus size; [[graft.explain.ClusterExplainer.fitSample]]).
     *  2. ASSIGN: one partition-parallel pass tags every vector with its
-    *     nearest centroid list via a native codegen'd expression (the
+    *     nearest centroid list via a native codegen'd column (the
     *     centroid matrix rides along as a codegen reference — no MLlib
     *     vector conversion on the big side, no UDF serde).
     *  3. PROBE: each query searches only its `nprobe` nearest lists
@@ -200,14 +200,13 @@ object Similarity {
     // nothing for the quantizer — excluded here, and excluded from the
     // result naturally (a null row's nearest-centroid list is null, so
     // it never matches a probe).
-    val sample = embeddings
-      .filter(col("embedding").isNotNull)
-      .orderBy(xxhash64(col("vec_id"))).limit(maxFit)
+    val sample = graft.explain.ClusterExplainer
+      .fitSample(embeddings.filter(col("embedding").isNotNull), Seq("vec_id"), maxFit)
       // codegen'd array_to_vector (float→double widening), no per-row
       // object serde
       .select(org.apache.spark.ml.functions.array_to_vector(
         col("embedding")).as("features"))
-      .coalesce(1).cache()
+      .cache()
     val n = sample.count()
     require(n > 0, "ivfTopK: no non-null embeddings to fit the coarse quantizer on")
     // clamp by the SAMPLE size too: k above the point count makes MLlib

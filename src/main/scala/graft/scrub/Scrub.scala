@@ -31,7 +31,7 @@ object Scrub {
 
   /** The scrub chain as one Column expression (built-in regexp_replace
     * chain — the oracle-parity surface, q19). The engine hot path uses
-    * the native single-pass expression instead
+    * the native single-pass column instead
     * (org.apache.spark.sql.graft.Exprs.scrubAll → [[scrubString]]):
     * each chained regexp_replace round-trips UTF8String ↔ String and
     * allocates an intermediate result per rule per row. Semantics are
@@ -79,7 +79,7 @@ object Scrub {
     }.toArray
 
   /** One-pass scalar scrub: ONE UTF8String↔String conversion per row
-    * (inside the native expression), precompiled patterns, only the rules
+    * (inside the native column), precompiled patterns, only the rules
     * whose triggers the input has (most captions run the toxicity rule
     * alone), and no allocation when nothing matches. Exact-equality
     * parity with [[scrub]] and the DuckDB oracle chain is test-gated. */

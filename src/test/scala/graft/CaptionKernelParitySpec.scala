@@ -2,8 +2,8 @@ package graft
 
 import java.lang.Double.doubleToRawLongBits
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.Exprs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.detect.Scorer
 import graft.models.{CodeCounts, LangId, NGramCounts, NGramLM}
@@ -138,7 +138,7 @@ class CaptionKernelParitySpec extends AnyFunSuite {
   test("langid runs once per row in the optimized scoring plans") {
     def langidCalls(df: DataFrame): Int =
       df.queryExecution.optimizedPlan.collect { case p =>
-        p.expressions.map(_.collect { case e: Exprs.LangIdPredict => e }.size).sum
+        p.expressions.map(_.collect { case e: StaticInvoke if e.functionName == "langidRow" => e }.size).sum
       }.sum
     val raw = Scorer.withRawSignals(images, models, noDups)
     assert(langidCalls(raw) == 1, raw.queryExecution.optimizedPlan)
@@ -150,8 +150,8 @@ class CaptionKernelParitySpec extends AnyFunSuite {
     // the physical plan keeps the single call
     val physical = raw.queryExecution.sparkPlan
     assert(physical.collect { case p =>
-      p.expressions.map(_.collect { case e: Exprs.LangIdPredict => e }.size).sum
+      p.expressions.map(_.collect { case e: StaticInvoke if e.functionName == "langidRow" => e }.size).sum
     }.sum == 1, physical)
-    assert(raw.queryExecution.executedPlan.toString.contains("graft_langid_predict"))
+    assert(raw.queryExecution.executedPlan.toString.contains("langidRow"))
   }
 }

@@ -173,6 +173,30 @@ class CheckpointSpec extends AnyFunSuite {
     assert(res.thresholds == fresh.thresholds)
   }
 
+  test("a complete resume reads its last audit checkpoint once") {
+    val dir = copyOfLoop("complete")
+    // a job reads an audit checkpoint when its call site runs through
+    // ValidationRun.checkpointedStatuses (the parquet schema inference of
+    // the read is one job)
+    val reads = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (e.stageInfos.exists(_.details.contains("checkpointedStatuses")))
+          reads.incrementAndGet(): Unit
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val res =
+      try ValidationRun.run(spark, loopCfg(dir))
+      finally {
+        org.apache.spark.sql.graft.ListenerProbe.drain(spark)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+    assert(reads.get == 1)
+    assert(res.metrics == fresh.metrics)
+    assert(res.thresholds == fresh.thresholds)
+    assert(decisionRows(res) == decisionRows(fresh))
+  }
+
   test("an outDir that still holds an old-layout statuses/ directory resumes unchanged") {
     val dir = copyOfLoop("statuses")
     (1 to 3).foreach { r =>

@@ -5,8 +5,9 @@ import org.apache.spark.sql.graft.Exprs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.models.{LangId, NGramLM}
 
-/** Native Catalyst expression tier: A/B parity vs direct model calls,
-  * null handling, codegen participation, SQL registration. */
+/** Native column tier (`StaticInvoke`s of the `Exprs` scalar methods):
+  * A/B parity vs direct model calls, null handling, codegen
+  * participation, SQL registration. */
 class ExprsSpec extends AnyFunSuite {
   lazy val spark = GraftTestSpark.spark
   import spark.implicits._
@@ -53,20 +54,29 @@ class ExprsSpec extends AnyFunSuite {
     // "*(n)" marks operators inside WholeStageCodegen stage n; the
     // Project/Filter containing our expression must carry it
     assert(plan.linesIterator.exists(l =>
-      l.contains("*(") && l.contains("graft_perplexity")), plan)
+      l.contains("*(") && l.contains("perplexityScalar")), plan)
     assert(df.count() == 100)
   }
 
-  test("somBmu compiles: two instances, non-nullable input, no fallback") {
-    // a non-nullable array child and two SomBmu columns in one generated
-    // function; with the interpreted fallback disabled a compile error
-    // fails the query instead of silently running interpreted
-    val w = Array(Array(0.0, 0.0), Array(1.0, 1.0), Array(5.0, 5.0))
+  /** Runs `f` with the interpreted fallback disabled, so a compile error
+    * fails the query instead of silently running interpreted. */
+  private def withoutFallback[T](f: => T): T = {
     val confs = Seq("spark.sql.codegen.fallback" -> "false",
       "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY")
     val saved = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
     confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+    try f
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("somBmu compiles: two instances, non-nullable input, no fallback") {
+    // a non-nullable array child and two somBmu columns in one generated
+    // function
+    val w = Array(Array(0.0, 0.0), Array(1.0, 1.0), Array(5.0, 5.0))
+    withoutFallback {
       val arr = spark.range(0L, 8L, 1L, 2)
         .select(array(col("id").cast("double"), lit(0.5)).as("arr"))
       assert(!arr.schema("arr").nullable)
@@ -78,10 +88,99 @@ class ExprsSpec extends AnyFunSuite {
         (Exprs.somBmuArray(f, w), Exprs.somBmuArray(f.reverse, w))
       }
       assert(got == exp)
-    } finally saved.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
+  }
+
+  test("every native column compiles and matches its scalar body with the fallback off") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val planes = graft.ops.Similarity.hyperplanes(dim = 4, nPlanes = 10, seed = 7L)
+    val centroids = Array(Array(1.0, 0.0, 0.0, 0.0), Array(0.0, 1.0, 0.0, 0.0),
+      Array(-1.0, -1.0, 0.0, 0.0))
+    val halfNorms = centroids.map(c => c.map(x => x * x).sum / 2.0)
+    val byLang = Map("en" -> 4.25, "fr" -> 7.5)
+    withoutFallback {
+      // a range source (no ConvertToLocalRelation pre-evaluation); every
+      // sixth text is NULL
+      val src = spark.range(0L, 12L, 1L, 2).select(col("id"),
+        when(col("id") % 6 === 5, lit(null).cast("string")).otherwise(
+          element_at(array(samples.map(lit): _*), (col("id") % samples.size + 1).cast("int")))
+          .as("t"),
+        array((0 until 4).map(i => ((col("id") - i) * 0.5).cast("float")): _*).as("v"))
+      val df = src.select(col("id"), col("t"), col("v"),
+        Exprs.langidPredict(col("t"), langIdB).as("lid"),
+        Exprs.perplexity(col("t"), lmB).as("ppl"),
+        Exprs.hamming64(col("id"), col("id") * 7L).as("ham"),
+        Exprs.simhash64(col("t")).as("sh"),
+        Exprs.minhashBandKeys(col("t"), 3, 64, 16).as("mk"),
+        Exprs.scrubAll(col("t")).as("sc"),
+        Exprs.shingles(col("t"), 2).as("shg"),
+        Exprs.pplRef(Exprs.langidBest(col("t"), langIdB), byLang, 5.75).as("ref"),
+        Exprs.hyperplaneSig(col("v"), planes).as("sig"),
+        Exprs.nearestCentroid(col("v"), centroids, halfNorms).as("nc"))
+      val plan = df.queryExecution.executedPlan.toString
+      Seq("langidRow", "perplexityScalar", "simhash64Scalar", "minhashBandKeysScalar",
+        "scrubAllScalar", "shinglesScalar", "pplRefLookup", "hyperplaneSigScalar",
+        "nearestCentroidScalar").foreach { fn =>
+        assert(plan.linesIterator.exists(l => l.contains("*(") && l.contains(fn)), fn + plan)
+      }
+      val rows = df.collect()
+      assert(rows.length == 12)
+      rows.foreach { r =>
+        val id = r.getLong(0)
+        val v = r.getSeq[Float](2).toArray
+        assert(r.getLong(5) == java.lang.Long.bitCount(id ^ (id * 7L)))
+        assert(r.getInt(11) == graft.ops.Similarity.signatureOf(v, planes))
+        assert(r.getInt(12) == graft.ops.Similarity.nearestCentroid(v, centroids, halfNorms))
+        val shingles = Exprs.shinglesScalar(UTF8String.fromString(r.getString(1)), 2)
+        assert(r.getSeq[String](9) ==
+          (0 until shingles.numElements()).map(shingles.getUTF8String(_).toString))
+        if (r.isNullAt(1)) {
+          assert(Seq(3, 4, 6, 7, 8).forall(r.isNullAt), r)
+          assert(r.getDouble(10) == 5.75)
+        } else {
+          val t = r.getString(1)
+          val p = langIdB.value.predict(t)
+          assert(r.getStruct(3).getString(0) == p.lang)
+          assert(r.getStruct(3).getDouble(1) == p.acceptedProb)
+          assert(r.getDouble(4) == lmB.value.perplexity(t))
+          assert(r.getLong(6) == graft.ops.Dedup.simhash64(t))
+          assert(r.getSeq[Long](7) == graft.ops.Dedup.minhashBandKeys(t, 3, 64, 16).toSeq)
+          assert(r.getString(8) == graft.scrub.Scrub.scrubString(t))
+          assert(r.getDouble(10) == byLang.getOrElse(p.lang, 5.75))
+        }
+      }
+    }
+  }
+
+  test("model state never enters the generated source") {
+    // two plans that differ only in model state must generate the same
+    // code, so a refit or a recalibration reuses the compiled classes
+    import org.apache.spark.sql.execution.debug.codegenStringSeq
+    def sources(langId: org.apache.spark.broadcast.Broadcast[graft.models.LangIdModel],
+        lm: org.apache.spark.broadcast.Broadcast[graft.models.NGramLMModel],
+        byLang: Map[String, Double], global: Double, seed: Long): Seq[String] = {
+      val rnd = new java.util.Random(seed)
+      def matrix(rows: Int) = Array.fill(rows)(Array.fill(4)(rnd.nextGaussian()))
+      val centroids = matrix(3)
+      val df = spark.range(0L, 8L, 1L, 2).select(
+        col("id").cast("string").as("t"),
+        array((0 until 4).map(i => (col("id") + i).cast("float")): _*).as("v"),
+        array((0 until 4).map(i => (col("id") - i).cast("double")): _*).as("d"))
+        .select(
+          Exprs.langidPredict(col("t"), langId).as("lid"),
+          Exprs.perplexity(col("t"), lm).as("ppl"),
+          Exprs.pplRef(col("t"), byLang, global).as("ref"),
+          Exprs.somBmu(col("d"), matrix(5)).as("bmu"),
+          Exprs.hyperplaneSig(col("v"), matrix(10)).as("sig"),
+          Exprs.nearestCentroid(col("v"), centroids,
+            centroids.map(c => c.map(x => x * x).sum / 2.0)).as("nc"))
+      codegenStringSeq(df.queryExecution.executedPlan).map(_._2)
+    }
+    val a = sources(langIdB, lmB, Map("en" -> 4.25, "fr" -> 7.5, "zh" -> 11.125), 5.75, 1L)
+    val b = sources(spark.sparkContext.broadcast(LangId.pretrained),
+      spark.sparkContext.broadcast(lmB.value), Map("de" -> 1.0), 2.5, 2L)
+    assert(a.nonEmpty)
+    assert(a == b)
   }
 
   test("hamming64: symmetry, bounds, parity with bit_count") {
@@ -119,7 +218,7 @@ class ExprsSpec extends AnyFunSuite {
       .select(Exprs.simhash64(col("t")).as("s"))
       .filter(col("s") =!= 0L).queryExecution.executedPlan.toString()
     assert(plan.linesIterator.exists(l =>
-      l.contains("*(") && l.contains("graft_simhash64")), plan)
+      l.contains("*(") && l.contains("simhash64Scalar")), plan)
   }
 
   test("hyperplane signature expression: scalar parity + null + codegen") {
@@ -146,12 +245,12 @@ class ExprsSpec extends AnyFunSuite {
       .select(Exprs.hyperplaneSig(col("v"), planes).as("s"))
       .filter(col("s") >= 0).queryExecution.executedPlan.toString()
     assert(plan.linesIterator.exists(l =>
-      l.contains("*(") && l.contains("graft_hyperplane_sig")), plan)
+      l.contains("*(") && l.contains("hyperplaneSigScalar")), plan)
   }
 
   /** The Catalyst form of the per-language perplexity reference lookup
     * (a sorted map literal, then the global fallback): the parity
-    * reference for the native Exprs.PplRef. */
+    * reference for the native Exprs.pplRef. */
   private def pplRefColCatalyst(predLang: org.apache.spark.sql.Column,
       pplRefByLang: Map[String, Double], pplRefGlobal: Double) = {
     val byLang =
@@ -162,7 +261,7 @@ class ExprsSpec extends AnyFunSuite {
   }
 
   test("pplRef expression: exact parity with the map-literal coalesce chain") {
-    // Scorer.pplScoreCol's native Exprs.PplRef against
+    // Scorer.pplScoreCol's native Exprs.pplRef against
     // coalesce(element_at(<map literal>, lang), lit(global)): identical
     // doubles on hits, misses, NULL language, and the empty-map fallback.
     import spark.implicits._
@@ -186,7 +285,7 @@ class ExprsSpec extends AnyFunSuite {
       .queryExecution.executedPlan.toString
     // "*(n)" marks operators inside WholeStageCodegen stage n
     assert(plan.linesIterator.exists(l =>
-      l.contains("*(") && l.contains("graft_ppl_ref")), plan)
+      l.contains("*(") && l.contains("pplRefLookup")), plan)
     val vals = ranged.select(Exprs.pplRef(col("lang"), byLang, 5.75).as("r"))
       .collect().map(_.getDouble(0)).toSet
     assert(vals == Set(4.25, 5.75))
@@ -235,7 +334,7 @@ class ExprsSpec extends AnyFunSuite {
       .select(Exprs.nearestCentroid(col("v"), centroids, halfNorms).as("c"))
       .filter(col("c") >= 0).queryExecution.executedPlan.toString()
     assert(plan.linesIterator.exists(l =>
-      l.contains("*(") && l.contains("graft_nearest_centroid")), plan)
+      l.contains("*(") && l.contains("nearestCentroidScalar")), plan)
   }
 
   test("GraftExtensions: injector applies cleanly and its builders evaluate") {
@@ -260,6 +359,17 @@ class ExprsSpec extends AnyFunSuite {
     assert(r.getLong(1) == graft.ops.Dedup.simhash64("a photo of a dog"))
     assert(r.getString(2) == graft.scrub.Scrub.scrubString("mail user9@example.com now"))
     assert(r.getInt(3) == 16)
+  }
+
+  test("SQL functions reject a wrong arity, naming the expected count") {
+    Exprs.registerSql(spark, langIdB, lmB)
+    Seq("hamming64(1L)" -> "hamming64 expects 2 argument(s), got 1",
+      "graft_scrub()" -> "graft_scrub expects 1 argument(s), got 0",
+      "graft_langid('a', 'b')" -> "graft_langid expects 1 argument(s), got 2").foreach {
+      case (call, msg) =>
+        val e = intercept[IllegalArgumentException](spark.sql(s"SELECT $call").collect())
+        assert(e.getMessage.contains(msg), e.getMessage)
+    }
   }
 
   test("SQL registration: functions callable from spark.sql") {

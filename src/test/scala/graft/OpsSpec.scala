@@ -44,9 +44,8 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("native shingles expression matches the Catalyst chain exactly") {
-    // r6 optimization gate: Dedup.shingles moved from the Catalyst
-    // slice/array_join chain to the native Exprs.Shingles scalar pass —
-    // output must be bit-identical on the full generator corpus (every
+    // Dedup.shingles (the native Exprs.shingles scalar pass) against the
+    // Catalyst slice/array_join chain — output must be bit-identical on the full generator corpus (every
     // fault class: symbol soup, repetition, pii, gibberish, too_long)
     // and on the whitespace/empty edge cases the chain's split('\s+')
     // semantics make tricky.

@@ -68,7 +68,7 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"), p.take(2000))
     // the scoring expressions stay inside whole-stage codegen
     assert(p.linesIterator.exists(l =>
-      l.contains("*(") && l.contains("graft_scrub")), p.take(3000))
+      l.contains("*(") && l.contains("scrubAllScalar")), p.take(3000))
     dup.unpersist()
   }
 

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Exprs
 import org.scalatest.funsuite.AnyFunSuite
 import graft.explain.SomClustering
 
@@ -22,7 +23,7 @@ class SomSpec extends AnyFunSuite {
   }
 
   /** The typedlit-codebook higher-order-function chain: the parity
-    * reference for the native SomClustering.bmuColumn expression. */
+    * reference for the native Exprs.somBmu column. */
   private def bmuColumnHof(weights: Array[Array[Double]],
       features: org.apache.spark.sql.Column) = {
     val codebook = typedlit(weights.map(_.toSeq).toSeq)
@@ -33,9 +34,8 @@ class SomSpec extends AnyFunSuite {
   }
 
   test("native SomBmu expression is bit-identical to the HOF chain") {
-    // r6 optimization gate: bmuColumn moved from the typedlit-codebook
-    // zip_with/aggregate chain to the native Exprs.SomBmu expression —
-    // BMU assignment must be identical on random data, exact-tie rows
+    // the native Exprs.somBmu column against the typedlit-codebook
+    // zip_with/aggregate chain — BMU assignment must be identical on random data, exact-tie rows
     // (equal distances pick the FIRST unit), null arrays, null
     // elements, and dim-mismatched arrays.
     val w = SomClustering.initWeights(4, 4, 3, seed = 7L)
@@ -52,12 +52,12 @@ class SomSpec extends AnyFunSuite {
     val df = rows.toDF("arr")
       .select(col("arr").cast("array<double>").as("arr"))
     val cmp = df.select(
-      SomClustering.bmuColumn(w, col("arr")).as("nat"),
+      Exprs.somBmu(col("arr"), w).as("nat"),
       bmuColumnHof(w, col("arr")).as("hof"))
     assert(cmp.filter(not(col("nat") <=> col("hof"))).count() == 0L)
     // the tie row resolves to the FIRST minimal unit on both paths
     val tie = Seq(Tuple1(w(2).clone())).toDF("arr")
-      .select(SomClustering.bmuColumn(w, col("arr")).as("u")).head().getInt(0)
+      .select(Exprs.somBmu(col("arr"), w).as("u")).head().getInt(0)
     assert(tie == 2)
   }
 

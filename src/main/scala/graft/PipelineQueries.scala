@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.detect.Scorer
 import graft.discovery.PhashDup
-import graft.engine.Tables
+import graft.engine.{Scratch, Tables}
 import graft.loop.ValidationRun
 import graft.synth.{GenConfig, ImageGen}
 
@@ -94,58 +94,69 @@ object PipelineQueries {
 
   private val N = 2000L
 
-  /** Absolute path of the (image_id, phash) oracle fixture. Computed at
-    * runtime so the path embedded in the oracle SQL is exactly where the
-    * Verify process wrote it, regardless of cwd. */
-  private[graft] def phashFixturePath: String =
-    new java.io.File("target/verify-fixtures/phash_input.parquet").getAbsolutePath
+  /** One oracle fixture: the single-part parquet dir `<root>/<name>.parquet`
+    * a query writes during Verify and its oracle SQL reads back by
+    * absolute path, so the DuckDB compare works from any cwd. */
+  private[graft] final case class Fixture(name: String) {
+    def path: String = new java.io.File(Fixture.root, s"$name.parquet").getPath
 
-  /** Several queries share an input fixture; content is a pure function
-    * of the deterministic generator, so each PROCESS writes a given
-    * fixture once and later callers reuse the file (the duplicate
-    * coalesce(1) writes were otherwise charged into every sharing
-    * query's bench timing). */
-  private val fixtureWritten = scala.collection.concurrent.TrieMap.empty[String, Boolean]
-  private def writeOnce(path: String)(body: => Unit): Unit =
-    fixtureWritten.getOrElseUpdate(path, { body; true }): Unit
+    /** DuckDB table expression over the part files Spark writes here. */
+    def sql: String = Fixture.readParquet(s"$path/*.parquet")
 
-  /** Write the fixture the phash oracles read (both phash queries call
-    * it so map iteration order doesn't matter). */
-  private def writePhashFixture(s: SparkSession): Unit = writeOnce(phashFixturePath) {
-    PipelineCache.images(s, N).select(col("image_id"), col("phash"))
-      .coalesce(1).write.mode("overwrite").parquet(phashFixturePath)
+    def read(s: SparkSession): DataFrame = s.read.parquet(path)
+
+    def write(df: DataFrame): Unit = df.coalesce(1).write.mode("overwrite").parquet(path)
+
+    /** [[write]], then the frame read back from the written file. */
+    def writeRead(df: DataFrame): DataFrame = { write(df); read(df.sparkSession) }
+
+    /** Runs `body`, which writes this fixture, once per process. */
+    def once(body: => Unit): Unit = Fixture.once(path)(body)
+
+    /** For fixtures whose content is a pure function of the deterministic
+      * generator: several queries share them, and the duplicate writes
+      * were otherwise charged into every sharing query's bench timing. */
+    def writeOnce(df: => DataFrame): Unit = once(write(df))
   }
+
+  private[graft] object Fixture {
+    /** The root for tests and the bench; `Verify.main` gives each
+      * output dir a root of its own. */
+    val DefaultRoot = "target/verify-fixtures"
+    @volatile private var rootDir = new java.io.File(DefaultRoot).getAbsolutePath
+
+    /** Absolute dir every fixture and [[PipelineLoop.loopDir]] live under. */
+    def root: String = rootDir
+    def root_=(dir: String): Unit = rootDir = new java.io.File(dir).getAbsolutePath
+
+    private val done = scala.collection.concurrent.TrieMap.empty[String, Boolean]
+    def once(key: String)(body: => Unit): Unit = done.getOrElseUpdate(key, { body; true }): Unit
+    def forget(key: String): Unit = done.remove(key): Unit
+
+    /** DuckDB `read_parquet` over an absolute glob, quotes escaped. */
+    def readParquet(glob: String): String = s"read_parquet('${glob.replace("'", "''")}')"
+  }
+
+  /** (image_id, phash): both phash oracles read it, so both queries
+    * write it and map iteration order doesn't matter. */
+  private val phashInput = Fixture("phash_input")
+  private def writePhashFixture(s: SparkSession): Unit =
+    phashInput.writeOnce(PipelineCache.images(s, N).select(col("image_id"), col("phash")))
 
   /** (image_id, simhash64(caption)) fixture for the simhash-dedup
     * oracle — the engine's banding has GUARANTEED recall at
     * Hamming ≤ 3, so DuckDB's O(n²) Hamming join over the fixture is an
     * exact oracle (same argument as the phash oracle). */
-  private[graft] def simhashFixturePath: String =
-    new java.io.File("target/verify-fixtures/simhash_input.parquet").getAbsolutePath
-
-  private def writeSimhashFixture(s: SparkSession): Unit = writeOnce(simhashFixturePath) {
-    PipelineCache.images(s, N)
-      // same token-free exclusion as Dedup.simhashPairs: letter-free
-      // captions all fingerprint to 0L with no similarity signal, so the
-      // operator skips them and the oracle must see the same population
-      .filter(col("caption").rlike("\\p{L}"))
-      .select(col("image_id"),
-        org.apache.spark.sql.graft.Exprs.simhash64(col("caption")).as("simhash"))
-      .coalesce(1).write.mode("overwrite").parquet(simhashFixturePath)
-  }
+  private val simhashInput = Fixture("simhash_input")
 
   /** (image_id, caption) fixture for the n-gram Jaccard oracle: the
     * operator's candidate rule (distinct shingles among the first 32
     * positions, per-shingle df cap by id rank) and the exact-Jaccard
     * verify are both deterministic and SQL-expressible, so DuckDB can
     * recompute the full result from the raw captions. */
-  private[graft] def captionFixturePath: String =
-    new java.io.File("target/verify-fixtures/caption_input.parquet").getAbsolutePath
-
-  private def writeCaptionFixture(s: SparkSession): Unit = writeOnce(captionFixturePath) {
-    PipelineCache.images(s, N).select(col("image_id"), col("caption"))
-      .coalesce(1).write.mode("overwrite").parquet(captionFixturePath)
-  }
+  private val captionInput = Fixture("caption_input")
+  private def writeCaptionFixture(s: SparkSession): Unit =
+    captionInput.writeOnce(PipelineCache.images(s, N).select(col("image_id"), col("caption")))
 
   /** Emitted-pair fixtures for the SOUNDNESS oracles: the engine's
     * signature banding (minhash) / hyperplane bucketing (embedding) is
@@ -157,39 +168,28 @@ object PipelineQueries {
     * fails the row/hash compare; a wrong similarity VALUE fails the
     * hash. Recall (no pair missed) is covered by the seeded-ground-truth
     * ScalaTest gates (OpsSpec), which this one-sided oracle cannot see. */
-  private[graft] def minhashPairsFixturePath: String =
-    new java.io.File("target/verify-fixtures/minhash_pairs.parquet").getAbsolutePath
-  private[graft] def embFixturePath: String =
-    new java.io.File("target/verify-fixtures/emb_input.parquet").getAbsolutePath
-  private[graft] def embPairsFixturePath: String =
-    new java.io.File("target/verify-fixtures/emb_pairs.parquet").getAbsolutePath
-  private[graft] def embClusterPairsFixturePath: String =
-    new java.io.File("target/verify-fixtures/emb_cluster_pairs.parquet").getAbsolutePath
-  private[graft] def embDriverPairsFixturePath: String =
-    new java.io.File("target/verify-fixtures/emb_driver_pairs.parquet").getAbsolutePath
+  private val minhashPairs = Fixture("minhash_pairs")
+  private val embInput = Fixture("emb_input")
+  private val embPairs = Fixture("emb_pairs")
+  private val embClusterPairs = Fixture("emb_cluster_pairs")
+  private val embDriverPairs = Fixture("emb_driver_pairs")
   /** Generator-side ground truth (expected decision / scrubbed caption /
     * fault class per row) — lets DuckDB recompute the accuracy and
     * scrub-equality aggregations independently. */
-  private[graft] def expectedFixturePath: String =
-    new java.io.File("target/verify-fixtures/expected_input.parquet").getAbsolutePath
-  private[graft] def decisionsFixturePath: String =
-    new java.io.File("target/verify-fixtures/decisions_out.parquet").getAbsolutePath
-  private[graft] def langidFixturePath: String =
-    new java.io.File("target/verify-fixtures/langid_out.parquet").getAbsolutePath
+  private val expectedInput = Fixture("expected_input")
+  private val decisionsOut = Fixture("decisions_out")
+  private val langidOut = Fixture("langid_out")
   /** Per-row (ts, decision) audit stream from qf_stream_window's scored
     * micro-batches — lets DuckDB recompute the tumbling-window counts
     * with plain epoch arithmetic (the window-assignment + aggregation
     * half of the streaming query; decision parity with batch is
     * spec-asserted separately in StreamingSpec). */
-  private[graft] def streamRowsFixturePath: String =
-    new java.io.File("target/verify-fixtures/stream_rows.parquet").getAbsolutePath
+  private val streamRows = Fixture("stream_rows")
 
-  private def writeExpectedFixture(s: SparkSession): Unit = writeOnce(expectedFixturePath) {
-    ImageGen.expected(s, PipelineCache.genCfg(N))
+  private def writeExpectedFixture(s: SparkSession): Unit =
+    expectedInput.writeOnce(ImageGen.expected(s, PipelineCache.genCfg(N))
       .select(col("image_id"), col("decision").as("expected_decision"),
-        col("scrubbed_caption").as("expected_scrub"), col("fault_class"))
-      .coalesce(1).write.mode("overwrite").parquet(expectedFixturePath)
-  }
+        col("scrubbed_caption").as("expected_scrub"), col("fault_class")))
 
   /** Shared ANN-recall shape: write the engine's top-k as a fixture,
     * count per-query hits against the brute-force baseline, and keep
@@ -197,28 +197,21 @@ object PipelineQueries {
     * as a value, not a missing row). The DuckDB side mirrors this via
     * [[oracleSql]]'s annRecallSql. */
   private def recallVsBrute(s: SparkSession, brute: DataFrame, topk: DataFrame,
-      qIds: Seq[Long], fixturePath: String): DataFrame = {
+      qIds: Seq[Long], fixture: Fixture): DataFrame = {
     import s.implicits._
-    topk.coalesce(1).write.mode("overwrite").parquet(fixturePath)
-    val back = s.read.parquet(fixturePath)
-    val hits = brute.join(back, Seq("query_id", "vec_id"), "left_semi")
+    val hits = brute.join(fixture.writeRead(topk), Seq("query_id", "vec_id"), "left_semi")
       .groupBy("query_id").agg(count(lit(1)).as("h"))
     qIds.toDF("query_id")
       .join(hits, Seq("query_id"), "left")
       .select(col("query_id"), coalesce(col("h"), lit(0L)).as("hits_of_5"))
       .orderBy("query_id")
   }
-  private[graft] def lshTopkFixturePath: String =
-    new java.io.File("target/verify-fixtures/ann_lsh_topk.parquet").getAbsolutePath
-  private[graft] def ivfTopkFixturePath: String =
-    new java.io.File("target/verify-fixtures/ann_ivf_topk.parquet").getAbsolutePath
-  private[graft] def ivfDriverTopkFixturePath: String =
-    new java.io.File("target/verify-fixtures/ann_ivf_driver_topk.parquet").getAbsolutePath
+  private val lshTopk = Fixture("ann_lsh_topk")
+  private val ivfTopk = Fixture("ann_ivf_topk")
+  private val ivfDriverTopk = Fixture("ann_ivf_driver_topk")
 
-  private def writeDecisionsFixture(s: SparkSession): Unit = writeOnce(decisionsFixturePath) {
-    PipelineCache.decisions(s, N).select("image_id", "decision")
-      .coalesce(1).write.mode("overwrite").parquet(decisionsFixturePath)
-  }
+  private def writeDecisionsFixture(s: SparkSession): Unit =
+    decisionsOut.writeOnce(PipelineCache.decisions(s, N).select("image_id", "decision"))
 
   /** Decoded-pixel fidelity fixtures: the engine side decodes every
     * payload through the real codec path (encode → bytes → ImageIO) and
@@ -228,23 +221,17 @@ object PipelineQueries {
     * between the two pixel lists itself — the BASELINE.md invariant
     * (lossless exact, jpeg PSNR ≥ 40 dB) checked by an independent
     * engine, per row. */
-  private[graft] def decodedPixelsFixturePath: String =
-    new java.io.File("target/verify-fixtures/decoded_pixels.parquet").getAbsolutePath
-  private[graft] def expectedPixelsFixturePath: String =
-    new java.io.File("target/verify-fixtures/expected_pixels.parquet").getAbsolutePath
+  private val decodedPixels = Fixture("decoded_pixels")
+  private val expectedPixels = Fixture("expected_pixels")
   private val fidelityN = 200L
   private def writePixelFixtures(s: SparkSession): Unit = {
-    writeOnce(decodedPixelsFixturePath) {
+    decodedPixels.writeOnce {
       val imgs = ImageGen.images(s, PipelineCache.genCfg(fidelityN).copy(withBytes = true))
       graft.ops.Multimodal.decodePixels(imgs).toDF()
         .join(imgs.select("image_id", "fmt"), "image_id")
         .select("image_id", "fmt", "decode_ok", "pixels")
-        .coalesce(1).write.mode("overwrite").parquet(decodedPixelsFixturePath)
     }
-    writeOnce(expectedPixelsFixturePath) {
-      ImageGen.expectedPixelRows(s, PipelineCache.genCfg(fidelityN))
-        .coalesce(1).write.mode("overwrite").parquet(expectedPixelsFixturePath)
-    }
+    expectedPixels.writeOnce(ImageGen.expectedPixelRows(s, PipelineCache.genCfg(fidelityN)))
   }
 
   /** Real-codec media fixtures.
@@ -273,24 +260,12 @@ object PipelineQueries {
   // frame-pixels fixture writer, and the oracle SQL's modulus must
   // agree or the compare mismatches spuriously
   private val videoEvery = 2
-  private[graft] def wavBytesFixturePath: String =
-    new java.io.File("target/verify-fixtures/wav_bytes.parquet").getAbsolutePath
-  private def writeWavBytesFixture(s: SparkSession): Unit =
-    writeOnce(wavBytesFixturePath) {
-      graft.ops.Multimodal.explodeBytes(
-        graft.synth.MediaGen.audio(s, audioN), "audio_id", "bytes")
-        .coalesce(1).write.mode("overwrite").parquet(wavBytesFixturePath)
-    }
-  private[graft] def expectedFramesFixturePath: String =
-    new java.io.File("target/verify-fixtures/expected_frames.parquet").getAbsolutePath
-  private[graft] def framePixelsFixturePath: String =
-    new java.io.File("target/verify-fixtures/frame_pixels.parquet").getAbsolutePath
+  private val wavBytes = Fixture("wav_bytes")
+  private val expectedFrames = Fixture("expected_frames")
+  private val framePixels = Fixture("frame_pixels")
   private def writeVideoFixtures(s: SparkSession): Unit = {
-    writeOnce(expectedFramesFixturePath) {
-      graft.synth.MediaGen.expectedFrames(s, videoN)
-        .coalesce(1).write.mode("overwrite").parquet(expectedFramesFixturePath)
-    }
-    writeOnce(framePixelsFixturePath) {
+    expectedFrames.writeOnce(graft.synth.MediaGen.expectedFrames(s, videoN))
+    framePixels.writeOnce {
       val spark = s
       import spark.implicits._
       graft.synth.MediaGen.videos(s, videoN)
@@ -309,7 +284,6 @@ object PipelineQueries {
               .map(img => (id, f, graft.ops.Multimodal.pixelChannels(img)))
           }
         }.toDF("video_id", "frame_idx", "pixels")
-        .coalesce(1).write.mode("overwrite").parquet(framePixelsFixturePath)
     }
   }
 
@@ -319,28 +293,23 @@ object PipelineQueries {
     * DuckDB re-evaluates every rule against the labeled rows relationally
     * (unpivot → conjunct join) and recomputes each rule's match/invalid
     * counts — the model path's first independent-engine check. */
-  private[graft] def clusterLabeledFixturePath: String =
-    new java.io.File("target/verify-fixtures/cluster_labeled.parquet").getAbsolutePath
-  private[graft] def clusterRulesFixturePath: String =
-    new java.io.File("target/verify-fixtures/cluster_rules.parquet").getAbsolutePath
-  private[graft] def clusterConjunctsFixturePath: String =
-    new java.io.File("target/verify-fixtures/cluster_conjuncts.parquet").getAbsolutePath
+  private val clusterLabeled = Fixture("cluster_labeled")
+  private val clusterRules = Fixture("cluster_rules")
+  private val clusterConjuncts = Fixture("cluster_conjuncts")
   private def writeClusterRuleFixtures(s: SparkSession): Unit =
-    writeOnce(clusterRulesFixturePath) {
+    clusterRules.once {
       import s.implicits._
       val scored = PipelineCache.scored(s, N).withColumn("status", lit("clean"))
       val (t, med) = PipelineCache.thresholdMedian(s, N)
       val (rules, labeled) = graft.explain.ClusterExplainer.explainStructured(
         scored, PipelineCache.scoreNames, t, med)
-      labeled.coalesce(1).write.mode("overwrite").parquet(clusterLabeledFixturePath)
+      clusterLabeled.write(labeled)
       labeled.unpersist()
-      rules.map(r => (r.cluster_id, r.rule_id, r.verdict, r.rule))
-        .toDF("cluster_id", "rule_id", "verdict", "rule")
-        .coalesce(1).write.mode("overwrite").parquet(clusterRulesFixturePath)
-      rules.flatMap(r => r.conjuncts.zipWithIndex.map { case (c, i) =>
+      clusterRules.write(rules.map(r => (r.cluster_id, r.rule_id, r.verdict, r.rule))
+        .toDF("cluster_id", "rule_id", "verdict", "rule"))
+      clusterConjuncts.write(rules.flatMap(r => r.conjuncts.zipWithIndex.map { case (c, i) =>
         (r.cluster_id, r.rule_id, i, c.feature, c.op, c.threshold)
-      }).toDF("cluster_id", "rule_id", "conj_id", "feature", "op", "threshold")
-        .coalesce(1).write.mode("overwrite").parquet(clusterConjunctsFixturePath)
+      }).toDF("cluster_id", "rule_id", "conj_id", "feature", "op", "threshold"))
     }
 
   /** SOM (M9) fixtures: the faulty rows' score vectors and the trained
@@ -350,22 +319,18 @@ object PipelineQueries {
     * model fixtures: the FIT is spec-tested (SomSpec — Lloyd-step
     * degeneration, determinism, QE descent), the ASSIGNMENT over the
     * written codebook is what the oracle independently recomputes. */
-  private[graft] def somFeaturesFixturePath: String =
-    new java.io.File("target/verify-fixtures/som_features.parquet").getAbsolutePath
-  private[graft] def somCodebookFixturePath: String =
-    new java.io.File("target/verify-fixtures/som_codebook.parquet").getAbsolutePath
+  private val somFeatures = Fixture("som_features")
+  private val somCodebook = Fixture("som_codebook")
   private def writeSomFixtures(s: SparkSession): Unit =
-    writeOnce(somCodebookFixturePath) {
+    somCodebook.once {
       val scored = PipelineCache.scored(s, N)
       val (t, _) = PipelineCache.thresholdMedian(s, N)
-      scored.filter(col("invalidity_score") >= t)
-        .select((col("image_id") +:
-          PipelineCache.scoreNames.map(c => col(c).cast("double").as(c))): _*)
-        .coalesce(1).write.mode("overwrite").parquet(somFeaturesFixturePath)
       // fit from the written fixture so the codebook is a pure function
       // of the bytes the oracle reads (parquet doubles are exact anyway);
       // sampling policy = the repo-wide ClusterExplainer.fitSample
-      val feats = s.read.parquet(somFeaturesFixturePath)
+      val feats = somFeatures.writeRead(scored.filter(col("invalidity_score") >= t)
+        .select((col("image_id") +:
+          PipelineCache.scoreNames.map(c => col(c).cast("double").as(c))): _*))
       val sample = graft.explain.ClusterExplainer.fitSample(
           feats, Seq("image_id"), graft.explain.SomClustering.DefaultMaxFit)
         .select(PipelineCache.scoreNames.map(col): _*)
@@ -378,8 +343,7 @@ object PipelineQueries {
       val rows = model.weights.zipWithIndex.map { case (w, u) =>
         org.apache.spark.sql.Row.fromSeq(u +: w.toSeq)
       }
-      s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
-        .coalesce(1).write.mode("overwrite").parquet(somCodebookFixturePath)
+      somCodebook.write(s.createDataFrame(java.util.Arrays.asList(rows: _*), schema))
     }
 
   /** Fidelity rule shared by both engines (exact integer arithmetic, no
@@ -417,8 +381,8 @@ object PipelineQueries {
     "qf_f1" -> ((s, _) => {
       writeExpectedFixture(s)
       writeDecisionsFixture(s)
-      val dec = s.read.parquet(decisionsFixturePath)
-      val exp = s.read.parquet(expectedFixturePath)
+      val dec = decisionsOut.read(s)
+      val exp = expectedInput.read(s)
         .select(col("image_id"), col("expected_decision").as("expected"))
       val c = dec.join(exp, Seq("image_id")).agg(
         sum(when(col("decision") === "drop" && col("expected") === "drop", 1L)
@@ -443,7 +407,7 @@ object PipelineQueries {
       writeExpectedFixture(s)
       val dec = PipelineCache.decisions(s, N)
         .select("image_id", "scrubbed_caption")
-      val exp = s.read.parquet(expectedFixturePath)
+      val exp = expectedInput.read(s)
         .select("image_id", "expected_scrub", "fault_class")
       dec.join(exp, Seq("image_id"))
         .groupBy(col("fault_class"))
@@ -477,11 +441,9 @@ object PipelineQueries {
     // written and DuckDB recomputes the per-language counts.
     "qf_langid_counts" -> ((s, _) => {
       val m = PipelineCache.models(s, N)
-      PipelineCache.images(s, N)
+      langidOut.writeRead(PipelineCache.images(s, N)
         .select(col("image_id"), org.apache.spark.sql.graft.Exprs
-          .langidBest(col("caption"), m.langId).as("pred_lang"))
-        .coalesce(1).write.mode("overwrite").parquet(langidFixturePath)
-      s.read.parquet(langidFixturePath)
+          .langidBest(col("caption"), m.langId).as("pred_lang")))
         .groupBy("pred_lang").agg(count(lit(1)).as("n"))
         .orderBy("pred_lang")
     }),
@@ -509,17 +471,21 @@ object PipelineQueries {
     // raw captions for every emitted pair and re-applies >= 0.8.
     "qf_dedup_minhash" -> ((s, _) => {
       writeCaptionFixture(s)
-      graft.ops.Dedup.minhashPairs(
-        PipelineCache.images(s, N), "image_id", "caption")
-        .coalesce(1).write.mode("overwrite").parquet(minhashPairsFixturePath)
-      s.read.parquet(minhashPairsFixturePath).orderBy("id1", "id2")
+      minhashPairs.writeRead(graft.ops.Dedup.minhashPairs(
+        PipelineCache.images(s, N), "image_id", "caption")).orderBy("id1", "id2")
     }),
 
     // Dedup: SimHash fingerprint + Hamming banding (hash-checked: the
     // DuckDB oracle recomputes all pairs O(n²) over the fingerprint
     // fixture — guaranteed-recall banding must lose nothing)
     "qf_dedup_simhash" -> ((s, _) => {
-      writeSimhashFixture(s)
+      // same token-free exclusion as Dedup.simhashPairs: letter-free
+      // captions all fingerprint to 0L with no similarity signal, so the
+      // operator skips them and the oracle must see the same population
+      simhashInput.writeOnce(PipelineCache.images(s, N)
+        .filter(col("caption").rlike("\\p{L}"))
+        .select(col("image_id"),
+          org.apache.spark.sql.graft.Exprs.simhash64(col("caption")).as("simhash")))
       graft.ops.Dedup.simhashPairs(
         PipelineCache.images(s, N), "image_id", "caption")
         .orderBy("id1", "id2")
@@ -546,14 +512,12 @@ object PipelineQueries {
     // agree to ~1e-15 rounded to the same 4dp grid.
     "qf_dedup_embedding" -> ((s, _) => {
       val emb = graft.ops.Similarity.synthEmbeddings(s, 2000L)
-      writeOnce(embFixturePath) {
-        emb.coalesce(1).write.mode("overwrite").parquet(embFixturePath)
-      }
-      graft.ops.Similarity.cosineNearDupPairs(emb, dim = 32, threshold = 0.96995)
-        .select(col("id1"), col("id2"), round(col("cos"), 4).as("cos"))
-        .filter(col("cos") >= 0.97)
-        .coalesce(1).write.mode("overwrite").parquet(embPairsFixturePath)
-      s.read.parquet(embPairsFixturePath).orderBy("id1", "id2")
+      embInput.writeOnce(emb)
+      embPairs.writeRead(
+        graft.ops.Similarity.cosineNearDupPairs(emb, dim = 32, threshold = 0.96995)
+          .select(col("id1"), col("id2"), round(col("cos"), 4).as("cos"))
+          .filter(col("cos") >= 0.97))
+        .orderBy("id1", "id2")
     }),
 
     // Dedup: semantic duplicate CLUSTERS — union-find component
@@ -565,8 +529,7 @@ object PipelineQueries {
       val emb = graft.ops.Similarity.synthEmbeddings(s, 2000L)
       val pairs = graft.ops.Similarity.cosineNearDupPairs(emb, dim = 32)
         .select(col("id1"), col("id2"))
-      pairs.coalesce(1).write.mode("overwrite").parquet(embClusterPairsFixturePath)
-      PhashDup.clusters(s.read.parquet(embClusterPairsFixturePath))
+      PhashDup.clusters(embClusterPairs.writeRead(pairs))
         .select(col("image_id").as("vec_id"), col("cluster_id"))
         .orderBy("vec_id")
     }),
@@ -591,8 +554,7 @@ object PipelineQueries {
           emb, dim = 64, threshold = 0.3995, nPlanes = 3, tables = 4)
         .filter(round(col("cos"), 4) >= 0.40)
         .select(col("id1"), col("id2"))
-      pairs.coalesce(1).write.mode("overwrite").parquet(embDriverPairsFixturePath)
-      PhashDup.clusters(s.read.parquet(embDriverPairsFixturePath))
+      PhashDup.clusters(embDriverPairs.writeRead(pairs))
         .select(col("image_id").as("vec_id"), col("cluster_id"))
         .orderBy("vec_id")
     }),
@@ -621,16 +583,14 @@ object PipelineQueries {
       import s.implicits._
       val qIds = Seq(0L, 7L, 42L, 101L, 333L)
       val emb = graft.ops.Similarity.synthEmbeddings(s, 2000L).cache()
-      writeOnce(embFixturePath) {
-        emb.coalesce(1).write.mode("overwrite").parquet(embFixturePath)
-      }
+      embInput.writeOnce(emb)
       val queries = emb.filter(col("vec_id").isin(qIds: _*))
         .select(col("vec_id").as("query_id"), col("embedding").as("qvec"))
       val brute = graft.ops.Similarity.bruteForceTopK(emb, queries, 5)
         .select("query_id", "vec_id")
       val ivf = graft.ops.Similarity.ivfTopK(emb, queries, 5, nlist = 16, nprobe = 4)
         .select("query_id", "vec_id")
-      val out = recallVsBrute(s, brute, ivf, qIds, ivfTopkFixturePath)
+      val out = recallVsBrute(s, brute, ivf, qIds, ivfTopk)
         .as[(Long, Long)].collect() // materialize, then release the cache
       emb.unpersist()
       out.toSeq.toDF("query_id", "hits_of_5")
@@ -648,7 +608,7 @@ object PipelineQueries {
       val brute = PipelineCache.bruteDriverTop5(s, d).select("query_id", "vec_id")
       val lsh = graft.ops.Similarity.lshTopK(emb, queries, 5, dim = 64)
         .select("query_id", "vec_id")
-      recallVsBrute(s, brute, lsh, Seq(0L, 1L, 2L), lshTopkFixturePath)
+      recallVsBrute(s, brute, lsh, Seq(0L, 1L, 2L), lshTopk)
     }),
 
     // Similarity: IVF recall over the DRIVER's embeddings table (both
@@ -665,7 +625,7 @@ object PipelineQueries {
       val brute = PipelineCache.bruteDriverTop5(s, d).select("query_id", "vec_id")
       val ivf = graft.ops.Similarity.ivfTopK(emb, queries, 5, nlist = 16, nprobe = 4)
         .select("query_id", "vec_id")
-      recallVsBrute(s, brute, ivf, Seq(0L, 1L, 2L), ivfDriverTopkFixturePath)
+      recallVsBrute(s, brute, ivf, Seq(0L, 1L, 2L), ivfDriverTopk)
     }),
 
     // Multimodal: real ImageIO decode + channel-mean feature extraction.
@@ -694,8 +654,8 @@ object PipelineQueries {
     // sse = 0, jpeg ⇒ well-formed 768-channel decode, sse recorded.
     "qf_decode_fidelity" -> ((s, _) => {
       writePixelFixtures(s)
-      val dec = s.read.parquet(decodedPixelsFixturePath)
-      val exp = s.read.parquet(expectedPixelsFixturePath)
+      val dec = decodedPixels.read(s)
+      val exp = expectedPixels.read(s)
         .withColumnRenamed("pixels", "exp_pixels")
       dec.join(exp, "image_id")
         .select(col("image_id"), col("fmt"),
@@ -778,7 +738,8 @@ object PipelineQueries {
     // 2^53, /256 a power-of-two scale, sqrt correctly rounded on both
     // engines.
     "qf_audio_rms" -> ((s, _) => {
-      writeWavBytesFixture(s)
+      wavBytes.writeOnce(graft.ops.Multimodal.explodeBytes(
+        graft.synth.MediaGen.audio(s, audioN), "audio_id", "bytes"))
       graft.ops.Multimodal.audioRms(
           graft.synth.MediaGen.audio(s, audioN), "audio_id", "bytes").toDF()
         .filter(col("decode_ok"))
@@ -813,14 +774,14 @@ object PipelineQueries {
       Option(new java.io.File("target").listFiles()).getOrElse(Array.empty)
         .filter(f => f.getName.startsWith("graft-qf-stream-") &&
           !f.getName.startsWith(s"graft-qf-stream-p${ProcessHandle.current().pid()}-") &&
-          graft.engine.Scratch.newestMtime(f) <
+          Scratch.newestMtime(f) <
             System.currentTimeMillis() - 30 * 60 * 1000L)
-        .foreach(PipelineLoop.deleteRecursively)
+        .foreach(Scratch.deleteRecursively)
       val dir = s"target/graft-qf-stream-p${ProcessHandle.current().pid()}-shard"
       // a concurrent process's sweep may have deleted the shard since
       // this process wrote it: write it again then
-      if (!graft.engine.TableIO.exists(s, dir)) fixtureWritten.remove(dir): Unit
-      writeOnce(dir) {
+      if (!graft.engine.TableIO.exists(s, dir)) Fixture.forget(dir)
+      Fixture.once(dir) {
         // overwrite: a pid-reused leftover dir must not fail the write
         // or leak stale rows into the shard
         ImageGen.images(s, GenConfig(n = 500L, parts = 4))
@@ -845,16 +806,16 @@ object PipelineQueries {
       try {
         s.conf.set("spark.sql.shuffle.partitions", "4")
         // per-row audit sink → the oracle's window-recompute fixture.
-        // writeOnce: the sink appends, so a second invocation in the
-        // same process must reuse the fixture, not re-append to it.
-        writeOnce(streamRowsFixturePath) {
-          PipelineLoop.deleteRecursively(new java.io.File(streamRowsFixturePath))
+        // once: the sink appends, so a second invocation in the same
+        // process must reuse the fixture, not re-append to it.
+        streamRows.once {
+          Scratch.deleteRecursively(new java.io.File(streamRows.path))
           // a pid-reused stale checkpoint would mark the shard already
           // processed and leave the fixture empty — always start fresh
-          PipelineLoop.deleteRecursively(new java.io.File(s"$dir-rows-ckpt"))
+          Scratch.deleteRecursively(new java.io.File(s"$dir-rows-ckpt"))
           val qRows = scored.select(col("image_id"), col("ts"), col("decision"))
             .writeStream.format("parquet")
-            .option("path", streamRowsFixturePath)
+            .option("path", streamRows.path)
             .option("checkpointLocation", s"$dir-rows-ckpt")
             .outputMode("append").start()
           qRows.processAllAvailable(); qRows.stop()
@@ -888,7 +849,7 @@ object PipelineQueries {
     // verified by qf_cluster_rule_support.
     "qf_cluster_rules" -> ((s, _) => {
       writeClusterRuleFixtures(s)
-      s.read.parquet(clusterRulesFixturePath)
+      clusterRules.read(s)
         .select("cluster_id", "rule")
         .orderBy("cluster_id", "rule")
     }),
@@ -903,9 +864,9 @@ object PipelineQueries {
     // ExplainSpec; here every count is hash-compared engine-vs-oracle.
     "qf_cluster_rule_support" -> ((s, _) => {
       writeClusterRuleFixtures(s)
-      val rows = s.read.parquet(clusterLabeledFixturePath)
-      val rules = s.read.parquet(clusterRulesFixturePath)
-      val conj = s.read.parquet(clusterConjunctsFixturePath)
+      val rows = clusterLabeled.read(s)
+      val rules = clusterRules.read(s)
+      val conj = clusterConjuncts.read(s)
       val unpiv = rows.select(col("cluster_id"), col("image_id"), col("label"),
         explode(map(PipelineCache.scoreNames.flatMap(n =>
           Seq(lit(n), col(n))): _*)).as(Seq("feature", "value")))
@@ -936,9 +897,9 @@ object PipelineQueries {
     // the same first-min tie rule (ORDER BY dist, unit).
     "qf_som_assign" -> ((s, _) => {
       writeSomFixtures(s)
-      val feats = s.read.parquet(somFeaturesFixturePath)
+      val feats = somFeatures.read(s)
       val dim = PipelineCache.scoreNames.size
-      val cb = s.read.parquet(somCodebookFixturePath).orderBy("unit").collect()
+      val cb = somCodebook.read(s).orderBy("unit").collect()
       val weights = cb.map(r =>
         Array.tabulate(dim)(i => r.getDouble(r.fieldIndex(s"w_$i"))))
       val model = graft.explain.SomClustering.SomModel(5, 5, dim, weights)
@@ -958,36 +919,15 @@ object PipelineQueries {
         s"REGEXP_REPLACE($acc, '$p', '$rep', 'g')"
     }
 
-  /** DuckDB oracles for the SQL-expressible pipeline queries. The phash
-    * oracles read the parquet fixture [[writePhashFixture]] emits during
-    * Verify (same absolute path, computed at dump time). */
+  /** DuckDB oracles for the SQL-expressible pipeline queries. Each reads
+    * its inputs through [[Fixture.sql]], so the paths are the ones the
+    * Verify process wrote under the current [[Fixture.root]]. */
   def oracleSql: Map[String, String] = {
-    // Spark writes the fixtures as directories of part files — the
-    // DuckDB reader needs the glob
-    val fx = phashFixturePath.replace("'", "''") + "/*.parquet"
-    val sfx = simhashFixturePath.replace("'", "''") + "/*.parquet"
-    val cfx = captionFixturePath.replace("'", "''") + "/*.parquet"
-    val mpx = minhashPairsFixturePath.replace("'", "''") + "/*.parquet"
-    val efx = embFixturePath.replace("'", "''") + "/*.parquet"
-    val epx = embPairsFixturePath.replace("'", "''") + "/*.parquet"
-    val lfx = lshTopkFixturePath.replace("'", "''") + "/*.parquet"
-    val ifx = ivfTopkFixturePath.replace("'", "''") + "/*.parquet"
-    val idx = ivfDriverTopkFixturePath.replace("'", "''") + "/*.parquet"
-    val dpx = decodedPixelsFixturePath.replace("'", "''") + "/*.parquet"
-    val gpx = expectedPixelsFixturePath.replace("'", "''") + "/*.parquet"
-    val clb = clusterLabeledFixturePath.replace("'", "''") + "/*.parquet"
-    val crl = clusterRulesFixturePath.replace("'", "''") + "/*.parquet"
-    val ccj = clusterConjunctsFixturePath.replace("'", "''") + "/*.parquet"
-    val smf = somFeaturesFixturePath.replace("'", "''") + "/*.parquet"
-    val smc = somCodebookFixturePath.replace("'", "''") + "/*.parquet"
-    val wbx = wavBytesFixturePath.replace("'", "''") + "/*.parquet"
-    val xfr = expectedFramesFixturePath.replace("'", "''") + "/*.parquet"
-    val fpx = framePixelsFixturePath.replace("'", "''") + "/*.parquet"
     // Shared SQL shape for the ANN recall oracles: brute-force top-5 by
     // (cos DESC, vec_id) recomputed from raw vectors, intersected with
     // the engine's written top-k fixture, zero-hit queries kept.
     def annRecallSql(source: String, queryFilter: String, querySet: String,
-        fixture: String): String =
+        fixture: Fixture): String =
       s"""WITH q AS (SELECT vec_id AS query_id, CAST(embedding AS DOUBLE[]) AS qvec
          |           FROM $source WHERE $queryFilter),
          |e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v FROM $source),
@@ -1001,7 +941,7 @@ object PipelineQueries {
          |  ROW_NUMBER() OVER (PARTITION BY query_id ORDER BY cos DESC, vec_id) AS rk
          |  FROM c),
          |b AS (SELECT query_id, vec_id FROM r WHERE rk <= 5),
-         |f AS (SELECT DISTINCT query_id, vec_id FROM read_parquet('$fixture')),
+         |f AS (SELECT DISTINCT query_id, vec_id FROM ${fixture.sql}),
          |h AS (SELECT b.query_id, COUNT(*) AS n
          |      FROM b JOIN f ON f.query_id = b.query_id AND f.vec_id = b.vec_id
          |      GROUP BY b.query_id),
@@ -1011,18 +951,16 @@ object PipelineQueries {
          |ORDER BY qs.query_id""".stripMargin
     Map(
       "qf_ann_lsh_recall" -> annRecallSql("embeddings", "vec_id < 3",
-        "SELECT DISTINCT vec_id AS query_id FROM embeddings WHERE vec_id < 3", lfx),
-      "qf_ann_ivf_recall" -> annRecallSql(s"read_parquet('$efx')",
+        "SELECT DISTINCT vec_id AS query_id FROM embeddings WHERE vec_id < 3", lshTopk),
+      "qf_ann_ivf_recall" -> annRecallSql(embInput.sql,
         "vec_id IN (0, 7, 42, 101, 333)",
-        "SELECT CAST(UNNEST([0, 7, 42, 101, 333]) AS BIGINT) AS query_id", ifx),
+        "SELECT CAST(UNNEST([0, 7, 42, 101, 333]) AS BIGINT) AS query_id", ivfTopk),
       "qf_ann_ivf_driver" -> annRecallSql("embeddings", "vec_id < 3",
-        "SELECT DISTINCT vec_id AS query_id FROM embeddings WHERE vec_id < 3", idx),
+        "SELECT DISTINCT vec_id AS query_id FROM embeddings WHERE vec_id < 3", ivfDriverTopk),
       // Recompute tp/fp/fn/f1 from the written decisions against the
       // generator's expected labels (SUMs cast to BIGINT — DuckDB SUM is
       // HUGEINT; f1 arithmetic mirrors Metrics.f1's op order exactly).
       "qf_f1" -> {
-        val dfx = decisionsFixturePath.replace("'", "''") + "/*.parquet"
-        val xfx = expectedFixturePath.replace("'", "''") + "/*.parquet"
         s"""WITH c AS (
            |  SELECT
            |    CAST(SUM(CASE WHEN d.decision = 'drop' AND x.expected_decision = 'drop'
@@ -1031,8 +969,8 @@ object PipelineQueries {
            |             THEN 1 ELSE 0 END) AS BIGINT) AS fp,
            |    CAST(SUM(CASE WHEN d.decision = 'keep' AND x.expected_decision = 'drop'
            |             THEN 1 ELSE 0 END) AS BIGINT) AS fn
-           |  FROM read_parquet('$dfx') d
-           |  JOIN read_parquet('$xfx') x ON x.image_id = d.image_id),
+           |  FROM ${decisionsOut.sql} d
+           |  JOIN ${expectedInput.sql} x ON x.image_id = d.image_id),
            |pr AS (
            |  SELECT tp, fp, fn,
            |    CASE WHEN tp + fp > 0 THEN CAST(tp AS DOUBLE) / (tp + fp) ELSE 0.0 END AS p,
@@ -1044,9 +982,8 @@ object PipelineQueries {
       },
       // Recompute the per-language counts from the written predictions.
       "qf_langid_counts" -> {
-        val lfx2 = langidFixturePath.replace("'", "''") + "/*.parquet"
         s"""SELECT pred_lang, CAST(COUNT(*) AS BIGINT) AS n
-           |FROM read_parquet('$lfx2')
+           |FROM ${langidOut.sql}
            |GROUP BY pred_lang ORDER BY pred_lang""".stripMargin
       },
       // Per-row decision stream + independently recomputed scrub: the
@@ -1055,11 +992,10 @@ object PipelineQueries {
       // divergence between the live query and its fixture, or between
       // Spark's and DuckDB's regex chains, fails the hash compare.
       "qf_decisions" -> {
-        val dfx = decisionsFixturePath.replace("'", "''") + "/*.parquet"
         s"""SELECT d.image_id, d.decision,
            |  ${scrubChainSql("c.caption")} AS scrubbed_caption
-           |FROM read_parquet('$dfx') d
-           |JOIN read_parquet('$cfx') c ON c.image_id = d.image_id
+           |FROM ${decisionsOut.sql} d
+           |JOIN ${captionInput.sql} c ON c.image_id = d.image_id
            |ORDER BY d.image_id""".stripMargin
       },
       // Recompute the full per-round metrics history from the loop's
@@ -1067,8 +1003,7 @@ object PipelineQueries {
       // (Metrics.scala op-order parity; everything rounded to 9dp on
       // both sides — TPGR goes through pow(), see the query doc).
       "qf_metrics_loop" -> {
-        val afx = new java.io.File(PipelineLoop.loopDir + "/audit")
-          .getAbsolutePath.replace("'", "''") + "/*/*.parquet"
+        val audit = Fixture.readParquet(s"${PipelineLoop.loopDir}/audit/*/*.parquet")
         s"""WITH c AS (
            |  SELECT run,
            |    CAST(SUM(CASE WHEN is_susp THEN 1 ELSE 0 END) AS BIGINT) AS faulty,
@@ -1080,7 +1015,7 @@ object PipelineQueries {
            |    CAST(SUM(CASE WHEN status_new LIKE 'actualFault%'
            |             AND NOT is_known THEN 1 ELSE 0 END) AS BIGINT) AS afminuse,
            |    CAST(SUM(CASE WHEN is_known THEN 1 ELSE 0 END) AS BIGINT) AS ecount
-           |  FROM read_parquet('$afx') GROUP BY run),
+           |  FROM $audit GROUP BY run),
            |m AS (
            |  SELECT run,
            |    CASE WHEN ecount > 0 THEN CAST(einter AS DOUBLE) / ecount ELSE 0.0 END AS pd,
@@ -1110,12 +1045,11 @@ object PipelineQueries {
       // start = floor(epoch/60)*60; complete-mode output carries every
       // row, so no watermark-drop asymmetry exists between the sides).
       "qf_stream_window" -> {
-        val sfx = streamRowsFixturePath.replace("'", "''") + "/*.parquet"
         s"""SELECT CAST(FLOOR(EPOCH(ts) / 60) * 60 AS BIGINT) AS window_start,
            |  CAST(COUNT(*) AS BIGINT) AS rows_in,
            |  CAST(SUM(CASE WHEN decision = 'drop' THEN 1 ELSE 0 END) AS BIGINT)
            |    AS rows_dropped
-           |FROM read_parquet('$sfx')
+           |FROM ${streamRows.sql}
            |GROUP BY 1 ORDER BY 1""".stripMargin
       },
       // Re-run the frozen scrub chain over the raw captions in SQL and
@@ -1129,8 +1063,8 @@ object PipelineQueries {
         s"""WITH j AS (SELECT d.image_id, d.fmt, d.decode_ok,
            |    CAST(d.pixels AS DOUBLE[]) AS p, CAST(e.pixels AS DOUBLE[]) AS q,
            |    len(d.pixels) AS nd, len(e.pixels) AS ne
-           |  FROM read_parquet('$dpx') d
-           |  JOIN read_parquet('$gpx') e ON d.image_id = e.image_id),
+           |  FROM ${decodedPixels.sql} d
+           |  JOIN ${expectedPixels.sql} e ON d.image_id = e.image_id),
            |c AS (SELECT image_id, fmt, CAST(decode_ok AS INTEGER) AS decode_ok,
            |    CAST(nd AS INTEGER) AS n_px,
            |    CASE WHEN nd = ne
@@ -1151,7 +1085,7 @@ object PipelineQueries {
       "qf_image_features" ->
         s"""WITH u AS (SELECT image_id,
            |    unnest(pixels) AS v, generate_subscripts(pixels, 1) AS i
-           |  FROM read_parquet('$dpx')),
+           |  FROM ${decodedPixels.sql}),
            |m AS (SELECT image_id,
            |    SUM(CASE WHEN (i - 1) % 3 = 0 THEN v END)
            |      / (COUNT(*) / 3) AS mean_r,
@@ -1167,7 +1101,7 @@ object PipelineQueries {
            |  COALESCE(m.mean_r, 0.0) AS mean_r,
            |  COALESCE(m.mean_g, 0.0) AS mean_g,
            |  COALESCE(m.mean_b, 0.0) AS mean_b
-           |FROM read_parquet('$dpx') d LEFT JOIN m USING (image_id)
+           |FROM ${decodedPixels.sql} d LEFT JOIN m USING (image_id)
            |ORDER BY d.image_id""".stripMargin,
       // Perceptual hash: recompute the full 64-bit aHash from the
       // decoded-pixel fixture with the same exact-integer spec — luma
@@ -1180,7 +1114,7 @@ object PipelineQueries {
         s"""WITH d AS (SELECT image_id,
            |    CAST(decode_ok AS INTEGER) AS decode_ok, pixels,
            |    CAST(round(sqrt(len(pixels) / 3)) AS BIGINT) AS side
-           |  FROM read_parquet('$dpx')),
+           |  FROM ${decodedPixels.sql}),
            |u AS (SELECT image_id, side, unnest(pixels) AS v,
            |    generate_subscripts(pixels, 1) AS i FROM d),
            |px AS (SELECT image_id, side, (i - 1) // 3 AS pi,
@@ -1214,7 +1148,7 @@ object PipelineQueries {
       "qf_image_resize" ->
         s"""WITH d AS (SELECT image_id, pixels,
            |    CAST(round(sqrt(len(pixels) / 3)) AS BIGINT) AS side
-           |  FROM read_parquet('$dpx') WHERE decode_ok),
+           |  FROM ${decodedPixels.sql} WHERE decode_ok),
            |u AS (SELECT image_id, side, unnest(pixels) AS v,
            |    generate_subscripts(pixels, 1) AS i FROM d),
            |cv AS (SELECT image_id,
@@ -1241,16 +1175,16 @@ object PipelineQueries {
         val stripes = PipelineCache.scoreNames.map(n =>
           s"SELECT cluster_id, image_id, label, '$n' AS feature, $n AS value FROM rows_")
           .mkString("\n  UNION ALL ")
-        s"""WITH rows_ AS (SELECT * FROM read_parquet('$clb')),
+        s"""WITH rows_ AS (SELECT * FROM ${clusterLabeled.sql}),
            |u AS (
            |  $stripes),
            |unsat AS (SELECT DISTINCT c.cluster_id, c.rule_id, u.image_id
-           |  FROM read_parquet('$ccj') c
+           |  FROM ${clusterConjuncts.sql} c
            |  JOIN u ON u.cluster_id = c.cluster_id AND u.feature = c.feature
            |  WHERE NOT (CASE WHEN c.op = '<=' THEN u.value <= c.threshold
            |                  ELSE u.value > c.threshold END)),
            |pairs AS (SELECT r.cluster_id, r.rule_id, w.image_id, w.label
-           |  FROM read_parquet('$crl') r JOIN rows_ w USING (cluster_id)),
+           |  FROM ${clusterRules.sql} r JOIN rows_ w USING (cluster_id)),
            |m AS (SELECT p.* FROM pairs p LEFT JOIN unsat s
            |      ON s.cluster_id = p.cluster_id AND s.rule_id = p.rule_id
            |         AND s.image_id = p.image_id
@@ -1262,7 +1196,7 @@ object PipelineQueries {
            |SELECT r.cluster_id, r.rule_id, r.verdict,
            |  CAST(COALESCE(c.n_match, 0) AS BIGINT) AS n_match,
            |  CAST(COALESCE(c.n_invalid, 0) AS BIGINT) AS n_invalid
-           |FROM read_parquet('$crl') r LEFT JOIN c USING (cluster_id, rule_id)
+           |FROM ${clusterRules.sql} r LEFT JOIN c USING (cluster_id, rule_id)
            |ORDER BY r.cluster_id, r.rule_id""".stripMargin
       },
       // Re-derive every SOM BMU from the codebook fixture: squared
@@ -1275,7 +1209,7 @@ object PipelineQueries {
         }.mkString(" + ")
         s"""WITH d AS (
            |  SELECT f.image_id, c.unit, $dist AS dist
-           |  FROM read_parquet('$smf') f CROSS JOIN read_parquet('$smc') c),
+           |  FROM ${somFeatures.sql} f CROSS JOIN ${somCodebook.sql} c),
            |b AS (SELECT image_id, unit,
            |  row_number() OVER (PARTITION BY image_id ORDER BY dist, unit) AS rn
            |  FROM d)
@@ -1294,10 +1228,10 @@ object PipelineQueries {
            |  SELECT cluster_id, rule_id,
            |    string_agg(printf('%s %s %.4f', feature, op, threshold),
            |               ' AND ' ORDER BY conj_id) AS cond
-           |  FROM read_parquet('$ccj') GROUP BY cluster_id, rule_id)
+           |  FROM ${clusterConjuncts.sql} GROUP BY cluster_id, rule_id)
            |SELECT r.cluster_id,
            |  'IF ' || COALESCE(c.cond, 'always') || ' THEN ' || r.verdict AS rule
-           |FROM read_parquet('$crl') r
+           |FROM ${clusterRules.sql} r
            |LEFT JOIN cond c ON c.cluster_id = r.cluster_id
            |                AND c.rule_id = r.rule_id
            |ORDER BY r.cluster_id, rule""".stripMargin,
@@ -1309,7 +1243,7 @@ object PipelineQueries {
       "qf_video_frames" ->
         s"""WITH d AS (SELECT video_id, frame_idx, pixels,
            |    CAST(round(sqrt(len(pixels) / 3)) AS BIGINT) AS side
-           |  FROM read_parquet('$fpx')),
+           |  FROM ${framePixels.sql}),
            |u AS (SELECT video_id, frame_idx, side, unnest(pixels) AS v,
            |    generate_subscripts(pixels, 1) AS i FROM d),
            |px AS (SELECT video_id, frame_idx, side, (i - 1) // 3 AS pi,
@@ -1331,7 +1265,7 @@ object PipelineQueries {
            |  FROM cv c JOIN mn m USING (video_id, frame_idx) GROUP BY 1, 2)
            |SELECT x.video_id AS id, x.frame_idx, x.byte_off, x.n_bytes,
            |  CAST(d.side AS INT) AS w, CAST(d.side AS INT) AS h, ph.phash
-           |FROM read_parquet('$xfr') x
+           |FROM ${expectedFrames.sql} x
            |JOIN d ON d.video_id = x.video_id AND d.frame_idx = x.frame_idx
            |JOIN ph ON ph.video_id = x.video_id AND ph.frame_idx = x.frame_idx
            |WHERE x.frame_idx % $videoEvery = 0
@@ -1345,7 +1279,7 @@ object PipelineQueries {
       // doubles on both engines.
       "qf_audio_rms" ->
         s"""WITH b AS (SELECT id, i, v, (v + 256) % 256 AS u
-           |  FROM read_parquet('$wbx')),
+           |  FROM ${wavBytes.sql}),
            |hdr AS (SELECT id,
            |    CAST(SUM(CASE WHEN i = 24 THEN u WHEN i = 25 THEN u * 256
            |                  WHEN i = 26 THEN u * 65536
@@ -1367,19 +1301,17 @@ object PipelineQueries {
            |ORDER BY win.id, win.w""".stripMargin,
       "qf_scrub_equality" -> {
         val chain = scrubChainSql("c.caption")
-        val xfx = expectedFixturePath.replace("'", "''") + "/*.parquet"
         s"""SELECT x.fault_class,
            |  CAST(COUNT(*) AS BIGINT) AS n,
            |  CAST(SUM(CASE WHEN $chain = x.expected_scrub THEN 1 ELSE 0 END)
            |       AS BIGINT) AS n_exact
-           |FROM read_parquet('$cfx') c
-           |JOIN read_parquet('$xfx') x ON x.image_id = c.image_id
+           |FROM ${captionInput.sql} c
+           |JOIN ${expectedInput.sql} x ON x.image_id = c.image_id
            |GROUP BY x.fault_class ORDER BY x.fault_class""".stripMargin
       },
       "qf_dedup_emb_clusters" ->
         s"""WITH RECURSIVE pr AS (
-           |  SELECT id1, id2 FROM read_parquet('${embClusterPairsFixturePath
-                .replace("'", "''")}/*.parquet')),
+           |  SELECT id1, id2 FROM ${embClusterPairs.sql}),
            |e AS (SELECT id1 AS a, id2 AS b FROM pr
            |      UNION SELECT id2, id1 FROM pr),
            |reach(a, b) AS (
@@ -1395,8 +1327,7 @@ object PipelineQueries {
       // would perturb the closure and fail the hash compare.
       "qf_dedup_emb_clusters_driver" ->
         s"""WITH RECURSIVE pr0 AS (
-           |  SELECT id1, id2 FROM read_parquet('${embDriverPairsFixturePath
-                .replace("'", "''")}/*.parquet')),
+           |  SELECT id1, id2 FROM ${embDriverPairs.sql}),
            |ev AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
            |       FROM embeddings),
            |pr AS (
@@ -1414,7 +1345,7 @@ object PipelineQueries {
            |  SELECT r.a, e.b FROM reach r JOIN e ON r.b = e.a)
            |SELECT a AS vec_id, LEAST(a, MIN(b)) AS cluster_id
            |FROM reach GROUP BY a ORDER BY vec_id""".stripMargin,
-      // SOUNDNESS oracle (one-sided, see minhashPairsFixturePath doc):
+      // SOUNDNESS oracle (one-sided, see the minhashPairs fixture doc):
       // recompute exact Jaccard from raw captions for each emitted pair,
       // re-apply >= 0.8. Every emitted pair must survive with the same
       // jaccard value; recall is covered by OpsSpec's seeded gate.
@@ -1422,14 +1353,14 @@ object PipelineQueries {
         s"""WITH d AS (
            |  SELECT image_id AS id,
            |         string_split_regex(trim(lower(caption)), '\\s+') AS toks
-           |  FROM read_parquet('$cfx')),
+           |  FROM ${captionInput.sql}),
            |sh AS (
            |  SELECT id, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS s
            |  FROM d, UNNEST(RANGE(1, len(toks) - 1)) AS r(i)
            |  WHERE len(toks) >= 3),
            |ds AS (SELECT DISTINCT id, s FROM sh),
            |sets AS (SELECT id, COUNT(*) AS n FROM ds GROUP BY id),
-           |pr AS (SELECT id1, id2 FROM read_parquet('$mpx')),
+           |pr AS (SELECT id1, id2 FROM ${minhashPairs.sql}),
            |inter AS (
            |  SELECT p.id1, p.id2, COUNT(*) AS c
            |  FROM pr p
@@ -1449,8 +1380,8 @@ object PipelineQueries {
       // query doc — the boundary decision is made on identical values).
       "qf_dedup_embedding" ->
         s"""WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
-           |           FROM read_parquet('$efx')),
-           |pr AS (SELECT id1, id2 FROM read_parquet('$epx')),
+           |           FROM ${embInput.sql}),
+           |pr AS (SELECT id1, id2 FROM ${embPairs.sql}),
            |c AS (
            |  SELECT p.id1, p.id2,
            |    ROUND(list_dot_product(a.v, b.v)
@@ -1470,7 +1401,7 @@ object PipelineQueries {
         s"""WITH d AS (
            |  SELECT image_id AS id,
            |         string_split_regex(trim(lower(caption)), '\\s+') AS toks
-           |  FROM read_parquet('$cfx')),
+           |  FROM ${captionInput.sql}),
            |sh AS (
            |  SELECT id, i, toks[i] || ' ' || toks[i+1] || ' ' || toks[i+2] AS s
            |  FROM d, UNNEST(RANGE(1, len(toks) - 1)) AS r(i)
@@ -1499,7 +1430,7 @@ object PipelineQueries {
            |WHERE CAST(i.c AS DOUBLE) / (na.n + nb.n - i.c) >= 0.8
            |ORDER BY id1, id2""".stripMargin,
       "qf_dedup_simhash" ->
-        s"""WITH p AS (SELECT * FROM read_parquet('$sfx'))
+        s"""WITH p AS (SELECT * FROM ${simhashInput.sql})
            |SELECT a.image_id AS id1, b.image_id AS id2,
            |       CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
            |FROM p a JOIN p b ON a.image_id < b.image_id
@@ -1521,7 +1452,7 @@ object PipelineQueries {
           |SELECT query_id, "rank", vec_id, ROUND(cos, 4) AS cos
           |FROM r WHERE "rank" <= 5 ORDER BY query_id, "rank"""".stripMargin,
       "qf_phash_dup_pairs" ->
-        s"""WITH p AS (SELECT * FROM read_parquet('$fx'))
+        s"""WITH p AS (SELECT * FROM ${phashInput.sql})
            |SELECT a.image_id AS id1, b.image_id AS id2,
            |       CAST(bit_count(xor(a.phash, b.phash)) AS INTEGER) AS hamming
            |FROM p a JOIN p b ON a.image_id < b.image_id
@@ -1530,7 +1461,7 @@ object PipelineQueries {
       "qf_phash_clusters" ->
         s"""WITH RECURSIVE pr AS (
            |  SELECT a.image_id AS id1, b.image_id AS id2
-           |  FROM read_parquet('$fx') a JOIN read_parquet('$fx') b
+           |  FROM ${phashInput.sql} a JOIN ${phashInput.sql} b
            |    ON a.image_id < b.image_id
            |  WHERE bit_count(xor(a.phash, b.phash)) <= 4),
            |e AS (SELECT id1 AS a, id2 AS b FROM pr
@@ -1547,11 +1478,14 @@ object PipelineQueries {
 /** Memoized full-loop run for Verify (deletes + recreates its own
   * checkpoint dir so each Verify invocation runs all rounds fresh). */
 object PipelineLoop {
-  private[graft] val loopDir = "target/graft-verify-loop"
+  /** Under the fixture root: the qf_metrics_loop oracle reads the
+    * loop's per-round audit checkpoints. */
+  private[graft] def loopDir: String =
+    new java.io.File(PipelineQueries.Fixture.root, "loop").getPath
   @volatile private var res: ValidationRun.RunResult = _
   def cachedLoop(spark: SparkSession): ValidationRun.RunResult = synchronized {
     if (res == null) {
-      deleteRecursively(new java.io.File(loopDir))
+      Scratch.deleteRecursively(new java.io.File(loopDir))
       // adaptive parts (4 at n=1000): metrics, thresholds and decisions
       // do not depend on the partition count; the loop's cost is job
       // count × task overhead, not data
@@ -1566,10 +1500,4 @@ object PipelineLoop {
     * bench's floor-of-2 second sweep must time real work, not a memo
     * hit. */
   def reset(): Unit = synchronized { res = null }
-
-  // delegate to the null-safe engine helper: listFiles() returns null
-  // when the directory vanishes between the isDirectory check and the
-  // listing (two concurrent Verify processes resetting the same scratch)
-  def deleteRecursively(f: java.io.File): Unit =
-    graft.engine.Scratch.deleteRecursively(f)
 }

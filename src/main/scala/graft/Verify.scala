@@ -6,6 +6,14 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // each output dir gets its own fixture root, so a later Verify run
+    // into another dir leaves this dir's oracle_sql.json checkable;
+    // cleared, so nothing of an earlier run into the same dir remains
+    val fixtureRoot = new java.io.File(PipelineQueries.Fixture.DefaultRoot,
+      "out-" + java.util.UUID.nameUUIDFromBytes(
+        new java.io.File(outDir).getAbsolutePath.getBytes("UTF-8")))
+    graft.engine.Scratch.deleteRecursively(fixtureRoot)
+    PipelineQueries.Fixture.root = fixtureRoot.getPath
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // reap tmpfs scratch leaked by dead JVMs (resident RAM otherwise)
     graft.engine.Scratch.cleanupOrphans(): Unit

@@ -37,19 +37,23 @@ object Scorer {
     val langId = spark.sparkContext.broadcast(LangId.pretrained)
     val lm = spark.sparkContext.broadcast(
       NGramLM.fit(spark, images.select(col("caption")).as[String]))
-    val perLang = images
-      .select(Exprs.perplexity(col("caption"), lm).as("ppl"),
-        Exprs.langidBest(col("caption"), langId).as("lang"))
-      .groupBy("lang")
-      .agg(expr("percentile_approx(ppl, 0.5D, 10000)").as("p50"),
-        count(lit(1)).as("n"))
-      .collect()
-    val ref = referenceFromRows(perLang)
+    val ref = referenceFromRows(pplMedianByLang(images
+      .select(Exprs.perplexity(col("caption"), lm).as("ppl_raw"),
+        Exprs.langidBest(col("caption"), langId).as("pred_lang"))))
     require(ref.isDefined,
       "Scorer.fit needs at least one non-null caption to discover a perplexity reference")
     val (byLang, global) = ref.get
     Models(langId, lm, global, byLang)
   }
+
+  /** (pred_lang, p50, n): the median perplexity and row count of each
+    * predicted language of a (pred_lang, ppl_raw) frame, in one grouped
+    * sketch pass. */
+  private def pplMedianByLang(raw: DataFrame): Array[org.apache.spark.sql.Row] =
+    raw.groupBy(col("pred_lang"))
+      .agg(expr("percentile_approx(ppl_raw, 0.5D, 10000)").as("p50"),
+        count(lit(1)).as("n"))
+      .collect()
 
   /** None when no group carries a quantile (empty corpus, or every
     * caption null — a null caption yields a (lang=null, p50=null) group
@@ -81,15 +85,10 @@ object Scorer {
     * reused and the reference quantiles refit. */
   def recalibrate(rawBelievedClean: DataFrame,
       fallback: (Map[String, Double], Double)): (Map[String, Double], Double) = {
-    val perLang = rawBelievedClean
-      .groupBy(col("pred_lang"))
-      .agg(expr("percentile_approx(ppl_raw, 0.5D, 10000)").as("p50"),
-        count(lit(1)).as("n"))
-      .collect()
     // an EMPTY believed-clean population (every row known-faulty and
     // confirmed) — or one whose groups are all null-caption — has no
     // quantiles to offer: keep the previous reference
-    referenceFromRows(perLang).getOrElse(fallback)
+    referenceFromRows(pplMedianByLang(rawBelievedClean)).getOrElse(fallback)
   }
 
   /** Warm-start fit: reload checkpointed model state when present AND its

@@ -154,10 +154,7 @@ object Dedup {
     val acc = new Array[Int](64)
     toks.foreach { t =>
       if (t.nonEmpty) {
-        var h = 1125899906842597L
-        var i = 0
-        while (i < t.length) { h = 31L * h + t.charAt(i); i += 1 }
-        h = graft.synth.ImageGen.splitmix64(h)
+        val h = stringHash64(t)
         var b = 0
         while (b < 64) { acc(b) += (if (((h >>> b) & 1L) == 1L) 1 else -1); b += 1 }
       }

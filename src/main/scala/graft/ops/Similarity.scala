@@ -33,20 +33,24 @@ object Similarity {
     when(denom > 0.0, dot(a, b) / denom).otherwise(lit(-1.0))
   }
 
+  /** Per-query top-k of (query_id, qvec, vec_id, embedding) candidate
+    * rows by cosine, ties to the smaller vec_id. */
+  private def topKByCosine(cands: DataFrame, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("cos").desc, col("vec_id"))
+    cands.withColumn("cos", cosine(col("embedding"), col("qvec")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select("query_id", "rank", "vec_id", "cos")
+  }
+
   /** Brute-force cosine top-k: crossJoin against the (small, broadcast)
     * query set, per-query window top-k with deterministic tie-break. */
   def bruteForceTopK(
       embeddings: DataFrame, // (vec_id, embedding)
       queries: DataFrame, // (query_id, qvec)
-      k: Int): DataFrame = {
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    embeddings.crossJoin(broadcast(queries))
-      .withColumn("cos", cosine(col("embedding"), col("qvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "cos")
-  }
+      k: Int): DataFrame =
+    topKByCosine(embeddings.crossJoin(broadcast(queries)), k)
 
   /** Deterministic random hyperplanes (seeded splitmix gaussian-ish). */
   def hyperplanes(dim: Int, nPlanes: Int, seed: Long = 7L): Array[Array[Double]] =
@@ -127,15 +131,9 @@ object Similarity {
     val cands = embSigs.join(broadcast(probeSigs), Seq("t", "sig"))
       .select("query_id", "vec_id")
       .dropDuplicates("query_id", "vec_id")
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    cands
+    topKByCosine(cands
       .join(embeddings, Seq("vec_id"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("cos", cosine(col("embedding"), col("qvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "cos")
+      .join(broadcast(queries), Seq("query_id")), k)
   }
 
   /** Nearest centroid index by maximum adjusted dot product
@@ -252,14 +250,8 @@ object Similarity {
           queries.schema("query_id").dataType),
         org.apache.spark.sql.types.StructField("__list",
           org.apache.spark.sql.types.IntegerType))))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("vec_id"))
-    assigned.join(broadcast(probes), Seq("__list"))
-      .join(broadcast(queries), Seq("query_id"))
-      .withColumn("cos", cosine(col("embedding"), col("qvec")))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("query_id", "rank", "vec_id", "cos")
+    topKByCosine(assigned.join(broadcast(probes), Seq("__list"))
+      .join(broadcast(queries), Seq("query_id")), k)
   }
 
   /** Embedding near-duplicate pairs: multi-table hyperplane-LSH keys →

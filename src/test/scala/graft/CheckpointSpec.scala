@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.detect.Scorer
-import graft.engine.TableIO
+import graft.engine.{Scratch, TableIO}
 import graft.loop.ValidationRun
 import graft.models.{LangIdModel, ModelCheckpoint, NGramLMModel}
 
@@ -12,7 +12,7 @@ class CheckpointSpec extends AnyFunSuite {
 
   test("model state round-trips through the checkpoint and scores identically") {
     val dir = "target/graft-model-ckpt"
-    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    Scratch.deleteRecursively(new java.io.File(dir))
     val images = PipelineCache.images(spark, 500L)
     val m1 = Scorer.fitOrLoad(spark, images, Some(dir)) // fits + saves
     val m2 = Scorer.fitOrLoad(spark, images, Some(dir)) // loads
@@ -29,7 +29,7 @@ class CheckpointSpec extends AnyFunSuite {
 
   test("fingerprint or version mismatch forces a refit (no stale model reuse)") {
     val dir = "target/graft-model-ckpt-fp"
-    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    Scratch.deleteRecursively(new java.io.File(dir))
     val images = PipelineCache.images(spark, 500L)
     val m = PipelineCache.models(spark, 500L)
     ModelCheckpoint.save(spark, m, dir, fingerprint = "n=500;seed=42")
@@ -42,7 +42,7 @@ class CheckpointSpec extends AnyFunSuite {
   test("corrupt checkpoint bytes degrade to None, not an exception") {
     import spark.implicits._
     val dir = "target/graft-model-ckpt-bad"
-    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    Scratch.deleteRecursively(new java.io.File(dir))
     graft.engine.TableIO.createOrReplace(
       Seq((ModelCheckpoint.FormatVersion, "fp", Array[Byte](1, 2, 3)))
         .toDF("version", "fingerprint", "state"),
@@ -52,7 +52,7 @@ class CheckpointSpec extends AnyFunSuite {
 
   test("a loaded LM rebuilds its lookup tables and scores bit for bit; the serialized form has no tables") {
     val dir = "target/graft-model-ckpt-tables"
-    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    Scratch.deleteRecursively(new java.io.File(dir))
     val m = PipelineCache.models(spark, 500L)
     val caps = PipelineCache.images(spark, 500L).select("caption").collect().map(_.getString(0))
     val before = caps.map(m.lm.value.perplexity) // builds the tables in this JVM
@@ -97,7 +97,7 @@ class CheckpointSpec extends AnyFunSuite {
       "LkRvdWJsZYCzwkopa/sEAgABRAAFdmFsdWV4cgAQamF2YS5sYW5nLk51bWJlcoas" +
       "lR0LlOCLAgAAeHBAEQAAAAAAAA==")
     val dir = "target/graft-model-ckpt-compat"
-    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    Scratch.deleteRecursively(new java.io.File(dir))
     import spark.implicits._
     graft.engine.TableIO.createOrReplace(
       Seq((ModelCheckpoint.FormatVersion, "fp", state)).toDF("version", "fingerprint", "state"),
@@ -135,7 +135,7 @@ class CheckpointSpec extends AnyFunSuite {
   private def copyOfLoop(name: String): String = {
     fresh: Unit // runs the cached loop once per session
     val to = s"target/graft-ckpt-loop-$name"
-    PipelineLoop.deleteRecursively(new java.io.File(to))
+    Scratch.deleteRecursively(new java.io.File(to))
     val src = java.nio.file.Paths.get(PipelineLoop.loopDir)
     val walk = java.nio.file.Files.walk(src)
     try walk.forEach { p =>
@@ -146,7 +146,7 @@ class CheckpointSpec extends AnyFunSuite {
 
   test("a round whose audit table is written but whose metrics are missing re-runs") {
     val dir = copyOfLoop("crash")
-    PipelineLoop.deleteRecursively(new java.io.File(s"$dir/metrics/round=3"))
+    Scratch.deleteRecursively(new java.io.File(s"$dir/metrics/round=3"))
     assert(TableIO.exists(spark, s"$dir/audit/round=3"))
     val res = ValidationRun.run(spark, loopCfg(dir))
     assert(res.metrics == fresh.metrics)

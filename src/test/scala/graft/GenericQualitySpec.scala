@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.engine.Scratch
 import graft.generic.GenericQuality
 import graft.synth.ImageGen
 
@@ -164,7 +165,7 @@ class GenericQualitySpec extends AnyFunSuite {
   test("fromCsv: first column is the id, schema inferred") {
     val (df, _) = fixture(100)
     val path = "target/graft-generic-csv"
-    PipelineLoop.deleteRecursively(new java.io.File(path))
+    Scratch.deleteRecursively(new java.io.File(path))
     df.coalesce(1).write.option("header", "true").csv(path)
     val (loaded, idCol) = GenericQuality.fromCsv(spark, path)
     assert(idCol == "id")

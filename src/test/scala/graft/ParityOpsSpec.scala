@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.detect.Normalize
-import graft.engine.TableIO
+import graft.engine.{Scratch, TableIO}
 import graft.explain.ClusterExplainer
 import graft.ops.{Multimodal, Salting}
 import graft.synth.{GenConfig, ImageGen}
@@ -90,7 +90,7 @@ class ParityOpsSpec extends AnyFunSuite {
 
   test("CSV sink writes a single headered file (S7)") {
     val dir = "target/graft-csv-sink"
-    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    Scratch.deleteRecursively(new java.io.File(dir))
     TableIO.writeCsv(Seq((1, "a"), (2, "b")).toDF("id", "v"), dir)
     val files = new java.io.File(dir).listFiles().filter(_.getName.endsWith(".csv"))
     assert(files.length == 1)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.engine.Scratch
 import graft.loop.ValidationRun
 import graft.synth.ImageGen
 
@@ -51,7 +52,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("iterative loop: metrics appended per round, TPR stays high, resume works") {
     val dir = "target/graft-test-loop"
-    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    Scratch.deleteRecursively(new java.io.File(dir))
     val cfg = ValidationRun.RunConfig(n = 1000L, rounds = 3, outDir = dir)
     val res = ValidationRun.run(spark, cfg)
     assert(res.metrics.size == 3)
@@ -79,9 +80,9 @@ class PipelineSpec extends AnyFunSuite {
     // crash-window resume: a round whose metrics/audit/lineage are
     // missing (JVM died mid-round) must RE-RUN, not leave a permanent
     // hole in the metrics history
-    PipelineLoop.deleteRecursively(new java.io.File(s"$dir/metrics/round=3"))
-    PipelineLoop.deleteRecursively(new java.io.File(s"$dir/audit/round=3"))
-    PipelineLoop.deleteRecursively(new java.io.File(s"$dir/lineage/round=3"))
+    Scratch.deleteRecursively(new java.io.File(s"$dir/metrics/round=3"))
+    Scratch.deleteRecursively(new java.io.File(s"$dir/audit/round=3"))
+    Scratch.deleteRecursively(new java.io.File(s"$dir/lineage/round=3"))
     val res3 = ValidationRun.run(spark, cfg)
     assert(res3.metrics.size == 3, "partial round must be re-run, not skipped")
     assert(res3.metrics.map(_.truePositiveRate) == tprs)
@@ -92,7 +93,7 @@ class PipelineSpec extends AnyFunSuite {
 
   test("10-round loop matches the reference harness iteration count (testScript.py:29)") {
     val dir = "target/graft-test-loop10"
-    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    Scratch.deleteRecursively(new java.io.File(dir))
     val res = ValidationRun.run(spark,
       ValidationRun.RunConfig(n = 400L, rounds = 10, outDir = dir))
     assert(res.metrics.size == 10)
@@ -108,7 +109,7 @@ class PipelineSpec extends AnyFunSuite {
   test("loop outputs do not depend on the partition layout; lineage totals match") {
     def runAt(parts: Int) = {
       val dir = s"target/graft-test-loop-parts$parts"
-      PipelineLoop.deleteRecursively(new java.io.File(dir))
+      Scratch.deleteRecursively(new java.io.File(dir))
       val res = ValidationRun.run(spark,
         ValidationRun.RunConfig(n = 400L, rounds = 3, outDir = dir, parts = parts))
       val decisions = res.decisions.orderBy("image_id").collect().toSeq

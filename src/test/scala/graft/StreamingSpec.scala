@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.engine.Scratch
 import graft.streaming.StreamScore
 import graft.synth.{GenConfig, ImageGen}
 
@@ -12,7 +13,7 @@ class StreamingSpec extends AnyFunSuite {
   val dir = "target/graft-stream-in"
 
   def writeShard(): Unit = {
-    PipelineLoop.deleteRecursively(new java.io.File(dir))
+    Scratch.deleteRecursively(new java.io.File(dir))
     ImageGen.images(spark, GenConfig(n = 500L, parts = 4))
       .withColumn("ts", timestamp_millis(lit(1700000000000L) +
         substring(col("image_id"), 4, 9).cast("long") * 1000))
@@ -103,7 +104,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(out.length == 500, s"expected 500 rows exactly-once, got ${out.length}")
     assert(out.distinct.length == 500)
     Seq(inDir, outDir, chkDir).foreach(d =>
-      PipelineLoop.deleteRecursively(new java.io.File(d)))
+      Scratch.deleteRecursively(new java.io.File(d)))
   }
 
   test("stateful first-seen phash dedup across micro-batches") {
@@ -131,7 +132,7 @@ class StreamingSpec extends AnyFunSuite {
       s"target/graft-qf-stream-p${ProcessHandle.current().pid()}-shard")
     assert(shard.exists())
     // what a concurrent process's stale-shard sweep does
-    PipelineLoop.deleteRecursively(shard)
+    Scratch.deleteRecursively(shard)
     assert(query(spark, "").collect().toSeq == first)
   }
 }

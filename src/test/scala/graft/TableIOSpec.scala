@@ -1,7 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
-import graft.engine.TableIO
+import graft.engine.{Scratch, TableIO}
 
 /** S4/S5 seam: replace vs append semantics of the audit-table IO
   * (the reference's to_sql if_exists='replace' / append split,
@@ -12,7 +12,7 @@ class TableIOSpec extends AnyFunSuite {
 
   test("append accumulates batches; createOrReplace resets the table") {
     val dir = new java.io.File("target/graft-tableio-spec")
-    PipelineLoop.deleteRecursively(dir)
+    Scratch.deleteRecursively(dir)
     val path = dir.getAbsolutePath
     TableIO.createOrReplace(Seq((1L, "a"), (2L, "b")).toDF("id", "v"), path)
     TableIO.append(Seq((3L, "c")).toDF("id", "v"), path)
@@ -26,6 +26,6 @@ class TableIOSpec extends AnyFunSuite {
     val afterReplace = TableIO.read(spark, path)
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(afterReplace == Set((9L, "z")))
-    PipelineLoop.deleteRecursively(dir)
+    Scratch.deleteRecursively(dir)
   }
 }

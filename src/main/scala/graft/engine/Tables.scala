@@ -50,9 +50,9 @@ object TableIO {
   /** Bucketed catalog-table write: pre-shuffles ONCE at write time so
     * every later equi-join / aggregation on `key` between tables with
     * the same bucket count is EXCHANGE-FREE — the co-located-join
-    * pattern for the audit tables (statuses ⋈ scores ⋈ lineage join on
-    * image_id every round; at 10^12 rows, re-shuffling both sides per
-    * round is the dominant cost the bucketing amortizes away).
+    * pattern for tables joined repeatedly on one key (at 10^12 rows,
+    * re-shuffling both sides per join is the cost the bucketing
+    * amortizes away).
     * Catalog-managed because bucket metadata lives in the catalog —
     * same seam TableIO would point at Iceberg's hidden-partitioning
     * when the runtime jar is present. */

@@ -12,7 +12,8 @@ import org.apache.spark.sql.functions._
   *    suspicious∖known → `valid`, confirmed rows frozen;
   *  - the six counts the metric formulas consume, as named aggregates
   *    that ride whichever action the caller already runs (an
-  *    [[Observation]]), so a round spends no job of its own on them;
+  *    [[Observation]]), so a round spends no job of its own on them, or
+  *    that aggregate a checkpointed round's rows;
   *  - the [[Metrics.RunMetrics]] row built from those counts and the
   *    prior rounds' TPR history.
   */
@@ -82,11 +83,11 @@ object OracleRound {
       n(afNew && !isKnown).as("afMinusE"))
   }
 
-  /** Read [[countColumns]] off an observation whose carrying action has
-    * run. A sum over no rows reads as 0. */
-  def counts(obs: Observation): Counts = {
-    val c = observed(obs)
-    def n(name: String) = c(name).asInstanceOf[Long]
+  /** Read [[countColumns]] off their values by name: an [[observed]]
+    * Observation's, or a row aggregated from checkpointed rounds. A sum
+    * over no rows (null) reads as 0. */
+  def counts(values: Map[String, Any]): Counts = {
+    def n(name: String) = values(name).asInstanceOf[Long]
     Counts(n("faulty"), n("eInterA"), n("afNew"), n("afOld"), n("afOldMinusNew"),
       n("afMinusE"))
   }

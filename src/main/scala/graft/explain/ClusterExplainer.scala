@@ -66,23 +66,19 @@ object ClusterExplainer {
         array(scoreCols.map(c => col(c).cast("double")): _*)).as("features")): _*)
       .cache()
     val sample = fitSample(assembled, Seq("image_id"), maxFit).cache()
-    val n = sample.count()
-    if (n == 0) {
-      assembled.unpersist()
-      return faulty.select((keep.map(col) :+ lit(0).as("cluster_id")): _*).limit(0)
-    }
-    val kk = math.min(k.toLong, n).toInt
-    val model = new KMeans().setK(kk).setSeed(seed).setMaxIter(10)
-      .fit(sample)
-    sample.unpersist()
-    val out = model.transform(assembled)
-      .select((keep.map(col) :+ col("prediction").as("cluster_id")): _*)
-    // the cache served the sample count + KMeans fit; release it before
-    // returning (unpersist is lazy-safe — the caller's first action on
-    // `out` recomputes the cheap row→vector map once) so repeated calls
-    // in one session don't pin one faulty-frame copy each
-    assembled.unpersist()
-    out
+    // the caches serve the sample count + KMeans fit; release them on
+    // every exit (unpersist is lazy-safe — the caller's first action on
+    // the result recomputes the cheap row→vector map once) so repeated
+    // calls in one session don't pin one faulty-frame copy each
+    val model =
+      try {
+        val n = sample.count()
+        if (n == 0) None
+        else Some(new KMeans().setK(math.min(k.toLong, n).toInt).setSeed(seed).setMaxIter(10)
+          .fit(sample))
+      } finally { sample.unpersist(); assembled.unpersist() }
+    model.fold(faulty.select((keep.map(col) :+ lit(0).as("cluster_id")): _*).limit(0))(
+      _.transform(assembled).select((keep.map(col) :+ col("prediction").as("cluster_id")): _*))
   }
 
   /** Faulty-attribute selection (M12): score columns whose cluster mean
@@ -249,14 +245,16 @@ object ClusterExplainer {
       seed: Long = 42L,
       maxFit: Int = 10000): Int = {
     val assembled = boundedVectors(faulty, scoreCols, scoreCols, maxFit).cache()
-    val n = assembled.count()
-    val candidates = ks.filter(k => k >= 2 && k <= n).sorted
-    require(candidates.nonEmpty, "need at least one candidate k in [2, n]")
-    val costs = candidates.map { k =>
-      val m = new KMeans().setK(k).setSeed(seed).setMaxIter(10).fit(assembled)
-      k -> m.summary.trainingCost
-    }
-    assembled.unpersist()
+    val costs =
+      try {
+        val n = assembled.count()
+        val candidates = ks.filter(k => k >= 2 && k <= n).sorted
+        require(candidates.nonEmpty, "need at least one candidate k in [2, n]")
+        candidates.map { k =>
+          val m = new KMeans().setK(k).setSeed(seed).setMaxIter(10).fit(assembled)
+          k -> m.summary.trainingCost
+        }
+      } finally assembled.unpersist()
     var best = costs.head
     costs.tail.foreach { case (k, c) =>
       if (c < 0.9 * best._2) best = (k, c)

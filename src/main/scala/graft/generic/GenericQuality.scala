@@ -199,7 +199,8 @@ object GenericQuality {
         .observe(obs, OracleRound.countColumns.head, OracleRound.countColumns.tail: _*)
         .select(col(idCol), col("status_new").as("status"))
         .localCheckpoint(true)
-      results += RoundResult(t, OracleRound.metrics(r, OracleRound.counts(obs), knownCount,
+      results += RoundResult(t, OracleRound.metrics(r,
+        OracleRound.counts(OracleRound.observed(obs)), knownCount,
         results.map(_.metrics.truePositiveRate).toSeq))
     }
     // final decisions from the final-state model (refit on the last

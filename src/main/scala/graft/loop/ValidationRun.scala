@@ -20,8 +20,10 @@ import graft.synth.{GenConfig, ImageGen}
   * Statuses live in an append-only audit table keyed by round (never
   * per-row UPDATEs — the reference's O(n) UPDATE loop at
   * DQTestToolHelper.py:161-162 becomes one columnar write per round).
-  * The audit table is the round's status checkpoint (`image_id`,
-  * `status_new`); each round also writes its metrics row, threshold and
+  * The audit table (`image_id`, `is_susp`, `is_known`, `status_old`,
+  * `status_new`, `run`, `threshold`) is the round's one checkpoint: its
+  * `status_new` is the next round's status, and the metrics row and
+  * threshold are derived from it. Each round also writes its
   * per-partition lineage, and a re-run with the same outDir resumes
   * after the last completed round (north-rule checkpointed resume).
   *
@@ -49,39 +51,41 @@ object ValidationRun {
   final case class RunResult(
       decisions: DataFrame,
       metrics: Seq[Metrics.RunMetrics],
-      thresholds: Seq[Double],
-      completedRounds: Int)
+      thresholds: Seq[Double])
 
-  private def metricsPath(cfg: RunConfig, r: Int) = s"${cfg.outDir}/metrics/round=$r"
   private def lineagePath(cfg: RunConfig, r: Int) = s"${cfg.outDir}/lineage/round=$r"
   private def auditPath(cfg: RunConfig, r: Int) = s"${cfg.outDir}/audit/round=$r"
-  private def thresholdPath(cfg: RunConfig, r: Int) = s"${cfg.outDir}/thresholds/round=$r"
 
-  /** A round is resumable only when EVERY artifact it writes exists —
-    * the audit table is written first, so a crash after it but before
-    * the metrics, thresholds or lineage writes must RE-RUN the round (all
-    * writes are overwrite-idempotent), not skip it: skipping would leave
-    * a permanent per-round hole that silently shortens the TPR history
-    * every later round's TPGR is computed over. */
+  /** A round is resumable only when both tables it writes exist — the
+    * audit table is written first, so a crash after it but before the
+    * lineage write must RE-RUN the round (both writes are
+    * overwrite-idempotent), not skip it. */
   private def roundComplete(spark: SparkSession, cfg: RunConfig, r: Int): Boolean =
-    Seq(auditPath(cfg, r), metricsPath(cfg, r), lineagePath(cfg, r), thresholdPath(cfg, r))
-      .forall(TableIO.exists(spark, _))
+    Seq(auditPath(cfg, r), lineagePath(cfg, r)).forall(TableIO.exists(spark, _))
 
   /** Round `r`'s statuses, read back from its audit checkpoint. */
   private def checkpointedStatuses(spark: SparkSession, cfg: RunConfig, r: Int): DataFrame =
     TableIO.read(spark, auditPath(cfg, r)).select(col("image_id"), col("status_new").as("status"))
 
-  /** Rounds 1..`upTo` of a `round=*`-partitioned history in ONE read,
-    * sorted by the `round` partition column; later (possibly partial)
-    * rounds are not read. Schemas merge across rounds. One partition, so
-    * the sort needs no range-sampling job. */
-  private def history(spark: SparkSession, cfg: RunConfig, name: String, upTo: Int): DataFrame =
-    spark.read.option("mergeSchema", "true").option("basePath", s"${cfg.outDir}/$name")
-      .parquet((1 to upTo).map(r => s"${cfg.outDir}/$name/round=$r"): _*)
-      .coalesce(1).orderBy("round")
+  /** The threshold and [[OracleRound.Counts]] of rounds 1..`upTo`, in
+    * round order, from ONE aggregation over their audit checkpoints
+    * (`status_old` is the counts' input `status`). The read's schema is
+    * given, so it infers none; it stops before the first round without a
+    * threshold (an audit table written before the column existed), which
+    * re-runs with every round after it. */
+  private[graft] def checkpointedRounds(spark: SparkSession, cfg: RunConfig, upTo: Int)
+      : Seq[(Double, OracleRound.Counts)] =
+    spark.read.schema("run INT, threshold DOUBLE, is_susp BOOLEAN, is_known BOOLEAN, " +
+        "status_old STRING, status_new STRING")
+      .parquet((1 to upTo).map(auditPath(cfg, _)): _*)
+      .withColumnRenamed("status_old", "status")
+      .groupBy("run").agg(first("threshold").as("threshold"), OracleRound.countColumns: _*)
+      .collect().sortBy(_.getInt(0)).toSeq
+      .takeWhile(!_.isNullAt(1))
+      .map(row =>
+        row.getDouble(1) -> OracleRound.counts(row.getValuesMap(row.schema.fieldNames.toSeq)))
 
   def run(spark: SparkSession, cfg: RunConfig): RunResult = {
-    import spark.implicits._
     val gen = GenConfig(cfg.n, cfg.seed, cfg.faultPct,
       parts = if (cfg.parts > 0) cfg.parts else GenConfig.adaptiveParts(cfg.n))
     val images = ImageGen.images(spark, gen).cache()
@@ -124,33 +128,28 @@ object ValidationRun {
         Some(OracleRound.labelOffset(col("status"))))
     }
 
-    // Resume: last round whose checkpoints ALL completed (see
-    // roundComplete — a partially-written round re-runs).
-    val resumeFrom = (1 to cfg.rounds)
-      .takeWhile(r => roundComplete(spark, cfg, r)).lastOption.getOrElse(0)
+    // A round's threshold and its metrics row, whose TPGR spans every
+    // prior round's TPR.
+    val metricsHist = scala.collection.mutable.ArrayBuffer.empty[Metrics.RunMetrics]
+    val thresholds = scala.collection.mutable.ArrayBuffer.empty[Double]
+    def record(t: Double, c: OracleRound.Counts): Unit = {
+      thresholds += t
+      metricsHist += OracleRound.metrics(thresholds.length, c, knownCount,
+        metricsHist.map(_.truePositiveRate).toSeq)
+    }
+
+    // Resume after the last completed round (see roundComplete — a
+    // partially-written round re-runs); the completed rounds' thresholds
+    // and metrics are rebuilt from their audit tables.
+    (1 to cfg.rounds).takeWhile(roundComplete(spark, cfg, _)).lastOption
+      .foreach(checkpointedRounds(spark, cfg, _).foreach { case (t, c) => record(t, c) })
+    val resumeFrom = thresholds.length
     // A complete resume runs no round: its one read of the last
     // checkpoint is finalState's below.
     var state =
       if (resumeFrom == 0) raw.withColumn("status", lit(OracleRound.Clean))
       else if (resumeFrom < cfg.rounds) stateAt(resumeFrom)
       else null
-
-    val metricsHist = scala.collection.mutable.ArrayBuffer.empty[Metrics.RunMetrics]
-    val thresholds = scala.collection.mutable.ArrayBuffer.empty[Double]
-    // Reload prior rounds' metrics AND thresholds so TPGR spans the full
-    // history on resume and RunResult.thresholds stays aligned 1:1 with
-    // RunResult.metrics. Rounds written before the tpgr column existed
-    // stay resumable: the missing value reads as 0.0 (TPGR of a one-run
-    // history) instead of failing the whole resume on AnalysisException.
-    // roundComplete guarantees both paths exist for every resumed round.
-    if (resumeFrom > 0) {
-      val m = history(spark, cfg, "metrics", resumeFrom)
-      metricsHist ++= m.withColumn("tpgr",
-        if (m.columns.contains("tpgr")) coalesce(col("tpgr"), lit(0.0)) else lit(0.0))
-        .as[Metrics.RunMetrics].collect()
-      thresholds ++= history(spark, cfg, "thresholds", resumeFrom)
-        .select("threshold").as[Double].collect()
-    }
 
     val n = cfg.n
     // Previous round's flagged frame: kept cached until the NEXT round's
@@ -160,7 +159,6 @@ object ValidationRun {
     for (r <- (resumeFrom + 1) to cfg.rounds) {
       val st = scoreRound(state)
       val (t, _) = Thresholds.discover(st, "invalidity_score", "status", knownCount, n)
-      thresholds += t
 
       // One flagged frame carries everything the round needs: suspicious
       // flag, oracle membership, old + new status.
@@ -170,50 +168,31 @@ object ValidationRun {
       // and collects the round's counts: an Observation rides the audit
       // write. At loop sizes the cost is job count, not data. The audit
       // table carries exactly the per-row facts the metric formulas
-      // consume — (is_susp, is_known, status_old, status_new) — so an
-      // independent engine (the DuckDB oracle) can recompute every
-      // TPR/FNR/PD/ND/UD/TPGR value from it, and its status_new column
-      // is the round's status checkpoint.
+      // consume — (is_susp, is_known, status_old, status_new) — plus the
+      // round's threshold, so an independent engine (the DuckDB oracle)
+      // can recompute every TPR/FNR/PD/ND/UD/TPGR value from it and a
+      // resume rebuilds the round's metrics row and threshold from it.
       val obs = org.apache.spark.sql.Observation(s"round_$r")
       TableIO.createOrReplace(
         flagged.observe(obs, OracleRound.countColumns.head, OracleRound.countColumns.tail: _*)
           .select(col("image_id"), col("is_susp"), col("is_known"),
-            col("status").as("status_old"), col("status_new"), lit(r).as("run")),
+            col("status").as("status_old"), col("status_new"), lit(r).as("run"),
+            lit(t).as("threshold")),
         auditPath(cfg, r))
-      val m = OracleRound.metrics(r, OracleRound.counts(obs), knownCount,
-        metricsHist.map(_.truePositiveRate).toSeq)
-      metricsHist += m
+      record(t, OracleRound.counts(OracleRound.observed(obs)))
 
-      // Remaining checkpoints: metrics row + threshold + per-partition
-      // lineage. They are mutually independent reads of the materialized
-      // cache, so they run as CONCURRENT Spark actions; a round's wall
-      // cost is one write latency, not three. roundComplete requires all
-      // of them to exist.
-      locally {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        val writes = Seq(
-          Future(TableIO.createOrReplace(Seq(m).toDF(), metricsPath(cfg, r))),
-          // threshold checkpoint (own tiny file, NOT a new metrics
-          // column — the qf_metrics_loop oracle fixture's schema stays
-          // frozen); read back on resume so thresholds align with
-          // metrics
-          Future(TableIO.createOrReplace(
-            Seq((r, t)).toDF("run", "threshold"), thresholdPath(cfg, r))),
-          Future {
-            val lineage = flagged
-              .withColumn("pid", spark_partition_id())
-              .groupBy(col("pid").as("partition_id"))
-              .agg(count(lit(1)).as("rows_in"),
-                sum(when(col("is_susp"), 1L).otherwise(0L)).as("rows_dropped"))
-              .withColumn("rows_kept", col("rows_in") - col("rows_dropped"))
-              .withColumn("run_id", lit(r))
-              .withColumn("completed_at", current_timestamp())
-            TableIO.createOrReplace(lineage, lineagePath(cfg, r))
-          })
-        Await.result(Future.sequence(writes),
-          scala.concurrent.duration.Duration(600, "s")): Unit
-      }
+      // Per-partition lineage of the materialized cache; roundComplete
+      // requires it next to the audit table.
+      TableIO.createOrReplace(
+        flagged
+          .withColumn("pid", spark_partition_id())
+          .groupBy(col("pid").as("partition_id"))
+          .agg(count(lit(1)).as("rows_in"),
+            sum(when(col("is_susp"), 1L).otherwise(0L)).as("rows_dropped"))
+          .withColumn("rows_kept", col("rows_in") - col("rows_dropped"))
+          .withColumn("run_id", lit(r))
+          .withColumn("completed_at", current_timestamp()),
+        lineagePath(cfg, r))
 
       // Next round reads its state straight off the cached frame (its new
       // status is the status column of the audit table just written) — no
@@ -251,8 +230,7 @@ object ValidationRun {
     val decisions = Scorer.withDecision(finalScored, tFinal)
       .select("image_id", "decision", "invalidity_score", "scores",
         "scrubbed_caption", "status")
-    RunResult(decisions, metricsHist.toSeq, thresholds.toSeq,
-      cfg.rounds)
+    RunResult(decisions, metricsHist.toSeq, thresholds.toSeq)
   }
 
   def flagship(spark: SparkSession): DataFrame =

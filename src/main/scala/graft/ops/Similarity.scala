@@ -136,25 +136,30 @@ object Similarity {
       .join(broadcast(queries), Seq("query_id")), k)
   }
 
-  /** Nearest centroid index by maximum adjusted dot product
-    * (argmin ||v−c||² = argmax c·v − ||c||²/2) — scalar helper behind
-    * the native [[org.apache.spark.sql.graft.Exprs.nearestCentroid]]
-    * column. `halfNorms(i)` must be ||centroids(i)||²/2. Same
-    * prefix-dot contract as [[signatureOf]]: a vector whose length
-    * differs from the centroid dimension scores on the common prefix
-    * (deterministic, never crashing; recall degrades if systematic). */
+  /** Adjusted dot product c·v − ||c||²/2 of `vec` with centroid `c`
+    * (`halfNorm` = ||c||²/2), whose maximum over the centroids is the
+    * nearest one (argmin ||v−c||²). Same prefix-dot contract as
+    * [[signatureOf]]: a vector whose length differs from the centroid
+    * dimension scores on the common prefix (deterministic, never
+    * crashing; recall degrades if systematic). */
+  def centroidScore(vec: Array[Float], c: Array[Double], halfNorm: Double): Double = {
+    var s = 0.0
+    var d = 0
+    val n = math.min(c.length, vec.length)
+    while (d < n) { s += c(d) * vec(d); d += 1 }
+    s - halfNorm
+  }
+
+  /** Nearest centroid index by maximum [[centroidScore]] — scalar helper
+    * behind the native [[org.apache.spark.sql.graft.Exprs.nearestCentroid]]
+    * column. `halfNorms(i)` must be ||centroids(i)||²/2. */
   def nearestCentroid(vec: Array[Float], centroids: Array[Array[Double]],
       halfNorms: Array[Double]): Int = {
     var best = 0
     var bestScore = Double.NegativeInfinity
     var i = 0
     while (i < centroids.length) {
-      val c = centroids(i)
-      var s = 0.0
-      var d = 0
-      val n = math.min(c.length, vec.length)
-      while (d < n) { s += c(d) * vec(d); d += 1 }
-      s -= halfNorms(i)
+      val s = centroidScore(vec, centroids(i), halfNorms(i))
       if (s > bestScore) { bestScore = s; best = i }
       i += 1
     }
@@ -205,14 +210,16 @@ object Similarity {
       .select(org.apache.spark.ml.functions.array_to_vector(
         col("embedding")).as("features"))
       .cache()
-    val n = sample.count()
-    require(n > 0, "ivfTopK: no non-null embeddings to fit the coarse quantizer on")
-    // clamp by the SAMPLE size too: k above the point count makes MLlib
-    // KMeans throw on degenerate (single-row) corpora
-    val kk = math.max(1, math.min(nlist.toLong, n).toInt)
-    val km = new org.apache.spark.ml.clustering.KMeans()
-      .setK(kk).setSeed(seed).setMaxIter(10).fit(sample)
-    sample.unpersist()
+    val km =
+      try {
+        val n = sample.count()
+        require(n > 0, "ivfTopK: no non-null embeddings to fit the coarse quantizer on")
+        // clamp by the SAMPLE size too: k above the point count makes
+        // MLlib KMeans throw on degenerate (single-row) corpora
+        val kk = math.max(1, math.min(nlist.toLong, n).toInt)
+        new org.apache.spark.ml.clustering.KMeans()
+          .setK(kk).setSeed(seed).setMaxIter(10).fit(sample)
+      } finally sample.unpersist()
     val centroids = km.clusterCenters.map(_.toArray)
     val halfNorms = centroids.map(c => c.map(x => x * x).sum / 2.0)
     // 2. partition-parallel assignment, native expression
@@ -232,14 +239,7 @@ object Similarity {
         "assign lists with Exprs.nearestCentroid and join distributively")
     val probeRows = qRows.flatMap { r =>
       val q = r.getSeq[Float](1).toArray
-      val scored = centroids.indices.map { i =>
-        var s = 0.0
-        val c = centroids(i)
-        val m = math.min(c.length, q.length)
-        var d = 0
-        while (d < m) { s += c(d) * q(d); d += 1 }
-        i -> (s - halfNorms(i))
-      }
+      val scored = centroids.indices.map(i => i -> centroidScore(q, centroids(i), halfNorms(i)))
       scored.sortBy(-_._2).take(math.min(nprobe, centroids.length))
         .map { case (list, _) => (r.get(0), list) }
     }

@@ -144,33 +144,39 @@ class CheckpointSpec extends AnyFunSuite {
     to
   }
 
-  test("a round whose audit table is written but whose metrics are missing re-runs") {
+  test("a round whose audit table is written but whose lineage is missing re-runs") {
     val dir = copyOfLoop("crash")
-    Scratch.deleteRecursively(new java.io.File(s"$dir/metrics/round=3"))
+    Scratch.deleteRecursively(new java.io.File(s"$dir/lineage/round=3"))
     assert(TableIO.exists(spark, s"$dir/audit/round=3"))
     val res = ValidationRun.run(spark, loopCfg(dir))
     assert(res.metrics == fresh.metrics)
     assert(res.thresholds == fresh.thresholds)
-    assert(TableIO.exists(spark, s"$dir/metrics/round=3"))
+    assert(decisionRows(res) == decisionRows(fresh))
+    assert(TableIO.exists(spark, s"$dir/lineage/round=3"))
   }
 
-  test("metrics rounds written without tpgr resume with tpgr 0.0 next to a stored tpgr") {
-    val dir = copyOfLoop("tpgr")
-    def rewrite(r: Int)(f: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame): Unit = {
-      val path = s"$dir/metrics/round=$r"
-      val df = f(TableIO.read(spark, path))
+  test("an outDir written before audit tables carried the threshold re-runs every round") {
+    import spark.implicits._
+    val dir = copyOfLoop("parent")
+    // the older layout: audit tables without `threshold`, next to the
+    // metrics/ and thresholds/ tables it also wrote (values that would
+    // show if they were read)
+    (1 to 3).foreach { r =>
+      val path = s"$dir/audit/round=$r"
+      val df = TableIO.read(spark, path).drop("threshold")
       val local = spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
       TableIO.createOrReplace(local, path)
+      TableIO.createOrReplace(Seq(fresh.metrics(r - 1).copy(truePositiveRate = -1.0)).toDF(),
+        s"$dir/metrics/round=$r")
+      TableIO.createOrReplace(Seq((r, -1.0)).toDF("run", "threshold"), s"$dir/thresholds/round=$r")
     }
-    rewrite(1)(_.drop("tpgr"))
-    rewrite(2)(_.drop("tpgr"))
-    // a stored value that can be told apart from both 0.0 and the fresh one
-    val stored = fresh.metrics(2).tpgr + 0.5
-    rewrite(3)(_.withColumn("tpgr", lit(stored)))
     val res = ValidationRun.run(spark, loopCfg(dir))
-    assert(res.metrics.map(_.tpgr) == Seq(0.0, 0.0, stored))
-    assert(res.metrics.map(_.copy(tpgr = 0.0)) == fresh.metrics.map(_.copy(tpgr = 0.0)))
+    assert(res.metrics == fresh.metrics)
     assert(res.thresholds == fresh.thresholds)
+    assert(decisionRows(res) == decisionRows(fresh))
+    assert(TableIO.read(spark, s"$dir/audit").select("run", "threshold").distinct()
+      .collect().map(r => r.getInt(0) -> r.getDouble(1)).sorted.toSeq ==
+      fresh.thresholds.zipWithIndex.map { case (t, i) => (i + 1) -> t })
   }
 
   test("a complete resume reads its last audit checkpoint once") {

@@ -87,6 +87,20 @@ class ExplainSpec extends AnyFunSuite {
     assert(CacheProbe.entries(spark) == before)
   }
 
+  test("explain and bestK release their caches on their early exits") {
+    import org.apache.spark.sql.graft.CacheProbe
+    val scored = PipelineCache.scored(spark, 2000L)
+    val above = scored.agg(max("invalidity_score")).head().getDouble(0) + 1.0
+    val before = CacheProbe.entries(spark)
+    // no row passes the faulty threshold: the k-means sample is empty
+    assert(ClusterExplainer.explain(scored, PipelineCache.scoreNames, above, 0.5).count() == 0)
+    assert(CacheProbe.entries(spark) == before)
+    // no candidate k fits the sample
+    intercept[IllegalArgumentException](
+      ClusterExplainer.bestK(scored.limit(3), PipelineCache.scoreNames, Seq(4, 5)))
+    assert(CacheProbe.entries(spark) == before)
+  }
+
   test("structured rules partition the labeled rows; verdicts follow the majority") {
     val scored = PipelineCache.scored(spark, 2000L).withColumn("status", lit("clean"))
     val knownCount = graft.synth.ImageGen.knownFaults(spark, PipelineCache.genCfg(2000L)).count()

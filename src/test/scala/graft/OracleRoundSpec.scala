@@ -47,7 +47,7 @@ class OracleRoundSpec extends AnyFunSuite {
     val obs = Observation("oracle_round_spec")
     flagged.observe(obs, OracleRound.countColumns.head, OracleRound.countColumns.tail: _*)
       .collect(): Unit
-    assert(OracleRound.counts(obs) == OracleRound.Counts(
+    assert(OracleRound.counts(OracleRound.observed(obs)) == OracleRound.Counts(
       faulty = 6, eInterA = 3, afNew = 6, afOld = 4, afOldMinusNew = 0, afMinusE = 2))
   }
 
@@ -93,5 +93,31 @@ class OracleRoundSpec extends AnyFunSuite {
         tpgr = Metrics.truePositiveGrowthRate(tprs.take(i + 1))))
     }
     assert(hist.map(_.tpgr).distinct.size == 3, hist.map(_.tpgr).toString)
+  }
+
+  test("counts aggregated from the loop's audit rows equal its Observation's counts") {
+    val fresh = PipelineLoop.cachedLoop(spark)
+    val cfg = graft.loop.ValidationRun.RunConfig(outDir = PipelineLoop.loopDir)
+    val rounds = graft.loop.ValidationRun.checkpointedRounds(spark, cfg, upTo = 3)
+    assert(rounds.map(_._1) == fresh.thresholds)
+    // the loop's Observation rides the audit write, so an Observation on
+    // the audit rows sees the rows it saw
+    rounds.zipWithIndex.foreach { case ((_, c), i) =>
+      val obs = Observation(s"audit_round_${i + 1}")
+      graft.engine.TableIO.read(spark, s"${PipelineLoop.loopDir}/audit/round=${i + 1}")
+        .withColumnRenamed("status_old", "status")
+        .observe(obs, OracleRound.countColumns.head, OracleRound.countColumns.tail: _*)
+        .collect(): Unit
+      assert(c == OracleRound.counts(OracleRound.observed(obs)), s"round ${i + 1}")
+    }
+    // and the metrics rows built from the aggregated counts are the ones
+    // the loop built from its Observations, bit for bit
+    val knownCount = graft.synth.ImageGen.knownFaults(spark,
+      graft.synth.GenConfig(1000L, parts = graft.synth.GenConfig.adaptiveParts(1000L))).count()
+    val hist = rounds.zipWithIndex.foldLeft(Seq.empty[Metrics.RunMetrics]) {
+      case (prior, ((_, c), i)) =>
+        prior :+ OracleRound.metrics(i + 1, c, knownCount, prior.map(_.truePositiveRate))
+    }
+    assert(hist == fresh.metrics)
   }
 }

@@ -77,17 +77,15 @@ class PipelineSpec extends AnyFunSuite {
       s"resumed thresholds ${res2.thresholds} != ${res.thresholds}")
     // decisions still produced after a fully-resumed run
     assert(res2.decisions.count() == 1000L)
-    // crash-window resume: a round whose metrics/audit/lineage are
-    // missing (JVM died mid-round) must RE-RUN, not leave a permanent
-    // hole in the metrics history
-    Scratch.deleteRecursively(new java.io.File(s"$dir/metrics/round=3"))
+    // crash-window resume: a round whose audit/lineage are missing (JVM
+    // died mid-round) must RE-RUN, not leave a permanent hole in the
+    // metrics history
     Scratch.deleteRecursively(new java.io.File(s"$dir/audit/round=3"))
     Scratch.deleteRecursively(new java.io.File(s"$dir/lineage/round=3"))
     val res3 = ValidationRun.run(spark, cfg)
     assert(res3.metrics.size == 3, "partial round must be re-run, not skipped")
     assert(res3.metrics.map(_.truePositiveRate) == tprs)
     assert(res3.thresholds == res.thresholds)
-    assert(new java.io.File(s"$dir/metrics/round=3").exists())
     assert(new java.io.File(s"$dir/audit/round=3").exists())
   }
 

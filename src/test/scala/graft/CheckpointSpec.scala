@@ -155,7 +155,7 @@ class CheckpointSpec extends AnyFunSuite {
     assert(TableIO.exists(spark, s"$dir/lineage/round=3"))
   }
 
-  test("an outDir written before audit tables carried the threshold re-runs every round") {
+  test("an outDir whose audit tables lack the threshold re-runs every round") {
     import spark.implicits._
     val dir = copyOfLoop("parent")
     // the older layout: audit tables without `threshold`, next to the

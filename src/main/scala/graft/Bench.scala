@@ -170,8 +170,7 @@ object Bench {
     dupDrop.count() // discovery output materialized inside the fit phase
     val scoredForDiscovery = Scorer.withScores(images, models, dupDrop)
       .select(col("invalidity_score")).withColumn("status", lit("clean"))
-    // n is known here — the 4-arg discover overload would spend a whole
-    // extra job on a count()
+    // n is known here, so discover spends no extra count() job
     val (t, _) = Thresholds.discover(
       scoredForDiscovery, "invalidity_score", "status", known, n)
     val t1 = System.nanoTime()

@@ -50,8 +50,9 @@ object PipelineCache {
     cached(s"threshold/$n") {
       val withStatus = scored(spark, n).withColumn("status", lit("clean"))
       val knownCount = ImageGen.knownFaults(spark, genCfg(n)).count()
+      // the scored frame holds exactly n rows: dropIds is distinct per id
       graft.discovery.Thresholds.discover(
-        withStatus, "invalidity_score", "status", knownCount)
+        withStatus, "invalidity_score", "status", knownCount, n)
     }
 
   def decisions(spark: SparkSession, n: Long): DataFrame =
@@ -326,15 +327,12 @@ object PipelineQueries {
       val scored = PipelineCache.scored(s, N)
       val (t, _) = PipelineCache.thresholdMedian(s, N)
       // fit from the written fixture so the codebook is a pure function
-      // of the bytes the oracle reads (parquet doubles are exact anyway);
-      // sampling policy = the repo-wide ClusterExplainer.fitSample
+      // of the bytes the oracle reads (parquet doubles are exact anyway),
+      // by the same bounded fit as SomClustering.clusterFaulty
       val feats = somFeatures.writeRead(scored.filter(col("invalidity_score") >= t)
         .select((col("image_id") +:
           PipelineCache.scoreNames.map(c => col(c).cast("double").as(c))): _*))
-      val sample = graft.explain.ClusterExplainer.fitSample(
-          feats, Seq("image_id"), graft.explain.SomClustering.DefaultMaxFit)
-        .select(PipelineCache.scoreNames.map(col): _*)
-      val model = graft.explain.SomClustering.fit(sample, PipelineCache.scoreNames)
+      val model = graft.explain.SomClustering.fitBounded(feats, PipelineCache.scoreNames)
       val schema = org.apache.spark.sql.types.StructType(
         org.apache.spark.sql.types.StructField("unit",
           org.apache.spark.sql.types.IntegerType, nullable = false) +:

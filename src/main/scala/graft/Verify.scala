@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -17,28 +16,7 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // reap tmpfs scratch leaked by dead JVMs (resident RAM otherwise)
     graft.engine.Scratch.cleanupOrphans(): Unit
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      // see Bench.session: avoid the ICU case-mapping class-init stall
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // Disable RPC-backed session-artifact classloader: janino codegen
-      // class-resolution misses otherwise round-trip the driver file
-      // server per identifier (observed 40s+ stage compiles).
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // Shuffle scratch on tmpfs + single-file-per-mapper sort writer:
-      // the bypass-merge writer creates maps*reducers tiny files whose
-      // open/mmap latency on the virtio disk dominated small shuffles
-      // (observed 5s-41s variance on identical jobs). Per-process subdir
-      // so a killed JVM's leak is reapable (Scratch.cleanupOrphans).
-      .config("spark.local.dir", graft.engine.Scratch.localDir("verify"))
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.file.transferTo", "false")
-      .config("spark.io.compression.codec", "lz4")
-      .getOrCreate()
+    val spark = graft.engine.LocalSession.builder(cpus, "verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated query filter for targeted local runs

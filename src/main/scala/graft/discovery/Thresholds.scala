@@ -40,16 +40,9 @@ object Thresholds {
 
   /** One-pass grouped min/max per status class (replaces the reference's
     * four full scans, DQTestToolHelper.py:175-182) plus one percentile
-    * job; returns (faultyThreshold, normalThreshold=median). */
-  def discover(
-      scored: DataFrame,
-      scoreCol: String,
-      statusCol: String,
-      nKnownFaults: Long): (Double, Double) =
-    discover(scored, scoreCol, statusCol, nKnownFaults, scored.count())
-
-  /** Variant with the row count precomputed (the loop knows n once —
-    * saves one full-scan job per round).
+    * job; returns (faultyThreshold, normalThreshold=median). `n` is the
+    * row count of `scored`, which every caller already knows, so no
+    * count job is spent here.
     *
     * The percentile is `percentile_approx` (a mergeable KLL-style
     * sketch, accuracy 10000: partial-aggregated per partition, merged in

@@ -1,7 +1,8 @@
 package graft.explain
 
 import org.apache.spark.ml.classification.{GBTClassifier, RandomForestClassifier}
-import org.apache.spark.ml.clustering.KMeans
+import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.tree.{CategoricalSplit, ContinuousSplit, InternalNode, LeafNode, Node}
 import org.apache.spark.ml.tree.graft.LocalCart
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
@@ -20,24 +21,41 @@ import org.apache.spark.sql.functions._
   * ([[org.apache.spark.ml.tree.graft.LocalCart]]): every cluster's
   * training set is a bounded sample, and each map task forwards at most
   * that many of a cluster's rows to the shuffle, so all trees are built
-  * and fitted in one Spark job, each inside one task. The reference's
-  * k-means grid quirk (picking *max* MSE, H2oKmeans.py:28) is
+  * and fitted in one Spark job, each inside one task ([[groupTrees]]; a
+  * single tree is one group). Every other bounded fit takes its rows from
+  * [[fitSample]], and every KMeans fit runs through [[kmeansFits]]. The
+  * reference's k-means grid quirk (picking *max* MSE, H2oKmeans.py:28) is
   * deliberately NOT replicated (SURVEY.md §4).
   */
 object ClusterExplainer {
 
-  /** Deterministic bounded sample for iterative model fits: distributed
-    * top-k by id-hash (TakeOrdered — no full sort, no single-task scan),
-    * then ONE partition so the iterative MLlib jobs don't pay 32-task
-    * scheduling overhead per iteration. The FIT is bounded at any corpus
-    * size; assignment/transform stays partition-parallel over the full
-    * input. (The reference likewise clusters only the suspicious subset,
-    * DQTestToolHelper.py:251-256.) Shared by every bounded fit in the
-    * repo (KMeans here, the batch SOM, the SOM oracle fixture) so the
-    * sampling contract cannot drift between them. */
-  private[graft] def fitSample(assembled: DataFrame, hashCols: Seq[String], maxFit: Int): DataFrame =
-    assembled.orderBy(xxhash64(hashCols.map(col): _*))
-      .limit(maxFit).coalesce(1)
+  /** The sample of every bounded fit: the first `maxFit` rows by
+    * xxhash64 of `orderCols`, then by their values (a distributed top-k,
+    * TakeOrdered: no full sort, no single-task scan), in ONE partition so
+    * iterative fits pay no per-task scheduling per iteration. The value
+    * order breaks hash ties, so the sample and its row order, which
+    * MLlib's seeded samplers and the SOM consume, do not depend on the
+    * partition layout. Only the fit is bounded; assignment stays
+    * partition-parallel over the full input (the reference likewise
+    * clusters only the suspicious subset, DQTestToolHelper.py:251-256). */
+  private[graft] def fitSample(df: DataFrame, orderCols: Seq[String], maxFit: Int): DataFrame = {
+    val keys = orderCols.map(col)
+    df.orderBy((xxhash64(keys: _*) +: keys): _*).limit(maxFit).coalesce(1)
+  }
+
+  /** Every KMeans fit in the repo: caches `sample` (a `features` vector
+    * column), counts its n rows and fits one model per k of `ks(n)`, k
+    * clamped to [1, n], with `seed` and 10 iterations. The cache is
+    * released on every exit, including a `require` failing in `ks`. */
+  private[graft] def kmeansFits(sample: DataFrame, seed: Long)(
+      ks: Long => Seq[Int]): Seq[KMeansModel] = {
+    val cached = sample.cache()
+    try {
+      val n = cached.count()
+      ks(n).map(k => new KMeans().setK(math.max(1L, math.min(k.toLong, n)).toInt)
+        .setSeed(seed).setMaxIter(10).fit(cached))
+    } finally cached.unpersist()
+  }
 
   /** Assign cluster ids to faulty rows by k-means over score columns:
     * fit on a bounded deterministic sample, assign every row in parallel.
@@ -62,21 +80,9 @@ object ClusterExplainer {
     // vector assembly via the codegen'd array_to_vector: no per-row
     // object serde on the corpus-sized ASSIGNMENT pass
     val assembled = faulty.select((keep.map(col) :+
-      org.apache.spark.ml.functions.array_to_vector(
-        array(scoreCols.map(c => col(c).cast("double")): _*)).as("features")): _*)
-      .cache()
-    val sample = fitSample(assembled, Seq("image_id"), maxFit).cache()
-    // the caches serve the sample count + KMeans fit; release them on
-    // every exit (unpersist is lazy-safe — the caller's first action on
-    // the result recomputes the cheap row→vector map once) so repeated
-    // calls in one session don't pin one faulty-frame copy each
-    val model =
-      try {
-        val n = sample.count()
-        if (n == 0) None
-        else Some(new KMeans().setK(math.min(k.toLong, n).toInt).setSeed(seed).setMaxIter(10)
-          .fit(sample))
-      } finally { sample.unpersist(); assembled.unpersist() }
+      array_to_vector(array(scoreCols.map(c => col(c).cast("double")): _*)).as("features")): _*)
+    val model = kmeansFits(fitSample(assembled, Seq("image_id"), maxFit), seed)(
+      n => if (n == 0) Nil else Seq(k)).headOption
     model.fold(faulty.select((keep.map(col) :+ lit(0).as("cluster_id")): _*).limit(0))(
       _.transform(assembled).select((keep.map(col) :+ col("prediction").as("cluster_id")): _*))
   }
@@ -98,39 +104,19 @@ object ClusterExplainer {
     scoreCols.zip(vals).filter(_._2 > p70).map(_._1)
   }
 
-  /** Bounded assembled sample of `df` for the MLlib fits — same
-    * deterministic-sample policy as [[fitSample]], ordered by the hash of
-    * `orderCols` and then their VALUES, so equal-hash rows (identical
-    * score vectors are common) arrive in a deterministic sequence
-    * regardless of partition layout: MLlib's seeded samplers consume
-    * rows in order, and exact duplicates are interchangeable, so
-    * value-order ties pin the fit. Emits `features` (a vector of
-    * `featureCols`) plus the order columns that are not features. */
-  private def boundedVectors(
-      df: DataFrame,
-      featureCols: Seq[String],
-      orderCols: Seq[String],
-      maxFit: Int): DataFrame =
-    df.orderBy((xxhash64(orderCols.map(col): _*) +: orderCols.map(col)): _*)
-      .limit(maxFit)
-      // codegen'd array_to_vector: no object serde, row order preserved
-      .select((org.apache.spark.ml.functions.array_to_vector(
-        array(featureCols.map(col): _*)).as("features") +:
-        orderCols.diff(featureCols).map(col)): _*)
-      .coalesce(1)
-
-  /** Fit one tree model on the bounded assembled (features, label)
-    * sample of `labeled` and read the root of the tree `fit` returns as
+  /** Fit one MLlib tree model (the forest or GBT variant) on the
+    * bounded (features, label) sample of `labeled` — the [[fitSample]]
+    * of (features, label), features assembled by the codegen'd
+    * array_to_vector — and read the root of the tree `fit` returns as
     * [[TreeRule]]s. */
   private def fitTreeRules(labeled: DataFrame, featureCols: Seq[String], maxFit: Int)(
       fit: DataFrame => Node): Seq[TreeRule] = {
-    val assembled = boundedVectors(
-      labeled.select((featureCols.map(c => col(c).cast("double")) :+
-        col("label").cast("double").as("label")): _*),
-      featureCols, featureCols :+ "label", maxFit).cache()
-    val root = fit(assembled)
-    assembled.unpersist()
-    structuredRulesFrom(root, featureCols, Nil)
+    val assembled = fitSample(labeled.select((featureCols.map(c => col(c).cast("double")) :+
+        col("label").cast("double").as("label")): _*), featureCols :+ "label", maxFit)
+      .select(array_to_vector(array(featureCols.map(col): _*)).as("features"), col("label"))
+      .cache()
+    try structuredRulesFrom(fit(assembled), featureCols, Nil)
+    finally assembled.unpersist()
   }
 
   /** Train a tree on labeled (valid=0 / suspicious=1) rows and extract
@@ -144,19 +130,19 @@ object ClusterExplainer {
     treeStructuredRules(labeled, featureCols, maxDepth, seed, maxFit).map(_.render)
 
   /** [[treeRules]] returning structured [[TreeRule]]s (leaf order) for
-    * machine verification alongside the rendered strings. The bounded
-    * sample is collected and its tree fitted on the driver. */
+    * machine verification alongside the rendered strings: the tree of
+    * `labeled` as the one group of [[fitGroups]]. An input without a
+    * label-1 row gets MLlib's single `valid` leaf. */
   def treeStructuredRules(
       labeled: DataFrame,
       featureCols: Seq[String],
       maxDepth: Int = 5,
       seed: Long = 42L,
-      maxFit: Int = 20000): Seq[TreeRule] =
-    fitTreeRules(labeled, featureCols, maxFit) { a =>
-      val rows = a.collect()
-      LocalCart.fit(rows.map(_.getAs[org.apache.spark.ml.linalg.Vector](0).toArray),
-        rows.map(_.getDouble(1)), maxDepth, seed)
-    }
+      maxFit: Int = 20000): Seq[TreeRule] = {
+    val trees = fitGroups(labeled.withColumn("cluster_id", lit(0)), featureCols, maxDepth, seed, maxFit)
+    require(trees.nonEmpty, "a tree needs a non-empty training set")
+    trees.head._3
+  }
 
   /** The consecutive `cluster_id` (column 0) groups of a row stream sorted
     * by cluster, each cut to its first `maxFit` rows. */
@@ -173,21 +159,34 @@ object ClusterExplainer {
     }
   }
 
-  /** One tree per `cluster_id` group of `labeled` (featureCols ++ label)
-    * that has a label-1 row, all in ONE Spark job, as (cluster id, rules)
-    * sorted by cluster id. A group's training set is its first `maxFit`
-    * rows in [[boundedVectors]]' order — (xxhash64(features, label),
-    * features, label). Those rows are among the first `maxFit` of the
-    * group's share of each input partition, so every map task sorts its
-    * share and forwards only those; the groups are then hashed to
-    * partitions, sorted again and each tree is fitted inside the task that
-    * holds its group. */
+  /** [[fitGroups]]' trees of the groups that held a label-1 row, as
+    * (cluster id, rules) sorted by cluster id. */
   private[graft] def groupTrees(
       labeled: DataFrame,
       featureCols: Seq[String],
       maxDepth: Int,
       seed: Long,
-      maxFit: Int): Seq[(Int, Seq[TreeRule])] = {
+      maxFit: Int): Seq[(Int, Seq[TreeRule])] =
+    fitGroups(labeled, featureCols, maxDepth, seed, maxFit).collect {
+      case (cid, true, rules) => cid -> rules
+    }
+
+  /** One tree per `cluster_id` group of `labeled` (featureCols ++ label),
+    * all in ONE Spark job, as (cluster id, whether the group's training
+    * set held a label-1 row, rules) sorted by cluster id. A group's
+    * training set is its first `maxFit` rows in [[fitSample]]'s order of
+    * (features, label) — (xxhash64(features, label), features, label).
+    * Those rows are among the first `maxFit` of the group's share of each
+    * input partition, so every map task sorts its share and forwards only
+    * those; the groups are then hashed to partitions, sorted again and
+    * each tree is fitted inside the task that holds its group. Every
+    * local tree of the explain layer is fitted here. */
+  private def fitGroups(
+      labeled: DataFrame,
+      featureCols: Seq[String],
+      maxDepth: Int,
+      seed: Long,
+      maxFit: Int): Seq[(Int, Boolean, Seq[TreeRule])] = {
     val nf = featureCols.size
     val fs = featureCols.indices.map(i => col(s"_f$i"))
     val rows = labeled.select((col("cluster_id") +: featureCols.zipWithIndex.map { case (c, i) =>
@@ -198,10 +197,11 @@ object ClusterExplainer {
       .repartition(col("cluster_id"))
       .sortWithinPartitions(order: _*)
       .rdd.mapPartitions { it =>
-        firstRows(it, maxFit).collect { case (cid, group) if group.exists(_.getDouble(nf + 1) == 1.0) =>
+        firstRows(it, maxFit).map { case (cid, group) =>
+          val labels = group.map(_.getDouble(nf + 1)).toArray
           val root = LocalCart.fit(group.map(r => Array.tabulate(nf)(i => r.getDouble(1 + i))).toArray,
-            group.map(_.getDouble(nf + 1)).toArray, maxDepth, seed)
-          cid -> structuredRulesFrom(root, featureCols, Nil)
+            labels, maxDepth, seed)
+          (cid, labels.contains(1.0), structuredRulesFrom(root, featureCols, Nil))
         }
       }.collect().sortBy(_._1).toSeq
   }
@@ -244,17 +244,13 @@ object ClusterExplainer {
       ks: Seq[Int],
       seed: Long = 42L,
       maxFit: Int = 10000): Int = {
-    val assembled = boundedVectors(faulty, scoreCols, scoreCols, maxFit).cache()
-    val costs =
-      try {
-        val n = assembled.count()
-        val candidates = ks.filter(k => k >= 2 && k <= n).sorted
-        require(candidates.nonEmpty, "need at least one candidate k in [2, n]")
-        candidates.map { k =>
-          val m = new KMeans().setK(k).setSeed(seed).setMaxIter(10).fit(assembled)
-          k -> m.summary.trainingCost
-        }
-      } finally assembled.unpersist()
+    val sample = fitSample(faulty, scoreCols, maxFit)
+      .select(array_to_vector(array(scoreCols.map(col): _*)).as("features"))
+    val costs = kmeansFits(sample, seed) { n =>
+      val candidates = ks.filter(k => k >= 2 && k <= n).sorted
+      require(candidates.nonEmpty, "need at least one candidate k in [2, n]")
+      candidates
+    }.map(m => m.getK -> m.summary.trainingCost)
     var best = costs.head
     costs.tail.foreach { case (k, c) =>
       if (c < 0.9 * best._2) best = (k, c)
@@ -366,18 +362,17 @@ object ClusterExplainer {
       k: Int,
       needLabeled: Boolean): (Seq[ClusterRule], DataFrame) = {
     val faulty = scored.filter(col("invalidity_score") >= faultyThreshold).cache()
-    // Bounded normal-side sample for tree training — hash-ordered like
-    // fitSample, NOT a bare limit: limit-after-shuffle takes whichever
-    // partitions answer first, so the trained rules would vary with
-    // partition layout.
-    val normal = scored.filter(col("invalidity_score") <= normalThreshold)
-      .orderBy(xxhash64(col("image_id"))).limit(2000).cache()
+    // Bounded normal-side sample for tree training — fitSample, NOT a
+    // bare limit: limit-after-shuffle takes whichever partitions answer
+    // first, so the trained rules would vary with partition layout.
+    val normal = fitSample(scored.filter(col("invalidity_score") <= normalThreshold),
+      Seq("image_id"), 2000).cache()
     val cols = col("image_id") +: scoreCols.map(col)
     // Every cluster's training set is the normal rows (label 0) plus the
     // cluster's own rows (label 1), so each normal row is copied once per
     // possible cluster id. A group left with no row of its own (k-means may
     // return fewer than k centres, or a centre nearest to no row) gets no
-    // tree: its at most 2,000 normal rows all fit in `maxFit`, so a group
+    // rules: its at most 2,000 normal rows all fit in `maxFit`, so a group
     // keeps a label-1 row exactly when it has one.
     val labeledAll = normal
       .select((cols :+ lit(0.0).as("label") :+

@@ -38,10 +38,6 @@ import org.apache.spark.sql.functions._
   */
 object SomClustering {
 
-  /** Default bounded-fit sample size, shared with the SOM oracle
-    * fixture writer so the two cannot drift. */
-  val DefaultMaxFit: Int = 10000
-
   /** Trained map: `weights(u)` is the codebook vector of unit `u`;
     * grid location of `u` is (u / n, u % n) in row-major order, the
     * reference's `_neuron_locations` enumeration (SOM.py:144-152). */
@@ -61,10 +57,9 @@ object SomClustering {
     * unit counts and feature sums accumulated from 0.0 in row order, then
     * the smoothing — so the fit costs one job and one collect of the
     * codebook. The whole input is held in that task's memory, so callers
-    * bound it with [[ClusterExplainer.fitSample]] (as [[clusterFaulty]]
-    * does). The codebook is a pure function of the input's row order,
-    * which for a multi-partition input is its partitions concatenated in
-    * partition order. */
+    * bound it ([[fitBounded]]). The codebook is a pure function of the
+    * input's row order, which for a multi-partition input is its
+    * partitions concatenated in partition order. */
   def fit(
       data: DataFrame,
       featureCols: Seq[String],
@@ -156,6 +151,24 @@ object SomClustering {
       .withColumn("bmu_col", pmod(col("bmu_unit"), lit(model.n)).cast("int"))
   }
 
+  /** [[fit]] on the bounded sample ([[ClusterExplainer.fitSample]]) of
+    * the faulty rows, ordered by their `image_id`. Shared by
+    * [[clusterFaulty]] and the SOM oracle fixture writer. */
+  def fitBounded(
+      faulty: DataFrame,
+      scoreCols: Seq[String],
+      m: Int = 5,
+      n: Int = 5,
+      epochs: Int = 20,
+      seed: Long = 42L,
+      maxFit: Int = 10000): SomModel =
+    // hash-order on the row id, NOT the score vector: score vectors are
+    // heavily duplicated (pure fault signatures), and hash-ordering on
+    // them would sort whole signatures before others — the bounded
+    // sample must stay representative of every family
+    fit(ClusterExplainer.fitSample(faulty, Seq("image_id"), maxFit), scoreCols, m, n, epochs,
+      seed = seed)
+
   /** M9 end-to-end with the repo's sanctioned fit policy (bounded
     * deterministic hash-ordered fit sample, full-parallel assignment —
     * same shape as ClusterExplainer.clusterFaulty): cluster faulty rows
@@ -170,16 +183,7 @@ object SomClustering {
       n: Int = 5,
       epochs: Int = 20,
       seed: Long = 42L,
-      maxFit: Int = DefaultMaxFit): DataFrame = {
-    // hash-order on the row id, NOT the score vector: score vectors are
-    // heavily duplicated (pure fault signatures), and hash-ordering on
-    // them would sort whole signatures before others — the bounded
-    // sample must stay representative of every family. The sampling
-    // policy itself is ClusterExplainer.fitSample, shared with KMeans.
-    val sample = ClusterExplainer.fitSample(faulty, Seq("image_id"), maxFit)
-      .select(scoreCols.map(c => col(c).cast("double")): _*)
-    val model = fit(sample, scoreCols, m, n, epochs, seed = seed)
-    assign(faulty, "image_id", scoreCols, model)
+      maxFit: Int = 10000): DataFrame =
+    assign(faulty, "image_id", scoreCols, fitBounded(faulty, scoreCols, m, n, epochs, seed, maxFit))
       .select(col("image_id"), col("bmu_unit").as("cluster_id"))
-  }
 }

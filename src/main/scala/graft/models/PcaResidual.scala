@@ -174,14 +174,8 @@ object PcaResidual {
     * (DQTestToolHelper.py:107 lists PyOD MCD; this is its moment-based
     * analog). Uses the same (r−3)/6 clamp. */
   def mahalanobisRatio(st: State, eps: Double = 1e-9): Column = {
-    val z: Seq[Column] = st.cols.indices.map { i =>
-      coalesce((col(st.cols(i)).cast("double") - lit(st.means(i))) / lit(st.stds(i)),
-        lit(0.0))
-    }
-    val norm2 = z.map(c => c * c).reduce(_ + _)
-    val projTerms = st.components.indices.map { p =>
-      val v = st.components(p)
-      val proj = z.indices.map(i => z(i) * lit(v(i))).reduce(_ + _)
+    val (norm2, projs) = zProjections(st)
+    val projTerms = projs.zipWithIndex.map { case (proj, p) =>
       (proj * proj, lit(st.eigenvalues(p) + eps))
     }
     val kept = projTerms.map { case (p2, l) => p2 / l }.reduce(_ + _)
@@ -203,16 +197,20 @@ object PcaResidual {
     * column mean — neutral, the univariate scorer already penalizes
     * numeric nulls). */
   def residualRatio(st: State, eps: Double = 1e-9): Column = {
+    val (norm2, projs) = zProjections(st)
+    val proj2 = projs.map(p => p * p).reduce(_ + _)
+    (norm2 - proj2) / lit(st.tailVariance + eps)
+  }
+
+  /** The z-scored row's squared norm and its projection onto each kept
+    * component. A null feature z-scores to 0. */
+  private def zProjections(st: State): (Column, Seq[Column]) = {
     val z: Seq[Column] = st.cols.indices.map { i =>
       coalesce((col(st.cols(i)).cast("double") - lit(st.means(i))) / lit(st.stds(i)),
         lit(0.0))
     }
-    val norm2 = z.map(c => c * c).reduce(_ + _)
-    val proj2 = st.components.map { v =>
-      val p = z.indices.map(i => z(i) * lit(v(i))).reduce(_ + _)
-      p * p
-    }.reduce(_ + _)
-    (norm2 - proj2) / lit(st.tailVariance + eps)
+    (z.map(c => c * c).reduce(_ + _),
+      st.components.toSeq.map(v => z.indices.map(i => z(i) * lit(v(i))).reduce(_ + _)))
   }
 
   /** Invalidity score column in [0,1] — same clamp shape as the

@@ -209,17 +209,12 @@ object Similarity {
       // object serde
       .select(org.apache.spark.ml.functions.array_to_vector(
         col("embedding")).as("features"))
-      .cache()
-    val km =
-      try {
-        val n = sample.count()
-        require(n > 0, "ivfTopK: no non-null embeddings to fit the coarse quantizer on")
-        // clamp by the SAMPLE size too: k above the point count makes
-        // MLlib KMeans throw on degenerate (single-row) corpora
-        val kk = math.max(1, math.min(nlist.toLong, n).toInt)
-        new org.apache.spark.ml.clustering.KMeans()
-          .setK(kk).setSeed(seed).setMaxIter(10).fit(sample)
-      } finally sample.unpersist()
+    // nlist is clamped by the SAMPLE size too: k above the point count
+    // makes MLlib KMeans throw on degenerate (single-row) corpora
+    val km = graft.explain.ClusterExplainer.kmeansFits(sample, seed) { n =>
+      require(n > 0, "ivfTopK: no non-null embeddings to fit the coarse quantizer on")
+      Seq(nlist)
+    }.head
     val centroids = km.clusterCenters.map(_.toArray)
     val halfNorms = centroids.map(c => c.map(x => x * x).sum / 2.0)
     // 2. partition-parallel assignment, native expression

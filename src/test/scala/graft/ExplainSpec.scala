@@ -54,7 +54,7 @@ class ExplainSpec extends AnyFunSuite {
     val scored = PipelineCache.scored(spark, 2000L).withColumn("status", lit("clean"))
     val knownCount = graft.synth.ImageGen.knownFaults(spark, PipelineCache.genCfg(2000L)).count()
     val (t, med) = graft.discovery.Thresholds.discover(
-      scored, "invalidity_score", "status", knownCount)
+      scored, "invalidity_score", "status", knownCount, 2000L)
     val rules = ClusterExplainer.explain(scored, PipelineCache.scoreNames, t, med)
     val collected = rules.collect()
     assert(collected.nonEmpty)
@@ -76,7 +76,7 @@ class ExplainSpec extends AnyFunSuite {
     val scored = PipelineCache.scored(spark, 2000L).withColumn("status", lit("clean"))
     val knownCount = graft.synth.ImageGen.knownFaults(spark, PipelineCache.genCfg(2000L)).count()
     val (t, med) = graft.discovery.Thresholds.discover(
-      scored, "invalidity_score", "status", knownCount)
+      scored, "invalidity_score", "status", knownCount, 2000L)
     val before = CacheProbe.entries(spark)
     assert(ClusterExplainer.explain(scored, PipelineCache.scoreNames, t, med).count() > 0)
     assert(CacheProbe.entries(spark) == before)
@@ -99,13 +99,18 @@ class ExplainSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](
       ClusterExplainer.bestK(scored.limit(3), PipelineCache.scoreNames, Seq(4, 5)))
     assert(CacheProbe.entries(spark) == before)
+    // no non-null embedding to fit the IVF coarse quantizer on
+    val emb = Seq((1L, null: Array[Float])).toDF("vec_id", "embedding")
+    val queries = Seq((0L, Array(1.0f, 0.0f))).toDF("query_id", "qvec")
+    intercept[IllegalArgumentException](graft.ops.Similarity.ivfTopK(emb, queries, 5))
+    assert(CacheProbe.entries(spark) == before)
   }
 
   test("structured rules partition the labeled rows; verdicts follow the majority") {
     val scored = PipelineCache.scored(spark, 2000L).withColumn("status", lit("clean"))
     val knownCount = graft.synth.ImageGen.knownFaults(spark, PipelineCache.genCfg(2000L)).count()
     val (t, med) = graft.discovery.Thresholds.discover(
-      scored, "invalidity_score", "status", knownCount)
+      scored, "invalidity_score", "status", knownCount, 2000L)
     val (rules, labeled) = ClusterExplainer.explainStructured(
       scored, PipelineCache.scoreNames, t, med)
     val rows = labeled.select(

@@ -5,29 +5,7 @@ import org.apache.spark.sql.SparkSession
 /** One shared SparkSession for the whole forked test JVM. */
 object GraftTestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench.session: avoid the ICU case-mapping class-init stall
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      // Disable RPC-backed session-artifact classloader: janino codegen
-      // class-resolution misses otherwise round-trip the driver file
-      // server per identifier (observed 40s+ stage compiles).
-      .config("spark.sql.artifact.isolation.enabled", "false")
-      // Shuffle scratch on tmpfs + single-file-per-mapper sort writer:
-      // the bypass-merge writer creates maps*reducers tiny files whose
-      // open/mmap latency on the virtio disk dominated small shuffles
-      // (observed 5s-41s variance on identical jobs). Per-process subdir
-      // so a killed JVM's leak is reapable (Scratch.cleanupOrphans).
-      .config("spark.local.dir", graft.engine.Scratch.localDir("tests"))
-      .config("spark.shuffle.sort.bypassMergeThreshold", "2")
-      .config("spark.file.transferTo", "false")
-      .config("spark.io.compression.codec", "lz4")
-      .getOrCreate()
+    val s = graft.engine.LocalSession.builder("4", "tests").appName("graft-tests").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

@@ -56,7 +56,7 @@ class ThresholdSpec extends AnyFunSuite {
     val scores = (1 to 95).map(i => (f"c$i%03d", i / 1000.0, "clean")) ++
       (1 to 5).map(i => (f"f$i%03d", 0.9 + i / 100.0, "clean"))
     val df = scores.toDF("image_id", "invalidity_score", "status")
-    val (t, median) = Thresholds.discover(df, "invalidity_score", "status", 5L)
+    val (t, median) = Thresholds.discover(df, "invalidity_score", "status", 5L, 100L)
     assert(t > 0.095 && t <= 0.91, s"t=$t")
     assert(median <= 0.1)
   }

@@ -11,13 +11,14 @@ import graft.explain.ClusterExplainer
 import graft.explain.ClusterExplainer.TreeRule
 import graft.synth.{GenConfig, ImageGen}
 
-/** The local CART trainer behind ClusterExplainer's tree rules
-  * (`org.apache.spark.ml.tree.graft.LocalCart`) against its parity
-  * reference, MLlib's `DecisionTreeClassifier` fitted the way the rules
-  * were fitted before: the bounded sample in (xxhash64(features, label),
-  * features, label) order, one partition. Rules must be equal — the same
-  * leaves in the same order, the same verdicts and bit-identical
-  * thresholds. */
+/** ClusterExplainer's tree rules — the production path, every tree
+  * fitted per group inside one task by the local CART trainer
+  * (`org.apache.spark.ml.tree.graft.LocalCart`), a single tree as one
+  * group — against their parity reference, MLlib's
+  * `DecisionTreeClassifier` fitted on the bounded sample in
+  * (xxhash64(features, label), features, label) order, one partition.
+  * Rules must be equal — the same leaves in the same order, the same
+  * verdicts and bit-identical thresholds. */
 class TreeParitySpec extends AnyFunSuite {
   lazy val spark = GraftTestSpark.spark
   import spark.implicits._
@@ -70,7 +71,7 @@ class TreeParitySpec extends AnyFunSuite {
       // the per-cluster training sets explain builds in one job
       if (seed == 11L && faultPct == 30) {
         val (t, med) = Thresholds.discover(scored.withColumn("status", lit("clean")),
-          "invalidity_score", "status", known.count())
+          "invalidity_score", "status", known.count(), gen.n)
         val (rules, labeled) =
           ClusterExplainer.explainStructured(scored, Scorer.scoreNames, t, med)
         assert(rules.nonEmpty)

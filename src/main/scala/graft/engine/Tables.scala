@@ -47,23 +47,6 @@ object TableIO {
   def writeCsv(df: DataFrame, path: String): Unit =
     df.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 
-  /** Bucketed catalog-table write: pre-shuffles ONCE at write time so
-    * every later equi-join / aggregation on `key` between tables with
-    * the same bucket count is EXCHANGE-FREE — the co-located-join
-    * pattern for tables joined repeatedly on one key (at 10^12 rows,
-    * re-shuffling both sides per join is the cost the bucketing
-    * amortizes away).
-    * Catalog-managed because bucket metadata lives in the catalog —
-    * same seam TableIO would point at Iceberg's hidden-partitioning
-    * when the runtime jar is present. */
-  def createOrReplaceBucketed(
-      df: DataFrame, table: String, key: String, buckets: Int): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    df.write.mode("overwrite").format("parquet")
-      .bucketBy(buckets, key).sortBy(key).saveAsTable(table)
-  }
-
   def exists(spark: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)

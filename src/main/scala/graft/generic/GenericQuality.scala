@@ -1,11 +1,10 @@
 package graft.generic
 
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{NumericType, StringType}
-import graft.detect.Scorer
-import graft.discovery.Thresholds
-import graft.eval.{Metrics, OracleRound}
+import graft.eval.OracleRound
+import graft.loop.OracleLoop
 
 /** Generic tabular quality mode — the reference's actual user contract
   * (/root/reference/README.md:112-124): any table whose FIRST column is a
@@ -26,7 +25,9 @@ import graft.eval.{Metrics, OracleRound}
   *    over features (M7, DQTestToolHelper.py:153-157);
   *  - threshold via the reference-parity percentile + clamp logic (M8,
   *    [[graft.discovery.Thresholds]]);
-  *  - iterative oracle loop + metrics rows (M15/A7) via [[run]].
+  *  - iterative oracle loop + metrics rows (M15/A7) via [[run]], the
+  *    checkpointed [[graft.loop.OracleLoop]] with this model refitted
+  *    each round.
   *
   * Categorical-vs-numeric is decided by declared Spark type (schema-based
   * rather than the reference's value-probing `is_number`,
@@ -45,17 +46,21 @@ object GenericQuality {
       cols: Map[String, ColStats],
       pca: Option[graft.models.PcaResidual.State] = None) extends Serializable
 
+  /** Categorical frequency tables keep this many levels per column. */
+  private val MaxLevels = 1024
+  /** A numeric z-score at or past this scores 1. */
+  private val ZMax = 6.0
+
   /** One global aggregation pass fitting every column's constraint state
     * (the reference trains on the whole table, DQTestToolHelper.py:130).
-    * Categorical frequency tables are capped at `maxLevels` levels per
+    * Categorical frequency tables are capped at [[MaxLevels]] levels per
     * column (rank by count) so broadcast size is bounded at any scale.
     * `multivariate = true` additionally fits the PCA reconstruction-error
     * model over the numeric columns (the joint-structure detector the
     * reference gets from its autoencoder/PyOD zoo — see
     * [[graft.models.PcaResidual]]); it contributes a `score__pca`
     * column and participates in the max-combine. */
-  def fit(df: DataFrame, idCol: String, maxLevels: Int = 1024,
-      multivariate: Boolean = false): Model = {
+  def fit(df: DataFrame, idCol: String, multivariate: Boolean = false): Model = {
     val featureCols = df.schema.fields.filter(_.name != idCol)
     val (numCols, catCols) = featureCols.partition(_.dataType.isInstanceOf[NumericType])
 
@@ -80,7 +85,7 @@ object GenericQuality {
         // ONE shuffle for ALL categorical columns (a wide table would
         // otherwise pay one full-scan job per column): explode each row
         // into (column, value) pairs, count with map-side combine, rank
-        // within column, cap at maxLevels
+        // within column, cap at MaxLevels
         import org.apache.spark.sql.expressions.Window
         val pairs = df.select(explode(map(catCols.flatMap(f =>
           Seq(lit(f.name),
@@ -89,7 +94,7 @@ object GenericQuality {
         val w = Window.partitionBy("c").orderBy(col("cnt").desc, col("v"))
         val rows = pairs.groupBy("c", "v").agg(count(lit(1)).as("cnt"))
           .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= maxLevels)
+          .filter(col("rn") <= MaxLevels)
           .collect()
         rows.groupBy(_.getString(0)).map { case (cname, rs) =>
           val mx = rs.map(_.getLong(2)).max.toDouble
@@ -107,18 +112,25 @@ object GenericQuality {
   /** Per-feature invalidity score columns in [0,1] (M6 analog); the
     * multivariate PCA residual (when fitted) rides along as one more
     * score column. */
-  def scoreColumns(model: Model, zMax: Double = 6.0): Seq[(String, Column)] =
+  def scoreColumns(model: Model): Seq[(String, Column)] =
     model.pca.toSeq.map(st =>
       "score__pca" -> graft.models.PcaResidual.scoreColumn(st)) ++
-    model.cols.toSeq.sortBy(_._1).map {
+    featureScores(model.cols, col)
+
+  /** The per-column scores of `cols`, reading each feature through
+    * `feature`. */
+  private def featureScores(cols: Map[String, ColStats], feature: String => Column)
+      : Seq[(String, Column)] =
+    cols.toSeq.sortBy(_._1).map {
       case (name, NumericStats(mean, std)) =>
+        val x = feature(name).cast("double")
         val z =
-          if (std > 0) abs(col(name).cast("double") - lit(mean)) / lit(std)
-          else when(col(name).cast("double") === lit(mean), 0.0).otherwise(lit(zMax))
+          if (std > 0) abs(x - lit(mean)) / lit(std)
+          else when(x === lit(mean), 0.0).otherwise(lit(ZMax))
         // null numeric = maximal violation (reference would have turned it
         // into a "NULL" string level; for numerics we treat it as anomalous)
         s"score_$name" -> coalesce(
-          least(lit(1.0), greatest(lit(0.0), (z - lit(3.0)) / lit(zMax - 3.0))),
+          least(lit(1.0), greatest(lit(0.0), (z - lit(3.0)) / lit(ZMax - 3.0))),
           lit(1.0))
       case (name, CategoricalStats(freq)) =>
         // ONE MapType literal per column (typedlit), not a map() call
@@ -127,7 +139,7 @@ object GenericQuality {
         // the plan (analysis blowup + 64KB codegen-method fallback on
         // the hot scoring path); a single Literal is data, not plan
         val freqMap = typedlit(freq)
-        val v = coalesce(col(name).cast(StringType), lit("NULL"))
+        val v = coalesce(feature(name).cast(StringType), lit("NULL"))
         // rare or unseen level -> high score (1 - relative frequency)
         s"score_$name" -> (lit(1.0) - coalesce(element_at(freqMap, v), lit(0.0)))
     }
@@ -138,79 +150,47 @@ object GenericQuality {
     * degenerates gracefully instead of failing analysis. */
   def withScores(df: DataFrame, model: Model): DataFrame = {
     val cols = scoreColumns(model)
-    val withCols = cols.foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
-    val combined = cols.map(c => col(c._1)) match {
-      case Seq() => lit(0.0)
-      case Seq(single) => single.cast("double")
-      case cs => greatest(cs: _*)
-    }
-    withCols.withColumn("invalidity_score", combined)
+    cols.foldLeft(df) { case (d, (n, c)) => d.withColumn(n, c) }
+      .withColumn("invalidity_score", recordScore(cols.map(c => col(c._1))))
   }
 
-  final case class RoundResult(
-      threshold: Double,
-      metrics: Metrics.RunMetrics)
+  private def recordScore(scores: Seq[Column]): Column = scores match {
+    case Seq() => lit(0.0)
+    case Seq(single) => single.cast("double")
+    case cs => greatest(cs: _*)
+  }
 
-  final case class Result(
-      decisions: DataFrame, // idCol, invalidity_score, decision
-      rounds: Seq[RoundResult])
-
-  /** The reference CLI harness loop (testScript.py:29-46): RETRAIN on the
-    * table with updated statuses (DQTestToolHelper.py:130 — the model is
-    * refit every round on the believed-clean population), score with the
-    * confirmed-fault label offset (the reference's `+y`,
-    * DQTestToolHelper.py:153-157), threshold (known-fault calibrated +
-    * clamp) → suspicious → oracle confirms suspicious∩known → metrics
-    * per round. Statuses are carried as a DataFrame between rounds (no
-    * per-row UPDATEs). */
+  /** The reference CLI harness loop (testScript.py:29-46): the
+    * [[OracleLoop]] in `outDir` with this model refit every round on the
+    * believed-clean rows (DQTestToolHelper.py:130). A re-run with the
+    * same `outDir` resumes; one over another table fails. The decisions
+    * are `idCol`, `invalidity_score` and `decision`. */
   def run(
       df: DataFrame,
       idCol: String,
       knownFaultIds: DataFrame, // single column = idCol
-      rounds: Int = 3): Result = {
-    val cached = df.cache()
-    val n = cached.count()
-    val knownCount = knownFaultIds.count()
-
-    def scoreRound(statuses: DataFrame): DataFrame = {
-      val believedClean = cached.join(
-        statuses.filter(!OracleRound.confirmed(col("status"))).select(idCol),
-        Seq(idCol), "left_semi")
-      val model = fit(believedClean, idCol)
-      // known membership joins the scored projection, never the user's
-      // table: a user column named `is_known` stays a feature
-      OracleRound.withKnown(
-          withScores(cached, model).select(col(idCol), col("invalidity_score")),
-          knownFaultIds, idCol)
-        .join(statuses, Seq(idCol))
-        .withColumn("invalidity_score",
-          col("invalidity_score") + OracleRound.labelOffset(col("status")))
+      outDir: String,
+      rounds: Int = 3): OracleLoop.Result = {
+    // the row count and a content hash of the table in one job; the
+    // decimal sum cannot overflow
+    val stats = df.agg(count(lit(1)),
+      sum(xxhash64(df.columns.toSeq.map(col): _*).cast("decimal(38,0)"))).head()
+    val n = stats.getLong(0)
+    val model = new OracleLoop.Model(s"${df.schema.toDDL};n=$n;xxhash64=${stats.get(1)}", n) {
+      // the table's columns ride in one struct, so a user column named
+      // like a loop column (`is_known`, `status`) stays a feature
+      def prepare(table: DataFrame): DataFrame =
+        table.select(col(idCol), struct(table.columns.toSeq.map(col): _*).as("__row"))
+      def score(state: DataFrame): DataFrame = {
+        val m = fit(state.filter(!OracleRound.confirmed(col("status"))).select("__row.*"),
+          idCol)
+        state.withColumn("invalidity_score",
+          recordScore(featureScores(m.cols, col("__row").getField).map(_._2)) +
+            OracleRound.labelOffset(col("status")))
+      }
     }
-
-    var statuses = cached.select(col(idCol), lit(OracleRound.Clean).as("status"))
-    val results = scala.collection.mutable.ArrayBuffer.empty[RoundResult]
-    for (r <- 1 to rounds) {
-      val st = scoreRound(statuses)
-      val (t, _) = Thresholds.discover(st, "invalidity_score", "status", knownCount, n)
-      // the round's counts ride the checkpoint that cuts the statuses'
-      // lineage (so round plans don't compound)
-      val obs = Observation(s"generic_round_$r")
-      statuses = OracleRound.flag(st, t, r)
-        .observe(obs, OracleRound.countColumns.head, OracleRound.countColumns.tail: _*)
-        .select(col(idCol), col("status_new").as("status"))
-        .localCheckpoint(true)
-      results += RoundResult(t, OracleRound.metrics(r,
-        OracleRound.counts(OracleRound.observed(obs)), knownCount,
-        results.map(_.metrics.truePositiveRate).toSeq))
-    }
-    // final decisions from the final-state model (refit on the last
-    // statuses), mirroring ValidationRun
-    val finalScored = scoreRound(statuses)
-    val tFinal = Thresholds.discover(
-      finalScored, "invalidity_score", "status", knownCount, n)._1
-    val decisions = Scorer.withDecision(finalScored, tFinal)
-      .select(col(idCol), col("invalidity_score"), col("decision"))
-    Result(decisions, results.toSeq)
+    val res = OracleLoop.run(df, idCol, knownFaultIds, model, outDir, rounds)
+    res.copy(decisions = res.decisions.select(idCol, "invalidity_score", "decision"))
   }
 
   /** CSV entry matching the reference import contract: header CSV, first

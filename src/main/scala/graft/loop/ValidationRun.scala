@@ -3,38 +3,15 @@ package graft.loop
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.detect.Scorer
-import graft.discovery.{PhashDup, Thresholds}
-import graft.engine.TableIO
-import graft.eval.{Metrics, OracleRound}
+import graft.discovery.PhashDup
+import graft.eval.OracleRound
 import graft.synth.{GenConfig, ImageGen}
 
-/** The iterative constraint-discovery / fault-detection / oracle-confirm
-  * loop — the Spark rebuild of the reference CLI harness
-  * (/root/reference/testScript.py:29-46) and the `validate` spine
-  * (DQTestToolHelper.py:59-240):
-  *
-  *   fit models → score every row → discover thresholds → suspicious
-  *   set → oracle confirms suspicious∩known as actual faults, rest
-  *   valid → metrics row → checkpoint → next round.
-  *
-  * Statuses live in an append-only audit table keyed by round (never
-  * per-row UPDATEs — the reference's O(n) UPDATE loop at
-  * DQTestToolHelper.py:161-162 becomes one columnar write per round).
-  * The audit table (`image_id`, `is_susp`, `is_known`, `status_old`,
-  * `status_new`, `run`, `threshold`) is the round's one checkpoint: its
-  * `status_new` is the next round's status, and the metrics row and
-  * threshold are derived from it. Each round also writes its
-  * per-partition lineage, and a re-run with the same outDir resumes
-  * after the last completed round (north-rule checkpointed resume).
-  *
-  * A round reads one state frame: the cached raw signals (which carry
-  * known-fault membership as `is_known`, attached once per run) plus the
-  * round's input `status`. Round r+1's state is a projection of round
-  * r's cached flagged frame; `raw` is joined to an audit checkpoint only
-  * on resume, at every 5th round (to bound the plan depth) and for the
-  * final refit. Metrics, thresholds, audit rows and decisions do not
-  * depend on the partition layout; the per-partition lineage rows do (only
-  * their totals are layout-free).
+/** The [[OracleLoop]] over the generated image+caption corpus
+  * ([[ImageGen]]) with the caption model: the constraint models (LM
+  * perplexity, langid, rules, scrub) fitted once and checkpointed, their
+  * expensive caption-scanning pass run once into the cached raw signals,
+  * and each round's refit a recalibration of the perplexity references.
   */
 object ValidationRun {
 
@@ -48,189 +25,41 @@ object ValidationRun {
       outDir: String = "target/graft-run",
       parts: Int = 0)
 
-  final case class RunResult(
-      decisions: DataFrame,
-      metrics: Seq[Metrics.RunMetrics],
-      thresholds: Seq[Double])
-
-  private def lineagePath(cfg: RunConfig, r: Int) = s"${cfg.outDir}/lineage/round=$r"
-  private def auditPath(cfg: RunConfig, r: Int) = s"${cfg.outDir}/audit/round=$r"
-
-  /** A round is resumable only when both tables it writes exist — the
-    * audit table is written first, so a crash after it but before the
-    * lineage write must RE-RUN the round (both writes are
-    * overwrite-idempotent), not skip it. */
-  private def roundComplete(spark: SparkSession, cfg: RunConfig, r: Int): Boolean =
-    Seq(auditPath(cfg, r), lineagePath(cfg, r)).forall(TableIO.exists(spark, _))
-
-  /** Round `r`'s statuses, read back from its audit checkpoint. */
-  private def checkpointedStatuses(spark: SparkSession, cfg: RunConfig, r: Int): DataFrame =
-    TableIO.read(spark, auditPath(cfg, r)).select(col("image_id"), col("status_new").as("status"))
-
-  /** The threshold and [[OracleRound.Counts]] of rounds 1..`upTo`, in
-    * round order, from ONE aggregation over their audit checkpoints
-    * (`status_old` is the counts' input `status`). The read's schema is
-    * given, so it infers none; it stops before the first round without a
-    * threshold (an audit table written before the column existed), which
-    * re-runs with every round after it. */
-  private[graft] def checkpointedRounds(spark: SparkSession, cfg: RunConfig, upTo: Int)
-      : Seq[(Double, OracleRound.Counts)] =
-    spark.read.schema("run INT, threshold DOUBLE, is_susp BOOLEAN, is_known BOOLEAN, " +
-        "status_old STRING, status_new STRING")
-      .parquet((1 to upTo).map(auditPath(cfg, _)): _*)
-      .withColumnRenamed("status_old", "status")
-      .groupBy("run").agg(first("threshold").as("threshold"), OracleRound.countColumns: _*)
-      .collect().sortBy(_.getInt(0)).toSeq
-      .takeWhile(!_.isNullAt(1))
-      .map(row =>
-        row.getDouble(1) -> OracleRound.counts(row.getValuesMap(row.schema.fieldNames.toSeq)))
+  type RunResult = OracleLoop.Result
 
   def run(spark: SparkSession, cfg: RunConfig): RunResult = {
     val gen = GenConfig(cfg.n, cfg.seed, cfg.faultPct,
       parts = if (cfg.parts > 0) cfg.parts else GenConfig.adaptiveParts(cfg.n))
     val images = ImageGen.images(spark, gen).cache()
     val known = ImageGen.knownFaults(spark, gen).select("image_id").cache()
-    val knownCount = known.count()
 
-    // Constraint models: warm-start from the checkpoint when resuming
-    // (DQTestToolHelper.py:109-111), else fit once and checkpoint. The
-    // expensive caption-scanning pass (LM perplexity, langid, rules,
-    // scrub) runs ONCE into a raw-signals cache; the per-round refit
-    // below recalibrates from it without re-scanning captions.
-    val models = Scorer.fitOrLoad(spark, images, Some(s"${cfg.outDir}/model"),
-      fingerprint = s"n=${cfg.n};seed=${cfg.seed};faultPct=${cfg.faultPct};" +
-        s"scrub=${graft.scrub.Scrub.version}")
-    val dupDrop = PhashDup.dropIds(images).cache()
-    // The known set is fixed for the run, so its membership is a column
-    // of the cached frame rather than a join in every round.
-    val raw = OracleRound.withKnown(Scorer.withRawSignals(images, models, dupDrop), known,
-        "image_id")
-      .select((Seq("image_id", "pred_lang", "ppl_raw", "scrubbed_caption") ++
-        Scorer.scoreNames.filterNot(_ == "score_ppl") :+ "is_known").map(col): _*)
-      .cache()
-    val rawCols = raw.columns.toSeq.map(col)
+    val model = new OracleLoop.Model(s"n=${cfg.n};seed=${cfg.seed};" +
+        s"faultPct=${cfg.faultPct};scrub=${graft.scrub.Scrub.version}", cfg.n) {
+      // warm-started from the checkpoint when resuming
+      // (DQTestToolHelper.py:109-111); fitted on first use, after the loop
+      // has checked the outDir's fingerprint
+      lazy val models = Scorer.fitOrLoad(spark, images, Some(s"${cfg.outDir}/model"),
+        fingerprint)
 
-    // A round's state rebuilt from round r's audit checkpoint.
-    def stateAt(r: Int): DataFrame =
-      raw.join(checkpointedStatuses(spark, cfg, r), Seq("image_id"))
+      def prepare(images: DataFrame): DataFrame =
+        Scorer.withRawSignals(images, models, PhashDup.dropIds(images).cache())
+          .select((Seq("image_id", "pred_lang", "ppl_raw", "scrubbed_caption") ++
+            Scorer.scoreNames.filterNot(_ == "score_ppl")).map(col): _*)
 
-    // Per-round model state with label feedback (the reference retrains
-    // every iteration on the updated table, testScript.py:43 →
-    // DQTestToolHelper.py:130): per-lang perplexity reference quantiles
-    // refit from the believed-clean population, and confirmed faults get
-    // the +1 label offset so they stay above threshold on re-score (the
-    // reference's `+y`, DQTestToolHelper.py:153-157).
-    def scoreRound(state: DataFrame): DataFrame = {
-      val (byLang, global) = Scorer.recalibrate(
-        state.filter(!OracleRound.confirmed(col("status"))),
-        fallback = (models.pplRefByLang, models.pplRef))
-      Scorer.scoresFromSignals(state, byLang, global,
-        Some(OracleRound.labelOffset(col("status"))))
+      // the per-round refit (testScript.py:43 → DQTestToolHelper.py:130):
+      // the per-language perplexity references, from the raw signals
+      def score(state: DataFrame): DataFrame = {
+        val (byLang, global) = Scorer.recalibrate(
+          state.filter(!OracleRound.confirmed(col("status"))),
+          fallback = (models.pplRefByLang, models.pplRef))
+        Scorer.scoresFromSignals(state, byLang, global,
+          Some(OracleRound.labelOffset(col("status"))))
+      }
     }
 
-    // A round's threshold and its metrics row, whose TPGR spans every
-    // prior round's TPR.
-    val metricsHist = scala.collection.mutable.ArrayBuffer.empty[Metrics.RunMetrics]
-    val thresholds = scala.collection.mutable.ArrayBuffer.empty[Double]
-    def record(t: Double, c: OracleRound.Counts): Unit = {
-      thresholds += t
-      metricsHist += OracleRound.metrics(thresholds.length, c, knownCount,
-        metricsHist.map(_.truePositiveRate).toSeq)
-    }
-
-    // Resume after the last completed round (see roundComplete — a
-    // partially-written round re-runs); the completed rounds' thresholds
-    // and metrics are rebuilt from their audit tables.
-    (1 to cfg.rounds).takeWhile(roundComplete(spark, cfg, _)).lastOption
-      .foreach(checkpointedRounds(spark, cfg, _).foreach { case (t, c) => record(t, c) })
-    val resumeFrom = thresholds.length
-    // A complete resume runs no round: its one read of the last
-    // checkpoint is finalState's below.
-    var state =
-      if (resumeFrom == 0) raw.withColumn("status", lit(OracleRound.Clean))
-      else if (resumeFrom < cfg.rounds) stateAt(resumeFrom)
-      else null
-
-    val n = cfg.n
-    // Previous round's flagged frame: kept cached until the NEXT round's
-    // audit write has materialized (its projection is that round's
-    // state), then released.
-    var prevFlagged: Option[DataFrame] = None
-    for (r <- (resumeFrom + 1) to cfg.rounds) {
-      val st = scoreRound(state)
-      val (t, _) = Thresholds.discover(st, "invalidity_score", "status", knownCount, n)
-
-      // One flagged frame carries everything the round needs: suspicious
-      // flag, oracle membership, old + new status.
-      val flagged = OracleRound.flag(st, t, r).cache()
-
-      // One job materializes the cache, writes the round's AUDIT table
-      // and collects the round's counts: an Observation rides the audit
-      // write. At loop sizes the cost is job count, not data. The audit
-      // table carries exactly the per-row facts the metric formulas
-      // consume — (is_susp, is_known, status_old, status_new) — plus the
-      // round's threshold, so an independent engine (the DuckDB oracle)
-      // can recompute every TPR/FNR/PD/ND/UD/TPGR value from it and a
-      // resume rebuilds the round's metrics row and threshold from it.
-      val obs = org.apache.spark.sql.Observation(s"round_$r")
-      TableIO.createOrReplace(
-        flagged.observe(obs, OracleRound.countColumns.head, OracleRound.countColumns.tail: _*)
-          .select(col("image_id"), col("is_susp"), col("is_known"),
-            col("status").as("status_old"), col("status_new"), lit(r).as("run"),
-            lit(t).as("threshold")),
-        auditPath(cfg, r))
-      record(t, OracleRound.counts(OracleRound.observed(obs)))
-
-      // Per-partition lineage of the materialized cache; roundComplete
-      // requires it next to the audit table.
-      TableIO.createOrReplace(
-        flagged
-          .withColumn("pid", spark_partition_id())
-          .groupBy(col("pid").as("partition_id"))
-          .agg(count(lit(1)).as("rows_in"),
-            sum(when(col("is_susp"), 1L).otherwise(0L)).as("rows_dropped"))
-          .withColumn("rows_kept", col("rows_in") - col("rows_dropped"))
-          .withColumn("run_id", lit(r))
-          .withColumn("completed_at", current_timestamp()),
-        lineagePath(cfg, r))
-
-      // Next round reads its state straight off the cached frame (its new
-      // status is the status column of the audit table just written) — no
-      // join and no parquet round-trip per round. The checkpoint stays the
-      // resume source of truth for fresh processes. Every 5th round the
-      // just-written checkpoint is read back instead: the cache
-      // shortcuts EXECUTION but not ANALYSIS, so chaining frames would
-      // nest every prior round's logical plan (unbounded analysis time /
-      // stack depth for large cfg.rounds, and an eviction under memory
-      // pressure would recompute through every predecessor); the
-      // periodic read truncates the lineage at a bounded depth.
-      state =
-        if (r % 5 == 0) stateAt(r)
-        else flagged.select((rawCols :+ col("status_new").as("status")): _*)
-      prevFlagged.foreach(_.unpersist())
-      prevFlagged = Some(flagged)
-    }
-
-    // Final decisions from the final-state model (refit on the last
-    // checkpointed statuses — deterministic for fresh AND resumed runs).
-    // ONE scoreRound invocation feeds BOTH the threshold refit and the
-    // decisions: the recalibration inside uses percentile_approx, whose
-    // result can depend on partition/merge order past the sketch's exact
-    // regime, so discovering the threshold on one scoring pass and
-    // applying it to another could flip boundary rows at large cfg.n.
-    // The shared plan reads statuses from the checkpoint (byte-identical
-    // to the cached frame's content), so the loop cache is released here
-    // rather than holding executor memory for as long as callers keep
-    // re-evaluating the returned frame.
-    val finalState = if (cfg.rounds > 0) stateAt(cfg.rounds) else state
-    prevFlagged.foreach(_.unpersist())
-    val finalScored = scoreRound(finalState)
-    val tFinal = Thresholds.discover(
-      finalScored, "invalidity_score", "status", knownCount, n)._1
-    val decisions = Scorer.withDecision(finalScored, tFinal)
-      .select("image_id", "decision", "invalidity_score", "scores",
-        "scrubbed_caption", "status")
-    RunResult(decisions, metricsHist.toSeq, thresholds.toSeq)
+    val res = OracleLoop.run(images, "image_id", known, model, cfg.outDir, cfg.rounds)
+    res.copy(decisions = res.decisions.select("image_id", "decision", "invalidity_score",
+      "scores", "scrubbed_caption", "status"))
   }
 
   def flagship(spark: SparkSession): DataFrame =

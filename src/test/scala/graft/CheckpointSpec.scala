@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 import graft.detect.Scorer
 import graft.engine.{Scratch, TableIO}
 import graft.loop.ValidationRun
@@ -160,7 +161,8 @@ class CheckpointSpec extends AnyFunSuite {
     val dir = copyOfLoop("parent")
     // the older layout: audit tables without `threshold`, next to the
     // metrics/ and thresholds/ tables it also wrote (values that would
-    // show if they were read)
+    // show if they were read), and no recorded fingerprint
+    java.nio.file.Files.delete(java.nio.file.Paths.get(dir, "fingerprint"))
     (1 to 3).foreach { r =>
       val path = s"$dir/audit/round=$r"
       val df = TableIO.read(spark, path).drop("threshold")
@@ -179,10 +181,24 @@ class CheckpointSpec extends AnyFunSuite {
       fresh.thresholds.zipWithIndex.map { case (t, i) => (i + 1) -> t })
   }
 
+  test("a run over other input fails on the outDir and leaves it as it was") {
+    val dir = copyOfLoop("other-seed")
+    def files = {
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator().asScala.map(p => p.toString -> p.toFile.lastModified).toList.sorted
+      finally walk.close()
+    }
+    val before = files
+    val err = intercept[IllegalArgumentException](
+      ValidationRun.run(spark, loopCfg(dir).copy(seed = 43L)))
+    assert(err.getMessage.contains(dir))
+    assert(files == before)
+  }
+
   test("a complete resume reads its last audit checkpoint once") {
     val dir = copyOfLoop("complete")
     // a job reads an audit checkpoint when its call site runs through
-    // ValidationRun.checkpointedStatuses (the parquet schema inference of
+    // OracleLoop.checkpointedStatuses (the parquet schema inference of
     // the read is one job)
     val reads = new java.util.concurrent.atomic.AtomicInteger
     val listener = new org.apache.spark.scheduler.SparkListener {

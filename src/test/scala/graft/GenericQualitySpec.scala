@@ -36,6 +36,13 @@ class GenericQualitySpec extends AnyFunSuite {
     (df, rows.filter(_._5).map(_._1).toSet)
   }
 
+  /** An empty loop outDir. */
+  def loopDir(name: String): String = {
+    val dir = s"target/graft-generic-loop-$name"
+    Scratch.deleteRecursively(new java.io.File(dir))
+    dir
+  }
+
   test("fit: numeric mean/std + categorical frequencies incl NULL level") {
     val (df, _) = fixture(500)
     val model = GenericQuality.fit(df, "id")
@@ -62,8 +69,8 @@ class GenericQualitySpec extends AnyFunSuite {
   test("oracle loop: detects seeded outliers at F1 >= 0.99, metrics parity shapes") {
     val (df, outliers) = fixture(2000)
     val knownDf = outliers.toSeq.toDF("id")
-    val res = GenericQuality.run(df, "id", knownDf, rounds = 3)
-    assert(res.rounds.size == 3)
+    val res = GenericQuality.run(df, "id", knownDf, loopDir("f1"), rounds = 3)
+    assert(res.metrics.size == 3)
     val dec = res.decisions.collect().map(r => r.getString(0) -> r.getString(2)).toMap
     val tp = outliers.count(o => dec(o) == "drop")
     val fp = dec.count { case (id, d) => d == "drop" && !outliers.contains(id) }
@@ -72,21 +79,22 @@ class GenericQualitySpec extends AnyFunSuite {
     assert(f1 >= 0.99, s"F1=$f1 tp=$tp fp=$fp fn=$fn")
     // every round's TPR should stay in [0,1]; PD should reach 1 (all
     // known faults are detected in this separable fixture)
-    res.rounds.foreach { r =>
-      assert(r.metrics.truePositiveRate >= 0 && r.metrics.truePositiveRate <= 1)
+    res.metrics.foreach { m =>
+      assert(m.truePositiveRate >= 0 && m.truePositiveRate <= 1)
     }
-    assert(res.rounds.last.metrics.previouslyDetected >= 0.99)
-    assert(res.rounds.last.metrics.undetected <= 0.01)
+    assert(res.metrics.last.previouslyDetected >= 0.99)
+    assert(res.metrics.last.undetected <= 0.01)
   }
 
   test("10-round harness parity: metrics row per round, TPGR >= 0 (testScript.py)") {
     val (df, outliers) = fixture(500)
-    val res = GenericQuality.run(df, "id", outliers.toSeq.toDF("id"), rounds = 10)
-    assert(res.rounds.size == 10)
-    val tprs = res.rounds.map(_.metrics.truePositiveRate)
+    val res = GenericQuality.run(df, "id", outliers.toSeq.toDF("id"), loopDir("10"),
+      rounds = 10)
+    assert(res.metrics.size == 10)
+    val tprs = res.metrics.map(_.truePositiveRate)
     assert(graft.eval.Metrics.truePositiveGrowthRate(tprs) >= -1e-9, tprs.toString)
     // confirmed faults stay frozen: PD non-decreasing across rounds
-    val pds = res.rounds.map(_.metrics.previouslyDetected)
+    val pds = res.metrics.map(_.previouslyDetected)
     assert(pds.zip(pds.tail).forall { case (a, b) => b >= a - 1e-9 }, pds.toString)
   }
 
@@ -102,13 +110,13 @@ class GenericQualitySpec extends AnyFunSuite {
     }
     val df = rows.toDF("id", "x", "cat")
     val known = (0 until 20).map(i => f"r$i%04d").toDF("id")
-    val res = GenericQuality.run(df, "id", known, rounds = 3)
-    val tprs = res.rounds.map(_.metrics.truePositiveRate)
+    val res = GenericQuality.run(df, "id", known, loopDir("tpgr"), rounds = 3)
+    val tprs = res.metrics.map(_.truePositiveRate)
     assert(tprs.distinct.size > 1, s"TPR history is constant: $tprs")
-    res.rounds.zipWithIndex.foreach { case (r, i) =>
-      assert(r.metrics.tpgr ==
+    res.metrics.zipWithIndex.foreach { case (m, i) =>
+      assert(m.tpgr ==
         graft.eval.Metrics.truePositiveGrowthRate(tprs.take(i + 1)),
-        s"round ${i + 1}: tpgr ${r.metrics.tpgr}, TPRs $tprs")
+        s"round ${i + 1}: tpgr ${m.tpgr}, TPRs $tprs")
     }
   }
 
@@ -116,8 +124,29 @@ class GenericQualitySpec extends AnyFunSuite {
     val rows = (0 until 400).map(i => (f"r$i%04d", if (i < 8) 1e6 else (i % 10).toDouble))
     val known = (0 until 8).map(i => f"r$i%04d").toDF("id")
     def decisions(feature: String) = GenericQuality.run(rows.toDF("id", feature), "id",
-      known, rounds = 1).decisions.orderBy("id").collect().toSeq
+      known, loopDir(feature), rounds = 1).decisions.orderBy("id").collect().toSeq
     assert(decisions("is_known") == decisions("x"))
+  }
+
+  test("a loop killed between rounds resumes to the uninterrupted run's results") {
+    val (df, outliers) = fixture(500)
+    val known = outliers.toSeq.toDF("id")
+    def run(dir: String) = GenericQuality.run(df, "id", known, dir, rounds = 4)
+    def rows(res: graft.loop.OracleLoop.Result, dir: String) = (res.metrics, res.thresholds,
+      res.decisions.orderBy("id").collect().toSeq,
+      spark.read.parquet(s"$dir/audit").orderBy("round", "id").collect().toSeq)
+    val whole = loopDir("whole")
+    val expected = rows(run(whole), whole)
+    val killed = loopDir("killed")
+    run(killed)
+    // killed after round 3's audit write: round 3 re-runs, then round 4
+    Seq("audit/round=4", "lineage/round=4", "lineage/round=3").foreach(p =>
+      Scratch.deleteRecursively(new java.io.File(s"$killed/$p")))
+    assert(rows(run(killed), killed) == expected)
+    // and the outDir refuses a run over another table
+    val err = intercept[IllegalArgumentException](
+      GenericQuality.run(df.limit(499), "id", known, killed, rounds = 4))
+    assert(err.getMessage.contains(killed))
   }
 
   test("single-feature table scores without greatest() arity failure") {

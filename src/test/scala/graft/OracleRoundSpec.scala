@@ -97,27 +97,38 @@ class OracleRoundSpec extends AnyFunSuite {
 
   test("counts aggregated from the loop's audit rows equal its Observation's counts") {
     val fresh = PipelineLoop.cachedLoop(spark)
-    val cfg = graft.loop.ValidationRun.RunConfig(outDir = PipelineLoop.loopDir)
-    val rounds = graft.loop.ValidationRun.checkpointedRounds(spark, cfg, upTo = 3)
-    assert(rounds.map(_._1) == fresh.thresholds)
-    // the loop's Observation rides the audit write, so an Observation on
-    // the audit rows sees the rows it saw
-    rounds.zipWithIndex.foreach { case ((_, c), i) =>
-      val obs = Observation(s"audit_round_${i + 1}")
-      graft.engine.TableIO.read(spark, s"${PipelineLoop.loopDir}/audit/round=${i + 1}")
-        .withColumnRenamed("status_old", "status")
-        .observe(obs, OracleRound.countColumns.head, OracleRound.countColumns.tail: _*)
-        .collect(): Unit
-      assert(c == OracleRound.counts(OracleRound.observed(obs)), s"round ${i + 1}")
-    }
-    // and the metrics rows built from the aggregated counts are the ones
-    // the loop built from its Observations, bit for bit
     val knownCount = graft.synth.ImageGen.knownFaults(spark,
       graft.synth.GenConfig(1000L, parts = graft.synth.GenConfig.adaptiveParts(1000L))).count()
-    val hist = rounds.zipWithIndex.foldLeft(Seq.empty[Metrics.RunMetrics]) {
-      case (prior, ((_, c), i)) =>
-        prior :+ OracleRound.metrics(i + 1, c, knownCount, prior.map(_.truePositiveRate))
+    // a generic table: 20 known faults, 6 unknown rare-category rows
+    val genericDir = "target/graft-oracle-round-generic"
+    graft.engine.Scratch.deleteRecursively(new java.io.File(genericDir))
+    val generic = graft.generic.GenericQuality.run(
+      (0 until 600).map(i => (f"r$i%04d", if (i < 20) 1e6 else (i % 10).toDouble,
+        if (i >= 20 && i < 26) s"u$i" else Seq("a", "b", "c")(i % 3))).toDF("id", "x", "cat"),
+      "id", (0 until 20).map(i => f"r$i%04d").toDF("id"), genericDir, rounds = 3)
+    Seq(
+      (PipelineLoop.loopDir, fresh.thresholds, fresh.metrics, knownCount),
+      (genericDir, generic.thresholds, generic.metrics, 20L)
+    ).foreach { case (dir, thresholds, metrics, knownCount) =>
+      val rounds = graft.loop.OracleLoop.checkpointedRounds(spark, dir, upTo = 3)
+      assert(rounds.map(_._1) == thresholds, dir)
+      // the loop's Observation rides the audit write, so an Observation on
+      // the audit rows sees the rows it saw
+      rounds.zipWithIndex.foreach { case ((_, c), i) =>
+        val obs = Observation(s"audit_round_${i + 1}")
+        graft.engine.TableIO.read(spark, s"$dir/audit/round=${i + 1}")
+          .withColumnRenamed("status_old", "status")
+          .observe(obs, OracleRound.countColumns.head, OracleRound.countColumns.tail: _*)
+          .collect(): Unit
+        assert(c == OracleRound.counts(OracleRound.observed(obs)), s"$dir round ${i + 1}")
+      }
+      // and the metrics rows built from the aggregated counts are the ones
+      // the loop built from its Observations, bit for bit
+      val hist = rounds.zipWithIndex.foldLeft(Seq.empty[Metrics.RunMetrics]) {
+        case (prior, ((_, c), i)) =>
+          prior :+ OracleRound.metrics(i + 1, c, knownCount, prior.map(_.truePositiveRate))
+      }
+      assert(hist == metrics, dir)
     }
-    assert(hist == fresh.metrics)
   }
 }

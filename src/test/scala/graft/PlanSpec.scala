@@ -72,33 +72,6 @@ class PlanSpec extends AnyFunSuite {
     dup.unpersist()
   }
 
-  test("bucketed audit tables join exchange-free (write-time co-location)") {
-    import org.apache.spark.sql.functions.{col, lit}
-    val s = spark
-    val scores = PipelineCache.images(s, 2000L)
-      .select(col("image_id"), col("phash"))
-    val statuses = PipelineCache.images(s, 2000L)
-      .select(col("image_id"), lit("clean").as("status"))
-    graft.engine.TableIO.createOrReplaceBucketed(scores, "t_bkt_scores", "image_id", 8)
-    graft.engine.TableIO.createOrReplaceBucketed(statuses, "t_bkt_status", "image_id", 8)
-    // disable auto-broadcast so the test proves BUCKET co-location, not
-    // a broadcast that would also skip the exchange
-    val saved = s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try {
-      val j = s.table("t_bkt_scores").join(s.table("t_bkt_status"), "image_id")
-      assert(j.count() == 2000L)
-      val plan = j.queryExecution.executedPlan.toString()
-      assert(!plan.contains("Exchange"),
-        s"bucketed join must not shuffle either side:\n${plan.take(2500)}")
-      assert(plan.contains("SortMergeJoin"), plan.take(2500))
-    } finally {
-      s.conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
-      s.sql("DROP TABLE IF EXISTS t_bkt_scores")
-      s.sql("DROP TABLE IF EXISTS t_bkt_status")
-    }
-  }
-
   test("dup-id set join is hint-free: planner/AQE chooses the strategy") {
     // The dup drop set is OUTPUT-sized (one id per duplicate row) — a
     // forced broadcast() would pull billions of rows through the driver
